@@ -602,7 +602,11 @@ def main() -> None:
         os.path.basename(branch_dir.rstrip("/")).replace("sf", "") or sf
     )
     if branch_runs > 0:
-        bqs = branch_queries()
+        bqs = {
+            n: f
+            for n, f in branch_queries().items()
+            if n.split("/")[0] in HEADLINE
+        }
         prio = {k: i for i, k in enumerate(_PRIORITY)}
         ordered = sorted(
             bqs.items(), key=lambda kv: prio.get(kv[0].split("/")[0], 99)

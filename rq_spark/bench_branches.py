@@ -1,14 +1,16 @@
-"""Per-branch bench attribution for the multi-branch headline keys.
+"""Per-branch bench attribution for the merged catalog keys.
 
 A BENCH total per catalog key cannot distinguish "regression" from
 "added work" once a key carries 2-9 tagged branches (r8: the asof key
 read 4.8x its r7 time purely because it grew from one merge_asof
 direction to three). This registry exposes a SOLO
-``(spark, sf_dir) -> DataFrame`` callable per tagged branch of every
-multi-branch headline key, so ``bench.py`` records a per-branch
-median in the driver artifact (``BENCH_r{N}.json["branches"]``) and
-branch growth stays separable from regressions WITHOUT session-local
-A/B notes.
+``(spark, sf_dir) -> DataFrame`` callable per declared branch of every
+merged catalog key. The tags are each key's own declaration (the
+``branches`` of rq_spark/queries/helpers.py:merged), so a branch added
+to a key is attributed with no edit here. ``bench.py`` keeps the
+HEADLINE keys and records a per-branch median in the driver artifact
+(``BENCH_r{N}.json["branches"]``), so branch growth stays separable
+from regressions WITHOUT session-local A/B notes.
 
 Two isolation mechanisms:
 
@@ -18,13 +20,13 @@ Two isolation mechanisms:
   every other branch to an empty LocalRelation — the remaining plan
   is exactly the branch's own scan/shuffle work
   (tests/test_bench_branches.py asserts the pruned plan shape).
-* **solo builders**: branches whose work happens at BUILD time get
-  explicit single-branch builders calling the underlying operators
-  with the catalog's exact parameters — the explode-fused asof
+* **solo builders** (``SOLO_BUILT``): branches whose work happens at
+  BUILD time, before any filter could prune. The explode-fused asof
   directions (the catalog computes all three in one window pass, so a
-  post-explode filter would still pay the fused pass) and the graph
-  family (driver-side iteration loops with per-round checkpoints run
-  during construction, before any filter could prune).
+  post-explode filter would still pay the fused pass) run the
+  single-direction operator on the catalog's inputs; each graph branch
+  (driver-side iteration loops with per-round checkpoints) runs as the
+  key cut down to that branch (``.only``).
 
 Branch-cost semantics: a solo number INCLUDES the branch's required
 inputs (e.g. each graph solo rebuilds the LSH edge relation the
@@ -33,15 +35,10 @@ own shuffle+sort where the catalog pays one for all three). Solo
 times therefore need not sum to the key total — the DELTA is the
 fusion win, which this registry makes measurable per round.
 
-``stream_stateful`` gets solo builders too (r10, r9 verdict task #2):
-each branch runs ALONE as its own bounded streaming query through the
-same `run_many_to_memory` runner and no-data-microbatch setting the
-catalog key uses. A solo stream pays its own micro-batch fixed costs
-that the concurrent catalog key overlaps — per the branch-cost
-semantics above, the solos need not sum to the key total and the
-delta IS the concurrency win (r9 session notes measured solo
-interval_join 8.3s + first_seen 4.5s + running 3.5s vs the 14.3s
-concurrent key).
+``stream_stateful``'s solos (r10) each run ALONE as a bounded
+streaming query, paying the micro-batch fixed costs the concurrent
+key overlaps: the delta is the concurrency win (r9: solo
+interval_join 8.3s + first_seen 4.5s + running 3.5s vs the 14.3s key).
 """
 
 from __future__ import annotations
@@ -51,42 +48,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# headline keys whose union-tagged branches prune under an `op` filter
-FILTER_PRUNED: dict[str, tuple[str, ...]] = {
-    "distinct_sort_sample": (
-        "distinct", "sort_limit", "sample", "stratified", "mixture",
-        "mixture_budget", "mixture_temp", "mixture_unimax", "domain_cap",
-    ),
-    "set_ops": (
-        "union", "intersect", "except",
-        "diff_added", "diff_removed", "diff_changed",
-    ),
-    "agg_groupby_distinct": (
-        "groupby", "distinct", "topk_words", "copair", "copair_stats",
-    ),
-    "rollup_cube_gsets": ("rollup", "cube", "gsets"),
-    "window_frames": ("running", "trailing_30d", "ewma"),
-    "window_agg_time": ("tumble", "slide", "transition"),
-    "event_sessions_rate": ("session", "rate", "funnel", "retention"),
-    "sim_topk_cosine": ("cosine", "bm25"),
-    "dedup_text": (
-        "exact", "minhash_lsh", "ngram_jaccard", "span", "excise",
-        "cdc", "cdc_dup",
-    ),
-    "dedup_incremental": (
-        "ingest_probe", "decontam", "bloom_decontam", "bloom_stats",
-        "sem_decontam", "blocklist",
-    ),
-    "explode_ops": ("posexplode", "explode_outer", "chunk"),
-    "udf_grouped_table": ("apply_in_pandas", "udtf"),
-}
-
-#: headline keys with tagged branches that a filter cannot isolate —
-#: each must have explicit solo builders below, or be excluded with a
-#: reason in EXCLUDED.
-SOLO_BUILT = ("join_asof_event", "dedup_connected_groups", "stream_stateful")
-EXCLUDED: tuple[str, ...] = ()
-
 
 def _asof_solo(direction: str) -> Callable[[SparkSession, str], DataFrame]:
     """The catalog's asof inputs through the SINGLE-direction operator
@@ -95,65 +56,22 @@ def _asof_solo(direction: str) -> Callable[[SparkSession, str], DataFrame]:
 
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         from .operators.asof import asof_join
-        from .queries.helpers import table
+        from .queries.joins import asof_sides
 
-        e = table(spark, sf_dir, "events")
-        views = e.filter(F.col("event_type") == "view").select(
-            "user_id", "ts", F.col("value").alias("view_value")
-        )
-        purchases = e.filter(F.col("event_type") == "purchase").select(
-            "user_id", "ts", "event_id"
-        )
+        purchases, views = asof_sides(spark, sf_dir)
         return asof_join(purchases, views, "user_id", "ts", direction=direction)
 
     return q
 
 
-def _graph_solo(which: str) -> Callable[[SparkSession, str], DataFrame]:
-    """One graph branch over the catalog's exact LSH edge relation
-    (the shared input is rebuilt per solo — included cost, see module
+def _graph_solo(tag: str) -> Callable[[SparkSession, str], DataFrame]:
+    """The dedup_connected_groups key cut down to one declared branch:
+    the key's own pair-graph step plus that branch's builder (the
+    shared input is rebuilt per solo — included cost, see module
     doc)."""
+    from .queries import all_queries
 
-    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from .operators import dedup as D
-        from .operators.graph import pagerank_fixed, triangle_counts
-        from .queries.dedup import _JACCARD_T
-        from .queries.helpers import table
-        from .util import release_caches
-
-        release_caches("bench_branch_graph")
-        docs = table(spark, sf_dir, "documents")
-        # localCheckpoint, mirroring the catalog key (r14 opt): a solo
-        # that kept persist+count would time the giant-plan driver
-        # re-optimization the key no longer pays, attributing a cost
-        # that does not exist in the branch it stands for
-        pairs = D.minhash_dedup_pairs(
-            docs, "text", "doc_id", threshold=_JACCARD_T
-        ).localCheckpoint()
-        nodes = docs.select(F.col("doc_id").alias("node"))
-        if which == "components":
-            return D.connected_components(pairs, nodes)
-        if which == "pagerank":
-            return pagerank_fixed(pairs, nodes)
-        if which == "inc_components":
-            from .queries.dedup import inc_components_branch
-
-            return inc_components_branch(pairs, nodes)
-        if which == "inc_standing":
-            from .queries.dedup import inc_components_standing
-
-            return inc_components_standing(pairs, nodes)
-        if which == "evict_components":
-            from .queries.dedup import evict_components_branch
-
-            return evict_components_branch(pairs, nodes)
-        if which == "evict_delta":
-            from .queries.dedup import evict_delta_branch
-
-            return evict_delta_branch(pairs, nodes)
-        return triangle_counts(pairs, nodes)
-
-    return q
+    return all_queries()["dedup_connected_groups"].only(tag)
 
 
 def phase_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -169,7 +87,14 @@ def phase_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     a read-only driver), and the key's total alone cannot say whether
     the absorb step or the standing recompute is what costs. Measured
     per round into SURVEY §6."""
-    return {"dedup_connected_groups/inc_standing": _graph_solo("inc_standing")}
+
+    def inc_standing(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from .queries import dedup as Q
+
+        pairs, nodes, _ = Q.pair_graph(spark, sf_dir)
+        return Q.inc_components_standing(pairs, nodes)
+
+    return {"dedup_connected_groups/inc_standing": inc_standing}
 
 
 def _stream_solo(which: str) -> Callable[[SparkSession, str], DataFrame]:
@@ -180,29 +105,13 @@ def _stream_solo(which: str) -> Callable[[SparkSession, str], DataFrame]:
     the query before returning), matching the graph solos' semantics."""
 
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from .streaming import (
-            first_seen_per_user,
-            interval_join,
-            run_many_to_memory,
-            running_user_stats,
-            stream_events,
-        )
+        from .queries.events import stateful_stream
+        from .streaming import no_data_batches_off, run_many_to_memory
 
-        nodata = "spark.sql.streaming.noDataMicroBatches.enabled"
-        prev = spark.conf.get(nodata, "true")
-        spark.conf.set(nodata, "false")
-        try:
-            if which == "first_seen":
-                sdf = first_seen_per_user(stream_events(spark, sf_dir))
-            elif which == "interval_join":
-                sdf = interval_join(
-                    stream_events(spark, sf_dir), stream_events(spark, sf_dir)
-                )
-            else:
-                sdf = running_user_stats(stream_events(spark, sf_dir))
-            (res,) = run_many_to_memory([(sdf, "append")])
-        finally:
-            spark.conf.set(nodata, prev)
+        with no_data_batches_off(spark):
+            (res,) = run_many_to_memory(
+                [(stateful_stream(spark, sf_dir, which), "append")]
+            )
         return res
 
     return q
@@ -219,19 +128,24 @@ def _pruned(
     return q
 
 
+#: merged keys whose branches a filter cannot isolate (their work runs
+#: at BUILD time, before any filter could prune) -> solo builder per tag
+_SOLO: dict[str, Callable[[str], Callable[[SparkSession, str], DataFrame]]] = {
+    "join_asof_event": _asof_solo,
+    "dedup_connected_groups": _graph_solo,
+    "stream_stateful": _stream_solo,
+}
+SOLO_BUILT = tuple(_SOLO)
+
+
 def branch_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """``{"key/tag": callable}`` for every attributed branch."""
+    """``{"key/tag": callable}`` for every declared branch of every
+    merged catalog key (each key's own ``branches``)."""
+    from .queries import all_queries
+
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for key, tags in FILTER_PRUNED.items():
-        for tag in tags:
-            out[f"{key}/{tag}"] = _pruned(key, tag)
-    for d in ("backward", "forward", "nearest"):
-        out[f"join_asof_event/{d}"] = _asof_solo(d)
-    for g in (
-        "components", "pagerank", "triangles", "inc_components",
-        "evict_components", "evict_delta",
-    ):
-        out[f"dedup_connected_groups/{g}"] = _graph_solo(g)
-    for s in ("first_seen", "interval_join", "running"):
-        out[f"stream_stateful/{s}"] = _stream_solo(s)
+    for key, q in all_queries().items():
+        solo = _SOLO.get(key, lambda tag, key=key: _pruned(key, tag))
+        for tag in getattr(q, "branches", ()):
+            out[f"{key}/{tag}"] = solo(tag)
     return out

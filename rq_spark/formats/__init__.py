@@ -229,10 +229,6 @@ def _json_pairs(v, indent: int | None = None, level: int = 0) -> str:
     return _json.dumps(v, ensure_ascii=False)
 
 
-def _json_compact_pairs(v) -> str:
-    return _json_pairs(v)
-
-
 def _encode_json(values: Iterable, style: str = "compact", **_) -> bytes:
     from . import json_readable as _readable
 

@@ -237,13 +237,6 @@ def bpe_tokens(merges: list[tuple[str, str]], text: Column) -> Column:
     return enc(normalize_text(text))
 
 
-def bpe_token_count(merges: list[tuple[str, str]], text: Column) -> Column:
-    """Learned-vocabulary token count per document — the training-token
-    budget under the corpus's OWN tokenizer rather than the fixed
-    regex pretokenizer of `text_bpe_token_count`."""
-    return F.size(bpe_tokens(merges, text))
-
-
 def decode_tokens(tokens: Iterable[str]) -> str:
     """Inverse of `bpe_tokens` (losslessness witness): concatenate and
     turn end-of-word markers back into spaces."""

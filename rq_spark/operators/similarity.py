@@ -219,8 +219,20 @@ def ann_topk(
     corpus embeddings are real-valued floats where a numpy dot could
     drift in the last ulp. Anything over ``max_query_rows`` raises a
     named ValueError (the degenerate corpus-sized-queries case —
-    use `lsh_near_pairs` / `knn_graph` shapes instead)."""
+    use `lsh_near_pairs` / `knn_graph` shapes instead).
+
+    Contracts: queries are banded at their vector column's element
+    precision, the one the corpus batches arrive in (another precision
+    can put a near-hyperplane vector in another bucket than its
+    identical corpus twin). **Unique ids** on each side: a candidate
+    with the query's id is dropped as the self-match, and duplicate
+    corpus rows sharing an id emit one pair per row. **Deterministic
+    query side**: it is evaluated twice — collected at BUILD time for
+    the bucket tables and again as the scoring join's broadcast side —
+    so a ``rand()``-sampled or changing query relation would score rows
+    it never banded."""
     import pyspark.sql.types as T
+    from pyspark.sql.pandas.types import to_arrow_type
 
     planes = hyperplanes(bands * rows_per_band, dim)
     q_rows = (
@@ -239,13 +251,14 @@ def ann_topk(
             "(lsh_near_pairs / knn_graph) instead"
         )
     q_ids = np.array([r.query_id for r in q_rows])
-    # float32 stack exactly as band_bucket_udf's np.stack of Arrow
-    # float lists — the matmul promotes against the float64 planes, so
-    # sign bits (and thus buckets) are bit-identical to the old UDF
+    # stacked like the probe's np.stack of the Arrow lists, at the
+    # element type's precision, so sign bits (and buckets) agree
+    elem = queries.schema[vec_col].dataType.elementType
+    q_dtype = to_arrow_type(elem).to_pandas_dtype()
     Q = (
-        np.stack([np.asarray(r.q_vec, dtype=np.float32) for r in q_rows])
+        np.stack([np.asarray(r.q_vec, dtype=q_dtype) for r in q_rows])
         if q_rows
-        else np.zeros((0, dim), dtype=np.float32)
+        else np.zeros((0, dim), dtype=q_dtype)
     )
     bucket_dict: dict[tuple[int, int], np.ndarray] = {}
     if len(Q):

@@ -457,10 +457,6 @@ def _decode_entropy_image(
 # ---- transforms (inverse) -------------------------------------------------
 
 
-def _avg2(a, b):
-    return ((a & 0xFEFEFEFE) >> 1) + (((a ^ b) & 0xFEFEFEFE) >> 1) + (a & b & 0x01010101)
-
-
 def _bytes4(px: int) -> tuple[int, int, int, int]:
     return (px >> 24) & 0xFF, (px >> 16) & 0xFF, (px >> 8) & 0xFF, px & 0xFF
 

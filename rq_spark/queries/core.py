@@ -17,10 +17,12 @@ Scale notes (100 TB design target):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .helpers import DEC, davg, dsum, spread, sql_davg, sql_dec2dbl, sql_dsum, table
+from ..operators.snapshot import ADDED, CHANGED, REMOVED
+from .helpers import DEC, davg, dsum, merged, null, spread, table
+from .helpers import sql_davg, sql_dec2dbl, sql_dsum
 
 # --------------------------------------------------------------------------
 # flagship: TPC-H Q1-shaped pricing summary
@@ -401,33 +403,27 @@ GROUP BY l_returnflag
 # --------------------------------------------------------------------------
 
 
-def set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNION / INTERSECT / EXCEPT in one tagged result (set semantics:
-    ``distinct`` / ``intersect`` / ``subtract``, not the ALL variants).
-    Each branch is a small dim-key set, so the tag-union costs one
-    distinct-shuffle per branch — same as three separate queries.
+def _v(spark: SparkSession, sf_dir: str, name: str, col: str) -> DataFrame:
+    return table(spark, sf_dir, name).select(F.col(col).alias("v"))
 
-    The r8 ``diff_*`` branches are the set family's production shape:
-    a corpus snapshot diff (operators/snapshot.py — added / removed /
+
+def _bigint_v(df: DataFrame) -> DataFrame:
+    return df.select(F.col("v").cast("bigint").alias("v"))
+
+
+def _snapshot_diff(spark: SparkSession, sf_dir: str, tags) -> DataFrame:
+    """The ``diff_*`` branches — the set family's production shape: a
+    corpus snapshot diff (operators/snapshot.py — added / removed /
     changed keys between two snapshots via ONE union+groupBy shuffle,
-    no full-outer join). The "new" snapshot is a deterministic twin of
-    documents (the CDC-twin evidence pattern): doc_id%7==0 removed,
-    doc_id%5==0 text-mutated, doc_id%11==0 re-added under
-    key + (max(doc_id)+1) — the offset is DERIVED (one MAX over a
-    pruned 1-column scan, the cdc-twin pattern) so re-added keys can
-    never collide with real ids on a large corpus, preserving
-    snapshot_diff's unique-key precondition; the oracle derives the
-    same offset via a scalar subquery, so every per-key status is
-    hash-exact.
-    """
-    c = table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("v"))
-    s = table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("v"))
-    p = table(spark, sf_dir, "part").select(F.col("p_size").alias("v"))
-    li = table(spark, sf_dir, "lineitem").select(F.col("l_linenumber").alias("v"))
-
-    def tag(df: DataFrame, op: str) -> DataFrame:
-        return df.select(F.lit(op).alias("op"), F.col("v").cast("bigint").alias("v"))
-
+    no full-outer join), tagged ``diff_<status>``. The "new" snapshot
+    is a deterministic twin of documents (the CDC-twin evidence
+    pattern): doc_id%7==0 removed, doc_id%5==0 text-mutated,
+    doc_id%11==0 re-added under key + (max(doc_id)+1) — the offset is
+    DERIVED (one MAX over a pruned 1-column scan, the cdc-twin
+    pattern) so re-added keys can never collide with real ids on a
+    large corpus, preserving snapshot_diff's unique-key precondition;
+    the oracle derives the same offset via a scalar subquery, so every
+    per-key status is hash-exact."""
     from ..operators.snapshot import snapshot_diff
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -446,16 +442,36 @@ def set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    diff = snapshot_diff(old, new, "doc_id", "fp").select(
-        F.concat(F.lit("diff_"), F.col("status")).alias("op"),
+    prefix = tags[0].removesuffix(ADDED)  # the declared tags are diff_<status>
+    return snapshot_diff(old, new, "doc_id", "fp").select(
+        F.concat(F.lit(prefix), F.col("status")).alias("op"),
         F.col("key").cast("bigint").alias("v"),
     )
-    return (
-        tag(c.unionByName(s).distinct(), "union")
-        .unionByName(tag(c.intersect(s), "intersect"))
-        .unionByName(tag(p.subtract(li), "except"))
-        .unionByName(diff)
-    )
+
+
+# UNION / INTERSECT / EXCEPT in one tagged result (set semantics:
+# ``distinct`` / ``intersect`` / ``subtract``, not the ALL variants),
+# plus the snapshot diff. Each set branch is a small dim-key set, so
+# the tag-union costs one distinct-shuffle per branch — same as three
+# separate queries.
+set_ops = merged({
+    "union": lambda spark, sf_dir: _bigint_v(
+        _v(spark, sf_dir, "customer", "c_nationkey")
+        .unionByName(_v(spark, sf_dir, "supplier", "s_nationkey"))
+        .distinct()
+    ),
+    "intersect": lambda spark, sf_dir: _bigint_v(
+        _v(spark, sf_dir, "customer", "c_nationkey").intersect(
+            _v(spark, sf_dir, "supplier", "s_nationkey")
+        )
+    ),
+    "except": lambda spark, sf_dir: _bigint_v(
+        _v(spark, sf_dir, "part", "p_size").subtract(
+            _v(spark, sf_dir, "lineitem", "l_linenumber")
+        )
+    ),
+    tuple(f"diff_{s}" for s in (ADDED, REMOVED, CHANGED)): _snapshot_diff,
+})
 
 
 _SET_OPS_SQL = """
@@ -532,87 +548,97 @@ GROUP BY l_returnflag
 """
 
 
-def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch family, tagged branches: 'hll' (approximate distinct) +
-    'cms_hh' (Count-Min heavy hitters, r8).
+def _within_5pct(est: str) -> Column:
+    return (
+        F.abs(F.col(est) - F.col("n_parts_exact")) / F.col("n_parts_exact")
+        <= 0.05
+    ).alias("ok")
 
-    hll — HLL++ approximate distinct, HASH-CHECKED as an assertion:
-    the raw sketch value has no cross-engine oracle (DuckDB's sketch
-    differs), so the branch emits the exact distinct count (oracle =
-    COUNT(DISTINCT)) plus a sketch-within-tolerance flag the oracle
-    asserts TRUE. The sketch is deterministic for a fixed dataset, so
-    the flag is stable — a regression in the sketch's error shows up
-    as a hash mismatch instead of hiding behind a rows-only check. At
-    scale approx_count_distinct replaces the exact distinct's second
-    shuffle with O(1) state per group.
 
-    cms_hh — Count-Min Sketch heavy hitters over the document corpus
-    vocabulary (operators/sketch.py): unlike HLL, the md5-derived CMS
-    buckets are bit-identical in DuckDB, so estimates and the
-    heavy-hitter set are ORACLE-EXACT (no tolerance flag), and the
-    no-underestimate invariant est ≥ cnt is pinned per item by the
-    driver hash. d=4×w=32 forces real collisions at this corpus's
-    vocabulary size, so the min-over-rows estimator is actually
-    exercised. Sketch build shuffles ≤ d·w rows after map-side
-    combine; probing broadcasts the sketch — no corpus shuffle."""
-    from ..operators.dedup import normalize_text
-    from ..operators.sketch import cms_heavy_hitters
-
-    nulls = F.lit(None)
+def _approx_inputs(spark: SparkSession, sf_dir: str):
     li = table(spark, sf_dir, "lineitem")
     g = li.groupBy("l_returnflag").agg(
         F.approx_count_distinct("l_partkey", rsd=0.02).alias("_approx"),
         F.countDistinct("l_partkey").alias("n_parts_exact"),
     )
-    hll = g.select(
-        F.lit("hll").alias("op"),
-        F.col("l_returnflag").alias("grp"),
-        F.col("n_parts_exact").cast("bigint").alias("n1"),
-        nulls.cast("bigint").alias("n2"),
-        (
-            F.abs(F.col("_approx") - F.col("n_parts_exact"))
-            / F.col("n_parts_exact")
-            <= 0.05
-        ).alias("ok"),
-    )
-    # 'hll_union' (late r8): MERGEABLE Datasketches HLL — sketch per
-    # (returnflag, linestatus) sub-group, then hll_union_agg rolls the
-    # binary sketches up to returnflag without touching the raw keys
-    # again. This two-level build is the 100 TB cardinality pattern
-    # (sketch per day/partition once, union forever); the union'd
-    # estimate is asserted within tolerance of the same exact oracle.
+    return li, g
+
+
+def _hll_union(spark: SparkSession, sf_dir: str, inputs) -> DataFrame:
+    """MERGEABLE Datasketches HLL — sketch per (returnflag, linestatus)
+    sub-group, then hll_union_agg rolls the binary sketches up to
+    returnflag without touching the raw keys again. This two-level
+    build is the 100 TB cardinality pattern (sketch per day/partition
+    once, union forever); the union'd estimate is asserted within
+    tolerance of the same exact oracle."""
+    li, g = inputs
     sub = li.groupBy("l_returnflag", "l_linestatus").agg(
         F.hll_sketch_agg("l_partkey").alias("_sk")
     )
-    merged = sub.groupBy("l_returnflag").agg(
+    union = sub.groupBy("l_returnflag").agg(
         F.hll_sketch_estimate(F.hll_union_agg("_sk")).alias("_union_est")
     )
-    hll_u = merged.join(
+    return union.join(
         g.select("l_returnflag", "n_parts_exact"), "l_returnflag"
     ).select(
-        F.lit("hll_union").alias("op"),
         F.col("l_returnflag").alias("grp"),
         F.col("n_parts_exact").cast("bigint").alias("n1"),
-        nulls.cast("bigint").alias("n2"),
-        (
-            F.abs(F.col("_union_est") - F.col("n_parts_exact"))
-            / F.col("n_parts_exact")
-            <= 0.05
-        ).alias("ok"),
+        null("bigint").alias("n2"),
+        _within_5pct("_union_est"),
     )
+
+
+def _cms_hh(spark: SparkSession, sf_dir: str, inputs) -> DataFrame:
+    from ..operators.dedup import normalize_text
+    from ..operators.sketch import cms_heavy_hitters
+
     words = (
         table(spark, sf_dir, "documents")
         .select(F.explode(F.split(normalize_text(F.col("text")), " ")).alias("w"))
         .filter(F.col("w") != "")
     )
-    hh = cms_heavy_hitters(words, "w", depth=4, width=32, inv_frac=64).select(
-        F.lit("cms_hh").alias("op"),
+    return cms_heavy_hitters(words, "w", depth=4, width=32, inv_frac=64).select(
         F.col("item").alias("grp"),
         F.col("cnt").cast("bigint").alias("n1"),
         F.col("est").cast("bigint").alias("n2"),
         F.col("never_under").alias("ok"),
     )
-    return hll.unionByName(hll_u).unionByName(hh)
+
+
+# Sketch family, tagged branches:
+#
+# hll — HLL++ approximate distinct, HASH-CHECKED as an assertion: the
+# raw sketch value has no cross-engine oracle (DuckDB's sketch
+# differs), so the branch emits the exact distinct count (oracle =
+# COUNT(DISTINCT)) plus a sketch-within-tolerance flag the oracle
+# asserts TRUE. The sketch is deterministic for a fixed dataset, so
+# the flag is stable — a regression in the sketch's error shows up as
+# a hash mismatch instead of hiding behind a rows-only check. At scale
+# approx_count_distinct replaces the exact distinct's second shuffle
+# with O(1) state per group.
+#
+# cms_hh — Count-Min Sketch heavy hitters over the document corpus
+# vocabulary (operators/sketch.py): unlike HLL, the md5-derived CMS
+# buckets are bit-identical in DuckDB, so estimates and the
+# heavy-hitter set are ORACLE-EXACT (no tolerance flag), and the
+# no-underestimate invariant est ≥ cnt is pinned per item by the
+# driver hash. d=4×w=32 forces real collisions at this corpus's
+# vocabulary size, so the min-over-rows estimator is actually
+# exercised. Sketch build shuffles ≤ d·w rows after map-side combine;
+# probing broadcasts the sketch — no corpus shuffle.
+agg_approx_distinct = merged(
+    {
+        "hll": lambda spark, sf_dir, inputs: inputs[1].select(
+            F.col("l_returnflag").alias("grp"),
+            F.col("n_parts_exact").cast("bigint").alias("n1"),
+            null("bigint").alias("n2"),
+            _within_5pct("_approx"),
+        ),
+        "hll_union": _hll_union,
+        "cms_hh": _cms_hh,
+    },
+    shared=_approx_inputs,
+)
 
 
 _CMS_HH_SQL = """
@@ -664,20 +690,8 @@ FROM ({_CMS_HH_SQL})
 """
 
 
-def rollup_cube_gsets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP + CUBE + GROUPING SETS in one tagged result, off ONE scan.
-
-    SUM and COUNT are re-aggregable, so lineitem is reduced once to the
-    finest grouping (|returnflag|×|linestatus| ≈ 6 rows, one partial-agg
-    shuffle) and the three Catalyst ``Expand`` plans run over that tiny
-    intermediate — at 100 TB this reads the fact table once instead of
-    three times, and the Expand row-replication happens on O(groups)
-    rows, never O(input). Requires non-null grouping keys (true for the
-    TPC-H flags), else Expand's grouping-nulls would collide with data
-    nulls in the re-aggregation. GROUPING SETS uses the Spark 4
-    ``DataFrame.groupingSets`` API (no temp-view mutation)."""
+def _finest_lineitem_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
-    keys = ("l_returnflag", "l_linestatus")
 
     # Loud guard for the documented precondition: a NULL grouping key
     # would collide with Expand's grouping-nulls in the re-aggregation
@@ -695,32 +709,44 @@ def rollup_cube_gsets(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias(c)
 
-    base = li.groupBy(*(guarded(k) for k in keys)).agg(
+    return li.groupBy(*(guarded(k) for k in _RCG_KEYS)).agg(
         F.sum(F.col("l_quantity").cast(DEC)).alias("_ps"),
         F.count(F.lit(1)).alias("_pn"),
     )
+
+
+_RCG_KEYS = ("l_returnflag", "l_linestatus")
+
+
+def _reaggregated(grouped) -> DataFrame:
     # Exact re-aggregation: decimal(38,6) partial sums re-sum exactly;
     # the double cast happens once at the end, same as dsum().
-    aggs = (
-        F.sum("_ps").cast("double").alias("sum_qty"),
-        F.sum("_pn").alias("n"),
-    )
+    return grouped.agg(
+        F.sum("_ps").cast("double").alias("sum_qty"), F.sum("_pn").alias("n")
+    ).select(*_RCG_KEYS, "sum_qty", "n")
 
-    def tag(df: DataFrame, op: str) -> DataFrame:
-        return df.select(F.lit(op).alias("op"), *keys, "sum_qty", "n")
 
-    return (
-        tag(base.rollup(*keys).agg(*aggs), "rollup")
-        .unionByName(tag(base.cube(*keys).agg(*aggs), "cube"))
-        .unionByName(
-            tag(
-                base.groupingSets(
-                    [["l_returnflag"], ["l_linestatus"], []], *keys
-                ).agg(*aggs),
-                "gsets",
-            )
-        )
-    )
+# ROLLUP + CUBE + GROUPING SETS in one tagged result, off ONE scan.
+#
+# SUM and COUNT are re-aggregable, so lineitem is reduced once to the
+# finest grouping (|returnflag|×|linestatus| ≈ 6 rows, one partial-agg
+# shuffle) and the three Catalyst ``Expand`` plans run over that tiny
+# intermediate — at 100 TB this reads the fact table once instead of
+# three times, and the Expand row-replication happens on O(groups)
+# rows, never O(input). Requires non-null grouping keys (true for the
+# TPC-H flags), else Expand's grouping-nulls would collide with data
+# nulls in the re-aggregation. GROUPING SETS uses the Spark 4
+# ``DataFrame.groupingSets`` API (no temp-view mutation).
+rollup_cube_gsets = merged(
+    {
+        "rollup": lambda spark, sf_dir, base: _reaggregated(base.rollup(*_RCG_KEYS)),
+        "cube": lambda spark, sf_dir, base: _reaggregated(base.cube(*_RCG_KEYS)),
+        "gsets": lambda spark, sf_dir, base: _reaggregated(
+            base.groupingSets([["l_returnflag"], ["l_linestatus"], []], *_RCG_KEYS)
+        ),
+    },
+    shared=_finest_lineitem_groups,
+)
 
 
 _ROLLUP_CUBE_GSETS_SQL = f"""
@@ -1014,105 +1040,69 @@ WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) <
 """
 
 
-def distinct_sort_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """distinct / sort+limit / deterministic sample / stratified sample
-    / domain-mixture sample / per-domain capping in one tagged result
-    (branches = the former distinct_dims, sort_limit,
-    sample_deterministic, sample_stratified, late-r6 sample_mixture,
-    r7 mixture_budget, r8 domain_cap + mixture_temp, r9
-    mixture_unimax)."""
-    nulls = F.lit(None)
-
-    def _distinct() -> DataFrame:
-        return distinct_dims(spark, sf_dir).select(
-            F.lit("distinct").alias("op"),
-            nulls.cast("bigint").alias("k1"),
-            nulls.cast("bigint").alias("k2"),
-            nulls.cast("double").alias("v"),
-            F.col("l_returnflag").alias("s1"),
-            F.col("l_linestatus").alias("s2"),
-        )
-
-    def _sort() -> DataFrame:
-        return sort_limit(spark, sf_dir).select(
-            F.lit("sort_limit").alias("op"),
-            F.col("o_orderkey").cast("bigint").alias("k1"),
-            nulls.cast("bigint").alias("k2"),
-            F.col("o_totalprice").cast("double").alias("v"),
-            F.col("o_orderpriority").alias("s1"),
-            nulls.cast("string").alias("s2"),
-        )
-
-    def _sample() -> DataFrame:
-        return sample_deterministic(spark, sf_dir).select(
-            F.lit("sample").alias("op"),
-            F.col("o_orderkey").cast("bigint").alias("k1"),
-            F.col("o_custkey").cast("bigint").alias("k2"),
-            nulls.cast("double").alias("v"),
-            nulls.cast("string").alias("s1"),
-            nulls.cast("string").alias("s2"),
-        )
-
-    def _strat() -> DataFrame:
-        return sample_stratified(spark, sf_dir).select(
-            F.lit("stratified").alias("op"),
-            F.col("o_orderkey").cast("bigint").alias("k1"),
-            F.col("rk").cast("bigint").alias("k2"),
-            nulls.cast("double").alias("v"),
-            F.col("o_orderpriority").alias("s1"),
-            nulls.cast("string").alias("s2"),
-        )
-
-    def _mix_tagged(tag: str, builder) -> DataFrame:
-        return builder(spark, sf_dir).select(
-            F.lit(tag).alias("op"),
+def _mixture_branch(sample):
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return sample(spark, sf_dir).select(
             F.col("doc_id").cast("bigint").alias("k1"),
-            nulls.cast("bigint").alias("k2"),
+            null("bigint").alias("k2"),
             F.col("rate").cast("double").alias("v"),
             F.col("source").alias("s1"),
-            nulls.cast("string").alias("s2"),
+            null("string").alias("s2"),
         )
 
-    def _cap() -> DataFrame:
-        return sample_domain_cap(spark, sf_dir).select(
-            F.lit("domain_cap").alias("op"),
-            F.col("doc_id").cast("bigint").alias("k1"),
-            F.col("domain_rank").cast("bigint").alias("k2"),
-            nulls.cast("double").alias("v"),
-            F.col("domain").alias("s1"),
-            nulls.cast("string").alias("s2"),
-        )
+    return build
 
-    builders = [
-        _distinct,
-        _sort,
-        _sample,
-        _strat,
-        lambda: _mix_tagged("mixture", sample_mixture),
-        lambda: _mix_tagged("mixture_budget", sample_mixture_budget),
-        lambda: _mix_tagged("mixture_temp", sample_mixture_temperature),
-        lambda: _mix_tagged("mixture_unimax", sample_mixture_unimax),
-        _cap,
-    ]
-    # the nine branch builders are independent (each reads its own
-    # table() and carries no shared persist), but building them
-    # serially costs ~2-2.6 s of the key's ~3 s: ~3.4k blocking Py4J
-    # round trips of Column/plan construction plus three tiny
-    # threshold-collect jobs (budget/temp/unimax) that idle 32 cores.
-    # Overlap the BUILDS on a pool (guide §2.6; the dedup_incremental
-    # r15 / corpus_curation r14 precedent) and assemble the union in
-    # the fixed list order above — thread scheduling can influence
-    # only the overlap, never the assembled plan, which stays
-    # branch-for-branch identical to the serial build
-    # (plans/r15/distinct_sort_sample_{before,after}.txt).
-    from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        parts = list(pool.map(lambda b: b(), builders))
-    out = parts[0]
-    for part in parts[1:]:
-        out = out.unionByName(part)
-    return out
+# distinct / sort+limit / deterministic sample / stratified sample /
+# domain-mixture sample / per-domain capping in one tagged result
+# (branches = the former distinct_dims, sort_limit,
+# sample_deterministic, sample_stratified, late-r6 sample_mixture, r7
+# mixture_budget, r8 domain_cap + mixture_temp, r9 mixture_unimax).
+# Built serially, the nine branches cost ~2-2.6 s of the key's ~3 s:
+# ~3.4k blocking Py4J round trips plus three tiny threshold-collect
+# jobs (budget/temp/unimax) that idle every core; merged() overlaps
+# the builds without changing the assembled plan.
+distinct_sort_sample = merged({
+    "distinct": lambda spark, sf_dir: distinct_dims(spark, sf_dir).select(
+        null("bigint").alias("k1"),
+        null("bigint").alias("k2"),
+        null("double").alias("v"),
+        F.col("l_returnflag").alias("s1"),
+        F.col("l_linestatus").alias("s2"),
+    ),
+    "sort_limit": lambda spark, sf_dir: sort_limit(spark, sf_dir).select(
+        F.col("o_orderkey").cast("bigint").alias("k1"),
+        null("bigint").alias("k2"),
+        F.col("o_totalprice").cast("double").alias("v"),
+        F.col("o_orderpriority").alias("s1"),
+        null("string").alias("s2"),
+    ),
+    "sample": lambda spark, sf_dir: sample_deterministic(spark, sf_dir).select(
+        F.col("o_orderkey").cast("bigint").alias("k1"),
+        F.col("o_custkey").cast("bigint").alias("k2"),
+        null("double").alias("v"),
+        null("string").alias("s1"),
+        null("string").alias("s2"),
+    ),
+    "stratified": lambda spark, sf_dir: sample_stratified(spark, sf_dir).select(
+        F.col("o_orderkey").cast("bigint").alias("k1"),
+        F.col("rk").cast("bigint").alias("k2"),
+        null("double").alias("v"),
+        F.col("o_orderpriority").alias("s1"),
+        null("string").alias("s2"),
+    ),
+    "mixture": _mixture_branch(sample_mixture),
+    "mixture_budget": _mixture_branch(sample_mixture_budget),
+    "mixture_temp": _mixture_branch(sample_mixture_temperature),
+    "mixture_unimax": _mixture_branch(sample_mixture_unimax),
+    "domain_cap": lambda spark, sf_dir: sample_domain_cap(spark, sf_dir).select(
+        F.col("doc_id").cast("bigint").alias("k1"),
+        F.col("domain_rank").cast("bigint").alias("k2"),
+        null("double").alias("v"),
+        F.col("domain").alias("s1"),
+        null("string").alias("s2"),
+    ),
+})
 
 
 _DISTINCT_SORT_SAMPLE_SQL = f"""
@@ -1147,50 +1137,31 @@ FROM ({_SAMPLE_DOMAIN_CAP_SQL})
 """
 
 
-def agg_groupby_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Plain group-by aggregates + distinct-count aggregates + the
-    corpus top-k vocabulary report in one tagged result (branches =
-    the former agg_groupby, agg_distinct, plus late-r6 topk_words)."""
-    nulls = F.lit(None)
-    plain = agg_groupby(spark, sf_dir).select(
-        F.lit("groupby").alias("op"),
-        F.col("o_orderpriority").alias("grp"),
-        F.col("n_orders").cast("bigint").alias("n1"),
-        nulls.cast("bigint").alias("n2"),
-        F.col("sum_total").alias("v1"),
-        F.col("min_total").cast("double").alias("v2"),
-        F.col("max_total").cast("double").alias("v3"),
-    )
-    dist = agg_distinct(spark, sf_dir).select(
-        F.lit("distinct").alias("op"),
-        F.col("l_returnflag").alias("grp"),
-        F.col("n_parts").cast("bigint").alias("n1"),
-        F.col("n_supps").cast("bigint").alias("n2"),
-        nulls.cast("double").alias("v1"),
-        nulls.cast("double").alias("v2"),
-        nulls.cast("double").alias("v3"),
-    )
-    # corpus vocabulary report (late r6): exact top-50 words over
-    # `documents` with deterministic tiebreak — partial-agg counts +
-    # TakeOrderedAndProject, never a global vocabulary sort
+def _topk_words(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus vocabulary report (late r6): exact top-50 words over
+    `documents` with deterministic tiebreak — partial-agg counts +
+    TakeOrderedAndProject, never a global vocabulary sort."""
     from ..operators.text import topk_words
 
-    topk = topk_words(table(spark, sf_dir, "documents"), "text", k=50).select(
-        F.lit("topk_words").alias("op"),
+    return topk_words(table(spark, sf_dir, "documents"), "text", k=50).select(
         F.col("word").alias("grp"),
         F.col("cnt").cast("bigint").alias("n1"),
         F.col("rank").cast("bigint").alias("n2"),
-        nulls.cast("double").alias("v1"),
-        nulls.cast("double").alias("v2"),
-        nulls.cast("double").alias("v3"),
+        null("double").alias("v1"),
+        null("double").alias("v2"),
+        null("double").alias("v3"),
     )
-    # late-r8 copair branch: frequent co-occurrence pair mining with
-    # the a-priori prune (operators/itemsets.py) — parts co-ordered in
-    # ≥2 distinct orders, both parts individually in ≥31 orders; the
-    # stats row pins the prune funnel (n frequent items, n pruned
-    # (basket,item) rows) so a silently-wrong prefilter flips the hash
+
+
+def _copairs(spark: SparkSession, sf_dir: str, tags) -> DataFrame:
+    """Late-r8 copair branches: frequent co-occurrence pair mining with
+    the a-priori prune (operators/itemsets.py) — parts co-ordered in
+    ≥2 distinct orders, both parts individually in ≥31 orders; the
+    stats row pins the prune funnel (n frequent items, n pruned
+    (basket,item) rows) so a silently-wrong prefilter flips the hash."""
     from ..operators.itemsets import cooccurrence_pairs
 
+    pair_tag, stats_tag = tags
     pairs, freq = cooccurrence_pairs(
         table(spark, sf_dir, "lineitem"),
         "l_orderkey",
@@ -1199,32 +1170,53 @@ def agg_groupby_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         min_pair_support=2,
     )
     copair = pairs.select(
-        F.lit("copair").alias("op"),
+        F.lit(pair_tag).alias("op"),
         F.concat_ws(":", F.col("a_item"), F.col("b_item")).alias("grp"),
         F.col("support").cast("bigint").alias("n1"),
-        nulls.cast("bigint").alias("n2"),
-        nulls.cast("double").alias("v1"),
-        nulls.cast("double").alias("v2"),
-        nulls.cast("double").alias("v3"),
+        null("bigint").alias("n2"),
+        null("double").alias("v1"),
+        null("double").alias("v2"),
+        null("double").alias("v3"),
     )
     costats = freq.agg(
         F.count(F.lit(1)).alias("_nf"),
         F.sum("support").alias("_rows"),
     ).select(
-        F.lit("copair_stats").alias("op"),
-        nulls.cast("string").alias("grp"),
+        F.lit(stats_tag).alias("op"),
+        null("string").alias("grp"),
         F.col("_nf").cast("bigint").alias("n1"),
         F.col("_rows").cast("bigint").alias("n2"),
-        nulls.cast("double").alias("v1"),
-        nulls.cast("double").alias("v2"),
-        nulls.cast("double").alias("v3"),
+        null("double").alias("v1"),
+        null("double").alias("v2"),
+        null("double").alias("v3"),
     )
-    return (
-        plain.unionByName(dist)
-        .unionByName(topk)
-        .unionByName(copair)
-        .unionByName(costats)
-    )
+    return copair.unionByName(costats)
+
+
+# Plain group-by aggregates + distinct-count aggregates + the corpus
+# top-k vocabulary report + co-occurrence pairs in one tagged result
+# (branches = the former agg_groupby, agg_distinct, plus late-r6
+# topk_words and late-r8 copair).
+agg_groupby_distinct = merged({
+    "groupby": lambda spark, sf_dir: agg_groupby(spark, sf_dir).select(
+        F.col("o_orderpriority").alias("grp"),
+        F.col("n_orders").cast("bigint").alias("n1"),
+        null("bigint").alias("n2"),
+        F.col("sum_total").alias("v1"),
+        F.col("min_total").cast("double").alias("v2"),
+        F.col("max_total").cast("double").alias("v3"),
+    ),
+    "distinct": lambda spark, sf_dir: agg_distinct(spark, sf_dir).select(
+        F.col("l_returnflag").alias("grp"),
+        F.col("n_parts").cast("bigint").alias("n1"),
+        F.col("n_supps").cast("bigint").alias("n2"),
+        null("double").alias("v1"),
+        null("double").alias("v2"),
+        null("double").alias("v3"),
+    ),
+    "topk_words": _topk_words,
+    ("copair", "copair_stats"): _copairs,
+})
 
 
 _TOPK_WORDS_SQL = """
@@ -1282,110 +1274,100 @@ SELECT op, grp, n1, n2, NULL, NULL, NULL FROM (
 """
 
 
-def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Moment statistics (corr/covar/stddev) + exact percentiles per
-    group + the per-column profiling report in one tagged result
-    (branches = the former agg_stats_corr, agg_percentiles, plus
-    late-r6 profile via operators/profiling.py)."""
-    nulls = F.lit(None)
-    corr = agg_stats_corr(spark, sf_dir).select(
-        F.lit("corr").alias("op"),
-        "l_returnflag",
-        F.col("corr_qty_price").alias("v1"),
-        F.col("covar_qty_price").alias("v2"),
-        F.col("stddev_qty").alias("v3"),
-        nulls.cast("bigint").alias("n"),
-    )
-    pct = agg_percentiles(spark, sf_dir).select(
-        F.lit("percentile").alias("op"),
-        "l_returnflag",
-        F.col("median_qty").alias("v1"),
-        F.col("p90_price").alias("v2"),
-        nulls.cast("double").alias("v3"),
-        F.col("n").cast("bigint").alias("n"),
-    )
-    # per-column profiling report (late r6): one-scan Expand plan,
-    # operators/profiling.py — the ingestion QA pass
-    from ..operators.profiling import profile_columns
+def _stat_row(df: DataFrame, grp, *vals) -> DataFrame:
+    """One agg_stats branch in the key's shared (l_returnflag, v1-v3, n)
+    shape; ``grp`` rides the l_returnflag column. Strings name columns."""
 
-    prof = profile_columns(
-        table(spark, sf_dir, "lineitem"),
-        ["l_quantity", "l_extendedprice", "l_discount", "l_linenumber"],
-    ).select(
-        F.lit("profile").alias("op"),
-        F.col("col_name").alias("l_returnflag"),
-        F.col("min_val").alias("v1"),
-        F.col("max_val").alias("v2"),
-        F.col("null_frac").alias("v3"),
-        F.col("ndv").cast("bigint").alias("n"),
-    )
-    # key-skew diagnostic (late r8): the 'should I salt this join?'
-    # report per candidate shuffle key — one Expand scan for all keys,
-    # exact counts + two single-division ratios, hash-exact
-    from ..operators.profiling import key_skew_report
+    def col(v):
+        return F.col(v) if isinstance(v, str) else v
 
-    skew = key_skew_report(
-        table(spark, sf_dir, "lineitem"), ["l_orderkey", "l_suppkey"]
-    ).select(
-        F.lit("skew").alias("op"),
-        F.col("col_name").alias("l_returnflag"),
-        F.col("max_cnt").cast("double").alias("v1"),
-        F.col("skew_ratio").alias("v2"),
-        F.col("top_share").alias("v3"),
-        F.col("n_keys").alias("n"),
+    keep = isinstance(grp, str) and grp == "l_returnflag"
+    return df.select(
+        grp if keep else col(grp).alias("l_returnflag"),
+        *(col(v).alias(a) for v, a in zip(vals, ("v1", "v2", "v3", "n"))),
     )
-    # histogram-exact quantiles (r8): same p90 family as the
-    # 'percentile' branch but shuffle ∝ distinct cent values, not rows
-    # — the fixed-point-measure plan that survives a 100 TB lineitem
-    from ..operators.profiling import quantiles_from_hist
-    from ..util import persist_tracked as _persist_tracked
-    from ..util import release_caches as _release_caches
+
+
+def _cents_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ONE persisted cents histogram (rows ∝ distinct cent values)
+    feeds both the quantile report and the MAD report — one lineitem
+    scan instead of two."""
+    from ..util import persist_tracked, release_caches
 
     cents = table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
     )
-    # ONE persisted cents histogram (rows ∝ distinct cent values)
-    # feeds both the quantile report and the MAD report — one lineitem
-    # scan instead of two
-    _release_caches("agg_stats")
-    cents_hist = _persist_tracked(
-        cents.groupBy("l_returnflag", "cents").agg(
-            F.count(F.lit(1)).alias("_c")
-        ),
+    release_caches("agg_stats")
+    return persist_tracked(
+        cents.groupBy("l_returnflag", "cents").agg(F.count(F.lit(1)).alias("_c")),
         scope="agg_stats",
     )
-    qh = quantiles_from_hist(
-        cents_hist, "l_returnflag", "cents", [25, 50, 90]
-    ).select(
-        F.lit("qhist").alias("op"),
-        "l_returnflag",
-        (F.col("p25").cast("double") / 100).alias("v1"),
-        (F.col("p50").cast("double") / 100).alias("v2"),
-        (F.col("p90").cast("double") / 100).alias("v3"),
-        F.col("n").alias("n"),
+
+
+def _profile(spark: SparkSession, sf_dir: str, _hist) -> DataFrame:
+    """Per-column profiling report (late r6): one-scan Expand plan,
+    operators/profiling.py — the ingestion QA pass."""
+    from ..operators.profiling import profile_columns
+
+    prof = profile_columns(
+        table(spark, sf_dir, "lineitem"),
+        ["l_quantity", "l_extendedprice", "l_discount", "l_linenumber"],
     )
-    # MAD robust-outlier report (late r8, operators/profiling.py):
-    # median / MAD / beyond-3-MAD counts off the SAME histogram shape
-    # as qhist — one scan, derived deviation histogram, broadcast
-    # medians, all-integer arithmetic
+    return _stat_row(
+        prof, "col_name", "min_val", "max_val", "null_frac",
+        F.col("ndv").cast("bigint"),
+    )
+
+
+def _key_skew(spark: SparkSession, sf_dir: str, _hist) -> DataFrame:
+    """Key-skew diagnostic (late r8): the 'should I salt this join?'
+    report per candidate shuffle key — one Expand scan for all keys,
+    exact counts + two single-division ratios, hash-exact."""
+    from ..operators.profiling import key_skew_report
+
+    skew = key_skew_report(
+        table(spark, sf_dir, "lineitem"), ["l_orderkey", "l_suppkey"]
+    )
+    return _stat_row(
+        skew, "col_name", F.col("max_cnt").cast("double"), "skew_ratio",
+        "top_share", "n_keys",
+    )
+
+
+def _qhist(spark: SparkSession, sf_dir: str, hist: DataFrame) -> DataFrame:
+    """Histogram-exact quantiles (r8): same p90 family as the
+    'percentile' branch but shuffle ∝ distinct cent values, not rows —
+    the fixed-point-measure plan that survives a 100 TB lineitem."""
+    from ..operators.profiling import quantiles_from_hist
+
+    qh = quantiles_from_hist(hist, "l_returnflag", "cents", [25, 50, 90])
+    return _stat_row(
+        qh, "l_returnflag", F.col("p25").cast("double") / 100,
+        F.col("p50").cast("double") / 100, F.col("p90").cast("double") / 100, "n",
+    )
+
+
+def _mad(spark: SparkSession, sf_dir: str, hist: DataFrame) -> DataFrame:
+    """MAD robust-outlier report (late r8, operators/profiling.py):
+    median / MAD / beyond-3-MAD counts off the SAME histogram as
+    qhist — derived deviation histogram, broadcast medians, all-integer
+    arithmetic."""
     from ..operators.profiling import mad_outlier_report_from_hist
 
-    madr = mad_outlier_report_from_hist(
-        cents_hist, "l_returnflag", "cents", k=3
-    ).select(
-        F.lit("mad").alias("op"),
-        "l_returnflag",
-        (F.col("median").cast("double") / 100).alias("v1"),
-        (F.col("mad").cast("double") / 100).alias("v2"),
-        F.col("n_outliers").cast("double").alias("v3"),
-        F.col("n").alias("n"),
+    madr = mad_outlier_report_from_hist(hist, "l_returnflag", "cents", k=3)
+    return _stat_row(
+        madr, "l_returnflag", F.col("median").cast("double") / 100,
+        F.col("mad").cast("double") / 100, F.col("n_outliers").cast("double"), "n",
     )
-    # declarative data-quality contract (late r8,
-    # operators/constraints.py): five scalar checks in ONE agg pass +
-    # a referential anti-join check; the synthetic lineitem genuinely
-    # FAILS uniqueness and the tight discount range, so pass AND fail
-    # paths are both under the driver hash
+
+
+def _data_quality(spark: SparkSession, sf_dir: str, _hist) -> DataFrame:
+    """Declarative data-quality contract (late r8,
+    operators/constraints.py): five scalar checks in ONE agg pass + a
+    referential anti-join check; the synthetic lineitem genuinely FAILS
+    uniqueness and the tight discount range, so pass AND fail paths
+    are both under the driver hash."""
     from ..operators import constraints as C
 
     li = table(spark, sf_dir, "lineitem")
@@ -1400,53 +1382,75 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     ).unionByName(
         C.fk_check(li, ["l_orderkey"], table(spark, sf_dir, "orders"), ["o_orderkey"])
-    ).select(
-        F.lit("dq").alias("op"),
-        F.col("check").alias("l_returnflag"),
-        F.col("observed").alias("v1"),
-        F.col("threshold").alias("v2"),
-        F.col("passed").cast("double").alias("v3"),
-        F.col("n").cast("bigint").alias("n"),
     )
-    # distribution drift (late r8, operators/profiling.py): exact
-    # total-variation distance between the even/odd order halves per
-    # column — integer numerator, one division, so drift is hash-exact
-    # where PSI/KL's log terms never could be
+    return _stat_row(
+        dq, "check", "observed", "threshold",
+        F.col("passed").cast("double"), F.col("n").cast("bigint"),
+    )
+
+
+def _drift(spark: SparkSession, sf_dir: str, _hist) -> DataFrame:
+    """Distribution drift (late r8, operators/profiling.py): exact
+    total-variation distance between the even/odd order halves per
+    column — integer numerator, one division, so drift is hash-exact
+    where PSI/KL's log terms never could be."""
     from ..operators.profiling import drift_report
 
     drift = drift_report(
-        li,
+        table(spark, sf_dir, "lineitem"),
         F.col("l_orderkey") % 2 == 0,
         ["l_quantity", "l_returnflag", "l_linenumber"],
-    ).select(
-        F.lit("drift").alias("op"),
-        F.col("col_name").alias("l_returnflag"),
-        F.col("tvd").alias("v1"),
-        F.col("n_values").cast("double").alias("v2"),
-        F.col("n_only_one_side").cast("double").alias("v3"),
-        (F.col("n_a") + F.col("n_b")).cast("bigint").alias("n"),
     )
-    # join-size preflight (late r8, operators/profiling.py): the exact
-    # lineitem⋈orders output cardinality from the two key histograms —
-    # the "will this join explode" guard, integer-exact, the join
-    # itself never runs
+    return _stat_row(
+        drift, "col_name", "tvd", F.col("n_values").cast("double"),
+        F.col("n_only_one_side").cast("double"),
+        (F.col("n_a") + F.col("n_b")).cast("bigint"),
+    )
+
+
+def _join_size(spark: SparkSession, sf_dir: str, _hist) -> DataFrame:
+    """Join-size preflight (late r8, operators/profiling.py): the exact
+    lineitem⋈orders output cardinality from the two key histograms —
+    the "will this join explode" guard, integer-exact, the join itself
+    never runs."""
     from ..operators.profiling import join_size_report
 
     jsz = join_size_report(
-        li, "l_orderkey", table(spark, sf_dir, "orders"), "o_orderkey"
-    ).select(
-        F.lit("joinsize").alias("op"),
-        F.lit("l_orderkey=o_orderkey").alias("l_returnflag"),
-        F.col("n_a").cast("double").alias("v1"),
-        F.col("n_b").cast("double").alias("v2"),
-        F.col("blowup").alias("v3"),
-        F.col("n_out").alias("n"),
+        table(spark, sf_dir, "lineitem"), "l_orderkey",
+        table(spark, sf_dir, "orders"), "o_orderkey",
     )
-    return (
-        corr.unionByName(pct).unionByName(prof).unionByName(skew)
-        .unionByName(qh).unionByName(madr).unionByName(dq)
-        .unionByName(drift).unionByName(jsz)
+    return _stat_row(
+        jsz, F.lit("l_orderkey=o_orderkey"), F.col("n_a").cast("double"),
+        F.col("n_b").cast("double"), "blowup", "n_out",
     )
+
+
+# Moment statistics (corr/covar/stddev) + exact percentiles per group +
+# the per-column profiling and data-quality reports in one tagged
+# result (branches = the former agg_stats_corr, agg_percentiles, plus
+# late-r6 profile via operators/profiling.py and the r8 reports).
+agg_stats = merged(
+    {
+        "corr": lambda spark, sf_dir, _hist: _stat_row(
+            agg_stats_corr(spark, sf_dir), "l_returnflag",
+            F.col("corr_qty_price"), F.col("covar_qty_price"),
+            F.col("stddev_qty"), null("bigint"),
+        ),
+        "percentile": lambda spark, sf_dir, _hist: _stat_row(
+            agg_percentiles(spark, sf_dir), "l_returnflag",
+            F.col("median_qty"), F.col("p90_price"), null("double"),
+            F.col("n").cast("bigint"),
+        ),
+        "profile": _profile,
+        "skew": _key_skew,
+        "qhist": _qhist,
+        "mad": _mad,
+        "dq": _data_quality,
+        "drift": _drift,
+        "joinsize": _join_size,
+    },
+    shared=_cents_hist,
+)
 
 
 _PROFILE_SQL = """

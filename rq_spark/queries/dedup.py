@@ -21,12 +21,13 @@ from ..operators.dedup import NORM_SQL as _D_NORM_SQL
 from ..operators import similarity as S
 from ..operators.graph import PR_ITERS as _PR_ITERS
 from ..operators.graph import pagerank_cte_sql as _pagerank_cte_sql
+from ..operators.graph import pagerank_fixed
 from ..operators.graph import triangle_cte_sql as _triangle_cte_sql
 from ..util import checkpoint_adaptive as _checkpoint_adaptive
 from ..util import persist_tracked as _persist_tracked
 from ..util import release_caches as _release_caches
 from ..util import spread as _spread
-from .helpers import table
+from .helpers import merged, null, once, table
 
 _JACCARD_T = 0.5
 
@@ -125,7 +126,7 @@ _EVICT_MOD, _EVICT_RES = 31, 3
 
 
 def evict_components_branch(
-    pairs: DataFrame, nodes: DataFrame, labels: DataFrame | None = None
+    pairs: DataFrame, nodes: DataFrame, labels: DataFrame
 ) -> DataFrame:
     """The evict_components branch body (r13, r12 verdict top_next) —
     a deterministic takedown batch (doc_id % 31 == 3) evicted from the
@@ -134,20 +135,14 @@ def evict_components_branch(
     edges, never the corpus (deletion can SPLIT a component and can
     delete the min-label representative, so a filter over the standing
     labels would be wrong on both counts). ``labels`` is the standing
-    min-label fixed point: the catalog key passes its components
-    branch's checkpointed output (shared work); the bench solo leaves
-    it None and pays its own standing build (included-cost convention,
-    same as the inc solos)."""
-    if labels is None:
-        labels = _checkpoint_adaptive(
-            D.connected_components(pairs, nodes, scope="evict_cc_old")
-        )
+    min-label fixed point: the components branch's checkpointed output
+    (shared work)."""
     deleted = nodes.filter((F.col("node") % _EVICT_MOD) == _EVICT_RES)
     return D.evict_nodes(labels, pairs, deleted, scope="evict_branch")
 
 
 def evict_delta_branch(
-    pairs: DataFrame, nodes: DataFrame, labels: DataFrame | None = None
+    pairs: DataFrame, nodes: DataFrame, labels: DataFrame
 ) -> DataFrame:
     """The evict_delta branch body (r14) — a takedown through
     ``evict_nodes(..., return_delta=True)``: ONLY the surviving nodes
@@ -170,13 +165,8 @@ def evict_delta_branch(
     the touched set ∝ a FRACTION of components (deleting EVERY rep
     touched every multi-node component, pushing the re-cluster past
     the driver-tier threshold into the distributed CC loop — measured
-    +12 s on this key at sf0.1 — for no extra evidence). ``labels`` follows
-    the evict_components convention (catalog passes the shared
-    checkpointed components output; the bench solo pays its own)."""
-    if labels is None:
-        labels = _checkpoint_adaptive(
-            D.connected_components(pairs, nodes, scope="evict_delta_cc_old")
-        )
+    +12 s on this key at sf0.1 — for no extra evidence). ``labels`` is
+    the standing fixed point, as for evict_components."""
     multi = (
         labels.groupBy("rep")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -205,166 +195,140 @@ def inc_components_standing(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
     return D.connected_components(old_e, nodes, scope="inc_cc_old")
 
 
-def dedup_connected_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Graph analytics over the near-dup pair graph, tagged branches:
+def pair_graph(spark: SparkSession, sf_dir: str):
+    """The near-dup pair graph every branch reads. Edges come from
+    MinHash-LSH (the candidate-bounded scale path, not the quadratic
+    shingle self-join), computed ONCE; with 24 bands × 4 rows the
+    verified pair set equals the exact-Jaccard pairs w.h.p. (P(miss) ≈
+    3e-6 at j=0.8), so the recursive-CTE oracle — which IS the exact
+    pair graph — stays valid unchanged.
 
-    'components' — near-dup PAIRS → duplicate CLUSTERS: connected
-    components by iterative min-label propagation
-    (operators/dedup.py:connected_components). One row per document,
-    rep_id = smallest doc_id in its duplicate group (itself for
-    singletons) — the canonical 'pick one representative per cluster'
-    step of a dedup pipeline.
-
-    'pagerank' (r8) — fixed-point integer PageRank over the SAME graph
-    (operators/graph.py:pagerank_fixed): duplication centrality per
-    document. Integer arithmetic makes the iterative computation
-    bit-reproducible, so five unrolled CTE iterations in the oracle
-    pin every rank unit under the driver hash — an evidence channel
-    float PageRank can never have.
-
-    'triangles' (r8) — per-node triangle counts
-    (operators/graph.py:triangle_counts): the local clustering signal
-    separating dense duplicate cliques from chains. The degree-ordered
-    DAG orientation enumerates each triangle once; counts are integer
-    and the oracle replays the same joins, so every count is
-    hash-exact.
-
-    'inc_components' (r11, TWO-DAY since r12) — INCREMENTAL connected
-    components (operators/dedup.py:absorb_edges): the absorb step of
-    the daily-ingest loop. The edge set splits deterministically
-    three ways on (a_id + b_id) % 3 — a "standing" graph plus two
-    consecutive daily batches — and the branch chains TWO absorbs,
-    day 2 merging into day 1's output: the production shape where
-    yesterday's absorb output is today's standing labels. Each absorb
-    merges its batch through the CONTRACTED representative graph —
-    work ∝ batch + touched components, never corpus. The final labels
-    must equal the full recompute EXACTLY, so the oracle is the SAME
-    recursive CTE as 'components': the driver hash falsifies REPEATED
-    absorption against the ground-truth full graph every round.
-
-    'evict_components' (r13) — TAKEDOWNS at the label layer
-    (operators/dedup.py:evict_nodes): a deterministic ~3% deletion set
-    (doc_id % 31 == 3) is evicted from the components branch's standing
-    labels by component-scoped recompute — drop the deleted nodes,
-    re-run min-label CC over ONLY the touched components' surviving
-    edges (deletion can split a component and can delete the
-    representative, so a filter is wrong on both counts; work ∝
-    touched components, never corpus). The oracle re-walks the
-    recursive closure over the SURVIVING graph, so every post-takedown
-    label is hash-exact.
-
-    'evict_delta' (r14) — the SAME takedown through ``return_delta``:
-    only the surviving nodes whose representative moved, i.e. exactly
-    the rows `append_labels` persists in the incremental-labels loop.
-    The oracle joins the surviving closure to the full closure and
-    keeps the disagreements, so the delta SEMANTICS are hash-checked
-    directly, not just the applied result.
-
-    Edges come from MinHash-LSH (the candidate-bounded scale path, not
-    the quadratic shingle self-join), computed ONCE and persisted for
-    all branches; with 24 bands × 4 rows the verified pair set equals
-    the exact-Jaccard pairs w.h.p. (P(miss) ≈ 3e-6 at j=0.8), so the
-    recursive-CTE oracle below — which IS the exact pair graph —
-    stays valid unchanged."""
-    from ..operators.graph import pagerank_fixed, triangle_counts
-
+    localCheckpoint, not persist+count (r14 opt, guide §3.3/§7.3):
+    every one of the six branches re-embeds the pairs plan at each
+    reference (triangles alone reads it 8×, the evicts via sym 4× more),
+    so with a persist the final union's logical plan carried ~50 copies
+    of the whole LSH pipeline tree — 6.7 MB of plan that Catalyst
+    re-optimized while 32 executor cores sat idle (measured 8.5 s of
+    zero-running-job driver gaps on this key). The eager checkpoint
+    materializes the same single computation but truncates lineage to
+    one scan node; the plan drops to ~0.1 MB. The components labels
+    are CHECKPOINTED once, by the first of the three branches reading
+    them (lazy, each evict pass would re-run the CC fixed point)."""
     _release_caches("connected_groups")
     docs = table(spark, sf_dir, "documents")
-    # localCheckpoint, not persist+count (r14 opt, guide §3.3/§7.3):
-    # every one of the six branches re-embeds the pairs plan at each
-    # reference (triangles alone reads it 8×, the evicts via sym 4×
-    # more), so with a persist the final union's logical plan carried
-    # ~50 copies of the whole LSH pipeline tree — 6.7 MB of plan that
-    # Catalyst re-optimized while 32 executor cores sat idle (measured
-    # 8.5 s of zero-running-job driver gaps on this key). The eager
-    # checkpoint materializes the same single computation but
-    # truncates lineage to one scan node; the plan drops to ~0.1 MB.
     pairs = _checkpoint_adaptive(
         D.minhash_dedup_pairs(docs, "text", "doc_id", threshold=_JACCARD_T)
     )
     nodes = docs.select(F.col("doc_id").alias("node"))
-    nulls = F.lit(None)
-    # all THREE branches are independent until the final union (r10,
-    # r9 verdict task #5): components and pagerank each run a
-    # driver-side iteration loop (per-round checkpoint / count jobs),
-    # and triangles — lazy, no loop — would otherwise execute its ~6 s
-    # of sequential stages AFTER the loops, inside the final action.
-    # Submitting all three from threads (triangles force-materialized
-    # through a tracked persist) overlaps every branch's stages on the
-    # shared scheduler: the key costs max(branch), not the sum.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _tri() -> DataFrame:
-        t = _persist_tracked(
-            triangle_counts(pairs, nodes), scope="connected_groups"
-        )
-        t.count()
-        return t
-
-    with ThreadPoolExecutor(6) as ex:
-        # the components labels are CHECKPOINTED once and shared: the
-        # 'components' rows read them, and BOTH evict branches scan
-        # them as their standing input (map-side passes + probes — on
-        # a lazy plan each pass would re-run the whole CC fixed point)
-        f_comp = ex.submit(
-            lambda: _checkpoint_adaptive(D.connected_components(pairs, nodes))
-        )
-        f_pr = ex.submit(pagerank_fixed, pairs, nodes)
-        f_tri = ex.submit(_tri)
-        f_inc = ex.submit(inc_components_branch, pairs, nodes)
-        f_ev = ex.submit(
-            lambda: evict_components_branch(pairs, nodes, f_comp.result())
-        )
-        f_evd = ex.submit(
-            lambda: evict_delta_branch(pairs, nodes, f_comp.result())
-        )
-        comp_df, pr_df, tri_df, inc_df, ev_df, evd_df = (
-            f_comp.result(), f_pr.result(), f_tri.result(),
-            f_inc.result(), f_ev.result(), f_evd.result(),
-        )
-    comp = comp_df.select(
-        F.lit("components").alias("op"),
-        F.col("node").alias("doc_id"),
-        F.col("rep").alias("rep_id"),
-        nulls.cast("bigint").alias("pr"),
+    labels = once(
+        lambda: _checkpoint_adaptive(D.connected_components(pairs, nodes))
     )
-    pr = pr_df.select(
-        F.lit("pagerank").alias("op"),
+    return pairs, nodes, labels
+
+
+def _triangles(spark: SparkSession, sf_dir: str, graph) -> DataFrame:
+    """Force-materialized through a tracked persist, so its ~6 s of
+    stages overlap the other branches' loops, not the final action."""
+    from ..operators.graph import triangle_counts
+
+    pairs, nodes, _ = graph
+    t = _persist_tracked(triangle_counts(pairs, nodes), scope="connected_groups")
+    t.count()
+    return t.select(
         F.col("node").alias("doc_id"),
-        nulls.cast("bigint").alias("rep_id"),
-        F.col("pr"),
-    )
-    tri = tri_df.select(
-        F.lit("triangles").alias("op"),
-        F.col("node").alias("doc_id"),
-        nulls.cast("bigint").alias("rep_id"),
+        null("bigint").alias("rep_id"),
         F.col("tri").alias("pr"),
     )
-    inc = inc_df.select(
-        F.lit("inc_components").alias("op"),
+
+
+def _labels(df: DataFrame) -> DataFrame:
+    return df.select(
         F.col("node").alias("doc_id"),
         F.col("rep").alias("rep_id"),
-        nulls.cast("bigint").alias("pr"),
+        null("bigint").alias("pr"),
     )
-    ev = ev_df.select(
-        F.lit("evict_components").alias("op"),
-        F.col("node").alias("doc_id"),
-        F.col("rep").alias("rep_id"),
-        nulls.cast("bigint").alias("pr"),
-    )
-    evd = evd_df.select(
-        F.lit("evict_delta").alias("op"),
-        F.col("node").alias("doc_id"),
-        F.col("rep").alias("rep_id"),
-        nulls.cast("bigint").alias("pr"),
-    )
-    return (
-        comp.unionByName(pr)
-        .unionByName(tri)
-        .unionByName(inc)
-        .unionByName(ev)
-        .unionByName(evd)
-    )
+
+
+# Graph analytics over the near-dup pair graph, tagged branches:
+#
+# 'components' — near-dup PAIRS → duplicate CLUSTERS: connected
+# components by iterative min-label propagation
+# (operators/dedup.py:connected_components). One row per document,
+# rep_id = smallest doc_id in its duplicate group (itself for
+# singletons) — the canonical 'pick one representative per cluster'
+# step of a dedup pipeline.
+#
+# 'pagerank' (r8) — fixed-point integer PageRank over the SAME graph
+# (operators/graph.py:pagerank_fixed): duplication centrality per
+# document. Integer arithmetic makes the iterative computation
+# bit-reproducible, so five unrolled CTE iterations in the oracle
+# pin every rank unit under the driver hash — an evidence channel
+# float PageRank can never have.
+#
+# 'triangles' (r8) — per-node triangle counts
+# (operators/graph.py:triangle_counts): the local clustering signal
+# separating dense duplicate cliques from chains. The degree-ordered
+# DAG orientation enumerates each triangle once; counts are integer
+# and the oracle replays the same joins, so every count is
+# hash-exact.
+#
+# 'inc_components' (r11, TWO-DAY since r12) — INCREMENTAL connected
+# components (operators/dedup.py:absorb_edges): the absorb step of
+# the daily-ingest loop. The edge set splits deterministically
+# three ways on (a_id + b_id) % 3 — a "standing" graph plus two
+# consecutive daily batches — and the branch chains TWO absorbs,
+# day 2 merging into day 1's output: the production shape where
+# yesterday's absorb output is today's standing labels. Each absorb
+# merges its batch through the CONTRACTED representative graph —
+# work ∝ batch + touched components, never corpus. The final labels
+# must equal the full recompute EXACTLY, so the oracle is the SAME
+# recursive CTE as 'components': the driver hash falsifies REPEATED
+# absorption against the ground-truth full graph every round.
+#
+# 'evict_components' (r13) — TAKEDOWNS at the label layer
+# (operators/dedup.py:evict_nodes): a deterministic ~3% deletion set
+# (doc_id % 31 == 3) is evicted from the components branch's standing
+# labels by component-scoped recompute — drop the deleted nodes,
+# re-run min-label CC over ONLY the touched components' surviving
+# edges (deletion can split a component and can delete the
+# representative, so a filter is wrong on both counts; work ∝
+# touched components, never corpus). The oracle re-walks the
+# recursive closure over the SURVIVING graph, so every post-takedown
+# label is hash-exact.
+#
+# 'evict_delta' (r14) — the SAME takedown through ``return_delta``:
+# only the surviving nodes whose representative moved, i.e. exactly
+# the rows `append_labels` persists in the incremental-labels loop.
+# The oracle joins the surviving closure to the full closure and
+# keeps the disagreements, so the delta SEMANTICS are hash-checked
+# directly, not just the applied result.
+#
+# All branches are independent until the final union (r10): components
+# and pagerank each run a driver-side iteration loop (per-round
+# checkpoint / count jobs), so building them at the same time overlaps
+# every branch's stages on the shared scheduler — the key costs
+# max(branch), not the sum.
+dedup_connected_groups = merged(
+    {
+        "components": lambda spark, sf_dir, g: _labels(g[2]()),
+        "pagerank": lambda spark, sf_dir, g: pagerank_fixed(g[0], g[1]).select(
+            F.col("node").alias("doc_id"),
+            null("bigint").alias("rep_id"),
+            F.col("pr"),
+        ),
+        "triangles": _triangles,
+        "inc_components": lambda spark, sf_dir, g: _labels(
+            inc_components_branch(g[0], g[1])
+        ),
+        "evict_components": lambda spark, sf_dir, g: _labels(
+            evict_components_branch(g[0], g[1], g[2]())
+        ),
+        "evict_delta": lambda spark, sf_dir, g: _labels(
+            evict_delta_branch(g[0], g[1], g[2]())
+        ),
+    },
+    shared=pair_graph,
+)
 
 
 # recursive-CTE oracle: min reachable doc_id = component representative
@@ -1860,140 +1824,156 @@ FROM t
 """
 
 
-def dedup_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Text dedup family in one tagged result: exact normalized-hash
-    groups + MinHash-LSH near-dup pairs + exact n-gram-Jaccard pairs
-    (branches = the former dedup_exact, dedup_minhash_lsh,
-    dedup_ngram_jaccard). The minhash and ngram branches share one
-    exact-Jaccard oracle (the LSH parameters make a missed true pair
-    measure-zero, module docstring), so the merged oracle emits the
-    pair SQL twice under both tags, and the exact branch's group SQL
-    once.
-
-    r8: ONE persisted tokenization (operators/dedup.py:tokenized)
+def _text_dedup_inputs(spark: SparkSession, sf_dir: str):
+    """r8: ONE persisted tokenization (operators/dedup.py:tokenized)
     feeds every branch — exact groups (rejoined words), the bundle's
     shingling, the span windows, and the excision — so the normalize
-    regex runs once over the corpus instead of once per branch."""
+    regex runs once over the corpus instead of once per branch.
+
+    The repeated-span relation is persisted too: BOTH the span-report
+    branch and the excise branch consume it in the caller's single
+    action — without the pin, the repeat-census shuffle and join-back
+    run twice (same duplicated-consumer pattern as text_dedup_bundle's
+    band table). Scope "spans" is released by the next invocation's
+    repeated_spans entry."""
     docs = table(spark, sf_dir, "documents")
     _release_caches("dedup_text")
     toks = _persist_tracked(
         D.tokenized(_spread(docs), "text", "doc_id"), scope="dedup_text"
     )
-    nulls = F.lit(None)
-    exact = D.exact_dedup_groups_from_words(toks).select(
-        F.lit("exact").alias("op"),
-        F.col("rep_id").cast("bigint").alias("a_id"),
-        nulls.cast("bigint").alias("b_id"),
-        nulls.cast("double").alias("jaccard"),
-        F.col("n_dups").cast("bigint").alias("n"),
+    spans = _persist_tracked(
+        D.repeated_spans(docs, "text", "doc_id", n=8, toks=toks), scope="spans"
     )
+    return docs, toks, spans
 
-    def pairs(df: DataFrame, op: str) -> DataFrame:
-        return df.select(
-            F.lit(op).alias("op"),
+
+def _near_dup_pairs(spark: SparkSession, sf_dir: str, inputs, tags) -> DataFrame:
+    """MinHash-LSH and exact n-gram-Jaccard pairs off ONE shared
+    shingling pass (operators/dedup.py:text_dedup_bundle — same
+    algorithms/params as the standalone operators), reading the shared
+    tokenization."""
+    docs, toks, _ = inputs
+    pairs = D.text_dedup_bundle(
+        docs, "text", "doc_id", threshold=_JACCARD_T, toks=toks
+    )
+    mh, ex = (
+        df.select(
+            F.lit(tag).alias("op"),
             F.col("a_id").cast("bigint").alias("a_id"),
             F.col("b_id").cast("bigint").alias("b_id"),
             F.col("jaccard").cast("double").alias("jaccard"),
-            nulls.cast("bigint").alias("n"),
+            null("bigint").alias("n"),
         )
+        for df, tag in zip(pairs, tags)
+    )
+    return mh.unionByName(ex)
 
-    # one shared shingling pass feeds both pair branches
-    # (operators/dedup.py:text_dedup_bundle — same algorithms/params as
-    # the standalone operators), reading the shared tokenization
-    mh, ex = D.text_dedup_bundle(
-        docs, "text", "doc_id", threshold=_JACCARD_T, toks=toks
-    )
-    # op='span' (late r6): passage-level dedup — every position whose
-    # 8-token window reappears in another document (repeated_spans,
-    # the Lee-et-al. substring-dedup shape; no pairwise join). The
-    # oracle recomputes positions from gram STRINGS, so the hash also
-    # certifies the positional hash-chain windows.
-    # persisted: BOTH the span-report branch and the excise branch
-    # consume this relation in the caller's single action — without
-    # the pin, the repeat-census shuffle and join-back run twice
-    # (same duplicated-consumer pattern as text_dedup_bundle's band
-    # table). Scope "spans" is released by the next invocation's
-    # repeated_spans entry.
-    spans_df = _persist_tracked(
-        D.repeated_spans(docs, "text", "doc_id", n=8, toks=toks), scope="spans"
-    )
-    span = spans_df.select(
-        F.lit("span").alias("op"),
-        F.col("doc_id").cast("bigint").alias("a_id"),
-        F.col("pos").cast("bigint").alias("b_id"),
-        nulls.cast("double").alias("jaccard"),
-        F.col("n_docs").cast("bigint").alias("n"),
-    )
-    # op='excise' (r7): the excision step — cut every repeated-window
-    # token and re-assemble the text (operators/dedup.py:excise_spans,
-    # fed from the SAME spans relation). b_id carries the cleaned
-    # text's md5 prefix as a bigint, so the driver hash certifies the
-    # exact post-excision string per document cross-engine.
-    excise = D.excise_spans(docs, spans_df, "text", "doc_id", n=8, toks=toks).select(
-        F.lit("excise").alias("op"),
+
+def _excise(spark: SparkSession, sf_dir: str, inputs) -> DataFrame:
+    """op='excise' (r7): the excision step — cut every repeated-window
+    token and re-assemble the text (operators/dedup.py:excise_spans,
+    fed from the SAME spans relation). b_id carries the cleaned text's
+    md5 prefix as a bigint, so the driver hash certifies the exact
+    post-excision string per document cross-engine."""
+    docs, toks, spans = inputs
+    return D.excise_spans(docs, spans, "text", "doc_id", n=8, toks=toks).select(
         F.col("doc_id").cast("bigint").alias("a_id"),
         F.conv(F.substring(F.md5("clean_text"), 1, 15), 16, 10)
         .cast("bigint")
         .alias("b_id"),
-        nulls.cast("double").alias("jaccard"),
+        null("double").alias("jaccard"),
         F.col("n_removed").cast("bigint").alias("n"),
     )
-    # op='cdc' / op='cdc_dup' (r8): byte-level content-defined
-    # chunking (operators/cdc.py). 'cdc' certifies per-doc
-    # LOSSLESSNESS cross-engine: b_id is the md5 prefix of the chunks
-    # re-concatenated in order, which the oracle computes as md5 of
-    # the ORIGINAL text (the excise-branch trick), and n is the
-    # chunker's byte total vs the oracle's strlen. 'cdc_dup' pins the
-    # chunk-multiplicity analysis with the exact-twin containment
-    # invariant: a doc with a byte-identical twin must have EVERY
-    # chunk shared. The corpus has no byte-identical pairs, so the
-    # twin is CONSTRUCTED (same text under doc_id + 10^6, mirrored in
-    # the oracle trivially) — per original doc the branch then pins
-    # dup_bytes == total_bytes == the oracle's strlen, which a
-    # nondeterministic / partition-context-dependent chunker or a
-    # broken multiplicity join flips. One chunking pass over the
-    # corpus+twins union feeds both branches.
+
+
+def _cdc(spark: SparkSession, sf_dir: str, inputs, tags) -> DataFrame:
+    """op='cdc' / op='cdc_dup' (r8): byte-level content-defined
+    chunking (operators/cdc.py). 'cdc' certifies per-doc LOSSLESSNESS
+    cross-engine: b_id is the md5 prefix of the chunks re-concatenated
+    in order, which the oracle computes as md5 of the ORIGINAL text
+    (the excise-branch trick), and n is the chunker's byte total vs the
+    oracle's strlen. 'cdc_dup' pins the chunk-multiplicity analysis
+    with the exact-twin containment invariant: a doc with a
+    byte-identical twin must have EVERY chunk shared. The corpus has no
+    byte-identical pairs, so the twin is CONSTRUCTED (same text under
+    doc_id + 10^6, mirrored in the oracle trivially) — per original doc
+    the branch then pins dup_bytes == total_bytes == the oracle's
+    strlen, which a nondeterministic / partition-context-dependent
+    chunker or a broken multiplicity join flips. One chunking pass over
+    the corpus+twins union feeds both branches."""
     from ..operators.cdc import cdc_chunks, cdc_doc_report
 
-    base = docs.select("doc_id", "text")
+    cdc_tag, dup_tag = tags
+    base = inputs[0].select("doc_id", "text")
     # collision-proof twin id space: one MAX over a pruned 1-column
     # scan (metadata-scale) instead of a fixed offset a large corpus's
     # doc_ids could silently collide with; the oracle never sees twin
     # ids, so the derived offset needs no SQL mirror
-    _CDC_TWIN_OFF = (base.agg(F.max("doc_id")).collect()[0][0] or 0) + 1
+    twin_off = (base.agg(F.max("doc_id")).collect()[0][0] or 0) + 1
     with_twins = base.unionByName(
-        base.select((F.col("doc_id") + _CDC_TWIN_OFF).alias("doc_id"), "text")
+        base.select((F.col("doc_id") + twin_off).alias("doc_id"), "text")
     )
     report = _persist_tracked(
         cdc_doc_report(cdc_chunks(_spread(with_twins), "text", "doc_id")).filter(
-            F.col("doc") < _CDC_TWIN_OFF
+            F.col("doc") < twin_off
         ),
         scope="dedup_text",
     )
     cdc = report.select(
-        F.lit("cdc").alias("op"),
+        F.lit(cdc_tag).alias("op"),
         F.col("doc").cast("bigint").alias("a_id"),
         F.conv(F.substring("recon_md5", 1, 15), 16, 10)
         .cast("bigint")
         .alias("b_id"),
-        nulls.cast("double").alias("jaccard"),
+        null("double").alias("jaccard"),
         F.col("total_bytes").alias("n"),
     )
     cdc_dup = report.select(
-        F.lit("cdc_dup").alias("op"),
+        F.lit(dup_tag).alias("op"),
         F.col("doc").cast("bigint").alias("a_id"),
         F.col("dup_bytes").alias("b_id"),
-        nulls.cast("double").alias("jaccard"),
+        null("double").alias("jaccard"),
         F.col("total_bytes").alias("n"),
     )
-    return (
-        exact.unionByName(pairs(mh, "minhash_lsh"))
-        .unionByName(pairs(ex, "ngram_jaccard"))
-        .unionByName(span)
-        .unionByName(excise)
-        .unionByName(cdc)
-        .unionByName(cdc_dup)
-    )
+    return cdc.unionByName(cdc_dup)
+
+
+# Text dedup family in one tagged result: exact normalized-hash groups
+# + MinHash-LSH near-dup pairs + exact n-gram-Jaccard pairs (branches =
+# the former dedup_exact, dedup_minhash_lsh, dedup_ngram_jaccard) +
+# passage-level spans, their excision and content-defined chunking.
+# The minhash and ngram branches share one exact-Jaccard oracle (the
+# LSH parameters make a missed true pair measure-zero, module
+# docstring), so the merged oracle emits the pair SQL twice under both
+# tags, and the exact branch's group SQL once.
+dedup_text = merged(
+    {
+        "exact": lambda spark, sf_dir, inputs: D.exact_dedup_groups_from_words(
+            inputs[1]
+        ).select(
+            F.col("rep_id").cast("bigint").alias("a_id"),
+            null("bigint").alias("b_id"),
+            null("double").alias("jaccard"),
+            F.col("n_dups").cast("bigint").alias("n"),
+        ),
+        ("minhash_lsh", "ngram_jaccard"): _near_dup_pairs,
+        # op='span' (late r6): passage-level dedup — every position
+        # whose 8-token window reappears in another document
+        # (repeated_spans, the Lee-et-al. substring-dedup shape; no
+        # pairwise join). The oracle recomputes positions from gram
+        # STRINGS, so the hash also certifies the positional hash-chain
+        # windows.
+        "span": lambda spark, sf_dir, inputs: inputs[2].select(
+            F.col("doc_id").cast("bigint").alias("a_id"),
+            F.col("pos").cast("bigint").alias("b_id"),
+            null("double").alias("jaccard"),
+            F.col("n_docs").cast("bigint").alias("n"),
+        ),
+        "excise": _excise,
+        ("cdc", "cdc_dup"): _cdc,
+    },
+    shared=_text_dedup_inputs,
+)
 
 
 _SPAN_ORACLE = f"""
@@ -2069,215 +2049,195 @@ FROM documents
 """
 
 
-def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-split hygiene family, tagged:
-
-    op='ingest_probe' — incremental ingest dedup: which documents of
-    an incoming batch near-duplicate a standing corpus
-    (operators/dedup.py:incremental_minhash_pairs — broadcast
-    batch-band probe, the corpus is never shuffled). The testdata has
-    no real ingest split, so the batch is the odd doc_ids and the
-    corpus the even ones — deterministic, and the oracle recomputes
-    the same split. Output pairs equal the exact cross-side Jaccard
-    pair set w.h.p.; a missed LSH pair flips the driver hash.
-
-    op='decontam' — benchmark decontamination: train docs sharing a
-    word-5-gram with the held-out eval slice (doc_id % 11 == 0 — a
-    deterministic stand-in benchmark), n_shared = shared distinct
-    5-gram count. r15: emitted from the SAME verified pair relation
-    as op='bloom_decontam' (see below) — the bloom prefilter has no
-    false negatives and its verify join computes the identical exact
-    shared-gram count, so the two branches are one relation under two
-    labels; the oracle still derives this branch INDEPENDENTLY (a
-    plain gram-string join with no bloom anywhere), so the driver
-    hash re-proves the equality every round. (Through r14 this branch
-    separately ran operators/dedup.py:decontaminate — one more full
-    train-corpus gram pass whose only effect was recomputing the
-    relation the bloom branch already verifies.)
-
-    op='bloom_decontam' / op='bloom_stats' — the contamination
-    check through a broadcast BLOOM-FILTER prefilter
-    (operators/dedup.py:bloom_decontaminate): eval grams compress to
-    an m-bit literal, train grams stream through a pure bit-test
-    expression, only survivors reach the exact verify join. The pair
-    rows EQUAL op='decontam' (no false negatives + exact
-    verify); the stats row's distinct-gram censuses (n_probed →
-    a_id, n_passed → b_id, n_eval → n_shared) pin the filter's bit
-    construction and probe cross-engine — the oracle rebuilds the
-    same md5-positioned bits in SQL.
-
-    op='blocklist' — banned-phrase filtering
-    (operators/text.py:phrase_blocklist_hits): exact whole-word
-    occurrence counts of a phrase blocklist via an anchored broadcast
-    equi-join (first phrase word vs the doc's distinct words) — never
-    a doc×phrase contains() loop. The blocklist is organic: the 3-word
-    sequence at words 4-6 of every doc_id % 97 == 0 document, which
-    the oracle reconstructs; those phrases recur in their source docs
-    and near-duplicates, so hits have real variance.
-
-    op='sem_decontam' — SEMANTIC decontamination
-    (operators/similarity.py:semantic_decontaminate): train docs
-    whose 3-gram token-hash embedding sits at cosine ≥ 0.9 of any
-    eval doc — the paraphrase-leakage complement of the exact n-gram
-    checks above, same %11 split. Eval bands broadcast, corpus
-    map-side only; cos_sim rides the jaccard column (both are the
-    branch's similarity score). Oracle = exact cross-side pair SQL
-    over the reconstructed vectors, so an LSH miss flips the hash.
-
-    r8: ONE persisted tokenization of the documents table feeds every
-    branch's side (probe corpus/batch, decontam and bloom train/eval
-    are all FILTERS of the same relation), replacing six independent
+def _cross_split_inputs(spark: SparkSession, sf_dir: str):
+    """r8: ONE persisted tokenization of the documents table feeds every
+    branch's side (probe corpus/batch, decontam and bloom train/eval are
+    all FILTERS of the same relation), replacing six independent
     normalize-regex passes with one."""
     docs = table(spark, sf_dir, "documents")
     _release_caches("dedup_incr")
     toks = _persist_tracked(
         D.tokenized(_spread(docs), "text", "doc_id"), scope="dedup_incr"
     )
+    return docs, toks
 
-    # r15 (guide §2.6/§7.3): the three probe builders run CONCURRENTLY.
-    # Two of them are not pure plan construction — bloom_decontaminate
-    # aggregates the eval grams into its bit-array literal and
-    # semantic_decontaminate collects the featurized eval side, each a
-    # real (eval-sized) Spark job that previously ran SERIALLY inside
-    # the build phase while the other cores idled (measured: build
-    # 9-12 s vs 5 s execution for this key; probe 6.4 s + bloom 3.6 s
-    # + sem 4.7 s back-to-back). Overlapping them costs max(builder),
-    # not the sum; both eager jobs read the shared `toks` persist, and
-    # cache-block locking makes the concurrent first reads compute
-    # each partition once (the r14 corpus_curation precedent). The
-    # assembled union is identical — build order never influenced it.
-    def _build_probe() -> DataFrame:
-        return D.incremental_minhash_pairs(
-            docs.filter(F.col("doc_id") % 2 == 0),
-            docs.filter(F.col("doc_id") % 2 == 1),
-            "text",
-            "doc_id",
-            threshold=_JACCARD_T,
-            corpus_toks=toks.filter(F.col("doc") % 2 == 0),
-            batch_toks=toks.filter(F.col("doc") % 2 == 1),
-        )
 
-    def _build_bloom() -> tuple[DataFrame, DataFrame]:
-        return D.bloom_decontaminate(
-            docs.filter(F.col("doc_id") % 11 != 0),
-            docs.filter(F.col("doc_id") % 11 == 0),
-            "text",
-            "doc_id",
-            n=5,
-            m_bits=_BLOOM_M,
-            k=_BLOOM_K,
-            min_overlap=1,
-            train_toks=toks.filter(F.col("doc") % 11 != 0),
-            eval_toks=toks.filter(F.col("doc") % 11 == 0),
-        )
-
-    def _build_sem() -> DataFrame:
-        # vectors off the SAME persisted tokenization (no second
-        # normalize+split scan for the sem branch)
-        from ..operators.text import token_hash_vectors_from_words
-
-        # persisted: the fused sem_decontam reads this relation twice
-        # — once by the eval-side collect at build time, once by the
-        # train mapInPandas probe pass — and without the pin each
-        # materialization re-runs the 3-gram explode + md5 +
-        # two-groupBy featurization (comment re-worded r15 per ADVICE
-        # r14: the old text described the pre-r14 band-pass/attach
-        # access pattern)
-        vecs = _persist_tracked(
-            token_hash_vectors_from_words(
-                toks, "words", "doc", dim=_LSH_EMB_DIM, ngram=3
-            ).select(F.col("doc").alias("vec_id"), "embedding"),
-            scope="dedup_incr",
-        )
-        return S.semantic_decontaminate(
-            vecs.filter(F.col("vec_id") % 11 != 0),
-            vecs.filter(F.col("vec_id") % 11 == 0),
-            threshold=_LSH_EMB_T,
-            dim=_LSH_EMB_DIM,
-            bands=_LSH_EMB_BANDS,
-            rows_per_band=_LSH_EMB_ROWS,
-        )
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    from ..operators.text import phrase_blocklist_hits
-
-    with ThreadPoolExecutor(3) as ex:
-        f_probe = ex.submit(_build_probe)
-        f_bloom = ex.submit(_build_bloom)
-        f_sem = ex.submit(_build_sem)
-        # the blocklist build is lazy and cheap — main thread
-        phrases = toks.filter(
-            (F.col("doc") % 97 == 0) & (F.size("words") >= 6)
-        ).select(
-            F.col("doc").alias("phrase_id"),
-            F.concat_ws(" ", F.slice("words", 4, 3)).alias("phrase"),
-        )
-        bl = phrase_blocklist_hits(
-            docs, phrases, "text", "doc_id", toks=toks
-        )
-        probe = f_probe.result()
-        bpairs, bstats = f_bloom.result()
-        sem = f_sem.result()
-    nulls = F.lit(None)
-    # r15 opt (verdict task #1 — one gram relation for both exact
-    # decontamination branches): op='decontam' rows EQUAL
-    # op='bloom_decontam' rows by bloom_decontaminate's contract (the
-    # filter has no false negatives and the verify join is the same
-    # exact shared-distinct-gram count, so its pair relation IS
-    # decontaminate's output — the operator docstring and the oracle,
-    # which recomputes BOTH branches independently from gram strings,
-    # pin the equality every round). The old plan ran `decontaminate`
-    # separately anyway: one more full train-corpus gram derivation
-    # (the int64 hash-chain 5-grams) plus a second broadcast join and
-    # count aggregation, all to recompute a relation the bloom branch
-    # already verifies exactly. Emitting the verified pair relation
-    # ONCE under both op labels (explode over the two literals —
-    # Spark does not share subtrees across union children, so two
-    # union children would still evaluate the pair pipeline twice)
-    # removes that entire derivation from the plan.
-    pair_ops = bpairs.select(
-        F.explode(
-            F.array(F.lit("decontam"), F.lit("bloom_decontam"))
-        ).alias("op"),
-        F.col("train_id").cast("bigint").alias("a_id"),
-        F.col("eval_id").cast("bigint").alias("b_id"),
-        nulls.cast("double").alias("jaccard"),
-        F.col("n_shared").cast("bigint").alias("n_shared"),
+def _ingest_probe(spark: SparkSession, sf_dir: str, inputs) -> DataFrame:
+    docs, toks = inputs
+    probe = D.incremental_minhash_pairs(
+        docs.filter(F.col("doc_id") % 2 == 0),
+        docs.filter(F.col("doc_id") % 2 == 1),
+        "text",
+        "doc_id",
+        threshold=_JACCARD_T,
+        corpus_toks=toks.filter(F.col("doc") % 2 == 0),
+        batch_toks=toks.filter(F.col("doc") % 2 == 1),
     )
     return probe.select(
-        F.lit("ingest_probe").alias("op"),
         F.col("new_id").cast("bigint").alias("a_id"),
         F.col("corpus_id").cast("bigint").alias("b_id"),
         F.col("jaccard").cast("double").alias("jaccard"),
-        nulls.cast("bigint").alias("n_shared"),
-    ).unionByName(
-        pair_ops
-    ).unionByName(
+        null("bigint").alias("n_shared"),
+    )
+
+
+def _decontam(spark: SparkSession, sf_dir: str, inputs, tags) -> DataFrame:
+    """op='decontam' rows EQUAL op='bloom_decontam' rows by
+    bloom_decontaminate's contract (r15: no false negatives, exact
+    verify join), which the oracle re-proves every round by deriving
+    both branches independently from gram strings. So the verified
+    pair relation is emitted ONCE under both labels (explode over the
+    two literals — two union children would evaluate it twice)."""
+    docs, toks = inputs
+    decontam_tag, bloom_tag, stats_tag = tags
+    bpairs, bstats = D.bloom_decontaminate(
+        docs.filter(F.col("doc_id") % 11 != 0),
+        docs.filter(F.col("doc_id") % 11 == 0),
+        "text",
+        "doc_id",
+        n=5,
+        m_bits=_BLOOM_M,
+        k=_BLOOM_K,
+        min_overlap=1,
+        train_toks=toks.filter(F.col("doc") % 11 != 0),
+        eval_toks=toks.filter(F.col("doc") % 11 == 0),
+    )
+    pair_ops = bpairs.select(
+        F.explode(F.array(F.lit(decontam_tag), F.lit(bloom_tag))).alias("op"),
+        F.col("train_id").cast("bigint").alias("a_id"),
+        F.col("eval_id").cast("bigint").alias("b_id"),
+        null("double").alias("jaccard"),
+        F.col("n_shared").cast("bigint").alias("n_shared"),
+    )
+    return pair_ops.unionByName(
         bstats.select(
-            F.lit("bloom_stats").alias("op"),
+            F.lit(stats_tag).alias("op"),
             F.col("n_probed").cast("bigint").alias("a_id"),
             F.col("n_passed").cast("bigint").alias("b_id"),
-            nulls.cast("double").alias("jaccard"),
+            null("double").alias("jaccard"),
             F.col("n_eval").cast("bigint").alias("n_shared"),
         )
-    ).unionByName(
-        sem.select(
-            F.lit("sem_decontam").alias("op"),
-            F.col("train_id").cast("bigint").alias("a_id"),
-            F.col("eval_id").cast("bigint").alias("b_id"),
-            F.col("cos_sim").cast("double").alias("jaccard"),
-            nulls.cast("bigint").alias("n_shared"),
-        )
-    ).unionByName(
-        bl.select(
-            F.lit("blocklist").alias("op"),
-            F.col("doc_id").cast("bigint").alias("a_id"),
-            F.col("phrase_id").cast("bigint").alias("b_id"),
-            nulls.cast("double").alias("jaccard"),
-            F.col("n_hits").cast("bigint").alias("n_shared"),
-        )
     )
+
+
+def _sem_decontam(spark: SparkSession, sf_dir: str, inputs) -> DataFrame:
+    from ..operators.text import token_hash_vectors_from_words
+
+    _, toks = inputs
+    # vectors off the SAME persisted tokenization (no second
+    # normalize+split scan for the sem branch). Persisted: the fused
+    # sem_decontam reads this relation twice — once by the eval-side
+    # collect at build time, once by the train mapInPandas probe pass —
+    # and without the pin each materialization re-runs the 3-gram
+    # explode + md5 + two-groupBy featurization
+    vecs = _persist_tracked(
+        token_hash_vectors_from_words(
+            toks, "words", "doc", dim=_LSH_EMB_DIM, ngram=3
+        ).select(F.col("doc").alias("vec_id"), "embedding"),
+        scope="dedup_incr",
+    )
+    sem = S.semantic_decontaminate(
+        vecs.filter(F.col("vec_id") % 11 != 0),
+        vecs.filter(F.col("vec_id") % 11 == 0),
+        threshold=_LSH_EMB_T,
+        dim=_LSH_EMB_DIM,
+        bands=_LSH_EMB_BANDS,
+        rows_per_band=_LSH_EMB_ROWS,
+    )
+    return sem.select(
+        F.col("train_id").cast("bigint").alias("a_id"),
+        F.col("eval_id").cast("bigint").alias("b_id"),
+        F.col("cos_sim").cast("double").alias("jaccard"),
+        null("bigint").alias("n_shared"),
+    )
+
+
+def _blocklist(spark: SparkSession, sf_dir: str, inputs) -> DataFrame:
+    from ..operators.text import phrase_blocklist_hits
+
+    docs, toks = inputs
+    phrases = toks.filter(
+        (F.col("doc") % 97 == 0) & (F.size("words") >= 6)
+    ).select(
+        F.col("doc").alias("phrase_id"),
+        F.concat_ws(" ", F.slice("words", 4, 3)).alias("phrase"),
+    )
+    bl = phrase_blocklist_hits(docs, phrases, "text", "doc_id", toks=toks)
+    return bl.select(
+        F.col("doc_id").cast("bigint").alias("a_id"),
+        F.col("phrase_id").cast("bigint").alias("b_id"),
+        null("double").alias("jaccard"),
+        F.col("n_hits").cast("bigint").alias("n_shared"),
+    )
+
+
+# Cross-split hygiene family, tagged:
+#
+# op='ingest_probe' — incremental ingest dedup: which documents of
+# an incoming batch near-duplicate a standing corpus
+# (operators/dedup.py:incremental_minhash_pairs — broadcast
+# batch-band probe, the corpus is never shuffled). The testdata has
+# no real ingest split, so the batch is the odd doc_ids and the
+# corpus the even ones — deterministic, and the oracle recomputes
+# the same split. Output pairs equal the exact cross-side Jaccard
+# pair set w.h.p.; a missed LSH pair flips the driver hash.
+#
+# op='decontam' — benchmark decontamination: train docs sharing a
+# word-5-gram with the held-out eval slice (doc_id % 11 == 0 — a
+# deterministic stand-in benchmark), n_shared = shared distinct
+# 5-gram count. r15: emitted from the SAME verified pair relation
+# as op='bloom_decontam' (see below) — the bloom prefilter has no
+# false negatives and its verify join computes the identical exact
+# shared-gram count, so the two branches are one relation under two
+# labels; the oracle still derives this branch INDEPENDENTLY (a
+# plain gram-string join with no bloom anywhere), so the driver
+# hash re-proves the equality every round. (Through r14 this branch
+# separately ran operators/dedup.py:decontaminate — one more full
+# train-corpus gram pass whose only effect was recomputing the
+# relation the bloom branch already verifies.)
+#
+# op='bloom_decontam' / op='bloom_stats' — the contamination
+# check through a broadcast BLOOM-FILTER prefilter
+# (operators/dedup.py:bloom_decontaminate): eval grams compress to
+# an m-bit literal, train grams stream through a pure bit-test
+# expression, only survivors reach the exact verify join. The pair
+# rows EQUAL op='decontam' (no false negatives + exact
+# verify); the stats row's distinct-gram censuses (n_probed →
+# a_id, n_passed → b_id, n_eval → n_shared) pin the filter's bit
+# construction and probe cross-engine — the oracle rebuilds the
+# same md5-positioned bits in SQL.
+#
+# op='blocklist' — banned-phrase filtering
+# (operators/text.py:phrase_blocklist_hits): exact whole-word
+# occurrence counts of a phrase blocklist via an anchored broadcast
+# equi-join (first phrase word vs the doc's distinct words) — never
+# a doc×phrase contains() loop. The blocklist is organic: the 3-word
+# sequence at words 4-6 of every doc_id % 97 == 0 document, which
+# the oracle reconstructs; those phrases recur in their source docs
+# and near-duplicates, so hits have real variance.
+#
+# op='sem_decontam' — SEMANTIC decontamination
+# (operators/similarity.py:semantic_decontaminate): train docs
+# whose 3-gram token-hash embedding sits at cosine ≥ 0.9 of any
+# eval doc — the paraphrase-leakage complement of the exact n-gram
+# checks above, same %11 split. Eval bands broadcast, corpus
+# map-side only; cos_sim rides the jaccard column (both are the
+# branch's similarity score). Oracle = exact cross-side pair SQL
+# over the reconstructed vectors, so an LSH miss flips the hash.
+#
+# r15: the bloom and sem builders each run a real (eval-sized) job at
+# build time (serially: build 9-12 s vs 5 s execution for this key);
+# overlapped, the key pays max(builder), and cache-block locking makes
+# their concurrent first reads of `toks` compute each partition once.
+dedup_incremental = merged(
+    {
+        "ingest_probe": _ingest_probe,
+        ("decontam", "bloom_decontam", "bloom_stats"): _decontam,
+        "sem_decontam": _sem_decontam,
+        "blocklist": _blocklist,
+    },
+    shared=_cross_split_inputs,
+)
 
 
 _BLOOM_M = 65536  # bloom width (bits); 1024 int64 words

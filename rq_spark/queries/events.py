@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .helpers import dsum, sql_dsum, table
+from .helpers import dsum, merged, null, sql_dsum, table
 
 _MK_WINDOW_START = (
     "make_timestamp(CAST(floor(epoch(ts)/{sec}) AS BIGINT) * {sec} * 1000000)"
@@ -227,31 +227,28 @@ GROUP BY e.user_id, m.first_ts
 # --------------------------------------------------------------------------
 
 
-def window_agg_time(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling + sliding event-time windows + r8 type-transition
-    counts (operators/funnel.py:type_transitions — Markov/Sankey edge
-    weights over each user's ordered stream, LAG-window oracle) in one
-    tagged result. The transition pair rides the event_type column as
-    'prev>next'."""
-
-    def tag(df: DataFrame, op: str) -> DataFrame:
-        return df.select(F.lit(op).alias("op"), "*")
-
+def _type_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """r8 type-transition counts (operators/funnel.py:type_transitions
+    — Markov/Sankey edge weights over each user's ordered stream,
+    LAG-window oracle); the transition pair rides the event_type column
+    as 'prev>next'."""
     from ..operators.funnel import type_transitions
 
-    nulls = F.lit(None)
-    trans = type_transitions(table(spark, sf_dir, "events")).select(
-        F.lit("transition").alias("op"),
-        nulls.cast("timestamp").alias("window_start"),
+    return type_transitions(table(spark, sf_dir, "events")).select(
+        null("timestamp").alias("window_start"),
         F.concat_ws(">", "prev_type", "next_type").alias("event_type"),
         F.col("n"),
-        nulls.cast("double").alias("sum_value"),
+        null("double").alias("sum_value"),
     )
-    return (
-        tag(tumble_10min(spark, sf_dir), "tumble")
-        .unionByName(tag(slide_10min_5min(spark, sf_dir), "slide"))
-        .unionByName(trans)
-    )
+
+
+# Tumbling + sliding event-time windows + type-transition counts in one
+# tagged result.
+window_agg_time = merged({
+    "tumble": tumble_10min,
+    "slide": slide_10min_5min,
+    "transition": _type_transitions,
+})
 
 
 _WINDOW_AGG_TIME_SQL = f"""
@@ -273,12 +270,12 @@ SELECT 'transition', NULL, pair, n, NULL FROM (
 """
 
 
-def stream_agg_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _agg_dedup_streams(spark: SparkSession, sf_dir: str, tags) -> DataFrame:
     """Streaming windowed aggregation + streaming exact dedup +
-    stream-STATIC enrichment in one tagged result (branches = the
-    former stream_tumble_10min, stream_dedup, plus the late-r8
-    'enrich' — each still executes its own micro-batch streaming
-    query end-to-end; the independent queries run CONCURRENTLY via
+    stream-STATIC enrichment (branches = the former
+    stream_tumble_10min, stream_dedup, plus the late-r8 'enrich' — each
+    still executes its own micro-batch streaming query end-to-end; the
+    independent queries run CONCURRENTLY via
     streaming.run_many_to_memory, r8).
 
     op='enrich' — streaming.enrich_segment_counts: the event stream
@@ -294,9 +291,7 @@ def stream_agg_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_events,
         tumble_counts,
     )
-    from .helpers import table
 
-    nulls = F.lit(None)
     tumble_r, dedup_r, enrich_r = run_many_to_memory(
         [
             (tumble_counts(stream_events(spark, sf_dir)), "complete"),
@@ -313,31 +308,36 @@ def stream_agg_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ]
     )
+    tumble_tag, dedup_tag, enrich_tag = tags
+    ts_type = dict(tumble_r.dtypes)["window_start"]
     tumble = tumble_r.select(
-        F.lit("tumble").alias("op"),
+        F.lit(tumble_tag).alias("op"),
         F.col("window_start"),
-        nulls.cast("bigint").alias("user_id"),
+        null("bigint").alias("user_id"),
         "event_type",
         F.col("n").cast("bigint").alias("n"),
         "sum_value",
     )
     dedup = dedup_r.select(
-        F.lit("dedup").alias("op"),
-        nulls.cast(dict(tumble.dtypes)["window_start"]).alias("window_start"),
+        F.lit(dedup_tag).alias("op"),
+        null(ts_type).alias("window_start"),
         F.col("user_id").cast("bigint").alias("user_id"),
         "event_type",
-        nulls.cast("bigint").alias("n"),
-        nulls.cast("double").alias("sum_value"),
+        null("bigint").alias("n"),
+        null("double").alias("sum_value"),
     )
     enrich = enrich_r.select(
-        F.lit("enrich").alias("op"),
-        nulls.cast(dict(tumble.dtypes)["window_start"]).alias("window_start"),
-        nulls.cast("bigint").alias("user_id"),
+        F.lit(enrich_tag).alias("op"),
+        null(ts_type).alias("window_start"),
+        null("bigint").alias("user_id"),
         F.col("c_mktsegment").alias("event_type"),
         F.col("n").cast("bigint").alias("n"),
         "sum_value",
     )
     return tumble.unionByName(dedup).unionByName(enrich)
+
+
+stream_agg_dedup = merged({("tumble", "dedup", "enrich"): _agg_dedup_streams})
 
 
 _STREAM_AGG_DEDUP_SQL = f"""
@@ -355,88 +355,82 @@ GROUP BY c_mktsegment
 """
 
 
-def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming (applyInPandasWithState first-seen +
-    per-event running aggregates) + stream-stream interval join in one
-    tagged result (branches = the former stream_first_seen,
-    stream_interval_join, and the r6 running-stats operator — each
-    still runs its own streaming query with real state/watermarks).
-
-    The `running` branch is `streaming.running_user_stats`: every
-    event enriched with its user's life-to-date count (e2) and exact
-    decimal sum (v — integer-micro state, so it hash-matches the
-    oracle's cumulative DECIMAL(38,6) window sum bit-for-bit).
-
-    The three independent streaming queries run CONCURRENTLY via
-    streaming.run_many_to_memory (r8) — the key costs its slowest
-    branch, not the sum."""
+def stateful_stream(spark: SparkSession, sf_dir: str, tag: str) -> DataFrame:
+    """The streaming query behind one stream_stateful branch (the key
+    runs them together, its bench solos one at a time)."""
     from ..streaming import (
         first_seen_per_user,
         interval_join,
-        run_many_to_memory,
         running_user_stats,
         stream_events,
     )
 
-    nulls = F.lit(None)
-    # r9: skip the trailing NO-DATA micro-batch (one empty state-commit
-    # round across every state partition of every query). Safe for
-    # exactly these three branches because each emits PER BATCH — the
-    # stateful operators append on arrival and the inner join emits on
-    # match; nothing here emits on watermark advance (a windowed-agg
-    # append query would, and must keep the default). ~20% off the key
-    # in solo A/B; results bit-identical (stream==batch parity tests +
-    # unchanged driver hash). Scoped to this key and restored.
-    _NODATA = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev = spark.conf.get(_NODATA, "true")
-    spark.conf.set(_NODATA, "false")
-    try:
+    if tag == "interval_join":
+        return interval_join(stream_events(spark, sf_dir), stream_events(spark, sf_dir))
+    op = first_seen_per_user if tag == "first_seen" else running_user_stats
+    return op(stream_events(spark, sf_dir))
+
+
+def _stateful_streams(spark: SparkSession, sf_dir: str, tags) -> DataFrame:
+    """Custom stateful streaming (applyInPandasWithState first-seen +
+    per-event running aggregates) + stream-stream interval join
+    (branches = the former stream_first_seen, stream_interval_join, and
+    the r6 running-stats operator — each still runs its own streaming
+    query with real state/watermarks).
+
+    The `running` branch is `streaming.running_user_stats`: every event
+    enriched with its user's life-to-date count (e2) and exact decimal
+    sum (v — integer-micro state, so it hash-matches the oracle's
+    cumulative DECIMAL(38,6) window sum bit-for-bit).
+
+    The three independent streaming queries run CONCURRENTLY via
+    streaming.run_many_to_memory (r8) — the key costs its slowest
+    branch, not the sum — and skip the no-data micro-batch (r9, ~20%
+    off the key; results bit-identical)."""
+    from ..streaming import no_data_batches_off, run_many_to_memory
+
+    with no_data_batches_off(spark):
         first_df, ijoin_df, running_df = run_many_to_memory(
-            [
-                (first_seen_per_user(stream_events(spark, sf_dir)), "append"),
-                (
-                    interval_join(
-                        stream_events(spark, sf_dir), stream_events(spark, sf_dir)
-                    ),
-                    "append",
-                ),
-                (running_user_stats(stream_events(spark, sf_dir)), "append"),
-            ]
+            [(stateful_stream(spark, sf_dir, t), "append") for t in tags]
         )
-    finally:
-        spark.conf.set(_NODATA, prev)
+    first_tag, ijoin_tag, running_tag = tags
     ts_type = dict(first_df.dtypes)["first_ts"]
     first = first_df.select(
-        F.lit("first_seen").alias("op"),
+        F.lit(first_tag).alias("op"),
         F.col("user_id").cast("bigint").alias("user_id"),
         F.col("first_event_id").cast("bigint").alias("e1"),
-        nulls.cast("bigint").alias("e2"),
+        null("bigint").alias("e2"),
         F.col("first_ts").alias("t1"),
-        nulls.cast(ts_type).alias("t2"),
+        null(ts_type).alias("t2"),
         F.col("first_event_type").alias("etype"),
         F.col("first_value").cast("double").alias("v"),
     )
     ijoin = ijoin_df.select(
-        F.lit("interval_join").alias("op"),
+        F.lit(ijoin_tag).alias("op"),
         F.col("user_id").cast("bigint").alias("user_id"),
         F.col("a_event_id").cast("bigint").alias("e1"),
         F.col("b_event_id").cast("bigint").alias("e2"),
         F.col("a_ts").alias("t1"),
         F.col("b_ts").alias("t2"),
-        nulls.cast("string").alias("etype"),
+        null("string").alias("etype"),
         F.col("b_value").cast("double").alias("v"),
     )
     running = running_df.select(
-        F.lit("running").alias("op"),
+        F.lit(running_tag).alias("op"),
         F.col("user_id").cast("bigint").alias("user_id"),
         F.col("event_id").cast("bigint").alias("e1"),
         F.col("run_n").cast("bigint").alias("e2"),
         F.col("ts").alias("t1"),
-        nulls.cast(ts_type).alias("t2"),
-        nulls.cast("string").alias("etype"),
+        null(ts_type).alias("t2"),
+        null("string").alias("etype"),
         F.col("run_sum").alias("v"),
     )
     return first.unionByName(ijoin).unionByName(running)
+
+
+stream_stateful = merged(
+    {("first_seen", "interval_join", "running"): _stateful_streams}
+)
 
 
 _STREAM_STATEFUL_SQL = f"""
@@ -462,72 +456,84 @@ _FUNNEL_STEPS = ["view", "click", "purchase"]
 _FUNNEL_WINDOW = "1 hour"
 
 
-def event_sessions_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session windows + daily per-user rollup + funnel depth + cohort
-    retention in one tagged result (branches = the former
-    session_window_30min, event_rate_per_user_day, plus r8 'funnel'
-    and 'retention').
+def _sessions_inputs(spark: SparkSession, sf_dir: str):
+    """Sessions (whose start type types the NULL timestamps), and events."""
+    sess = session_window_30min(spark, sf_dir)
+    return sess, dict(sess.dtypes)["session_start"], table(spark, sf_dir, "events")
 
-    'funnel' (operators/funnel.py:funnel_levels) — greedy-earliest
-    view→click→purchase depth within 1 hour per user; each level is a
-    filtered aggregate + user-level join the oracle replays verbatim,
-    so levels AND anchor/completion timestamps are hash-exact.
 
-    'retention' (operators/funnel.py:cohort_retention) — users
-    bucketed by first-seen week, distinct-active counts per (cohort,
-    week offset); integer counts, ISO week truncation on both
-    engines."""
-    from ..operators.funnel import cohort_retention, funnel_levels
+def _funnel(spark: SparkSession, sf_dir: str, inputs) -> DataFrame:
+    """Greedy-earliest view→click→purchase depth within 1 hour per
+    user (operators/funnel.py:funnel_levels); each level is a filtered
+    aggregate + user-level join the oracle replays verbatim, so levels
+    AND anchor/completion timestamps are hash-exact."""
+    from ..operators.funnel import funnel_levels
 
-    nulls = F.lit(None)
-    sess_df = session_window_30min(spark, sf_dir)
-    ts_type = dict(sess_df.dtypes)["session_start"]
-    sess = sess_df.select(
-        F.lit("session").alias("op"),
-        F.col("user_id").cast("bigint").alias("user_id"),
-        F.col("session_start").alias("t1"),
-        F.col("session_end").alias("t2"),
-        nulls.cast("date").alias("day"),
-        F.col("n_events").cast("bigint").alias("n1"),
-        nulls.cast("bigint").alias("n2"),
-        "sum_value",
-        F.col("first_ts").alias("t3"),
-    )
-    rate = event_rate_per_user_day(spark, sf_dir).select(
-        F.lit("rate").alias("op"),
-        F.col("user_id").cast("bigint").alias("user_id"),
-        nulls.cast(ts_type).alias("t1"),
-        nulls.cast(ts_type).alias("t2"),
-        F.col("day"),
-        F.col("n").cast("bigint").alias("n1"),
-        F.col("n_types").cast("bigint").alias("n2"),
-        "sum_value",
-        nulls.cast(ts_type).alias("t3"),
-    )
-    ev = table(spark, sf_dir, "events")
-    fun = funnel_levels(ev, _FUNNEL_STEPS, _FUNNEL_WINDOW).select(
-        F.lit("funnel").alias("op"),
+    _, ts_type, ev = inputs
+    return funnel_levels(ev, _FUNNEL_STEPS, _FUNNEL_WINDOW).select(
         F.col("user").cast("bigint").alias("user_id"),
         F.col("t_first").alias("t1"),
         F.col("t_complete").alias("t2"),
-        nulls.cast("date").alias("day"),
+        null("date").alias("day"),
         F.col("level").alias("n1"),
-        nulls.cast("bigint").alias("n2"),
-        nulls.cast("double").alias("sum_value"),
-        nulls.cast(ts_type).alias("t3"),
+        null("bigint").alias("n2"),
+        null("double").alias("sum_value"),
+        null(ts_type).alias("t3"),
     )
-    ret = cohort_retention(ev, "week").select(
-        F.lit("retention").alias("op"),
-        nulls.cast("bigint").alias("user_id"),
-        nulls.cast(ts_type).alias("t1"),
-        nulls.cast(ts_type).alias("t2"),
+
+
+def _retention(spark: SparkSession, sf_dir: str, inputs) -> DataFrame:
+    """Users bucketed by first-seen week, distinct-active counts per
+    (cohort, week offset) (operators/funnel.py:cohort_retention);
+    integer counts, ISO week truncation on both engines."""
+    from ..operators.funnel import cohort_retention
+
+    _, ts_type, ev = inputs
+    return cohort_retention(ev, "week").select(
+        null("bigint").alias("user_id"),
+        null(ts_type).alias("t1"),
+        null(ts_type).alias("t2"),
         F.col("cohort").alias("day"),
         F.col("offset").alias("n1"),
         F.col("n_users").alias("n2"),
-        nulls.cast("double").alias("sum_value"),
-        nulls.cast(ts_type).alias("t3"),
+        null("double").alias("sum_value"),
+        null(ts_type).alias("t3"),
     )
-    return sess.unionByName(rate).unionByName(fun).unionByName(ret)
+
+
+# Session windows + daily per-user rollup + funnel depth + cohort
+# retention in one tagged result (branches = the former
+# session_window_30min, event_rate_per_user_day, plus r8 'funnel' and
+# 'retention').
+event_sessions_rate = merged(
+    {
+        "session": lambda spark, sf_dir, inputs: inputs[0].select(
+            F.col("user_id").cast("bigint").alias("user_id"),
+            F.col("session_start").alias("t1"),
+            F.col("session_end").alias("t2"),
+            null("date").alias("day"),
+            F.col("n_events").cast("bigint").alias("n1"),
+            null("bigint").alias("n2"),
+            "sum_value",
+            F.col("first_ts").alias("t3"),
+        ),
+        "rate": lambda spark, sf_dir, inputs: event_rate_per_user_day(
+            spark, sf_dir
+        ).select(
+            F.col("user_id").cast("bigint").alias("user_id"),
+            null(inputs[1]).alias("t1"),
+            null(inputs[1]).alias("t2"),
+            F.col("day"),
+            F.col("n").cast("bigint").alias("n1"),
+            F.col("n_types").cast("bigint").alias("n2"),
+            "sum_value",
+            null(inputs[1]).alias("t3"),
+        ),
+        "funnel": _funnel,
+        "retention": _retention,
+    },
+    shared=_sessions_inputs,
+)
 
 
 _EVENT_SESSIONS_RATE_SQL = f"""

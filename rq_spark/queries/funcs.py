@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .helpers import table
+from .helpers import merged, null, table
 
 
 def func_string_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -278,36 +278,33 @@ GROUP BY l_returnflag
 """
 
 
-def func_array(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Array scalar ops (per-row, embeddings) + array aggregation
-    (collect_set, lineitem) in one tagged result (branches = the
-    former func_array_embedding, func_array_agg)."""
-    nulls = F.lit(None)
-    per_row = func_array_embedding(spark, sf_dir).select(
-        F.lit("element").alias("op"),
+# Array scalar ops (per-row, embeddings) + array aggregation
+# (collect_set, lineitem) in one tagged result (branches = the former
+# func_array_embedding, func_array_agg).
+func_array = merged({
+    "element": lambda spark, sf_dir: func_array_embedding(spark, sf_dir).select(
         F.col("vec_id").cast("bigint").alias("k"),
-        nulls.cast("string").alias("grp"),
-        nulls.cast("string").alias("s"),
+        null("string").alias("grp"),
+        null("string").alias("s"),
         F.col("dim").cast("bigint").alias("n"),
         F.col("x0").alias("v1"),
         F.col("x_last").alias("v2"),
         F.col("head4_sum").alias("v3"),
         F.col("vmax").alias("v4"),
         F.col("vmin").alias("v5"),
-    )
-    agg = func_array_agg(spark, sf_dir).select(
-        F.lit("agg").alias("op"),
-        nulls.cast("bigint").alias("k"),
+    ),
+    "agg": lambda spark, sf_dir: func_array_agg(spark, sf_dir).select(
+        null("bigint").alias("k"),
         F.col("l_returnflag").alias("grp"),
         F.col("statuses").alias("s"),
         F.col("n_statuses").cast("bigint").alias("n"),
-        nulls.cast("double").alias("v1"),
-        nulls.cast("double").alias("v2"),
-        nulls.cast("double").alias("v3"),
-        nulls.cast("double").alias("v4"),
-        nulls.cast("double").alias("v5"),
-    )
-    return per_row.unionByName(agg)
+        null("double").alias("v1"),
+        null("double").alias("v2"),
+        null("double").alias("v3"),
+        null("double").alias("v4"),
+        null("double").alias("v5"),
+    ),
+})
 
 
 _ARRAY_MERGED_SQL = f"""

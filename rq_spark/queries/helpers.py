@@ -21,8 +21,14 @@ vs DuckDB values, order-insensitive, columns sorted by name):
 
 from __future__ import annotations
 
+import threading
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial, reduce
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..session import apply_runtime_confs
 
@@ -65,6 +71,11 @@ def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
+def null(dtype: str) -> Column:
+    """A typed NULL: the filler for columns a union branch lacks."""
+    return F.lit(None).cast(dtype)
+
+
 def dsum(col: Column | str, alias: str) -> Column:
     """Order-independent exact sum of a double column, returned as double."""
     c = F.col(col) if isinstance(col, str) else col
@@ -96,6 +107,59 @@ def sql_davg(expr: str, alias: str) -> str:
         f"{sql_dec2dbl(f'SUM(CAST({expr} AS DECIMAL(38,6)))')}"
         f" / COUNT({expr}) AS {alias}"
     )
+
+
+def overlap(spark: SparkSession, thunks: list[Callable]) -> list:
+    """Run ``thunks`` at the same time; their results, in order. One
+    thread per thunk on a pool private to the call (a thunk waiting on
+    a nested ``overlap`` cannot starve it), each inheriting the caller's
+    job group and other local properties, which a bare pinned-mode
+    thread would lack."""
+    with ThreadPoolExecutor(len(thunks)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in thunks]
+        return [f.result() for f in futures]
+
+
+def once(fn: Callable) -> Callable:
+    """``fn()``, evaluated by the first caller; concurrent callers wait
+    for that result instead of recomputing it."""
+    lock, box = threading.Lock(), []
+
+    def get():
+        with lock:
+            if not box:
+                box.append(fn())
+        return box[0]
+
+    return get
+
+
+def merged(branches: dict, shared: Callable | None = None):
+    """A tagged multi-op catalog key from its ordered ``{tag: builder}``
+    declaration: the builders run at the same time (:func:`overlap`),
+    each branch gets ``F.lit(tag).alias("op")`` in front, and the
+    branches union by name, left-deep, in declared order. Builders get
+    ``(spark, sf_dir)``, plus ``shared(spark, sf_dir)`` — inputs several
+    branches read, built once before them — when given. A tuple of tags
+    is one fused relation emitting all of them; its builder also gets
+    the tuple and writes ``op`` itself. ``.branches`` lists the tags;
+    ``.only(tag)`` is the key cut down to that one declared entry."""
+
+    def build(args: tuple, tag, b) -> DataFrame:
+        if isinstance(tag, tuple):
+            return b(*args, tag)
+        return b(*args).select(F.lit(tag).alias("op"), "*")
+
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        args = (spark, sf_dir) + ((shared(spark, sf_dir),) if shared else ())
+        parts = overlap(spark, [partial(build, args, t, b) for t, b in branches.items()])
+        return reduce(DataFrame.unionByName, parts)
+
+    query.branches = tuple(
+        t for tag in branches for t in (tag if isinstance(tag, tuple) else (tag,))
+    )
+    query.only = lambda tag: merged({tag: branches[tag]}, shared)
+    return query
 
 
 from ..util import spread  # noqa: E402,F401  — re-export for query packs

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.asof import asof_join, asof_join_directions
-from .helpers import dsum, sql_dsum, table
+from .helpers import dsum, merged, null, sql_dsum, table
 
 # --------------------------------------------------------------------------
 # multi-way inner join with broadcast dims (TPC-H Q5 shape)
@@ -214,42 +214,26 @@ _CROSS_SQL = "SELECT r_name, n_name FROM region CROSS JOIN nation"
 _BAND = 0.5
 
 
-def join_range_price_band(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tagged theta-join family over the part table: the ``band``
-    branch (pairs within ±0.5 retail price) and the r8 ``linkage``
-    branch (fuzzy record linkage: per-part fuzzy-match report via
-    blocked Levenshtein, operators/linkage.py). Both share the same
-    bucketed-equi-join strategy — a declared key bounds candidates so
-    no O(n²) nested loop ever appears in the plan.
-
-    A naive theta join is O(n²). Bucketing the range key to band-sized
-    buckets and equi-joining each left bucket against {b-1, b, b+1}
-    bounds candidates to adjacent buckets — the standard distributed
-    range-join strategy; each qualifying pair matches exactly once
-    because the left side keeps a single bucket.
-    """
-    band = _price_band_pairs(spark, sf_dir).select(
-        F.lit("band").alias("op"),
-        "a_key",
-        "b_key",
-        F.col("a_price").alias("v1"),
-        F.col("b_price").alias("v2"),
-    )
+def _record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fuzzy record linkage (r8): per-part fuzzy-match report via
+    blocked Levenshtein, operators/linkage.py."""
     from ..operators.linkage import record_linkage_report
 
-    link = record_linkage_report(
+    return record_linkage_report(
         table(spark, sf_dir, "part"), "p_partkey", "p_name", max_distance=4
     ).select(
-        F.lit("linkage").alias("op"),
         F.col("key").alias("a_key"),
         F.col("nearest_key").alias("b_key"),
         F.col("min_distance").cast("double").alias("v1"),
         F.col("n_matches").cast("double").alias("v2"),
     )
-    # r8 'interval' branch: interval OVERLAP join
-    # (operators/intervals.py — binned equi-join + report-once rule,
-    # no dedup shuffle) over deterministic per-event activity windows
-    # of 1-7 minutes the oracle reconstructs; pairs scoped per user.
+
+
+def _interval_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """r8 interval OVERLAP join (operators/intervals.py — binned
+    equi-join + report-once rule, no dedup shuffle) over deterministic
+    per-event activity windows of 1-7 minutes the oracle reconstructs;
+    pairs scoped per user."""
     from ..operators.intervals import interval_overlap_join
 
     iv = table(spark, sf_dir, "events").select(
@@ -261,11 +245,10 @@ def join_range_price_band(spark: SparkSession, sf_dir: str) -> DataFrame:
             + (F.col("event_id") % 7 + 1) * 60_000_000
         ).alias("e"),
     )
-    overlap = (
+    return (
         interval_overlap_join(iv, iv, "user_id", "s", "e", bin_width=420_000_000)
         .filter(F.col("a_event_id") < F.col("b_event_id"))
         .select(
-            F.lit("interval").alias("op"),
             F.col("a_event_id").alias("a_key"),
             F.col("b_event_id").alias("b_key"),
             (
@@ -277,7 +260,24 @@ def join_range_price_band(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest(F.col("a_s"), F.col("b_s")).cast("double").alias("v2"),
         )
     )
-    return band.unionByName(link).unionByName(overlap)
+
+
+# Tagged theta-join family: the ``band`` branch (part pairs within
+# ±0.5 retail price), the r8 ``linkage`` branch and the r8
+# ``interval`` branch. All share the bucketed-equi-join strategy — a
+# declared key bounds candidates so no O(n²) nested loop ever appears
+# in the plan.
+#
+# A naive theta join is O(n²). Bucketing the range key to band-sized
+# buckets and equi-joining each left bucket against {b-1, b, b+1}
+# bounds candidates to adjacent buckets — the standard distributed
+# range-join strategy; each qualifying pair matches exactly once
+# because the left side keeps a single bucket.
+join_range_price_band = merged({
+    "band": lambda spark, sf_dir: _price_band_pairs(spark, sf_dir),
+    "linkage": _record_linkage,
+    "interval": _interval_overlaps,
+})
 
 
 def _price_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -303,7 +303,9 @@ def _price_band_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("a_key") < F.col("b_key"))
             & (F.abs(F.col("a_price") - F.col("b_price")) <= _BAND)
         )
-        .select("a_key", "b_key", "a_price", "b_price")
+        .select(
+            "a_key", "b_key", F.col("a_price").alias("v1"), F.col("b_price").alias("v2")
+        )
     )
 
 
@@ -350,22 +352,9 @@ FROM (
 # --------------------------------------------------------------------------
 
 
-def join_asof_event(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """For each purchase event: the matching view by the same user in
-    all three merge_asof directions, tagged — op='backward' (most
-    recent view ≤ ts, the original branch), op='forward' (earliest
-    view ≥ ts), op='nearest' (closer of the two, earlier wins ties —
-    the pandas rule). operators/asof.py: union + ONE keyed window pass
-    per direction (nearest evaluates both frames off one sort), no
-    candidate-pair explosion, unlike a range self-join. Reference rq
-    has no joins at all (SURVEY §2.1); this is the extension layer's
-    streaming-friendly as-of family.
-
-    Plan shape: asof_join_directions computes all three matches in ONE
-    union + window pass (one shuffle, one sort, both frames in a
-    single WindowExec — forward's exact-ts match is recovered from the
-    preceding frame), and the branches unpivot via explode, so the
-    whole family costs one pass instead of three."""
+def asof_sides(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(purchases, views) of the events table: the as-of family's
+    inputs, shared with its per-direction bench solos."""
     e = table(spark, sf_dir, "events")
     views = e.filter(F.col("event_type") == "view").select(
         "user_id", "ts", F.col("value").alias("view_value")
@@ -373,7 +362,24 @@ def join_asof_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases = e.filter(F.col("event_type") == "purchase").select(
         "user_id", "ts", "event_id"
     )
-    multi = asof_join_directions(purchases, views, "user_id", "ts")
+    return purchases, views
+
+
+def _asof_directions(spark: SparkSession, sf_dir: str, directions) -> DataFrame:
+    """For each purchase event: the matching view by the same user in
+    every declared merge_asof direction, tagged — op='backward' (most
+    recent view ≤ ts, the original branch), op='forward' (earliest view
+    ≥ ts), op='nearest' (closer of the two, earlier wins ties — the
+    pandas rule). Reference rq has no joins at all (SURVEY §2.1); this
+    is the extension layer's streaming-friendly as-of family.
+
+    Plan shape: asof_join_directions computes all three matches in ONE
+    union + window pass (one shuffle, one sort, both frames in a single
+    WindowExec — forward's exact-ts match is recovered from the
+    preceding frame; no candidate-pair explosion, unlike a range
+    self-join), and the branches unpivot via explode, so the whole
+    family costs one pass instead of three."""
+    multi = asof_join_directions(*asof_sides(spark, sf_dir), "user_id", "ts")
     branches = F.array(
         *[
             F.struct(
@@ -381,7 +387,7 @@ def join_asof_event(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col(f"{d}_asof_ts").alias("view_ts"),
                 F.col(f"{d}_view_value").alias("view_value"),
             )
-            for d in ("backward", "forward", "nearest")
+            for d in directions
         ]
     )
     return multi.select(
@@ -397,6 +403,9 @@ def join_asof_event(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("_b.view_ts").alias("view_ts"),
         F.col("_b.view_value").alias("view_value"),
     )
+
+
+join_asof_event = merged({("backward", "forward", "nearest"): _asof_directions})
 
 
 _ASOF_SQL = """
@@ -479,36 +488,32 @@ GROUP BY o_orderpriority
 # --------------------------------------------------------------------------
 
 
-def join_outer_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT / RIGHT / FULL outer joins in one tagged result (branches =
-    the former join_left_order_items / join_right_supplier /
-    join_full_nation_activity, byte-identical plans per branch)."""
-    nulls = F.lit(None)
-    left = join_left_order_items(spark, sf_dir).select(
-        F.lit("left").alias("op"),
+# LEFT / RIGHT / FULL outer joins in one tagged result (branches = the
+# former join_left_order_items / join_right_supplier /
+# join_full_nation_activity, byte-identical plans per branch).
+join_outer_family = merged({
+    "left": lambda spark, sf_dir: join_left_order_items(spark, sf_dir).select(
         F.col("o_orderkey").cast("bigint").alias("k"),
-        nulls.cast("string").alias("s"),
+        null("string").alias("s"),
         F.col("n_items").cast("bigint").alias("n1"),
-        nulls.cast("bigint").alias("n2"),
+        null("bigint").alias("n2"),
         F.col("sum_qty").alias("v"),
-    )
-    right = join_right_supplier(spark, sf_dir).select(
-        F.lit("right").alias("op"),
+    ),
+    "right": lambda spark, sf_dir: join_right_supplier(spark, sf_dir).select(
         F.col("s_suppkey").cast("bigint").alias("k"),
         F.col("s_name").alias("s"),
         F.col("n_lines").cast("bigint").alias("n1"),
-        nulls.cast("bigint").alias("n2"),
-        nulls.cast("double").alias("v"),
-    )
-    full = join_full_nation_activity(spark, sf_dir).select(
-        F.lit("full").alias("op"),
+        null("bigint").alias("n2"),
+        null("double").alias("v"),
+    ),
+    "full": lambda spark, sf_dir: join_full_nation_activity(spark, sf_dir).select(
         F.col("nationkey").cast("bigint").alias("k"),
-        nulls.cast("string").alias("s"),
+        null("string").alias("s"),
         F.col("n_customers").cast("bigint").alias("n1"),
         F.col("n_suppliers").cast("bigint").alias("n2"),
-        nulls.cast("double").alias("v"),
-    )
-    return left.unionByName(right).unionByName(full)
+        null("double").alias("v"),
+    ),
+})
 
 
 _OUTER_FAMILY_SQL = f"""
@@ -524,33 +529,29 @@ FROM ({_FULL_SQL})
 """
 
 
-def join_filtering(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SEMI / ANTI / CROSS joins in one tagged result (branches = the
-    former join_semi_active_customers / join_anti_inactive_customers /
-    join_cross_region_nation)."""
-    nulls = F.lit(None)
-    semi = join_semi_active_customers(spark, sf_dir).select(
-        F.lit("semi").alias("op"),
+# SEMI / ANTI / CROSS joins in one tagged result (branches = the
+# former join_semi_active_customers / join_anti_inactive_customers /
+# join_cross_region_nation).
+join_filtering = merged({
+    "semi": lambda spark, sf_dir: join_semi_active_customers(spark, sf_dir).select(
         F.col("c_custkey").alias("k1"),
-        nulls.cast("bigint").alias("k2"),
+        null("bigint").alias("k2"),
         F.col("c_name").alias("s1"),
-        nulls.cast("string").alias("s2"),
-    )
-    anti = join_anti_inactive_customers(spark, sf_dir).select(
-        F.lit("anti").alias("op"),
+        null("string").alias("s2"),
+    ),
+    "anti": lambda spark, sf_dir: join_anti_inactive_customers(spark, sf_dir).select(
         F.col("c_custkey").alias("k1"),
         F.col("c_nationkey").cast("bigint").alias("k2"),
-        nulls.cast("string").alias("s1"),
-        nulls.cast("string").alias("s2"),
-    )
-    cross = join_cross_region_nation(spark, sf_dir).select(
-        F.lit("cross").alias("op"),
-        nulls.cast("bigint").alias("k1"),
-        nulls.cast("bigint").alias("k2"),
+        null("string").alias("s1"),
+        null("string").alias("s2"),
+    ),
+    "cross": lambda spark, sf_dir: join_cross_region_nation(spark, sf_dir).select(
+        null("bigint").alias("k1"),
+        null("bigint").alias("k2"),
         F.col("r_name").alias("s1"),
         F.col("n_name").alias("s2"),
-    )
-    return semi.unionByName(anti).unionByName(cross)
+    ),
+})
 
 
 _FILTERING_SQL = f"""

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import NORM_SQL as _NORM_SQL
 from ..operators.text import chunk_docs
-from .helpers import table
+from .helpers import merged, null, table
 
 # --------------------------------------------------------------- explode
 
@@ -145,45 +145,44 @@ _CHUNK_WORDS = 64
 _CHUNK_OVERLAP = 16
 
 
-def explode_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """posexplode over a physical array + explode_outer over a computed
-    array in one tagged result (branches = the former
-    explode_embedding, explode_tokens_outer).
-
-    op='chunk' (r8) — RAG sliding-window chunking
-    (operators/text.py:chunk_docs, 64-word windows, 16 overlap): one
-    row per chunk with k=doc_id, pos=chunk index, val=char offset into
-    the normalized text, token=md5(chunk text) — the md5 certifies
-    every chunk's exact content and boundary cross-engine."""
-    nulls = F.lit(None)
-    emb = explode_embedding(spark, sf_dir).select(
-        F.lit("posexplode").alias("op"),
-        F.col("vec_id").cast("bigint").alias("k"),
-        F.col("pos").cast("bigint").alias("pos"),
-        F.col("val").alias("val"),
-        nulls.cast("string").alias("token"),
-    )
-    toks = explode_tokens_outer(spark, sf_dir).select(
-        F.lit("explode_outer").alias("op"),
-        F.col("doc_id").cast("bigint").alias("k"),
-        nulls.cast("bigint").alias("pos"),
-        nulls.cast("double").alias("val"),
-        F.col("token"),
-    )
-    chunks = chunk_docs(
+def _chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RAG sliding-window chunking (r8, operators/text.py:chunk_docs,
+    64-word windows, 16 overlap): one row per chunk with k=doc_id,
+    pos=chunk index, val=char offset into the normalized text,
+    token=md5(chunk text) — the md5 certifies every chunk's exact
+    content and boundary cross-engine."""
+    return chunk_docs(
         table(spark, sf_dir, "documents"),
         "text",
         "doc_id",
         chunk_words=_CHUNK_WORDS,
         overlap_words=_CHUNK_OVERLAP,
     ).select(
-        F.lit("chunk").alias("op"),
         F.col("doc_id").cast("bigint").alias("k"),
         F.col("chunk_pos").cast("bigint").alias("pos"),
         F.col("char_start").cast("double").alias("val"),
         F.md5("chunk_text").alias("token"),
     )
-    return emb.unionByName(toks).unionByName(chunks)
+
+
+# posexplode over a physical array + explode_outer over a computed
+# array + RAG chunking in one tagged result (branches = the former
+# explode_embedding, explode_tokens_outer).
+explode_ops = merged({
+    "posexplode": lambda spark, sf_dir: explode_embedding(spark, sf_dir).select(
+        F.col("vec_id").cast("bigint").alias("k"),
+        F.col("pos").cast("bigint").alias("pos"),
+        F.col("val").alias("val"),
+        null("string").alias("token"),
+    ),
+    "explode_outer": lambda spark, sf_dir: explode_tokens_outer(spark, sf_dir).select(
+        F.col("doc_id").cast("bigint").alias("k"),
+        null("bigint").alias("pos"),
+        null("double").alias("val"),
+        F.col("token"),
+    ),
+    "chunk": _chunks,
+})
 
 
 _EXPLODE_OPS_SQL = f"""
@@ -209,28 +208,25 @@ FROM (
 """
 
 
-def struct_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """withField/dropFields editing + struct build/flatten round trip
-    in one tagged result (branches = the former struct_with_field,
-    flatten_struct_star)."""
-    nulls = F.lit(None)
-    edit = struct_with_field(spark, sf_dir).select(
-        F.lit("with_field").alias("op"),
+# withField/dropFields editing + struct build/flatten round trip in one
+# tagged result (branches = the former struct_with_field,
+# flatten_struct_star).
+struct_ops = merged({
+    "with_field": lambda spark, sf_dir: struct_with_field(spark, sf_dir).select(
         F.col("key").cast("bigint").alias("k1"),
-        nulls.cast("bigint").alias("k2"),
+        null("bigint").alias("k2"),
         F.col("price").cast("double").alias("v"),
         F.col("price_band").cast("bigint").alias("band"),
-        nulls.cast("string").alias("s"),
-    )
-    flat = flatten_struct_star(spark, sf_dir).select(
-        F.lit("flatten").alias("op"),
+        null("string").alias("s"),
+    ),
+    "flatten": lambda spark, sf_dir: flatten_struct_star(spark, sf_dir).select(
         F.col("custkey").cast("bigint").alias("k1"),
         F.col("nationkey").cast("bigint").alias("k2"),
-        nulls.cast("double").alias("v"),
-        nulls.cast("bigint").alias("band"),
+        null("double").alias("v"),
+        null("bigint").alias("band"),
         F.col("segment").alias("s"),
-    )
-    return edit.unionByName(flat)
+    ),
+})
 
 
 _STRUCT_OPS_SQL = f"""

@@ -12,7 +12,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import similarity as S
-from .helpers import table
+from ..operators.retrieval import bm25_topk
+from .helpers import merged, table
 
 _N_QUERIES = 5
 _K = 10
@@ -41,40 +42,35 @@ _BM25_QUERIES = [
 ]
 
 
-def sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-k retrieval, dense + sparse, tagged branches:
-
-    'cosine' — exact brute-force cosine top-k over the embeddings
-    table (operators/similarity.py:brute_topk); scores bit-identical
-    to the oracle's list_dot_product.
-
-    'bm25' (r8) — Okapi BM25 keyword top-k over the documents table
-    (operators/retrieval.py:bm25_topk) in the hash-exact log-free
-    mode: odds-ratio idf plus an ordered IEEE fold over query terms
-    makes every score bit-reproducible, so the oracle pins scores AND
-    ranks. The true-ln form (production default) is pinned against an
-    independent pure-Python reference in tests/test_retrieval.py.
-    """
-    from ..operators.retrieval import bm25_topk
-
-    cos = _brute_cosine(spark, sf_dir).select(
-        F.lit("cosine").alias("op"),
+# Top-k retrieval, dense + sparse, tagged branches:
+#
+# 'cosine' — exact brute-force cosine top-k over the embeddings table
+# (operators/similarity.py:brute_topk); scores bit-identical to the
+# oracle's list_dot_product.
+#
+# 'bm25' (r8) — Okapi BM25 keyword top-k over the documents table
+# (operators/retrieval.py:bm25_topk) in the hash-exact log-free mode:
+# odds-ratio idf plus an ordered IEEE fold over query terms makes
+# every score bit-reproducible, so the oracle pins scores AND ranks.
+# The true-ln form (production default) is pinned against an
+# independent pure-Python reference in tests/test_retrieval.py.
+sim_topk_cosine = merged({
+    "cosine": lambda spark, sf_dir: _brute_cosine(spark, sf_dir).select(
         F.col("query_id").cast("long").alias("query_id"),
         F.col("neighbor_id").cast("long").alias("neighbor_id"),
         F.col("cos_sim").alias("score"),
         F.col("rk"),
-    )
-    docs = table(spark, sf_dir, "documents")
-    bm = bm25_topk(
-        docs, "text", "doc_id", _BM25_QUERIES, k=_K, log_idf=False
+    ),
+    "bm25": lambda spark, sf_dir: bm25_topk(
+        table(spark, sf_dir, "documents"), "text", "doc_id", _BM25_QUERIES,
+        k=_K, log_idf=False,
     ).select(
-        F.lit("bm25").alias("op"),
         F.col("query_id"),
         F.col("doc").cast("long").alias("neighbor_id"),
         F.col("score"),
         F.col("rk"),
-    )
-    return cos.unionByName(bm)
+    ),
+})
 
 
 _TOPK_SQL = f"""
@@ -145,27 +141,6 @@ def sim_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# recall floors asserted by the merged ANN query; the same bounds are
-# tested per-branch in tests/test_similarity.py. LSH with 24×4 OR-
-# amplification recovers ≈ all true neighbors; IVF recall tracks the
-# probed fraction on this near-uniform testdata (nprobe/n_centroids =
-# 0.5) — see test_ivf_never_invents_and_has_recall for the analysis.
-# PQ's floor sits under its measured 0.90/0.96 with slack for the
-# FP-order sensitivity of distributed Lloyd sums. IVFPQ's recall is
-# bounded by its IVF pruning (nprobe/n_centroids = 0.75 on this
-# near-uniform adversarial testdata; measured 0.92/0.82), so it
-# shares IVF's floor.
-_ANN_RECALL_FLOOR = {
-    "lsh": 0.9,
-    "ivf": 0.65,
-    "pq": 0.75,
-    "ivfpq": 0.65,
-    # same model/candidates/re-rank as ivfpq, only the LUT transport
-    # differs (joined column vs collected closure) — same floor
-    "ivfpq_join": 0.65,
-}
-
-
 def sim_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFPQ (operators/similarity.py:ivfpq_topk): IVF cells prune
     which rows are scored, PQ codes compress what is scored, exact
@@ -205,45 +180,64 @@ def sim_ann_ivfpq_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sim_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both ANN families in one tagged result, HASH-CHECKED as an
-    assertion (branches = the former sim_ann_lsh_topk,
-    sim_ann_ivf_topk): approximate output has no SQL oracle, so per
-    (op, query) the query emits the result count (oracle = the literal
-    k — asserts every query returns a full top-k) and a recall-vs-
-    brute-force flag the oracle asserts TRUE. Brute-force ground truth
-    is computed by the hash-verified exact operator (sim_topk_cosine's
-    path), and both ANN families are deterministic (seeded
-    hyperplanes, deterministic Lloyd init) for a fixed dataset, so the
-    flags are stable — a recall regression now flips the driver hash
-    instead of hiding behind a rows-only check."""
-    brute = _brute_cosine(spark, sf_dir).select("query_id", "neighbor_id")
+def _recall_checked(search, floor: float):
+    """One ANN branch as a hash-checkable assertion: its result count
+    and whether its op-level recall (hits across all queries /
+    k·n_queries, the granularity the floor is derived at) vs the exact
+    top-k clears ``floor``."""
 
-    def scored(df: DataFrame, op: str) -> DataFrame:
-        # recall is asserted at the op level (hits across all queries /
-        # k·n_queries), the same granularity the floor is derived at —
-        # individual queries legitimately fluctuate around it
+    def build(spark: SparkSession, sf_dir: str, brute: DataFrame) -> DataFrame:
+        df = search(spark, sf_dir)
         hits = df.join(brute, ["query_id", "neighbor_id"], "left_semi")
         return (
             df.agg(F.count(F.lit(1)).alias("n_results"))
             .crossJoin(hits.agg(F.count(F.lit(1)).alias("_hits")))
             .select(
-                F.lit(op).alias("op"),
                 F.col("n_results").cast("bigint").alias("n_results"),
-                (
-                    F.col("_hits") / F.lit(_K * _N_QUERIES)
-                    >= _ANN_RECALL_FLOOR[op]
-                ).alias("recall_ok"),
+                (F.col("_hits") / F.lit(_K * _N_QUERIES) >= floor).alias(
+                    "recall_ok"
+                ),
             )
         )
 
-    return (
-        scored(sim_ann_lsh_topk(spark, sf_dir), "lsh")
-        .unionByName(scored(sim_ann_ivf_topk(spark, sf_dir), "ivf"))
-        .unionByName(scored(sim_ann_pq_topk(spark, sf_dir), "pq"))
-        .unionByName(scored(sim_ann_ivfpq_topk(spark, sf_dir), "ivfpq"))
-        .unionByName(scored(sim_ann_ivfpq_join_topk(spark, sf_dir), "ivfpq_join"))
-    )
+    return build
+
+
+# Both ANN families in one tagged result, HASH-CHECKED as an assertion
+# (branches = the former sim_ann_lsh_topk, sim_ann_ivf_topk, ...):
+# approximate output has no SQL oracle, so per op the query emits the
+# result count (oracle = the literal k·n_queries — asserts every query
+# returns a full top-k) and a recall-vs-brute-force flag the oracle
+# asserts TRUE. Brute-force ground truth is computed by the
+# hash-verified exact operator (sim_topk_cosine's path), and every ANN
+# family is deterministic (seeded hyperplanes, deterministic Lloyd
+# init) for a fixed dataset, so the flags are stable — a recall
+# regression flips the driver hash instead of hiding behind a
+# rows-only check.
+#
+# Recall floors (the same bounds are tested per branch in
+# tests/test_similarity.py): LSH with 24×4 OR-amplification recovers
+# ≈ all true neighbors; IVF recall tracks the probed fraction on this
+# near-uniform testdata (nprobe/n_centroids = 0.5) — see
+# test_ivf_never_invents_and_has_recall for the analysis. PQ's floor
+# sits under its measured 0.90/0.96 with slack for the FP-order
+# sensitivity of distributed Lloyd sums. IVFPQ's recall is bounded by
+# its IVF pruning (nprobe/n_centroids = 0.75 on this near-uniform
+# adversarial testdata; measured 0.92/0.82), so it shares IVF's floor;
+# ivfpq_join has the same model/candidates/re-rank as ivfpq, only the
+# LUT transport differs (joined column vs collected closure).
+sim_ann_topk = merged(
+    {
+        "lsh": _recall_checked(sim_ann_lsh_topk, 0.9),
+        "ivf": _recall_checked(sim_ann_ivf_topk, 0.65),
+        "pq": _recall_checked(sim_ann_pq_topk, 0.75),
+        "ivfpq": _recall_checked(sim_ann_ivfpq_topk, 0.65),
+        "ivfpq_join": _recall_checked(sim_ann_ivfpq_join_topk, 0.65),
+    },
+    shared=lambda spark, sf_dir: _brute_cosine(spark, sf_dir).select(
+        "query_id", "neighbor_id"
+    ),
+)
 
 
 _ANN_SQL = f"""

@@ -16,7 +16,7 @@ from ..operators.dedup import NORM_SQL as _D_NORM_SQL
 from ..operators import url as U
 from ..util import persist_tracked as _persist_tracked
 from ..util import release_caches as _release_caches
-from .helpers import spread, table
+from .helpers import overlap, spread, table
 
 _NORM_SQL = _D_NORM_SQL
 
@@ -160,29 +160,25 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # likelihood) trains off the SAME persisted tokenization — the
     # unigram half is reused, so only the bigram-count aggregation is
     # a new scan of the cached relation. r14 opt (guide §2.6): the
-    # three model trainers are independent blocking driver collects
-    # (bigram consumes the unigram RESULT only to embed it in its
-    # return), so they run from a thread pool and overlap on the
-    # shared scheduler — the key pays max(model scans), not the sum;
-    # Spark's block-level cache locking makes the concurrent first
-    # reads of the toks persist compute each partition once.
-    from concurrent.futures import ThreadPoolExecutor
+    # model trainers are independent blocking driver collects (bigram
+    # consumes the unigram RESULT only to embed it in its return, so
+    # the two run back to back), so they overlap on the shared
+    # scheduler — the key pays max(model scans), not the sum; Spark's
+    # block-level cache locking makes the concurrent first reads of
+    # the toks persist compute each partition once.
+    def lm_models():
+        lm = X.unigram_lm_model_from_words(toks, "words")
+        return lm, X.bigram_lm_model_from_words(toks, "words", unigram=lm)
 
-    with ThreadPoolExecutor(3) as ex:
-        f_lm = ex.submit(X.unigram_lm_model_from_words, toks, "words")
-        f_bi = ex.submit(
-            lambda: X.bigram_lm_model_from_words(
-                toks, "words", unigram=f_lm.result()
-            )
-        )
-        f_ds = ex.submit(
-            X.dsir_model_from_words,
-            toks,
-            "words",
-            F.col("lang") == "en",
-            _DSIR_B,
-        )
-        lm, bi, ds = f_lm.result(), f_bi.result(), f_ds.result()
+    (lm, bi), ds = overlap(
+        spark,
+        [
+            lm_models,
+            lambda: X.dsir_model_from_words(
+                toks, "words", F.col("lang") == "en", _DSIR_B
+            ),
+        ],
+    )
     t = F.col("text")
     w = F.col("words")
     scored = _persist_tracked(

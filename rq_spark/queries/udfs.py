@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from .helpers import table
+from .helpers import merged, null, table
 
 # ------------------------------------------------------ scalar pandas_udf
 
@@ -261,37 +261,35 @@ FROM (
 # --------------------------------------------------------------------------
 
 
-def udf_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Row-wise Arrow UDF tiers in one tagged result: scalar pandas_udf
-    + mapInPandas + the r8 certified BPE encoder (branches = the former
-    udf_scalar_log1p, udf_map_in_pandas_enrich, plus
-    udf_bpe_encode_certified)."""
-    nulls = F.lit(None)
-    scalar = udf_scalar_log1p(spark, sf_dir).select(
-        F.lit("pandas_udf").alias("op"),
+# Row-wise Arrow UDF tiers in one tagged result: scalar pandas_udf +
+# mapInPandas + the r8 certified BPE encoder (branches = the former
+# udf_scalar_log1p, udf_map_in_pandas_enrich, plus
+# udf_bpe_encode_certified).
+udf_vectorized = merged({
+    "pandas_udf": lambda spark, sf_dir: udf_scalar_log1p(spark, sf_dir).select(
         F.col("event_id").cast("bigint").alias("event_id"),
         F.col("log1p_value").alias("v"),
-        nulls.cast("string").alias("event_type"),
-        nulls.cast("bigint").alias("k"),
-        nulls.cast("bigint").alias("n_props"),
-    )
-    mip = udf_map_in_pandas_enrich(spark, sf_dir).select(
-        F.lit("map_in_pandas").alias("op"),
+        null("string").alias("event_type"),
+        null("bigint").alias("k"),
+        null("bigint").alias("n_props"),
+    ),
+    "map_in_pandas": lambda spark, sf_dir: udf_map_in_pandas_enrich(
+        spark, sf_dir
+    ).select(
         F.col("event_id").cast("bigint").alias("event_id"),
-        nulls.cast("double").alias("v"),
+        null("double").alias("v"),
         F.col("event_type"),
         F.col("k").cast("bigint").alias("k"),
         F.col("n_props").cast("bigint").alias("n_props"),
-    )
-    bpe = udf_bpe_encode_certified(spark, sf_dir).select(
-        F.lit("bpe").alias("op"),
+    ),
+    "bpe": lambda spark, sf_dir: udf_bpe_encode_certified(spark, sf_dir).select(
         F.col("doc_id").cast("bigint").alias("event_id"),
-        nulls.cast("double").alias("v"),
+        null("double").alias("v"),
         F.col("recon_md5").alias("event_type"),
         F.col("bounds_ok").alias("k"),
         F.col("n_words").alias("n_props"),
-    )
-    return scalar.unionByName(mip).unionByName(bpe)
+    ),
+})
 
 
 _UDF_VECTORIZED_SQL = f"""
@@ -308,28 +306,25 @@ FROM ({_BPE_ENCODE_SQL})
 """
 
 
-def udf_grouped_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped + table UDF tiers in one tagged result: applyInPandas
-    z-score + Python UDTF lateral split (branches = the former
-    udf_zscore_by_user, udf_udtf_split_terms)."""
-    nulls = F.lit(None)
-    grouped = udf_zscore_by_user(spark, sf_dir).select(
-        F.lit("apply_in_pandas").alias("op"),
+# Grouped + table UDF tiers in one tagged result: applyInPandas
+# z-score + Python UDTF lateral split (branches = the former
+# udf_zscore_by_user, udf_udtf_split_terms).
+udf_grouped_table = merged({
+    "apply_in_pandas": lambda spark, sf_dir: udf_zscore_by_user(spark, sf_dir).select(
         F.col("user_id").cast("bigint").alias("k1"),
         F.col("event_id").cast("bigint").alias("k2"),
         F.col("zscore").alias("z"),
-        nulls.cast("string").alias("term"),
-        nulls.cast("bigint").alias("pos"),
-    )
-    udtf = udf_udtf_split_terms(spark, sf_dir).select(
-        F.lit("udtf").alias("op"),
+        null("string").alias("term"),
+        null("bigint").alias("pos"),
+    ),
+    "udtf": lambda spark, sf_dir: udf_udtf_split_terms(spark, sf_dir).select(
         F.col("doc_id").cast("bigint").alias("k1"),
-        nulls.cast("bigint").alias("k2"),
-        nulls.cast("double").alias("z"),
+        null("bigint").alias("k2"),
+        null("double").alias("z"),
         F.col("term"),
         F.col("pos").cast("bigint").alias("pos"),
-    )
-    return grouped.unionByName(udtf)
+    ),
+})
 
 
 _UDF_GROUPED_TABLE_SQL = f"""

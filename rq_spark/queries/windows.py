@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .helpers import DEC, table
+from .helpers import DEC, merged, null, table
 
 
 def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -222,13 +222,11 @@ FROM orders
 # --------------------------------------------------------------------------
 
 
-def window_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ranking family in one tagged result: rank/dense_rank/ntile
-    (former window_rank_dense) + percent_rank/cume_dist/decile
-    (former window_dist_rank)."""
-    nulls = F.lit(None)
-    dense = window_rank_dense(spark, sf_dir).select(
-        F.lit("rank_dense").alias("op"),
+# Ranking family in one tagged result: rank/dense_rank/ntile (former
+# window_rank_dense) + percent_rank/cume_dist/decile (former
+# window_dist_rank).
+window_ranking = merged({
+    "rank_dense": lambda spark, sf_dir: window_rank_dense(spark, sf_dir).select(
         F.col("l_returnflag").alias("grp"),
         F.col("l_orderkey").cast("bigint").alias("k1"),
         F.col("l_linenumber").cast("bigint").alias("k2"),
@@ -236,22 +234,21 @@ def window_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("qty_rank").cast("bigint").alias("r1"),
         F.col("qty_dense_rank").cast("bigint").alias("r2"),
         F.col("quartile").cast("bigint").alias("bucket"),
-        nulls.cast("double").alias("pr"),
-        nulls.cast("double").alias("cd"),
-    )
-    dist = window_dist_rank(spark, sf_dir).select(
-        F.lit("dist_rank").alias("op"),
+        null("double").alias("pr"),
+        null("double").alias("cd"),
+    ),
+    "dist_rank": lambda spark, sf_dir: window_dist_rank(spark, sf_dir).select(
         F.col("o_orderpriority").alias("grp"),
         F.col("o_orderkey").cast("bigint").alias("k1"),
-        nulls.cast("bigint").alias("k2"),
-        nulls.cast("double").alias("qty"),
-        nulls.cast("bigint").alias("r1"),
-        nulls.cast("bigint").alias("r2"),
+        null("bigint").alias("k2"),
+        null("double").alias("qty"),
+        null("bigint").alias("r1"),
+        null("bigint").alias("r2"),
         F.col("decile").cast("bigint").alias("bucket"),
         F.col("pct_rank").alias("pr"),
         F.col("cume").alias("cd"),
-    )
-    return dense.unionByName(dist)
+    ),
+})
 
 
 _RANKING_SQL = f"""
@@ -268,42 +265,42 @@ FROM ({_DIST_SQL})
 """
 
 
-def window_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame aggregates in one tagged result: unbounded RANGE running
-    sum (former window_running_revenue) + interval-bounded trailing
-    30-day RANGE sum (former window_trailing_30d)."""
-    nulls = F.lit(None)
-    running = window_running_revenue(spark, sf_dir).select(
-        F.lit("running").alias("op"),
-        F.col("l_suppkey").cast("bigint").alias("k1"),
-        F.col("l_orderkey").cast("bigint").alias("k2"),
-        F.col("l_linenumber").cast("bigint").alias("k3"),
-        F.col("running_qty").alias("v"),
-    )
-    trailing = window_trailing_30d(spark, sf_dir).select(
-        F.lit("trailing_30d").alias("op"),
-        F.col("o_custkey").cast("bigint").alias("k1"),
-        F.col("o_orderkey").cast("bigint").alias("k2"),
-        nulls.cast("bigint").alias("k3"),
-        F.col("trailing_30d_rev").alias("v"),
-    )
-    # op='ewma' (r8): fixed-point α=1/2 exponential smoothing of each
-    # user's event values (operators/timeseries.py:ewma_fixed) — the
-    # integer recurrence is replayed by a recursive-CTE oracle, so
-    # every smoothed micro-unit is hash-exact. v carries the int64
-    # micro-units exactly (< 2^53) as a double.
+def _ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fixed-point α=1/2 exponential smoothing of each user's event
+    values (r8, operators/timeseries.py:ewma_fixed) — the integer
+    recurrence is replayed by a recursive-CTE oracle, so every smoothed
+    micro-unit is hash-exact. v carries the int64 micro-units exactly
+    (< 2^53) as a double."""
     from ..operators.timeseries import ewma_fixed
 
-    ewma = ewma_fixed(
+    return ewma_fixed(
         table(spark, sf_dir, "events"), "user_id", ["ts", "event_id"], "value"
     ).select(
-        F.lit("ewma").alias("op"),
         F.col("user_id").cast("bigint").alias("k1"),
         F.col("event_id").cast("bigint").alias("k2"),
         F.col("seq").alias("k3"),
         F.col("ewma_micros").cast("double").alias("v"),
     )
-    return running.unionByName(trailing).unionByName(ewma)
+
+
+# Frame aggregates in one tagged result: unbounded RANGE running sum
+# (former window_running_revenue) + interval-bounded trailing 30-day
+# RANGE sum (former window_trailing_30d) + r8 fixed-point EWMA.
+window_frames = merged({
+    "running": lambda spark, sf_dir: window_running_revenue(spark, sf_dir).select(
+        F.col("l_suppkey").cast("bigint").alias("k1"),
+        F.col("l_orderkey").cast("bigint").alias("k2"),
+        F.col("l_linenumber").cast("bigint").alias("k3"),
+        F.col("running_qty").alias("v"),
+    ),
+    "trailing_30d": lambda spark, sf_dir: window_trailing_30d(spark, sf_dir).select(
+        F.col("o_custkey").cast("bigint").alias("k1"),
+        F.col("o_orderkey").cast("bigint").alias("k2"),
+        null("bigint").alias("k3"),
+        F.col("trailing_30d_rev").alias("v"),
+    ),
+    "ewma": _ewma,
+})
 
 
 from ..operators.timeseries import ewma_cte_sql as _ewma_cte_sql  # noqa: E402

@@ -19,6 +19,7 @@ files and the memory sink a real one (foreachBatch → parquet/Delta).
 from __future__ import annotations
 
 import itertools
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -95,6 +96,20 @@ def session_counts(stream: DataFrame, gap: str = "30 minutes",
             "n_events",
         )
     )
+
+
+@contextmanager
+def no_data_batches_off(spark: SparkSession):
+    """Skip the trailing NO-DATA micro-batch (one empty state-commit
+    round per state partition) inside the block. Safe only for queries
+    that emit per batch, never on watermark advance."""
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(key, "true")
+    spark.conf.set(key, "false")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 def run_to_memory(sdf: DataFrame, mode: str = "complete",

@@ -52,7 +52,12 @@ def checkpoint_adaptive(df: DataFrame, eager: bool = True) -> DataFrame:
     add a disk round-trip. Same contract as the operators' loop
     checkpoints (`connected_components`, `pagerank_fixed`,
     `absorb_edges`); query-layer truncations route through here so the
-    local-mode-only durability assumption lives in ONE place."""
+    local-mode-only durability assumption lives in ONE place.
+
+    Spark deletes reliable checkpoint files only when
+    ``spark.cleaner.referenceTracking.cleanCheckpoints=true``, so set
+    it alongside the checkpoint dir: otherwise a long-lived cluster
+    session keeps every dedup/append_labels checkpoint on disk."""
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is not None:
         return df.checkpoint(eager=eager)

@@ -16,11 +16,14 @@ from __future__ import annotations
 
 import importlib.util
 import json
+import os
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _bench():
     spec = importlib.util.spec_from_file_location(
-        "bench", "/root/repo/bench.py"
+        "bench", os.path.join(REPO, "bench.py")
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)

@@ -1,10 +1,9 @@
 """Per-branch bench attribution (rq_spark/bench_branches.py).
 
-Catalog-budget hygiene rule (r8 verdict task #8): any tagged branch
-added to a HEADLINE key must land with its per-branch bench entry in
-the same commit — enforced here by diffing bench_branches against
-tests/test_merged.py's TAGGED map, so bench attribution can never
-silently regress again.
+Catalog-budget hygiene rule (r8 verdict task #8): every declared
+branch of a HEADLINE key has its per-branch bench entry — the registry
+is derived from the keys' own declarations, and these tests pin that
+derivation, so bench attribution can never silently regress again.
 """
 
 from __future__ import annotations
@@ -13,45 +12,33 @@ import pytest
 from pyspark.sql import functions as F
 
 from rq_spark import bench_branches as B
+from rq_spark.queries import all_queries
 
 SF = "/root/testdata/sf0.001"
 
 
 def _headline():
-    import importlib.util
+    from tests.test_bench_artifact import _bench
 
-    spec = importlib.util.spec_from_file_location(
-        "bench", "/root/repo/bench.py"
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
-    return m.HEADLINE
+    return _bench().HEADLINE
 
 
 def test_every_headline_tagged_branch_has_a_bench_entry():
-    """If a headline key has tagged branches (test_merged.TAGGED), every
-    tag must be attributed in branch_queries() — or the key must be in
-    EXCLUDED with a documented reason."""
-    from tests.test_merged import TAGGED
-
+    """Every declared branch of a merged headline key is attributed in
+    branch_queries()."""
     reg = set(B.branch_queries())
+    qs = all_queries()
     for key in _headline():
-        if key not in TAGGED or key in B.EXCLUDED:
-            continue
-        missing = {f"{key}/{t}" for t in TAGGED[key]} - reg
-        assert not missing, (
-            f"headline key {key} has unattributed branches {missing} — "
-            "add them to bench_branches.FILTER_PRUNED or as solo builders"
-        )
+        missing = {f"{key}/{t}" for t in getattr(qs[key], "branches", ())} - reg
+        assert not missing, f"headline key {key} has unattributed branches {missing}"
 
 
 def test_registry_tags_match_tagged_map():
-    """No stale entries: every registry tag must exist in TAGGED."""
-    from tests.test_merged import TAGGED
-
+    """No stale entries: every registry tag is a declared branch."""
+    qs = all_queries()
     for name in B.branch_queries():
         key, tag = name.split("/")
-        assert key in TAGGED and tag in TAGGED[key], f"stale entry {name}"
+        assert tag in getattr(qs[key], "branches", ()), f"stale entry {name}"
 
 
 def _optimized(df):
@@ -83,8 +70,6 @@ def test_asof_solo_builders_match_fused_branch(spark, direction):
     """Each asof solo builder must produce the same matches as the
     catalog's fused three-direction branch (same inputs, same
     semantics) — a drifted solo would attribute the wrong work."""
-    from rq_spark.queries import all_queries
-
     bq = B.branch_queries()
     solo = {
         (r["event_id"], r["asof_ts"])
@@ -110,8 +95,6 @@ def test_stream_solo_builders_match_catalog_branches(spark):
     rows as the catalog key's corresponding concurrent branch — solo
     attribution that drifted from the key would attribute the wrong
     work."""
-    from rq_spark.queries import all_queries
-
     bq = B.branch_queries()
     key = all_queries()["stream_stateful"](spark, SF)
     for tag, cols in (

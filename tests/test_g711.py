@@ -65,6 +65,30 @@ def test_ima_nibble_decode_matches_audioop():
     assert np.array_equal(got, want)
 
 
+@pytest.mark.parametrize("predictor", [40000, -40000])
+def test_ima_out_of_range_predictor_saturates_before_the_walk(predictor):
+    """An IMA state predictor is an int16; an out-of-range argument
+    saturates to int16 first, then both codec directions walk exactly
+    like audioop's two-sided clamp from that state. The first code
+    moves back toward the range, the case a one-sided clamp misses."""
+    state = (max(-32768, min(32767, predictor)), 0)
+    rng = np.random.default_rng(11)
+    nib = rng.integers(0, 16, 512).astype(np.uint8)
+    nib[0] = 0x8 | 0x7 if predictor > 0 else 0x7
+    packed = ((nib[0::2] << 4) | nib[1::2]).astype(np.uint8).tobytes()
+    want = np.frombuffer(audioop.adpcm2lin(packed, 2, state)[0], dtype="<i2")
+    got, _, _ = g711.ima_decode_nibbles(nib, predictor, 0)
+    assert np.array_equal(got, want)
+
+    pcm = (rng.standard_normal(512) * 9000).astype(np.int16)
+    ref, ref_state = audioop.lin2adpcm(pcm.astype("<i2").tobytes(), 2, state)
+    raw = np.frombuffer(ref, dtype=np.uint8)
+    codes, pred, idx = g711.ima_encode_nibbles(pcm, predictor, 0)
+    assert np.array_equal(codes[0::2], raw >> 4)
+    assert np.array_equal(codes[1::2], raw & 0x0F)
+    assert (pred, idx) == ref_state
+
+
 def test_ima_encode_decode_roundtrip_tracks_signal():
     """Our encoder's reconstruction loop IS the decoder: decoding its
     nibbles must land within one step of the original (ADPCM is lossy

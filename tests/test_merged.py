@@ -13,55 +13,16 @@ Two invariants make a merged query a valid evidence channel:
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from rq_spark.queries import all_queries
 
 SF = "/root/testdata/sf0.001"
 
-# key -> set of op tags that must each contribute rows
-TAGGED = {
-    "distinct_sort_sample": {"distinct", "sort_limit", "sample", "stratified", "mixture", "mixture_budget", "mixture_temp", "mixture_unimax", "domain_cap"},
-    "agg_groupby_distinct": {
-        "groupby", "distinct", "topk_words", "copair", "copair_stats",
-    },
-    "agg_approx_distinct": {"hll", "hll_union", "cms_hh"},
-    "agg_stats": {
-        "corr", "percentile", "profile", "skew", "qhist", "mad", "dq",
-        "drift", "joinsize",
-    },
-    "set_ops": {
-        "union", "intersect", "except",
-        "diff_added", "diff_removed", "diff_changed",
-    },
-    "rollup_cube_gsets": {"rollup", "cube", "gsets"},
-    "join_outer_family": {"left", "right", "full"},
-    "join_filtering": {"semi", "anti", "cross"},
-    "join_range_price_band": {"band", "linkage", "interval"},
-    "join_asof_event": {"backward", "forward", "nearest"},
-    "window_ranking": {"rank_dense", "dist_rank"},
-    "func_array": {"element", "agg"},
-    "stream_agg_dedup": {"tumble", "dedup", "enrich"},
-    "stream_stateful": {"first_seen", "interval_join", "running"},
-    "explode_ops": {"posexplode", "explode_outer", "chunk"},
-    "struct_ops": {"with_field", "flatten"},
-    "udf_vectorized": {"pandas_udf", "map_in_pandas", "bpe"},
-    "udf_grouped_table": {"apply_in_pandas", "udtf"},
-    "sim_ann_topk": {"lsh", "ivf", "pq", "ivfpq", "ivfpq_join"},
-    "sim_topk_cosine": {"cosine", "bm25"},
-    "dedup_text": {
-        "exact", "minhash_lsh", "ngram_jaccard", "span", "excise",
-        "cdc", "cdc_dup",
-    },
-    "dedup_connected_groups": {"components", "pagerank", "triangles",
-                               "inc_components", "evict_components",
-                               "evict_delta"},
-    "event_sessions_rate": {"session", "rate", "funnel", "retention"},
-    "window_frames": {"running", "trailing_30d", "ewma"},
-    "window_agg_time": {"tumble", "slide", "transition"},
-    "dedup_incremental": {
-        "ingest_probe", "decontam", "bloom_decontam", "bloom_stats",
-        "sem_decontam", "blocklist",
-    },
+# key -> op tags that must each contribute rows: every merged key's own
+# declaration (rq_spark/queries/helpers.py:merged)
+BRANCHES = {
+    k: q.branches for k, q in all_queries().items() if hasattr(q, "branches")
 }
 
 # key -> columns absorbed from former standalone queries (column-merge)
@@ -93,13 +54,13 @@ COLUMN_MERGED = {
 }
 
 
-@pytest.mark.parametrize("key", sorted(TAGGED))
+@pytest.mark.parametrize("key", sorted(BRANCHES))
 def test_every_tagged_branch_contributes_rows(spark, key):
     df = all_queries()[key](spark, SF)
     counts = {r["op"]: r["n"] for r in df.groupBy("op").count().withColumnRenamed("count", "n").collect()}
-    missing = TAGGED[key] - {op for op, n in counts.items() if n > 0}
+    missing = set(BRANCHES[key]) - {op for op, n in counts.items() if n > 0}
     assert not missing, f"{key}: empty/missing branches {missing} (got {counts})"
-    unexpected = set(counts) - TAGGED[key]
+    unexpected = set(counts) - set(BRANCHES[key])
     assert not unexpected, f"{key}: unknown op tags {unexpected}"
 
 
@@ -136,25 +97,79 @@ def test_column_merged_queries_scan_once(spark, key):
     assert plan.count("Scan parquet") == 1, f"{key} reads its table more than once"
 
 
-def test_distinct_sort_sample_overlapped_build_is_deterministic(spark):
-    """r15: distinct_sort_sample constructs its nine branch builders
-    on a thread pool (guide §2.6 — the serial build was ~2-2.6 s of
-    blocking Py4J chatter plus three idle-cores threshold collects).
-    Thread scheduling must influence only the overlap, never the
-    assembled plan: two independent builds must analyze to the same
-    tree modulo expression IDs, branches in the fixed catalog order."""
+def test_merged_build_threads_keep_job_group_and_declared_order(spark):
+    """merged() builds branches on pool threads: their jobs must land in
+    the caller's job group (a bare pinned-mode thread starts without
+    the caller's local properties), and two builds whose branches
+    finish in opposite orders must analyze to the same tree modulo
+    expression IDs, union children in declared order."""
     import re
+    import threading
 
-    def canon(df):
-        s = df._jdf.queryExecution().analyzed().toString()
-        return re.sub(r"#\d+", "#", s)
+    from rq_spark.queries.helpers import merged
 
-    fn = all_queries()["distinct_sort_sample"]
-    a, b = canon(fn(spark, SF)), canon(fn(spark, SF))
+    order: list[str] = []  # the finish order a build enforces
+    finished: list[str] = []
+    done: dict[str, threading.Event] = {}
+
+    def branch(tag: str, n: int):
+        def build(spark, sf_dir):
+            df = spark.range(n).select(F.col("id").alias("v"))
+            df.count()
+            if order.index(tag):  # bounded: a serial build fails, not hangs
+                done[order[order.index(tag) - 1]].wait(30)
+            finished.append(tag)
+            done[tag].set()
+            return df
+
+        return build
+
+    q = merged({"first": branch("first", 3), "second": branch("second", 5)})
+    assert q.branches == ("first", "second")
+
+    def build_once(finish_order):
+        order[:] = finish_order
+        done.update({t: threading.Event() for t in order})
+        plan = q(spark, "")._jdf.queryExecution().analyzed().toString()
+        return re.sub(r"#\d+L?", "#", plan)
+
+    sc = spark.sparkContext
+    group = "merged-build-threads"
+    sc.setJobGroup(group, "merged() build threads")
+    try:
+        a = build_once(["second", "first"])
+        b = build_once(["first", "second"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert finished == ["second", "first", "first", "second"]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 4
     assert a == b
-    # union children in declared branch order (first tag per branch)
-    tags = re.findall(r"Project \[(\w+) AS op#", a)
-    assert tags == [
-        "distinct", "sort_limit", "sample", "stratified", "mixture",
-        "mixture_budget", "mixture_temp", "mixture_unimax", "domain_cap",
-    ]
+    assert re.findall(r"Project \[(\w+) AS op#", a) == ["first", "second"]
+
+
+def test_once_computes_once_under_contention():
+    """Branches share a once() input from many threads: exactly one
+    caller computes it, and every caller gets that same result."""
+    import sys
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from rq_spark.queries.helpers import once
+
+    calls = []
+
+    def compute():  # blocks like the Spark job a real shared input runs
+        calls.append(1)
+        time.sleep(0.05)
+        return object()
+
+    get = once(compute)
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(32) as pool:
+            got = list(pool.map(lambda _: get(), range(256), timeout=30))
+    finally:
+        sys.setswitchinterval(switch)
+    assert len(calls) == 1 and all(g is got[0] for g in got)

@@ -65,6 +65,33 @@ def test_ann_multiprobe_recall_not_below_single_probe(spark):
     assert len(brute & multi) >= len(brute & single)
 
 
+def test_ann_bands_double_queries_at_double_precision(spark):
+    """array<double> queries band at float64, like the corpus batches:
+    for a vector whose float32 rounding flips a hyperplane sign bit, a
+    float32-banded query misses its identical corpus twin (one band,
+    no multi-probe: the twin is never even a candidate)."""
+    dim, rows = 8, 4
+    planes = S.hyperplanes(rows, dim)
+    for seed in range(200):
+        v = np.random.default_rng(seed).standard_normal(dim)
+        # slide v onto plane 0, then a hair off it
+        v = v - (v @ planes[0]) / (planes[0] @ planes[0]) * planes[0]
+        v = v + 1e-12 * planes[0]
+        if ((planes @ v > 0) != (planes @ v.astype(np.float32) > 0)).any():
+            break
+    else:
+        raise AssertionError("no sign-flipping vector among the seeds")
+    vec = [float(x) for x in v]
+    schema = "vec_id long, embedding array<double>"
+    corpus = spark.createDataFrame([(1, vec), (2, vec)], schema)
+    queries = spark.createDataFrame([(1, vec)], schema)
+    got = S.ann_topk(
+        corpus, queries, k=1, bands=1, rows_per_band=rows, dim=dim,
+        probe_hamming=0,
+    ).collect()
+    assert [(r.query_id, r.neighbor_id) for r in got] == [(1, 2)]
+
+
 def test_embedding_near_pairs_symmetric_bound(spark):
     emb = table(spark, SF, "embeddings")
     pairs = S.embedding_near_pairs(emb, 0.45).collect()
