@@ -131,8 +131,9 @@ def encode_mjpeg(
 
     The fixture-side encoder twin: streams it produces must round-trip
     through `decode_frames`/`meta` exactly (tests assert this), which
-    is what lets mm_real_decode put the video path under the driver
-    hash with SQL-recomputable outputs."""
+    is what lets the AVI entry of mm_real_decode's codec table
+    (queries/mm_codecs.py) put the video path under the driver hash
+    with SQL-recomputable outputs."""
     if not frames:
         raise AviFormatError("avi: need at least one frame")
     first = np.asarray(frames[0])

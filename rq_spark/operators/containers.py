@@ -17,7 +17,8 @@ Both parsers are O(container metadata): Ogg walks page headers (body
 bytes are skipped by lacing totals), Matroska walks the element tree
 and never touches Cluster payloads. The fixture builders emit minimal
 valid streams the parsers must round-trip exactly — which is what puts
-both containers under the driver hash in mm_real_decode.
+both containers under the driver hash as the `ogg` and `webm` column
+groups of mm_real_decode's codec table (queries/mm_codecs.py).
 
 Reference parity note: dflemstr/rq has no media operators; this is
 extension-layer (SURVEY.md §2.2 multimodal columns).

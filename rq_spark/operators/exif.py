@@ -17,8 +17,9 @@ over payload partitions — O(header) per payload, no pixel decode.
 Reference parity note: dflemstr/rq has no media operators; this is
 extension-layer (SURVEY.md §2.2 multimodal columns). The fixture
 encoder (`app1_segment` + `insert_app1`) produces streams the parser
-must round-trip exactly, which is what lets mm_real_decode put EXIF
-parsing under the driver hash.
+must round-trip exactly, which is what lets the JPEG entry of
+mm_real_decode's codec table (queries/mm_codecs.py) put EXIF parsing
+under the driver hash.
 """
 
 from __future__ import annotations
@@ -227,7 +228,8 @@ def app1_segment(
     """A complete EXIF APP1 segment (marker + length + Exif header +
     big-endian TIFF block with IFD0, Exif sub-IFD and optional GPS
     IFD). The parser must round-trip every field exactly; tests and
-    mm_real_decode's oracle rely on that."""
+    the `exif_*` columns of mm_real_decode (and its oracle) rely on
+    that."""
 
     def entry(tag, typ, cnt, value_or_offset):
         return struct.pack(">HHI", tag, typ, cnt) + value_or_offset

@@ -92,8 +92,8 @@ def decode_image(df: DataFrame, payload_col: str = "payload", *, strict: bool = 
 def image_dims_one(p, *, strict: bool = True) -> tuple[int, int, int]:
     """Per-payload kernel behind ``decode_image`` — exposed so fused
     single-stage pipelines (one mapInPandas running every codec, e.g.
-    mm_real_decode) can call it batch-side without paying a separate
-    Python-worker stage per decode step."""
+    the `mm_real_decode` codec table in queries/mm_codecs.py) can call
+    it without paying a separate Python-worker stage per decode step."""
     from . import png
 
     b = bytes(p)
@@ -521,9 +521,10 @@ def extract_audio_features(
     Multichannel audio is mean-downmixed BEFORE the statistics:
     RMS/ZCR over the raw interleaved stream would count cross-channel
     sign flips as zero crossings. Mono is unaffected (downmix is the
-    identity), so the mm_real_decode tone oracle's exact-RMS contract
-    holds — and since FLAC is lossless, a FLAC encoding of the same
-    PCM yields bit-identical features. Arrow-batched like every
+    identity), so the exact-RMS contract of the tone entries in
+    mm_real_decode's codec table (queries/mm_codecs.py) holds — and
+    since FLAC is lossless, a FLAC encoding of the same PCM yields
+    bit-identical features. Arrow-batched like every
     multimodal stage."""
     out_schema = T.StructType(
         list(df.schema.fields)

@@ -213,24 +213,21 @@ def ann_topk(
     duplicates are intra-row by construction), self-matches dropped
     in-kernel. The corpus is never exploded ×bands and never
     shuffled; only candidate pairs (∝ band collisions) leave the
-    kernel, carrying the corpus vector ONCE each to the JVM cosine —
-    scoring stays the exact whole-stage-codegen fold, bit-identical
-    to the pre-r15 plan and the brute-force oracle, because the
-    corpus embeddings are real-valued floats where a numpy dot could
-    drift in the last ulp. Anything over ``max_query_rows`` raises a
-    named ValueError (the degenerate corpus-sized-queries case —
-    use `lsh_near_pairs` / `knn_graph` shapes instead).
+    kernel, each carrying its query vector (shipped in the broadcast,
+    so the query side is evaluated once) and its corpus vector to the
+    JVM cosine — scoring stays the exact whole-stage-codegen fold,
+    bit-identical to the pre-r15 plan and the brute-force oracle,
+    because the corpus embeddings are real-valued floats where a numpy
+    dot could drift in the last ulp. Anything over ``max_query_rows``
+    raises a named ValueError (the degenerate corpus-sized-queries
+    case — use `lsh_near_pairs` / `knn_graph` shapes instead).
 
     Contracts: queries are banded at their vector column's element
     precision, the one the corpus batches arrive in (another precision
     can put a near-hyperplane vector in another bucket than its
     identical corpus twin). **Unique ids** on each side: a candidate
     with the query's id is dropped as the self-match, and duplicate
-    corpus rows sharing an id emit one pair per row. **Deterministic
-    query side**: it is evaluated twice — collected at BUILD time for
-    the bucket tables and again as the scoring join's broadcast side —
-    so a ``rand()``-sampled or changing query relation would score rows
-    it never banded."""
+    corpus rows sharing an id emit one pair per row."""
     import pyspark.sql.types as T
     from pyspark.sql.pandas.types import to_arrow_type
 
@@ -278,17 +275,18 @@ def ann_topk(
             key: np.fromiter(sorted(s), dtype=np.int64)
             for key, s in reg.items()
         }
-    bc = corpus.sparkSession.sparkContext.broadcast((q_ids, bucket_dict))
+    bc = corpus.sparkSession.sparkContext.broadcast((q_ids, Q, bucket_dict))
     out_schema = T.StructType(
         [
             T.StructField("query_id", queries.schema[id_col].dataType),
             T.StructField("neighbor_id", corpus.schema[id_col].dataType),
+            T.StructField("q_vec", queries.schema[vec_col].dataType),
             T.StructField("c_vec", corpus.schema[vec_col].dataType),
         ]
     )
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, bd = bc.value
+        ids, qs, bd = bc.value
         for pdf in batches:
             if len(pdf) == 0 or len(ids) == 0:
                 continue
@@ -307,30 +305,29 @@ def ann_topk(
                 cand = cand[ids[cand] != n_ids[r]]
                 if not len(cand):
                     continue
-                out_q.append(ids[cand])
+                out_q.append(cand)
                 out_n.extend([n_ids[r]] * len(cand))
                 out_v.extend([pdf["_vec"].iloc[r]] * len(cand))
             if out_q:
+                qi = np.concatenate(out_q)
                 yield pd.DataFrame(
                     {
-                        "query_id": np.concatenate(out_q),
+                        "query_id": ids[qi],
                         "neighbor_id": out_n,
+                        "q_vec": list(qs[qi]),
                         "c_vec": out_v,
                     }
                 )
 
-    cand = (
+    scored = (
         corpus.filter(_nonzero_vec(vec_col))
         .select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"))
         .mapInPandas(probe, out_schema)
-    )
-    q_vecs = queries.filter(_nonzero_vec(vec_col)).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    scored = cand.join(F.broadcast(q_vecs), "query_id").select(
-        "query_id",
-        "neighbor_id",
-        cosine(F.col("q_vec"), F.col("c_vec")).alias("cos_sim"),
+        .select(
+            "query_id",
+            "neighbor_id",
+            cosine(F.col("q_vec"), F.col("c_vec")).alias("cos_sim"),
+        )
     )
     return _topk_per_query(scored, k)
 

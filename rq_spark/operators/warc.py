@@ -19,7 +19,8 @@ Nothing but record rows leaves the worker that read the file.
 
 The fixture builder emits spec-shaped records (gzip-per-record or
 plain) that the parser must round-trip exactly — which is what puts
-the WARC path under the driver hash in `mm_real_decode`.
+`iter_records` under the driver hash in the WARC entry of
+`mm_real_decode`'s codec table (queries/mm_codecs.py).
 
 Reference parity note: dflemstr/rq has no archive operators; this is
 extension-layer (SURVEY.md §2.2, training-data pipeline operations).

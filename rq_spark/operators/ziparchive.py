@@ -14,9 +14,10 @@ the content.
 
 Reference parity note: dflemstr/rq has no archive operators; this is
 extension-layer (SURVEY.md §2.2, training-data pipeline operations).
-Driver-hash note: the binaryFile→explode pattern is hash-proven by the
-WebDataset and WARC round trips in `mm_pipeline` / `mm_real_decode`;
-this module shares that plumbing and is pytest-evidenced.
+Driver-hash note: the archive→member explode of the binaryFile pattern
+is hash-proven by `mm_pipeline`'s WebDataset round trip, and WARC
+record parsing by `mm_real_decode`'s WARC entry (on in-process
+payloads); this module shares that plumbing and is pytest-evidenced.
 """
 
 from __future__ import annotations

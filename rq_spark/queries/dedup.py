@@ -896,794 +896,55 @@ JOIN html    USING (doc_id)
 """
 
 
-def _jpeg_source_pixels(nb: int, phase: int = 0):
-    """Deterministic smooth grayscale test image derived from a byte
-    count — shared by the synth and verify stages of mm_real_decode so
-    the decoded pixels have a recomputable ground truth. ``phase``
-    shifts the sine horizontally (smooth for every value — no seam),
-    which is how the AVI branch derives per-frame variation."""
-    import numpy as np
-
-    w = 16
-    h = max(1, -(-nb // w))
-    yy, xx = np.mgrid[0:h, 0:w]
-    return np.round(
-        128 + 80 * np.sin((xx + (nb % 11) + phase) / 5.0) * np.cos(yy / 4.0)
-    ).astype(np.uint8)
-
-
 def mm_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL multimodal codecs under the driver hash: for every document,
-    synthesize a PNG (16px-wide grayscale image of the text bytes), a
-    JPEG (smooth 16px-wide grayscale derived from the byte count —
-    BASELINE for even byte counts, PROGRESSIVE/SOF2 for odd ones, so
-    both entropy layouts run under the hash and `jpeg_progressive`
-    proves which), a GIF and a BMP (same 16px-wide grayscale pixels as the
-    PNG, through LZW and raw BI_RGB rows respectively), a WAV (16-bit
-    mono PCM of the text bytes at 8 kHz), a square-wave tone WAV
-    (amplitude/period derived from the byte count), and an MP4
-    (duration = byte count in ms) — then run the REAL decoders
-    (operators/png.py + jpeg.py + gif.py + bmp.py spec codecs, stdlib
-    wave, the ISO-BMFF box walk) in STRICT mode and emit their
-    outputs. GIF-LZW and BMP are lossless, so those branches assert
-    EXACT pixel equality with the source bytes (gif_pix_ok /
-    bmp_pix_ok), plus header dims parsed from their descriptors. Every output column derives arithmetically from the
-    text's byte length, so the oracle recomputes all of it in SQL: a
-    regression in any real codec (or in the strict-mode dispatch)
-    flips the hash. The lossy JPEG branch emits a pixel-tolerance
-    assertion (decode(encode(x)) within the quantization bound of x,
-    the dedup_simhash pattern); the tone branch emits EXACT columns —
-    the windowed RMS of a ±A square wave is exactly A/32768 in IEEE
-    arithmetic (every step representable), so round(rms·32768) == A,
-    and the zero-crossing rate is the exact rational ⌊(N−1)/k⌋/(N−1)
-    both engines compute with one double division. The MJPEG AVI
-    branch (r6) covers real VIDEO frame decode: 2-5 phase-shifted
-    frames of the smooth field through the RIFF container walk and
-    the T.81 decoder (operators/avi.py), with container metadata
-    (duration = frames*floor(1e6/fps) us, dims, track count) and a
-    per-frame pixel-tolerance assertion all SQL-recomputable from the
-    byte count. The FLAC branch (r6) re-encodes the tone PCM through
-    the pure-Python FLAC codec (operators/flac.py — Rice-coded fixed
-    prediction): losslessness means the STREAMINFO params AND the
-    exact tone RMS/ZCR contract must reproduce bit-for-bit from the
-    compressed stream. Later r6 branches widen the surface further,
-    all with the same SQL-recomputable contract: TIFF (LZW +
-    horizontal predictor, exact pixels), WebP-lossless (VP8L entropy
-    decode, exact pixels, size-bounded like AVI), EXIF (an APP1 block
-    in every JPEG — orientation/model/timestamp/ISO/exposure/f-number
-    and GPS as integer DMS rationals whose division order the SQL
-    mirrors, null-GPS branch included), Ogg (CRC-verified page walk;
-    Opus for odd byte counts, Vorbis for even — rate/channels/length
-    from the ident packet + final granule), Matroska/WebM (EBML walk:
-    duration·scale, video dims, track count), and WARC-zstd (a
-    .warc.zst record: the pure RFC 8878 zstd decoder, then the WARC
-    record + HTTP parse — URI, status, recovered-payload sha — plus
-    direct lz round-trip and guaranteed-compression assertion
-    columns, codecs/zstd_pure.py). Payloads are built and decoded
-    executor-side inside ONE fused mapInPandas (r9 — see the inline
-    comment at the fused stage for the measured why), each freed
-    in-process after its last consumer; nothing but scalars leaves
-    Python."""
-    import math
+    """Seventeen real codecs under the driver hash. For every document,
+    one payload per codec is built from the text's UTF-8 bytes, decoded
+    by the engine's own strict-mode decoder and checked; only scalars
+    come out. Each codec is one entry of the table in
+    `queries/mm_codecs.py`: its payload, its check and its columns.
 
-    import pandas as pd
+    Every column derives from the byte count nb (the WARC URI and
+    payload sha also from doc_id and text), so `_MM_REAL_SQL`
+    recomputes all of it and a regression in any codec flips the hash:
 
-    from ..operators import avi as avi_codec
-    from ..operators import bmp as bmp_codec
-    from ..operators import containers as containers_codec
-    from ..operators import exif as exif_codec
-    from ..operators import flac as flac_codec
-    from ..operators import g711 as g711_codec
-    from ..operators import gif as gif_codec
-    from ..operators import jpeg as jpeg_codec
-    from ..operators import png as png_codec
-    from ..operators import tiff as tiff_codec
-    from ..operators import vp8l as vp8l_codec
-    from ..operators import warc as warc_codec
-    from ..formats.codecs import zstd_pure as zstd_codec
-    from ..operators.multimodal import mp4_stub_bytes
+    - header fields (dims, rates, sample counts, durations, tracks,
+      EXIF tags) are written from nb and parsed back; EXIF GPS is in
+      integer DMS rationals whose division order the SQL mirrors;
+    - lossless images (GIF, BMP, TIFF, WebP) assert exact pixels
+      against the byte grid; JPEG and the MJPEG AVI frames assert a
+      per-pixel bound against a smooth field derived from nb;
+    - the audio codecs carry a ±amp square wave whose windowed RMS
+      quantizes exactly back to amp and whose zero-crossing rate is an
+      exact rational; FLAC is lossless, and G.711 and IMA ADPCM run at
+      amplitudes their quantizers reproduce exactly;
+    - `png_hist_ok` is a tolerance check (float32 lanes, double fold),
+      and `png_dhash` is recomputed from the grid bytes.
 
-    # spread BEFORE the synth stage: a single local parquet file scans
-    # as one partition, which would serialize the whole 17-codec
-    # encode+decode chain on one core (measured ~15 ms/doc of pure-
-    # Python codec work — the one stage in the engine where scan
-    # parallelism IS the throughput). At 100 TB the multi-file scan is
-    # already wide and spread() is a no-op.
+    Edges the oracle does not share: NULL text reads as the empty
+    document (the oracle reads NULL); `zstd_lz_smaller` holds only once
+    the text's 4× repetition outgrows the zstd frame overhead, so it is
+    False for "" and "x".
+
+    The stage is ONE mapInPandas: each chained Python stage is its own
+    worker per task slot and re-ships the surviving binary columns
+    through Arrow. The former 29-stage chain spent ~700 s of summed
+    pandas/numpy import CPU per cold sf0.01 run against ~30 s of codec
+    work; fused, text goes in once and scalars come out."""
+    from . import mm_codecs
+
+    # a single local parquet file scans as one partition, which would
+    # run ~15 ms/doc of pure-Python codec work on one core; over a
+    # wide multi-file scan spread() is a no-op
     docs = _spread(table(spark, sf_dir, "documents").select("doc_id", "text"))
-
-    def synth(batches):
-        import io
-        import wave
-
-        import numpy as np
-
-        def wav_bytes(frames: bytes) -> bytes:
-            buf = io.BytesIO()
-            with wave.open(buf, "wb") as wv:
-                wv.setnchannels(1)
-                wv.setsampwidth(2)
-                wv.setframerate(8000)
-                wv.writeframes(frames)
-            return buf.getvalue()
-
-        for pdf in batches:
-            (pngs, jpegs, gifs, bmps, tiffs, wavs, tones, mp4s, avis,
-             flacs, webps, oggs, webms, warcs, ulaws, alaws, imas) = (
-                [], [], [], [], [], [], [], [], [], [], [], [], [], [],
-                [], [], []
-            )
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                b = (t or "").encode("utf-8")
-                nb = len(b)
-                w = 16
-                h = max(1, math.ceil(nb / w))
-                arr = np.frombuffer(b.ljust(w * h, b"\0"), dtype=np.uint8)
-                pngs.append(png_codec.encode(arr.reshape(h, w, 1)))
-                # odd byte counts take the PROGRESSIVE encoder (SOF2
-                # multi-scan stream; r6) so the driver hash covers
-                # both entropy layouts — pixels are identical either
-                # way (shared _prepare_frame), so jpeg_pix_ok's
-                # contract is unchanged and jpeg_progressive proves
-                # below which path each payload really took
-                enc = (
-                    jpeg_codec.encode_progressive
-                    if nb % 2
-                    else jpeg_codec.encode
-                )
-                # EXIF APP1 spliced after SOI: every field derives from
-                # nb with division orders the oracle mirrors exactly
-                # (GPS uses exact integer DMS rationals, no float
-                # rounding); docs with nb % 4 == 0 get no GPS IFD so
-                # the null path sits under the hash too
-                gps_dms = None
-                if nb % 4:
-                    gps_dms = (
-                        [(nb % 90, 1), (nb % 60, 1), ((nb % 600) * 100, 10000)],
-                        b"S" if nb % 2 else b"N",
-                        [(nb % 180, 1), (nb % 45, 1), ((nb % 300) * 100, 10000)],
-                        b"W" if nb % 3 == 0 else b"E",
-                    )
-                jpegs.append(
-                    exif_codec.insert_app1(
-                        enc(_jpeg_source_pixels(nb), quality=95),
-                        exif_codec.app1_segment(
-                            orientation=1 + nb % 8,
-                            make="ACME",
-                            model=f"CAM-{nb % 10}",
-                            datetime_original=f"2021:01:01 00:00:{nb % 60:02d}",
-                            iso=100 + (nb % 8) * 50,
-                            exposure=(1, 1 << (1 + nb % 10)),
-                            f_number=(10 + nb % 90, 10),
-                            gps_dms=gps_dms,
-                        ),
-                    )
-                )
-                # same pixels as the PNG, through the LZW path (a 2-D
-                # input palette-encodes its <=256 distinct byte values)
-                gifs.append(gif_codec.encode(arr.reshape(h, w)))
-                bmps.append(bmp_codec.encode(arr.reshape(h, w)))
-                # LZW + horizontal predictor: the richest decode path,
-                # still lossless, so the pixel check stays EXACT
-                tiffs.append(
-                    tiff_codec.encode(
-                        arr.reshape(h, w), compression="lzw", predictor=True
-                    )
-                )
-                wavs.append(wav_bytes(b[: nb // 2 * 2]))
-                n_s = 64 + nb % 64
-                k = 1 + nb % 7
-                amp = 1000 + (nb % 100) * 300
-                sign = 1 - 2 * ((np.arange(n_s) // k) % 2)
-                tones.append(wav_bytes((amp * sign).astype("<i2").tobytes()))
-                # the same tone PCM through the FLAC encoder: lossless,
-                # so every tone assertion must reproduce bit-identically
-                # from the compressed stream (Rice + fixed prediction)
-                flacs.append(flac_codec.encode(amp * sign, 8000, 16))
-                # G.711 (r7): the square tone at a COMPANDING-EXACT
-                # amplitude — one the µ/A-law quantizer reproduces
-                # bit-for-bit (roundtrip-asserted in tests/test_g711),
-                # so the decoded wave is exactly ±v and the RMS/ZCR
-                # contract transfers; v's closed form is in the oracle
-                u = 16 + nb % 96
-                v_u = int(g711_codec._ULAW_LUT[(~u) & 0xFF])
-                ulaws.append(
-                    g711_codec.wav_bytes(
-                        8000, 1, (v_u * sign).astype(np.int16),
-                        tag=g711_codec.WAVE_ULAW,
-                    )
-                )
-                al = 16 + nb % 96
-                v_a = int(g711_codec._ALAW_LUT[(0x80 | al) ^ 0x55])
-                alaws.append(
-                    g711_codec.wav_bytes(
-                        8000, 1, (v_a * sign).astype(np.int16),
-                        tag=g711_codec.WAVE_ALAW,
-                    )
-                )
-                # IMA ADPCM (r7): a DC signal at amp decodes EXACTLY
-                # (delta 0 → code 0; the step index walks to 0 where
-                # diff vanishes — here it starts at 0), so the block
-                # header, nibble walk and fact-chunk truncation all
-                # sit under the hash: without fact the single 505-
-                # sample block would report the padded count
-                imas.append(
-                    g711_codec.wav_bytes(
-                        8000, 1, np.full(n_s, amp, dtype=np.int16),
-                        tag=g711_codec.WAVE_IMA_ADPCM,
-                    )
-                )
-                # VP8L (WebP lossless): the text bytes as gray pixels,
-                # bounded to nb % 256 (the entropy loop is serial
-                # Python — O(1) per doc like the AVI branch); lossless,
-                # so the pixel check is EXACT
-                nbw = nb % 256
-                hw = max(1, math.ceil(nbw / 16))
-                webps.append(
-                    vp8l_codec.encode(
-                        np.frombuffer(
-                            b[:nbw].ljust(16 * hw, b"\0"), dtype=np.uint8
-                        ).reshape(hw, 16)
-                    )
-                )
-                mp4s.append(mp4_stub_bytes(duration_ms=nb))
-                # Ogg: odd byte counts carry Opus (48 kHz granules),
-                # even carry Vorbis — both ident-packet layouts and the
-                # CRC-verified page walk sit under one hash
-                if nb % 2:
-                    oggs.append(
-                        containers_codec.ogg_opus_stub_bytes(
-                            480 * (1 + nb % 100), ch=1 + (nb // 2) % 2
-                        )
-                    )
-                else:
-                    oggs.append(
-                        containers_codec.ogg_vorbis_stub_bytes(
-                            441 * (1 + nb % 50), rate=44100, ch=2
-                        )
-                    )
-                webms.append(
-                    containers_codec.webm_stub_bytes(
-                        float(nb), 64 + nb % 32, 32 + nb % 16,
-                        n_tracks=1 + nb % 3,
-                    )
-                )
-                # WARC: one response whose HTTP body is the document
-                # text, zstd-wrapped — the .warc.zst archive shape
-                # (late r6: the pure zstd decoder sits under the
-                # driver hash on this branch; before that the branch
-                # used gzip-per-record, still pytest-covered)
-                warcs.append(
-                    zstd_codec.compress(
-                        warc_codec.build_warc_bytes(
-                            [
-                                {
-                                    "uri": f"http://corpus.example/doc/{doc_id}",
-                                    "body": b,
-                                    "status": 200 + (nb % 2) * 104,
-                                    "content_type": "text/plain",
-                                }
-                            ],
-                            gzip_per_record=False,
-                        ),
-                        mode="lz",
-                    )
-                )
-                # MJPEG AVI: 2-5 frames of the same smooth field at
-                # successive phases (every frame stays seam-free, so
-                # the per-frame JPEG tolerance bound carries over);
-                # frame shape bounded by nb % 256 so the video branch
-                # adds O(1) decode work per doc regardless of text size
-                nf = 2 + nb % 4
-                fps = 4 + nb % 6
-                avis.append(
-                    avi_codec.encode_mjpeg(
-                        [
-                            _jpeg_source_pixels(nb % 256, phase=i)
-                            for i in range(nf)
-                        ],
-                        fps=fps,
-                        quality=95,
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "text": pdf["text"],  # kept for the verify stage
-                    "png_payload": pngs,
-                    "jpeg_payload": jpegs,
-                    "gif_payload": gifs,
-                    "bmp_payload": bmps,
-                    "tiff_payload": tiffs,
-                    "wav_payload": wavs,
-                    "tone_payload": tones,
-                    "mp4_payload": mp4s,
-                    "avi_payload": avis,
-                    "flac_payload": flacs,
-                    "webp_payload": webps,
-                    "ogg_payload": oggs,
-                    "webm_payload": webms,
-                    "warc_payload": warcs,
-                    "ulaw_payload": ulaws,
-                    "alaw_payload": alaws,
-                    "ima_payload": imas,
-                }
-            )
-
-    # ONE fused mapInPandas runs synth + every decode/verify kernel
-    # batch-side and emits ONLY scalars (r9). The previous shape — 29
-    # chained MapInPandas stages, one per decode step — was the right
-    # modularity but the wrong physical plan: every chained stage is
-    # its own Python runner, so each task slot held 29 concurrent
-    # worker processes (each re-importing pandas/numpy — the r9
-    # UDF-profiler pass measured ~700 s of summed import CPU per cold
-    # sf0.01 run vs ~30 s of actual codec work), and every stage
-    # boundary shipped the surviving binary columns JVM<->Python
-    # through Arrow twice more. Fused: one worker per slot, one Arrow
-    # hop (text in, scalars out), payloads freed in-process after
-    # their last consumer. Same kernels, same driver hash. The
-    # per-payload kernels live module-level in operators/multimodal.py
-    # (image_dims_one, audio_params_one, ...), so the modular stage
-    # wrappers (decode_image, decode_audio, ...) — still the right
-    # shape when ONE decode step follows a scan — share them
-    # byte-for-byte with this fused path.
-    from ..operators.exif import parse_exif
-    from ..operators.imagehash import dhash64
-    from ..operators.multimodal import (
-        audio_features_one,
-        audio_params_one,
-        decode_pixels,
-        image_dims_one,
-        image_features_one,
-        video_meta_one,
+    return docs.mapInPandas(mm_codecs.fused, mm_codecs.DDL).select(
+        *mm_codecs.projection()
     )
-
-    def verify(synthed):
-        import numpy as np
-
-        for pdf in synthed:
-            out: dict = {"doc_id": pdf["doc_id"].to_numpy()}
-            texts = [(t or "").encode("utf-8") for t in pdf["text"]]
-            nbs = [len(b) for b in texts]
-
-            # PNG: strict header dims + normalized-histogram features
-            # + the dHash perceptual signature
-            dims = [image_dims_one(p) for p in pdf["png_payload"]]
-            out["png_width"] = [x[0] for x in dims]
-            out["png_height"] = [x[1] for x in dims]
-            out["png_channels"] = [x[2] for x in dims]
-            out["features"] = [
-                image_features_one(p, 8) for p in pdf["png_payload"]
-            ]
-            hashes = []
-            for p in pdf["png_payload"]:
-                arr = decode_pixels(bytes(p))
-                hashes.append(dhash64(arr) if arr is not None else None)
-            out["png_dhash"] = pd.Series(hashes, dtype="object")
-            del pdf["png_payload"]
-
-            # JPEG: strict dims, full T.81 decode checked against the
-            # deterministic source field, SOF2 marker walk, EXIF IFD
-            # walk (ASCII/SHORT/RATIONAL + GPS sub-IFD, null branch)
-            dims = [image_dims_one(p) for p in pdf["jpeg_payload"]]
-            out["jpeg_width"] = [x[0] for x in dims]
-            out["jpeg_height"] = [x[1] for x in dims]
-            out["jpeg_channels"] = [x[2] for x in dims]
-            oks, progs = [], []
-            for p, nb in zip(pdf["jpeg_payload"], nbs):
-                decoded = jpeg_codec.decode(bytes(p))[:, :, 0]
-                src = _jpeg_source_pixels(nb)
-                oks.append(
-                    decoded.shape == src.shape
-                    and int(
-                        np.abs(decoded.astype(int) - src.astype(int)).max()
-                    )
-                    <= 8
-                )
-                # marker-walk the payload: proves the odd-nb docs
-                # really carry SOF2 streams (oracle: nb % 2 = 1)
-                progs.append(jpeg_codec.is_progressive(bytes(p)))
-            out["jpeg_pix_ok"] = oks
-            out["jpeg_progressive"] = progs
-            exif_rows = [parse_exif(bytes(p)) for p in pdf["jpeg_payload"]]
-            for name, key in (
-                ("exif_orientation", "orientation"),
-                ("exif_model", "model"),
-                ("exif_datetime_original", "datetime_original"),
-                ("exif_iso", "iso"),
-                ("exif_exposure_time", "exposure_time"),
-                ("exif_f_number", "f_number"),
-                ("exif_gps_lat", "gps_lat"),
-                ("exif_gps_lon", "gps_lon"),
-            ):
-                out[name] = pd.Series(
-                    [None if d is None else d[key] for d in exif_rows],
-                    dtype="object",
-                )
-            out["exif_has_gps"] = pd.Series(
-                [
-                    None if d is None else d["gps_lat"] is not None
-                    for d in exif_rows
-                ],
-                dtype="object",
-            )
-            del pdf["jpeg_payload"]
-
-            # GIF: strict dims + full LZW decode, EXACT pixel equality
-            # (lossless)
-            dims = [image_dims_one(p) for p in pdf["gif_payload"]]
-            out["gif_width"] = [x[0] for x in dims]
-            out["gif_height"] = [x[1] for x in dims]
-            out["gif_channels"] = [x[2] for x in dims]
-            oks = []
-            for p, b in zip(pdf["gif_payload"], texts):
-                w = 16
-                h = max(1, math.ceil(len(b) / w))
-                src = np.frombuffer(b.ljust(w * h, b"\0"), dtype=np.uint8)
-                decoded = gif_codec.decode(bytes(p))
-                oks.append(
-                    decoded.shape == (h, w, 3)
-                    and np.array_equal(decoded[:, :, 0].ravel(), src)
-                    and np.array_equal(decoded[:, :, 0], decoded[:, :, 2])
-                )
-            out["gif_pix_ok"] = oks
-            del pdf["gif_payload"]
-
-            # BMP: strict header dims + exact raw-row decode (lossless)
-            dims = [image_dims_one(p) for p in pdf["bmp_payload"]]
-            out["bmp_width"] = [x[0] for x in dims]
-            out["bmp_height"] = [x[1] for x in dims]
-            out["bmp_channels"] = [x[2] for x in dims]
-            oks = []
-            for p, b in zip(pdf["bmp_payload"], texts):
-                w = 16
-                h = max(1, math.ceil(len(b) / w))
-                src = np.frombuffer(b.ljust(w * h, b"\0"), dtype=np.uint8)
-                decoded = bmp_codec.decode(bytes(p))
-                oks.append(
-                    decoded.shape == (h, w, 3)
-                    and np.array_equal(decoded[:, :, 0].ravel(), src)
-                    and np.array_equal(decoded[:, :, 0], decoded[:, :, 1])
-                )
-            out["bmp_pix_ok"] = oks
-            del pdf["bmp_payload"]
-
-            # TIFF: strict dims (first-IFD tag walk) + an exact
-            # LZW+predictor decode (lossless)
-            dims = [image_dims_one(p) for p in pdf["tiff_payload"]]
-            out["tiff_width"] = [x[0] for x in dims]
-            out["tiff_height"] = [x[1] for x in dims]
-            out["tiff_channels"] = [x[2] for x in dims]
-            oks = []
-            for p, b in zip(pdf["tiff_payload"], texts):
-                w = 16
-                h = max(1, math.ceil(len(b) / w))
-                src = np.frombuffer(b.ljust(w * h, b"\0"), dtype=np.uint8)
-                decoded = tiff_codec.decode(bytes(p))
-                oks.append(
-                    decoded.shape == (h, w, 1)
-                    and np.array_equal(decoded[:, :, 0].ravel(), src)
-                )
-            out["tiff_pix_ok"] = oks
-            del pdf["tiff_payload"]
-
-            # WebP lossless: strict dims (VP8L 14-bit packed fields) +
-            # full entropy decode (prefix codes, color cache, LZ77),
-            # EXACT pixel equality
-            dims = [image_dims_one(p) for p in pdf["webp_payload"]]
-            out["webp_width"] = [x[0] for x in dims]
-            out["webp_height"] = [x[1] for x in dims]
-            out["webp_channels"] = [x[2] for x in dims]
-            oks = []
-            for p, b in zip(pdf["webp_payload"], texts):
-                nbw = len(b) % 256
-                hw = max(1, math.ceil(nbw / 16))
-                src = np.frombuffer(
-                    b[:nbw].ljust(16 * hw, b"\0"), dtype=np.uint8
-                )
-                decoded = vp8l_codec.decode(bytes(p))
-                oks.append(
-                    decoded.shape == (hw, 16, 4)
-                    and np.array_equal(decoded[:, :, 0].ravel(), src)
-                    and np.array_equal(decoded[:, :, 0], decoded[:, :, 2])
-                    and bool((decoded[:, :, 3] == 255).all())
-                )
-            out["webp_pix_ok"] = oks
-            del pdf["webp_payload"]
-
-            # WAV/PCM params (O(header) chunk walk)
-            prm = [audio_params_one(p) for p in pdf["wav_payload"]]
-            out["wav_sample_rate"] = [x[0] for x in prm]
-            out["wav_n_samples"] = [x[2] for x in prm]
-            out["wav_duration_s"] = [x[3] for x in prm]
-            del pdf["wav_payload"]
-
-            # tone RMS/ZCR (exact square-wave contract, see docstring)
-            feats = [audio_features_one(p, 8) for p in pdf["tone_payload"]]
-            out["tone_rms_windows"] = [f[0] for f in feats]
-            out["tone_zcr"] = [f[1] for f in feats]
-            del pdf["tone_payload"]
-
-            # FLAC: STREAMINFO params + the FULL lossless decode (Rice
-            # residuals + fixed prediction) must reproduce the tone
-            # contract bit-for-bit from the compressed stream
-            prm = [audio_params_one(p) for p in pdf["flac_payload"]]
-            out["flac_sample_rate"] = [x[0] for x in prm]
-            out["flac_n_samples"] = [x[2] for x in prm]
-            feats = [audio_features_one(p, 8) for p in pdf["flac_payload"]]
-            out["flac_rms_windows"] = [f[0] for f in feats]
-            out["flac_zcr"] = [f[1] for f in feats]
-            del pdf["flac_payload"]
-
-            # G.711 µ/A-law: REAL companded decode at quantizer-exact
-            # amplitudes, same RMS/ZCR contract
-            feats = [audio_features_one(p, 8) for p in pdf["ulaw_payload"]]
-            out["ulaw_rms_windows"] = [f[0] for f in feats]
-            out["ulaw_zcr"] = [f[1] for f in feats]
-            del pdf["ulaw_payload"]
-            feats = [audio_features_one(p, 8) for p in pdf["alaw_payload"]]
-            out["alaw_rms_windows"] = [f[0] for f in feats]
-            out["alaw_zcr"] = [f[1] for f in feats]
-            del pdf["alaw_payload"]
-
-            # IMA ADPCM: params prove the fact-chunk truncation, the
-            # DC decode is exact
-            prm = [audio_params_one(p) for p in pdf["ima_payload"]]
-            out["ima_sample_rate"] = [x[0] for x in prm]
-            out["ima_n_samples"] = [x[2] for x in prm]
-            feats = [audio_features_one(p, 8) for p in pdf["ima_payload"]]
-            out["ima_rms_windows"] = [f[0] for f in feats]
-            out["ima_zcr"] = [f[1] for f in feats]
-            del pdf["ima_payload"]
-
-            # Ogg: CRC-verified page walk (Opus odd nb, Vorbis even)
-            prm = [audio_params_one(p) for p in pdf["ogg_payload"]]
-            out["ogg_sample_rate"] = [x[0] for x in prm]
-            out["ogg_channels"] = [x[1] for x in prm]
-            out["ogg_n_samples"] = [x[2] for x in prm]
-            out["ogg_duration_s"] = [x[3] for x in prm]
-            del pdf["ogg_payload"]
-
-            # MP4 + Matroska/WebM container walks
-            meta = [video_meta_one(p) for p in pdf["mp4_payload"]]
-            out["mp4_duration_s"] = [x[0] for x in meta]
-            out["mp4_width"] = [x[1] for x in meta]
-            out["mp4_height"] = [x[2] for x in meta]
-            out["mp4_tracks"] = [x[3] for x in meta]
-            del pdf["mp4_payload"]
-            meta = [video_meta_one(p) for p in pdf["webm_payload"]]
-            out["webm_duration_s"] = [x[0] for x in meta]
-            out["webm_width"] = [x[1] for x in meta]
-            out["webm_height"] = [x[2] for x in meta]
-            out["webm_tracks"] = [x[3] for x in meta]
-            del pdf["webm_payload"]
-
-            # AVI/MJPEG: RIFF avih walk + every FRAME through the T.81
-            # decoder against the phase-shifted source field
-            meta = [video_meta_one(p) for p in pdf["avi_payload"]]
-            out["avi_duration_s"] = [x[0] for x in meta]
-            out["avi_width"] = [x[1] for x in meta]
-            out["avi_height"] = [x[2] for x in meta]
-            out["avi_tracks"] = [x[3] for x in meta]
-            oks, counts = [], []
-            for p, nb in zip(pdf["avi_payload"], nbs):
-                frames = avi_codec.decode_frames(bytes(p))
-                counts.append(len(frames))
-                ok = len(frames) == 2 + nb % 4
-                for i, fr in enumerate(frames):
-                    src = _jpeg_source_pixels(nb % 256, phase=i)
-                    ok = ok and fr.shape[:2] == src.shape and bool(
-                        np.abs(
-                            fr[:, :, 0].astype(int) - src.astype(int)
-                        ).max()
-                        <= 8
-                    )
-                oks.append(ok)
-            out["avi_pix_ok"] = oks
-            out["avi_n_frames"] = counts
-            del pdf["avi_payload"]
-
-            # WARC-zstd: the pure RFC 8878 decoder, then the WARC
-            # record + HTTP parse; plus direct lz round-trip and
-            # guaranteed-compression assertions on a 4x repetition
-            import hashlib as _hl
-
-            uris, statuses, shas, rts, smalls = [], [], [], [], []
-            for p, b in zip(pdf["warc_payload"], texts):
-                [rec] = list(warc_codec.iter_records(bytes(p)))
-                uris.append(rec["target_uri"])
-                statuses.append(rec["http_status"])
-                shas.append(_hl.sha256(bytes(rec["payload"])).hexdigest())
-                quad = b * 4
-                c = zstd_codec.compress(quad, mode="lz")
-                rts.append(zstd_codec.decompress(c) == quad)
-                smalls.append(len(c) < len(quad))
-            out["warc_uri"] = uris
-            out["warc_status"] = statuses
-            out["warc_payload_sha"] = shas
-            out["zstd_rt_ok"] = rts
-            out["zstd_lz_smaller"] = smalls
-            del pdf["warc_payload"]
-
-            yield pd.DataFrame(out)
-
-    def fused(batches):
-        yield from verify(synth(batches))
-
-    d = docs.mapInPandas(
-        fused,
-        "doc_id long, png_width int, png_height int, png_channels int, "
-        "features array<float>, png_dhash long, "
-        "jpeg_width int, jpeg_height int, jpeg_channels int, "
-        "jpeg_pix_ok boolean, jpeg_progressive boolean, "
-        "exif_orientation int, exif_model string, "
-        "exif_datetime_original string, exif_iso int, "
-        "exif_exposure_time double, exif_f_number double, "
-        "exif_gps_lat double, exif_gps_lon double, exif_has_gps boolean, "
-        "gif_width int, gif_height int, gif_channels int, "
-        "gif_pix_ok boolean, "
-        "bmp_width int, bmp_height int, bmp_channels int, "
-        "bmp_pix_ok boolean, "
-        "tiff_width int, tiff_height int, tiff_channels int, "
-        "tiff_pix_ok boolean, "
-        "webp_width int, webp_height int, webp_channels int, "
-        "webp_pix_ok boolean, "
-        "wav_sample_rate int, wav_n_samples long, wav_duration_s double, "
-        "tone_rms_windows array<float>, tone_zcr double, "
-        "flac_sample_rate int, flac_n_samples long, "
-        "flac_rms_windows array<float>, flac_zcr double, "
-        "ulaw_rms_windows array<float>, ulaw_zcr double, "
-        "alaw_rms_windows array<float>, alaw_zcr double, "
-        "ima_sample_rate int, ima_n_samples long, "
-        "ima_rms_windows array<float>, ima_zcr double, "
-        "mp4_duration_s double, mp4_width int, mp4_height int, "
-        "mp4_tracks int, "
-        "avi_duration_s double, avi_width int, avi_height int, "
-        "avi_tracks int, avi_n_frames int, avi_pix_ok boolean, "
-        "ogg_sample_rate int, ogg_channels int, ogg_n_samples long, "
-        "ogg_duration_s double, "
-        "webm_duration_s double, webm_width int, webm_height int, "
-        "webm_tracks int, "
-        "warc_uri string, warc_status int, warc_payload_sha string, "
-        "zstd_rt_ok boolean, zstd_lz_smaller boolean",
-    )
-    return d.select(
-        "doc_id",
-        "png_width",
-        "png_height",
-        F.col("png_channels").cast("int").alias("png_channels"),
-        # normalized grayscale histogram must sum to 1 (float32 lanes,
-        # double fold — assert with tolerance, not bit equality)
-        (
-            F.abs(
-                F.aggregate("features", F.lit(0.0), lambda a, x: a + x) - 1.0
-            )
-            < 1e-4
-        ).alias("png_hist_ok"),
-        "png_dhash",
-        "jpeg_width",
-        "jpeg_height",
-        F.col("jpeg_channels").cast("int").alias("jpeg_channels"),
-        "jpeg_pix_ok",
-        "jpeg_progressive",
-        "exif_orientation",
-        "exif_model",
-        "exif_datetime_original",
-        "exif_iso",
-        "exif_exposure_time",
-        "exif_f_number",
-        "exif_gps_lat",
-        "exif_gps_lon",
-        "exif_has_gps",
-        "gif_width",
-        "gif_height",
-        F.col("gif_channels").cast("int").alias("gif_channels"),
-        "gif_pix_ok",
-        "bmp_width",
-        "bmp_height",
-        F.col("bmp_channels").cast("int").alias("bmp_channels"),
-        "bmp_pix_ok",
-        "tiff_width",
-        "tiff_height",
-        F.col("tiff_channels").cast("int").alias("tiff_channels"),
-        "tiff_pix_ok",
-        "webp_width",
-        "webp_height",
-        F.col("webp_channels").cast("int").alias("webp_channels"),
-        "webp_pix_ok",
-        "wav_sample_rate",
-        "wav_n_samples",
-        "wav_duration_s",
-        # tone RMS quantizes exactly back to the amplitude (docstring)
-        F.round(
-            F.aggregate(
-                "tone_rms_windows", F.lit(0.0), lambda a, x: a + x.cast("double")
-            )
-            / 8.0
-            * 32768.0
-        )
-        .cast("bigint")
-        .alias("tone_rms_q"),
-        "tone_zcr",
-        # the FLAC encoding of the same PCM must reproduce the exact
-        # contract from its compressed stream (lossless)
-        "flac_sample_rate",
-        "flac_n_samples",
-        F.round(
-            F.aggregate(
-                "flac_rms_windows", F.lit(0.0), lambda a, x: a + x.cast("double")
-            )
-            / 8.0
-            * 32768.0
-        )
-        .cast("bigint")
-        .alias("flac_rms_q"),
-        F.col("flac_zcr").alias("flac_zcr"),
-        # G.711: companding-exact amplitudes round back exactly (r7)
-        F.round(
-            F.aggregate(
-                "ulaw_rms_windows", F.lit(0.0), lambda a, x: a + x.cast("double")
-            )
-            / 8.0
-            * 32768.0
-        )
-        .cast("bigint")
-        .alias("ulaw_rms_q"),
-        "ulaw_zcr",
-        F.round(
-            F.aggregate(
-                "alaw_rms_windows", F.lit(0.0), lambda a, x: a + x.cast("double")
-            )
-            / 8.0
-            * 32768.0
-        )
-        .cast("bigint")
-        .alias("alaw_rms_q"),
-        "alaw_zcr",
-        # IMA ADPCM: DC decode is exact; n proves fact truncation
-        "ima_sample_rate",
-        "ima_n_samples",
-        F.round(
-            F.aggregate(
-                "ima_rms_windows", F.lit(0.0), lambda a, x: a + x.cast("double")
-            )
-            / 8.0
-            * 32768.0
-        )
-        .cast("bigint")
-        .alias("ima_rms_q"),
-        "ima_zcr",
-        "mp4_duration_s",
-        "mp4_width",
-        "mp4_height",
-        "mp4_tracks",
-        "avi_duration_s",
-        "avi_width",
-        "avi_height",
-        "avi_tracks",
-        F.col("avi_n_frames").cast("bigint").alias("avi_n_frames"),
-        "avi_pix_ok",
-        "ogg_sample_rate",
-        "ogg_channels",
-        "ogg_n_samples",
-        "ogg_duration_s",
-        "webm_duration_s",
-        "webm_width",
-        "webm_height",
-        "webm_tracks",
-        "warc_uri",
-        "warc_status",
-        "warc_payload_sha",
-        "zstd_rt_ok",
-        "zstd_lz_smaller",
-    )
-
-
 
 
 def _dhash_oracle_expr() -> str:
-    """The oracle's dHash-64 of the synth PNG, straight from the text
-    bytes: gray(r, c) = byte r*16+c of the UTF-8 encoding (0 past the
-    end — the synth pads the 16-wide grid with NULs), nearest-sampled
+    """The oracle's dHash-64 of the key's PNG payload, straight from the
+    text bytes: gray(r, c) = byte r*16+c of the UTF-8 encoding (0 past
+    the end — the payload's 16-wide grid is NUL-padded), nearest-sampled
     to 9x8 (rows (k*hh)//8, fixed columns (j*16)//9), 64 gradient
     bits packed MSB-first into a SIGNED 64-bit value (bit 63 spelled
     as the min-long literal — DuckDB range-checks 1<<63)."""

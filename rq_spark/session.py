@@ -78,6 +78,12 @@ def get_spark(app_name: str = "rq_spark", cpus: int | None = None) -> SparkSessi
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Python workers unpickle kernels by module reference; they find
+        # rq_spark from any working directory, not only the repo root
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -471,11 +471,15 @@ def test_mm_real_decode_batch_independent(spark, sf_dir):
 
 
 def test_mm_real_decode_edge_corpus(spark, tmp_path):
-    """The full 17-codec synth+verify chain on documents the corpus
-    family never produces: empty text (nb=0), single byte, whitespace
-    only, astral-plane UTF-8, odd multi-byte lengths, a 50 KB doc, and
-    control characters. Every *_ok assertion column must hold — an
-    arbitrary user corpus contains all of these."""
+    """The full 17-codec chain on documents the corpus family never
+    produces: empty text (nb=0), single byte, whitespace only,
+    astral-plane UTF-8, odd multi-byte lengths, a 50 KB doc, control
+    characters and NULL text. Every *_ok assertion column must hold —
+    an arbitrary user corpus contains all of these. Two edges differ
+    from the SQL oracle by contract: NULL text reads as the empty
+    document (the oracle reads NULL), and the 4x repetition of a text
+    this short does not outgrow the zstd frame overhead, so
+    zstd_lz_smaller is False (the oracle hard-codes TRUE)."""
     from rq_spark.queries.dedup import mm_real_decode
 
     rows = [
@@ -486,14 +490,59 @@ def test_mm_real_decode_edge_corpus(spark, tmp_path):
         (5, "é" * 333),
         (6, "word " * 10_000),
         (7, "\x00\x01\x02 control"),
+        (8, None),
     ]
     sf = str(tmp_path / "edge_sf")
     spark.createDataFrame(rows, "doc_id long, text string").write.mode(
         "overwrite"
     ).parquet(f"{sf}/documents.parquet")
-    out = mm_real_decode(spark, sf).collect()
-    assert len(out) == len(rows)
-    for r in out:
-        d = r.asDict()
+    out = {r.doc_id: r.asDict() for r in mm_real_decode(spark, sf).collect()}
+    assert sorted(out) == [i for i, _ in rows]
+    for d in out.values():
         bad = {k: v for k, v in d.items() if k.endswith("_ok") and v is not True}
         assert not bad, f"doc {d['doc_id']}: {bad}"
+    assert out[1]["zstd_lz_smaller"] is False
+    assert out[2]["zstd_lz_smaller"] is False
+    assert out[6]["zstd_lz_smaller"] is True
+    # the NULL document is the empty one: only the id-derived columns differ
+    ids = {"doc_id", "warc_uri"}
+    assert {k: v for k, v in out[8].items() if k not in ids} == {
+        k: v for k, v in out[1].items() if k not in ids
+    }
+
+
+@pytest.mark.parametrize("key", ["mm_real_decode", "mm_pipeline"])
+def test_multimodal_key_matches_oracle(spark, sf_dir, key):
+    """The key on Spark and its ORACLE SQL on DuckDB over the same
+    parquet files agree in row count, column names and the order-
+    insensitive value hash of tools/check_oracle.py — the driver's
+    correctness gate, in the suite."""
+    import importlib.util
+    import os
+
+    import duckdb
+
+    from rq_spark.queries import all_oracle_sql, all_queries
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "check_oracle", os.path.join(repo, "tools", "check_oracle.py")
+    )
+    co = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(co)
+
+    sdf = all_queries()[key](spark, sf_dir)
+    srows = [tuple(r) for r in sdf.collect()]
+    con = duckdb.connect()
+    con.execute("SET threads=2")
+    for t in co.TABLES:
+        con.sql(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    rel = con.sql(all_oracle_sql()[key])
+    orows = [tuple(r) for r in rel.fetchall()]
+    assert len(srows) == len(orows) > 0
+    assert sorted(sdf.columns) == sorted(rel.columns)
+    assert co.value_hash(srows, list(sdf.columns)) == co.value_hash(
+        orows, list(rel.columns)
+    )

@@ -101,16 +101,17 @@ def test_ann_broadcasts_queries_not_corpus(spark, sf_dir):
     """Banded-LSH ANN (r15 fused probe): the corpus streams through
     ONE mapInPandas probe — never exploded ×bands (no Generate), never
     broadcast, never nested-looped, and never hash-shuffled before the
-    probe; the only broadcast join is the driver-sized query-vector
-    attach feeding the exact JVM cosine."""
+    probe. The driver-sized query vectors ride the probe's broadcast
+    variable into the exact JVM cosine, so the plan has no join and no
+    broadcast exchange at all."""
     from rq_spark.queries import similarity
 
     df = similarity.sim_ann_lsh_topk(spark, sf_dir)
     plan = _physical_plan(df)
     assert "MapInPandas" in plan
     assert "Generate" not in plan  # the old posexplode ×bands is gone
-    assert "BroadcastHashJoin" in plan  # q_vec attach (query side only)
-    assert "BroadcastNestedLoopJoin" not in plan
+    assert "Join" not in plan  # no q_vec attach, no nested loop
+    assert "BroadcastExchange" not in plan
     assert "CartesianProduct" not in plan
     # the corpus reaches the Python probe without any hash exchange
     lines = plan.splitlines()

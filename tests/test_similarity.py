@@ -92,6 +92,31 @@ def test_ann_bands_double_queries_at_double_precision(spark):
     assert [(r.query_id, r.neighbor_id) for r in got] == [(1, 2)]
 
 
+def test_ann_topk_evaluates_query_side_once(spark, tmp_path):
+    """The query side is collected once at build time and its vectors
+    ride the probe's broadcast: the executed plan never reads the
+    query relation again, and scores stay the brute-force operator's
+    bit-identical cosine fold."""
+    corpus = table(spark, SF, "embeddings")
+    path = str(tmp_path / "ann_query_side.parquet")
+    corpus.filter(corpus.vec_id < 5).write.parquet(path)
+    queries = spark.read.parquet(path)
+    got = S.ann_topk(corpus, queries, k=10)
+    rows = got.collect()
+    # the final plan; a scan's location is cut at 100 characters, so
+    # count scans rather than look for the query path
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    scans = plan.split("== Initial Plan ==", 1)[0].count("FileScan parquet")
+    assert scans == 1  # the corpus
+    brute = {
+        (r.query_id, r.neighbor_id): r.cos_sim
+        for r in S.brute_topk(corpus, queries, k=10).collect()
+    }
+    common = [r for r in rows if (r.query_id, r.neighbor_id) in brute]
+    assert common
+    assert all(r.cos_sim == brute[(r.query_id, r.neighbor_id)] for r in common)
+
+
 def test_embedding_near_pairs_symmetric_bound(spark):
     emb = table(spark, SF, "embeddings")
     pairs = S.embedding_near_pairs(emb, 0.45).collect()
