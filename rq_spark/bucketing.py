@@ -884,25 +884,6 @@ def compact_index_tables(
     clear_tombstones(spark, base_name)
 
 
-def cojoin(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    key: str,
-    how: str = "inner",
-) -> DataFrame:
-    """Join two identically-bucketed tables on their bucket key.
-
-    The physical plan is a SortMergeJoin with NO Exchange on either
-    side (asserted in tests/test_plans.py): bucket i of the left reads
-    against bucket i of the right, task-local. With `sort=True` at
-    write time even the per-task Sort disappears for the sorted key.
-    """
-    lt = spark.table(left_table)
-    rt = spark.table(right_table)
-    return lt.join(rt, key, how)
-
-
 def retire_index(
     spark: SparkSession, base_name: str, suffixes: list[str]
 ) -> None:

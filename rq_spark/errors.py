@@ -8,9 +8,13 @@ Mapping notes:
   class; format *parse* failures double as `SyntaxError_` subclasses
   so the fail-fast semantics (first bad record aborts, rq.rs:303-312)
   and the existing catch sites keep working.
-* `Hjson` has no analog (the reference's vestigial HJSON support was
-  dropped from its own CLI surface); the variant class exists for
-  taxonomy completeness but nothing raises it.
+* Six classes are never raised: `Utf8Error`, `HjsonError`,
+  `AvroSchemaResolutionError`, `AvroValidationError`, `GlobError` and
+  `GlobPatternError`. They are kept as mirrors of error.rs variants so
+  the taxonomy matches the reference one-to-one. `Hjson` has no analog
+  (the reference's vestigial HJSON support was dropped from its own CLI
+  surface), and the reference never raises `Utf8` either (see
+  `Utf8Error`).
 * Display strings follow error.rs so cause-chain logs read the same.
 """
 
@@ -32,8 +36,8 @@ class Utf8Error(RqError):
     """error.rs `Utf8` — "UTF-8 error". CLI-unreachable in the
     reference too: no source builds a string via from_utf8 (raw goes
     through BufReader::lines, whose invalid UTF-8 is an InvalidData
-    io::Error → the `Io` variant; golden-tested). Kept for taxonomy
-    completeness."""
+    io::Error → the `Io` variant; golden-tested). Never raised; a
+    mirror of the variant."""
 
 
 class UnimplementedError(RqError):
@@ -174,11 +178,13 @@ class AvroParseSchemaError(AvroError):
 
 
 class AvroSchemaResolutionError(AvroError):
-    """Avro::SchemaResolution."""
+    """Avro::SchemaResolution. Never raised; a mirror of the variant."""
 
 
 class AvroValidationError(AvroError):
-    """Avro::Validation — value doesn't satisfy the writer schema."""
+    """Avro::Validation — value doesn't satisfy the writer schema.
+    Never raised (the encoder raises `AvroError`); a mirror of the
+    variant."""
 
 
 class AvroUnsignedU64Error(AvroError):
@@ -215,11 +221,13 @@ class ProtobufSchemaError(ProtobufError):
 
 
 class GlobError(RqError):
-    """error.rs `Glob` — filesystem traversal during schema globbing."""
+    """error.rs `Glob` — filesystem traversal during schema globbing.
+    Never raised; a mirror of the variant."""
 
 
 class GlobPatternError(RqError):
-    """error.rs `GlobPattern` — malformed glob pattern."""
+    """error.rs `GlobPattern` — malformed glob pattern. Never raised; a
+    mirror of the variant."""
 
 
 class MissingToolError(RqError):

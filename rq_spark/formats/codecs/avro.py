@@ -9,9 +9,10 @@ Reference-parity (SURVEY.md §1.4, src/value/avro.rs):
 * write: ints widen to the schema type; unsigned values above
   i64::MAX raise AvroUnsignedU64Error (avro.rs:94-113); map keys must
   be strings → AvroKeyError (avro.rs:127-146);
-* codecs: null, deflate (zlib raw); snappy via a native binding when
-  importable (the reference cargo-feature-gates snappy the same way,
-  Cargo.toml:53-55), else the bundled pure-Python block-format codec;
+* codecs: null, deflate (zlib raw); snappy via the bundled pure-Python
+  block-format codec (snappy_pure.py) on every install — the reference
+  cargo-feature-gates a native snappy (Cargo.toml:53-55), the engine
+  takes no optional native dependency for it;
 * container: blocks flushed with sync markers (avro.rs:166-176).
 """
 
@@ -31,6 +32,7 @@ from ...errors import (
     AvroParseSchemaError,
     AvroUnsignedU64Error,
 )
+from . import snappy_pure
 
 MAGIC = b"Obj\x01"
 I64_MAX = (1 << 63) - 1
@@ -247,31 +249,6 @@ def _encode(schema, v, out: bytearray, named: dict) -> None:
 # ---------------------------------------------------------------- container
 
 
-def _snappy_funcs():
-    """(compress, decompress): a native snappy binding when one is
-    importable (the reference cargo-feature-gates snappy the same way,
-    Cargo.toml:53-55), else the bundled pure-Python block-format codec
-    (snappy_pure.py, written from the public format description) — the
-    codec works everywhere; native libs only make it faster/denser."""
-    try:
-        import snappy  # python-snappy
-
-        return snappy.compress, snappy.decompress
-    except ImportError:
-        pass
-    try:
-        from cramjam import snappy as _cj
-
-        return (
-            lambda b: bytes(_cj.compress_raw(b)),
-            lambda b: bytes(_cj.decompress_raw(b)),
-        )
-    except ImportError:
-        from . import snappy_pure
-
-        return snappy_pure.compress, snappy_pure.decompress
-
-
 def read_container(buf: bytes) -> tuple[dict, list]:
     """Returns (writer schema, records). Embedded writer schema — no
     user schema needed on read (avro.rs:21-23)."""
@@ -314,13 +291,8 @@ def read_container(buf: bytes) -> tuple[dict, list]:
             # big-endian CRC32 of the uncompressed data
             if len(block) < 4:
                 raise AvroDecodeError("snappy block shorter than its CRC trailer")
-            _, decompress = _snappy_funcs()
-            try:
-                block, crc = decompress(block[:-4]), block[-4:]
-            except AvroError:
-                raise
-            except Exception as e:  # snappy.UncompressError / cramjam errors
-                raise AvroDecodeError(f"snappy block corrupt: {e}") from e
+            # a corrupt stream raises AvroDecodeError from the codec
+            block, crc = snappy_pure.decompress(block[:-4]), block[-4:]
             if zlib.crc32(block) & 0xFFFFFFFF != int.from_bytes(crc, "big"):
                 raise AvroDecodeError("snappy block CRC mismatch")
         elif codec == "zstandard":
@@ -358,14 +330,13 @@ def read_container(buf: bytes) -> tuple[dict, list]:
 def write_container(schema_json: str | dict, records, codec: str = "null") -> bytes:
     """Schema-validated container write (rq: -A schema.avsc --codec,
     rq.rs:241-259). codec ∈ {null, deflate, snappy, zstandard};
-    snappy uses a native binding when importable, else the bundled
-    pure-Python block-format codec (snappy_pure.py); zstandard always
-    uses the bundled RFC 8878 codec (zstd_pure.py); bzip2/xz ride the
+    snappy uses the bundled pure-Python block-format codec
+    (snappy_pure.py); zstandard uses the bundled RFC 8878 codec
+    (zstd_pure.py); bzip2/xz ride the
     stdlib. The reference supports only null/deflate/snappy — the
     rest are Avro-spec codecs rq users' files may carry."""
     if codec not in ("null", "deflate", "snappy", "zstandard", "bzip2", "xz"):
         raise AvroError(f"unsupported codec {codec}")
-    snappy_compress = _snappy_funcs()[0] if codec == "snappy" else None
     schema = parse_schema(schema_json) if isinstance(schema_json, str) else schema_json
     if isinstance(schema, str):
         try:
@@ -386,7 +357,7 @@ def write_container(schema_json: str | dict, records, codec: str = "null") -> by
         block = c.compress(block) + c.flush()
     elif codec == "snappy":
         crc = zlib.crc32(block) & 0xFFFFFFFF
-        block = snappy_compress(block) + crc.to_bytes(4, "big")
+        block = snappy_pure.compress(block) + crc.to_bytes(4, "big")
     elif codec == "zstandard":
         from . import zstd_pure
 

@@ -2,10 +2,10 @@
 format description (github.com/google/snappy format_description.txt).
 
 Why it exists: the Avro container's snappy codec
-(avro.apache.org/docs/current/specification — "snappy") was gated
-behind an import of python-snappy/cramjam, neither of which ships in
-this environment, leaving the codec permanently untestable here. The
-block format is small enough to carry directly:
+(avro.apache.org/docs/current/specification — "snappy") would
+otherwise need a native binding (python-snappy, cramjam), an optional
+dependency the engine does not take. The block format is small enough
+to carry directly:
 
 * ``decompress`` implements the FULL tag set (literals with 1-4 extra
   length bytes; copies with 1-, 2- and 4-byte offsets, including
@@ -20,8 +20,7 @@ block format is small enough to carry directly:
   of one per byte. Any conforming decompressor reads the output; the
   spec explicitly allows any tag sequence that decodes to the input.
 
-Used as the fallback backend of the Avro container codec; a real
-binding (python-snappy, cramjam) is preferred when importable.
+The Avro container codec's only snappy backend.
 """
 
 from __future__ import annotations

@@ -257,36 +257,6 @@ def resume_takedowns(
     return replayed
 
 
-def compact_takedown_journal(spark: SparkSession, journal_base: str) -> None:
-    """Drop CLOSED intents from the journal (maintenance; the journal
-    grows ∝ ids ever taken down — tiny, but unbounded). Pending
-    intents are kept verbatim, so crash recovery is unaffected. The
-    rewrite uses the same rename discipline as table compaction: the
-    new journal is written under a temp name, the live one renamed
-    aside, the rewrite renamed in, backup dropped — a crash between
-    the renames leaves the journal under the backup name only, which
-    fails LOUDLY (never a silently emptied WAL) and is restored by the
-    next compaction run."""
-    t = _journal_table(journal_base)
-    backup, tmp = f"{t}__precompact", f"{t}__compacting"
-    # recover FIRST: a previous compaction that died between its two
-    # renames left the journal under the backup name only
-    if not spark.catalog.tableExists(t) and spark.catalog.tableExists(backup):
-        spark.sql(f"ALTER TABLE {backup} RENAME TO {t}")
-    if not spark.catalog.tableExists(t):
-        return
-    spark.sql(f"DROP TABLE IF EXISTS {backup}")
-    spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-    log = spark.table(t)
-    done = log.filter(F.col("phase") == "done").select("td_id").distinct()
-    log.join(F.broadcast(done), "td_id", "left_anti").write.mode(
-        "overwrite"
-    ).format("parquet").saveAsTable(tmp)
-    spark.sql(f"ALTER TABLE {t} RENAME TO {backup}")
-    spark.sql(f"ALTER TABLE {tmp} RENAME TO {t}")
-    spark.sql(f"DROP TABLE {backup}")
-
-
 def assert_taken_down(
     spark: SparkSession,
     ids: DataFrame,

@@ -3,6 +3,6 @@ deduplication, similarity search, text analysis, multimodal columns.
 
 Everything is expression-first (JVM/codegen); Python appears only as
 Arrow-batched pandas UDFs where a matmul genuinely beats a fold
-(`similarity.lsh_bucket_udf`) or the logic is bit-twiddling over
+(`similarity.band_bucket_udf`) or the logic is bit-twiddling over
 variable-length token lists (`dedup.simhash64_udf`).
 """

@@ -98,8 +98,3 @@ def read_arrow_ipc(
                     yield batch[names]
 
     return shards.mapInPandas(explode, schema)
-
-
-def schema_of_shard(shard: bytes) -> pa.Schema:
-    """The Arrow schema embedded in an IPC shard's footer (O(footer))."""
-    return pa.ipc.open_file(pa.BufferReader(shard)).schema

@@ -1347,12 +1347,11 @@ def hamming_near_pairs(
     """Near-dup pairs among 64-bit signatures by banding: split into
     `bands` equal bands — any pair within Hamming distance bands-1
     shares at least one exact band (pigeonhole) — then verify with
-    popcount. Input is a (doc, sig) relation; shared by SimHash text
-    dedup and the perceptual image-hash dedup
-    (`operators/imagehash.py`). Candidate work ∝ band collisions,
-    never n² — narrower bands widen the guaranteed radius but collide
-    more (2^-width random-pair rate per band), the standard
-    multi-index-hashing tradeoff."""
+    popcount. Input is a (doc, sig) relation of any 64-bit signature
+    (SimHash, or the perceptual `imagehash.dhash64`). Candidate work ∝
+    band collisions, never n² — narrower bands widen the guaranteed
+    radius but collide more (2^-width random-pair rate per band), the
+    standard multi-index-hashing tradeoff."""
     _check_hamming_params(max_hamming, bands)
     banded = _banded_sig(sig, bands)
     a = banded.select(
@@ -1639,9 +1638,10 @@ def connected_components(
 
     Each round is two shuffle joins + one min-agg, and the data never
     leaves the cluster — the driver only reads the single convergence
-    counter. Each round's labels are checkpointed (reliable checkpoint
-    when the application has set a checkpoint dir — the fault-tolerant
-    choice on a real cluster — else an executor-local checkpoint), so
+    counter. Each round's labels are checkpointed through
+    `util.checkpoint_adaptive` (reliable when the application has set a
+    checkpoint dir — the fault-tolerant choice on a real cluster — else
+    executor-local), so
     the query plan stays O(1) deep across rounds instead of nesting
     one join tree per iteration.
 
@@ -1670,7 +1670,6 @@ def connected_components(
         sym.select(F.col("src").alias("node")).distinct(), scope=scope
     )
     labels = edge_nodes.select("node", F.col("node").alias("rep"))
-    reliable = edges.sparkSession.sparkContext.getCheckpointDir() is not None
     converged = False
     for _ in range(max_iter):
         neigh = (
@@ -1697,9 +1696,7 @@ def connected_components(
         )
         # checkpoint truncates lineage; eager=False so the convergence
         # count below is the job that materializes it (one job/round)
-        new = new.checkpoint(eager=False) if reliable else new.localCheckpoint(
-            eager=False
-        )
+        new = _checkpoint_adaptive(new, eager=False)
         changed = new.filter("chg").count()
         labels = new.select("node", F.col("new_rep").alias("rep"))
         if changed == 0:
@@ -2012,15 +2009,9 @@ def absorb_edges(
         # otherwise embeds the standing-labels checkpoint chain and
         # the batch-projection joins, which every CC round's job
         # re-plans and re-walks — measured 22 s -> 1.1 s on a 72-edge
-        # contracted graph at sf0.1 (r11). Reliable checkpoint when
-        # the app has a checkpoint dir, else executor-local — the
-        # same convention as connected_components. Fast-path probes
-        # skip this entirely (the relation is read exactly once).
-        reliable = (
-            new_edges.sparkSession.sparkContext.getCheckpointDir()
-            is not None
-        )
-        redges = redges.checkpoint() if reliable else redges.localCheckpoint()
+        # contracted graph at sf0.1 (r11). Fast-path probes skip this
+        # entirely (the relation is read exactly once).
+        redges = _checkpoint_adaptive(redges)
         rnodes = redges.select(F.col("a_id").alias("node")).unionAll(
             redges.select(F.col("b_id").alias("node"))
         ).distinct()

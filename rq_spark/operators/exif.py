@@ -11,8 +11,8 @@ carry the interesting metadata (timestamps, exposure, GPS degrees).
 For a training-data pipeline this is the image-side analogue of text
 quality signals: capture time, orientation (needed before any
 resize/augment), camera model (dedup/bias analysis), and GPS presence
-(PII scrubbing). The Spark operator is Arrow-batched `mapInPandas`
-over payload partitions — O(header) per payload, no pixel decode.
+(PII scrubbing). Parsing is O(header) per payload — the marker walk
+stops at SOS, so entropy-coded data is never touched.
 
 Reference parity note: dflemstr/rq has no media operators; this is
 extension-layer (SURVEY.md §2.2 multimodal columns). The fixture
@@ -370,61 +370,3 @@ def insert_app1(jpeg: bytes, app1: bytes) -> bytes:
     if len(jpeg) < 2 or jpeg[:2] != b"\xff\xd8":
         raise ExifFormatError("exif: not a JPEG")
     return jpeg[:2] + app1 + jpeg[2:]
-
-
-def extract_exif(df, payload_col: str = "payload"):
-    """Spark operator: parse EXIF from JPEG payloads into typed
-    columns (None for non-JPEG payloads or JPEGs without EXIF).
-    Arrow-batched mapInPandas; O(header) per payload — the marker walk
-    stops at SOS, so entropy-coded data is never touched."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField("exif_orientation", T.IntegerType()),
-            T.StructField("exif_make", T.StringType()),
-            T.StructField("exif_model", T.StringType()),
-            T.StructField("exif_datetime_original", T.StringType()),
-            T.StructField("exif_pixel_x", T.IntegerType()),
-            T.StructField("exif_pixel_y", T.IntegerType()),
-            T.StructField("exif_iso", T.IntegerType()),
-            T.StructField("exif_exposure_time", T.DoubleType()),
-            T.StructField("exif_f_number", T.DoubleType()),
-            T.StructField("exif_gps_lat", T.DoubleType()),
-            T.StructField("exif_gps_lon", T.DoubleType()),
-            T.StructField("exif_has_gps", T.BooleanType()),
-        ]
-    )
-    cols = [
-        "orientation", "make", "model", "datetime_original",
-        "pixel_x", "pixel_y", "iso", "exposure_time", "f_number",
-        "gps_lat", "gps_lon",
-    ]
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for p in pdf[payload_col]:
-                d = parse_exif(bytes(p)) if p is not None else None
-                if d is None:
-                    rows.append([None] * len(cols) + [None])
-                else:
-                    rows.append(
-                        [d[c] for c in cols] + [d["gps_lat"] is not None]
-                    )
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "exif_orientation", "exif_make", "exif_model",
-                    "exif_datetime_original", "exif_pixel_x",
-                    "exif_pixel_y", "exif_iso", "exif_exposure_time",
-                    "exif_f_number", "exif_gps_lat", "exif_gps_lon",
-                    "exif_has_gps",
-                ],
-                index=pdf.index,
-            )
-            yield pd.concat([pdf, out], axis=1)
-
-    return df.mapInPandas(run, out_schema)

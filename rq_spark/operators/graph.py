@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..util import checkpoint_adaptive as _checkpoint_adaptive
 from ..util import persist_tracked as _persist_tracked
 from ..util import release_caches as _release_caches
 
@@ -132,7 +133,6 @@ def pagerank_fixed(
     nodes_p = _persist_tracked(nodes.select("node"), scope="pagerank")
 
     base = (100 - damping_pct) * scale // 100
-    reliable = edges.sparkSession.sparkContext.getCheckpointDir() is not None
     ranks = nodes_p.select("node", F.lit(scale).cast("long").alias("r"))
     for _ in range(iters):
         shares = ranks.join(ed, ranks["node"] == ed["s"]).select(
@@ -159,11 +159,7 @@ def pagerank_fixed(
         # eager checkpoint: materializes this round once and truncates
         # lineage — without it the dangling + contribution branches
         # re-derive every prior round (2^iters recompute blow-up)
-        ranks = (
-            ranks.checkpoint(eager=True)
-            if reliable
-            else ranks.localCheckpoint(eager=True)
-        )
+        ranks = _checkpoint_adaptive(ranks, eager=True)
     return ranks.select("node", F.col("r").alias("pr"))
 
 

@@ -11,25 +11,16 @@ re-encodings hash IDENTICALLY and high-quality lossy re-encodings land
 within a few bits — while different images are ~32 bits apart (random
 bit agreement).
 
-Scale shape mirrors text SimHash exactly: signatures are one
-Arrow-batched decode pass (the in-repo spec codecs via
-`multimodal.decode_pixels`); pair generation reuses
-`dedup.hamming_near_pairs` — 4×16-bit banding, candidates ∝ band
-collisions, popcount verify, never n².
+The signature is computed once per decoded PNG inside
+`mm_real_decode`'s codec table (queries/mm_codecs.py, column
+`png_dhash`). Near-duplicate pairs among signatures come from
+`dedup.hamming_near_pairs` — banded, candidates ∝ band collisions,
+popcount verify, never n².
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from .dedup import hamming_near_pairs
-from .multimodal import decode_pixels
 
 
 def _gray(arr: np.ndarray) -> np.ndarray:
@@ -54,59 +45,3 @@ def dhash64(arr: np.ndarray) -> int:
     for bit in bits:
         v = (v << 1) | int(bit)
     return v - (1 << 64) if v >= (1 << 63) else v
-
-
-def ahash64(arr: np.ndarray) -> int:
-    """64-bit average hash (mean-threshold 8x8) — the blunter cousin;
-    kept for contrast/tests."""
-    g = _resize_nearest_2d(_gray(arr), 8, 8)
-    bits = (g > g.mean()).ravel()
-    v = 0
-    for bit in bits:
-        v = (v << 1) | int(bit)
-    return v - (1 << 64) if v >= (1 << 63) else v
-
-
-def image_dhash(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Add a `dhash` long column: the perceptual signature of every
-    decodable image payload, NULL for non-images (strict decode via
-    the spec codecs; nothing is faked here — a hash of noise would
-    poison the dedup graph with random collisions)."""
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField("dhash", T.LongType())]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hashes = []
-            for p in pdf[payload_col]:
-                arr = decode_pixels(bytes(p))
-                hashes.append(dhash64(arr) if arr is not None else None)
-            yield pdf.assign(dhash=pd.Series(hashes, dtype="object"))
-
-    return df.mapInPandas(run, out_schema)
-
-
-def image_near_pairs(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "doc_id",
-    max_hamming: int = 6,
-) -> DataFrame:
-    """(a_id, b_id, hamming) pairs of near-duplicate IMAGES: decode →
-    dHash → banded Hamming join (`dedup.hamming_near_pairs`). The
-    default radius 6 comfortably covers high-quality lossy
-    re-encodings (measured ≤ 4 bits for JPEG q95 of the same source)
-    while random images sit ~32 bits apart. Bands are sized for the
-    pigeonhole guarantee at the requested radius (8x8-bit for the
-    default 6 — exact recall, more candidates per band than SimHash's
-    4x16)."""
-    bands = 4
-    while bands - 1 < max_hamming:
-        bands *= 2
-    sig = (
-        image_dhash(df.select(F.col(id_col), F.col(payload_col)), payload_col)
-        .filter(F.col("dhash").isNotNull())
-        .select(F.col(id_col).alias("doc"), F.col("dhash").alias("sig"))
-    )
-    return hamming_near_pairs(sig, max_hamming=max_hamming, bands=bands)

@@ -129,24 +129,6 @@ def hyperplanes(n_planes: int, dim: int, seed: int = 42) -> np.ndarray:
     return np.random.default_rng(seed).standard_normal((n_planes, dim))
 
 
-def lsh_bucket_udf(planes: np.ndarray):
-    """mapInPandas-style bucketing: one numpy matmul per Arrow batch
-    (the matmul is why this is a pandas UDF, not 16 fold expressions)."""
-
-    @F.pandas_udf("int")
-    def bucket(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype="int32")
-        m = np.stack(vecs.to_numpy())  # (batch, dim)
-        bits = (m @ planes.T) > 0  # (batch, n_planes)
-        out = np.zeros(len(vecs), dtype=np.int32)
-        for i in range(planes.shape[0]):
-            out |= bits[:, i].astype(np.int32) << i
-        return pd.Series(out)
-
-    return bucket
-
-
 def _band_values(m: np.ndarray, planes: np.ndarray, bands: int, rows: int) -> np.ndarray:
     """(batch, bands) int32 band-bucket values for a stacked vector
     matrix — THE banding kernel, shared by `band_bucket_udf` and the
@@ -1803,110 +1785,3 @@ def knn_graph(
         vec_col=vec_col,
         broadcast_queries=False,
     )
-
-
-def semdedup(
-    corpus: DataFrame,
-    threshold: float,
-    n_cells: int = 16,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
-    at web-scale through semantic deduplication", public): cluster the
-    embedding space with k-means, then drop within-cluster semantic
-    near-duplicates (cosine >= threshold), keeping from each duplicate
-    group the member FARTHEST from its cluster centroid (the paper's
-    best-performing keep rule — "outliers" carry more signal), ties
-    broken by smallest id.
-
-    This is the semantic complement of the lexical dedup family: pairs
-    it catches (paraphrases, re-encodings) share no n-grams, so
-    MinHash/SimHash never see them.
-
-    Scale shape — the clustering IS the scale trick (the paper runs
-    k-means on 100M+ embeddings for exactly this reason): pairwise
-    similarity is confined to cells, so FLOPs are Σ|cell|² instead of
-    n², and each cell dedups independently in one Arrow batch
-    (`applyInPandas` keyed on cell — cells in parallel, state O(cell)).
-    Centroids come from `ivf_centroids` (distributed Lloyd, shuffle ∝
-    centroids·dim); sizing n_cells ∝ corpus/target_cell keeps cells
-    bounded; duplicate groups are connected components of the
-    within-cell near-dup graph (union-find over the cell's adjacency,
-    O(cell²) bitwise — the same budget as the similarity matrix that
-    produced it).
-
-    Returns (vec_id, cell, keep, group_rep): group_rep is the kept
-    member's id for every row of its duplicate group (rows with no
-    near-dup form singleton groups and keep themselves).
-
-    No SQL oracle exists for the k-means fixpoint, so correctness is
-    pinned in tests/test_similarity.py against an independent local
-    numpy implementation on identical data (`fit_logistic` tier), plus
-    structural properties (one keeper per group, dropped rows have an
-    in-cell neighbor over threshold).
-    """
-    cents = ivf_centroids(corpus, n_cells, iters, id_col, vec_col)
-    cn = cents / np.maximum(
-        np.linalg.norm(cents, axis=1, keepdims=True), 1e-30
-    )
-    assigned = corpus.filter(_nonzero_vec(vec_col)).select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec")
-    ).withColumn("cell", ivf_assign_udf(cents)(F.col("vec")))
-
-    out_schema = (
-        "vec_id long, cell int, keep boolean, group_rep long"
-    )
-
-    def dedup_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["vec_id"].to_numpy()
-        order = np.argsort(ids)  # id-sorted: deterministic tie-breaks
-        ids = ids[order]
-        m = np.stack(pdf["vec"].to_numpy()[order]).astype(np.float64)
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-30)
-        n = len(ids)
-        sims = m @ m.T
-        # symmetrize: BLAS summation order may differ across the
-        # diagonal by ulps; an edge is an edge if either entry clears t
-        adj = (sims >= threshold) | (sims.T >= threshold)
-        np.fill_diagonal(adj, False)
-
-        parent = list(range(n))
-
-        def find(x: int) -> int:
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for i in range(n):
-            for j in np.nonzero(adj[i, i + 1 :])[0]:
-                a, b = find(i), find(int(j) + i + 1)
-                if a != b:
-                    parent[max(a, b)] = min(a, b)
-
-        cent = cn[int(pdf["cell"].iloc[0])]
-        cent_sim = m @ cent
-        groups: dict[int, list[int]] = {}
-        for i in range(n):
-            groups.setdefault(find(i), []).append(i)
-        keep = np.zeros(n, dtype=bool)
-        rep = np.zeros(n, dtype=np.int64)
-        for members in groups.values():
-            # farthest from centroid = smallest cosine to centroid;
-            # ties by smallest id (members are id-ascending already)
-            best = min(members, key=lambda i: (cent_sim[i], ids[i]))
-            keep[best] = True
-            for i in members:
-                rep[i] = ids[best]
-        return pd.DataFrame(
-            {
-                "vec_id": ids,
-                "cell": pdf["cell"].iloc[0],
-                "keep": keep,
-                "group_rep": rep,
-            }
-        )
-
-    return assigned.groupBy("cell").applyInPandas(dedup_cell, out_schema)

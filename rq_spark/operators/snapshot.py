@@ -39,28 +39,6 @@ REMOVED = "removed"
 CHANGED = "changed"
 
 
-def apply_diff(
-    old: DataFrame, changes: DataFrame, diff: DataFrame, key_col: str
-) -> DataFrame:
-    """The APPLY half (MERGE/upsert): reconstruct the new snapshot from
-    the old one + the diff + the full rows of added/changed keys
-    (``changes``). Closure contract (round-trip tested):
-    ``apply_diff(old, new ⋉ (added ∪ changed), snapshot_diff(old, new))
-    == new``.
-
-    Scale shape: the diff is ∝ churn — a sliver of the corpus — so
-    both the drop (anti-join on removed ∪ changed keys) and the upsert
-    union run with the diff side BROADCAST; the old snapshot streams
-    through one map-side anti-join and never shuffles."""
-    dropped = F.broadcast(
-        diff.filter(F.col("status").isin(REMOVED, CHANGED)).select("key")
-    )
-    kept = old.join(
-        dropped, old[key_col] == dropped["key"], "left_anti"
-    )
-    return kept.unionByName(changes)
-
-
 def snapshot_diff(
     old: DataFrame, new: DataFrame, key_col: str, fingerprint_col: str
 ) -> DataFrame:

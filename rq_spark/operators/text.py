@@ -845,32 +845,3 @@ def threshold_hex(thr: Column) -> Column:
     return F.when(thr >= 65536, F.lit("g")).otherwise(
         F.lower(F.lpad(F.conv(thr.cast("string"), 10, 16), 4, "0"))
     )
-
-
-def nfc_normalize(col: Column) -> Column:
-    """Unicode NFC normalization — the canonicalization pass a corpus
-    pipeline runs BEFORE any text keying (exact dedup, fingerprints,
-    shingles): visually-identical strings with different codepoint
-    sequences (combining marks vs precomposed, decomposed Hangul jamo)
-    must collapse to one key, or duplicates hide behind byte-level
-    differences.
-
-    Arrow-batched pandas UDF over stdlib `unicodedata` (the Python
-    interpreter's own Unicode tables) — the one text operator that
-    genuinely needs a library, since Spark SQL has no normalization
-    builtin. Cross-validated in tests/test_text_ops.py against
-    DuckDB's independent `nfc_normalize` (utf8proc-based) over
-    combining-mark, Hangul-jamo, compatibility and mixed fixtures —
-    two unrelated Unicode implementations must agree codepoint-for-
-    codepoint."""
-    import pandas as pd  # noqa: F401 — signature clarity
-
-    @F.pandas_udf("string")
-    def nfc(s):
-        import unicodedata
-
-        return s.map(
-            lambda x: unicodedata.normalize("NFC", x), na_action="ignore"
-        )
-
-    return nfc(col)

@@ -19,32 +19,25 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from . import core
+# Order = the order a correctness run executes keys in. The dedup
+# pack carries the only multi-second queries in the catalog, so it
+# registers LAST: a budget-limited correctness run records every other
+# pack first.
+from . import (
+    core,
+    joins,
+    windows,
+    funcs,
+    events,
+    text,
+    similarity,
+    nested,
+    udfs,
+    dedup,
+)
 
-_PACKS = [core]
-
-
-def _load_extra_packs() -> None:
-    """Packs land incrementally; a missing module is fine, a broken one
-    must surface loudly (ModuleNotFoundError only for the pack itself)."""
-    import importlib
-
-    # Order = driver execution order. The dedup pack carries the only
-    # multi-second queries in the catalog, so it registers LAST: a
-    # budget-limited correctness run records every other pack first.
-    for name in ("joins", "windows", "funcs", "events", "text",
-                 "similarity", "nested", "udfs", "dedup"):
-        try:
-            m = importlib.import_module(f".{name}", __package__)
-        except ModuleNotFoundError as e:
-            if e.name and e.name.endswith(name):
-                continue
-            raise
-        if m not in _PACKS:
-            _PACKS.append(m)
-
-
-_load_extra_packs()
+_PACKS = [core, joins, windows, funcs, events, text, similarity, nested,
+          udfs, dedup]
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

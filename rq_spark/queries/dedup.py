@@ -3,8 +3,8 @@
 Oracle design: the MinHash-LSH pipeline verifies candidates with exact
 Jaccard, and its LSH parameters (24 bands × 4 rows) make a missed
 true pair above threshold measure-zero (P≈3e-6 per pair at j=0.8; the
-corpus's qualifying pairs all sit at j≥0.8) — so both
-`dedup_ngram_jaccard` and `dedup_minhash_lsh` are checked against the
+corpus's qualifying pairs all sit at j≥0.8) — so `dedup_text`'s
+`ngram_jaccard` and `minhash_lsh` branches are checked against the
 *same* exact-Jaccard SQL oracle. `dedup_simhash` keeps a rows-only
 check (Hamming neighborhoods have no SQL equivalent) and is validated
 against the Jaccard pairs in tests.
@@ -35,11 +35,6 @@ _JACCARD_T = 0.5
 # the 'g' flag for global regexp_replace; Spark is global by default)
 _NORM_SQL = _D_NORM_SQL
 
-
-def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return D.exact_dedup_groups(table(spark, sf_dir, "documents"), "text", "doc_id")
-
-
 _EXACT_SQL = f"""
 SELECT MIN(doc_id) AS rep_id, COUNT(*) AS n_dups
 FROM documents
@@ -67,25 +62,6 @@ JOIN sizes sa ON sa.doc_id = a_id
 JOIN sizes sb ON sb.doc_id = b_id
 WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= {_JACCARD_T}
 """
-
-
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact near-dup pairs by word-3-gram Jaccard (full shingle join,
-    one shingling pass persisted across both join sides + sizes)."""
-    return D.ngram_jaccard_pairs(
-        table(spark, sf_dir, "documents"), "text", "doc_id", threshold=_JACCARD_T
-    )
-
-
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH + exact verify — same output as the exact pair set
-    w.h.p., at candidate-bounded cost (the 100 TB path)."""
-    return D.minhash_dedup_pairs(
-        table(spark, sf_dir, "documents"),
-        "text",
-        "doc_id",
-        threshold=_JACCARD_T,
-    )
 
 
 def inc_components_branch(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
@@ -1200,8 +1176,8 @@ def _cdc(spark: SparkSession, sf_dir: str, inputs, tags) -> DataFrame:
 
 
 # Text dedup family in one tagged result: exact normalized-hash groups
-# + MinHash-LSH near-dup pairs + exact n-gram-Jaccard pairs (branches =
-# the former dedup_exact, dedup_minhash_lsh, dedup_ngram_jaccard) +
+# + MinHash-LSH near-dup pairs + exact n-gram-Jaccard pairs (branches
+# `exact`, `minhash_lsh`, `ngram_jaccard`, once standalone keys) +
 # passage-level spans, their excision and content-defined chunking.
 # The minhash and ngram branches share one exact-Jaccard oracle (the
 # LSH parameters make a missed true pair measure-zero, module

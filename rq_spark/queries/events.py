@@ -156,41 +156,7 @@ GROUP BY 1, 2
 """
 
 
-def stream_tumble_10min(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """tumble_10min executed by the micro-batch streaming engine
-    (lazy import: rq_spark.streaming imports this package's helpers)."""
-    from ..streaming import stream_tumble_10min as impl
-
-    return impl(spark, sf_dir)
-
-
-def stream_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful operator (applyInPandasWithState first-seen
-    dedup) run through the streaming engine; oracle = earliest event
-    per user with event_id tie-break."""
-    from ..streaming import stream_first_seen_per_user as impl
-
-    return impl(spark, sf_dir)
-
-
-def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming exact dedup (dropDuplicates state) projected to the
-    key columns, so streaming == batch == SELECT DISTINCT."""
-    from ..streaming import stream_dedup_user_type as impl
-
-    return impl(spark, sf_dir)
-
-
 _STREAM_DEDUP_SQL = "SELECT DISTINCT user_id, event_type FROM events"
-
-
-def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream interval join (view→purchase attribution within
-    60 min) through the micro-batch engine; equals the batch SQL join
-    on bounded input."""
-    from ..streaming import stream_interval_join_view_purchase as impl
-
-    return impl(spark, sf_dir)
 
 
 _STREAM_IJOIN_SQL = """
@@ -272,11 +238,10 @@ SELECT 'transition', NULL, pair, n, NULL FROM (
 
 def _agg_dedup_streams(spark: SparkSession, sf_dir: str, tags) -> DataFrame:
     """Streaming windowed aggregation + streaming exact dedup +
-    stream-STATIC enrichment (branches = the former
-    stream_tumble_10min, stream_dedup, plus the late-r8 'enrich' — each
-    still executes its own micro-batch streaming query end-to-end; the
-    independent queries run CONCURRENTLY via
-    streaming.run_many_to_memory, r8).
+    stream-STATIC enrichment (branches `tumble` and `dedup`, once
+    standalone keys, plus the late-r8 'enrich' — each still executes
+    its own micro-batch streaming query end-to-end; the independent
+    queries run CONCURRENTLY via streaming.run_many_to_memory, r8).
 
     op='enrich' — streaming.enrich_segment_counts: the event stream
     joins the STATIC customer dimension per micro-batch (the third
@@ -374,8 +339,8 @@ def stateful_stream(spark: SparkSession, sf_dir: str, tag: str) -> DataFrame:
 def _stateful_streams(spark: SparkSession, sf_dir: str, tags) -> DataFrame:
     """Custom stateful streaming (applyInPandasWithState first-seen +
     per-event running aggregates) + stream-stream interval join
-    (branches = the former stream_first_seen, stream_interval_join, and
-    the r6 running-stats operator — each still runs its own streaming
+    (branches `first_seen` and `interval_join`, once standalone keys,
+    and the r6 running-stats operator — each still runs its own streaming
     query with real state/watermarks).
 
     The `running` branch is `streaming.running_user_stats`: every event

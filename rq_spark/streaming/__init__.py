@@ -2,13 +2,14 @@
 
 rq is itself an unbounded stdin pipe (SURVEY §1.1) but stateless; this
 module supplies the stateful streaming operators the extension layer
-adds: watermarked tumbling/sliding/session windows and a custom
-stateful operator via ``transformWithStateInPandas``-style APIs.
+adds: watermarked tumbling windows, streaming dedup, stream-static and
+stream-stream joins, and custom stateful operators via
+``applyInPandasWithState``.
 
-The windowed aggregations reuse the *same* expressions as the batch
+The windowed aggregation reuses the *same* expressions as the batch
 pack (`rq_spark.queries.events`) — one logical plan, two execution
-modes, which is the point of expressing them with F.window /
-F.session_window rather than hand-rolled bucketing.
+modes, which is the point of expressing it with F.window rather than
+hand-rolled bucketing.
 
 Local testing drives a bounded parquet directory through the
 micro-batch engine with ``processAllAvailable()`` (see
@@ -83,21 +84,6 @@ def enrich_segment_counts(stream: DataFrame, dim: DataFrame) -> DataFrame:
     )
 
 
-def session_counts(stream: DataFrame, gap: str = "30 minutes",
-                   watermark: str = "30 minutes") -> DataFrame:
-    """Watermarked session windows per user."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window("ts", gap))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            "n_events",
-        )
-    )
-
-
 @contextmanager
 def no_data_batches_off(spark: SparkSession):
     """Skip the trailing NO-DATA micro-batch (one empty state-commit
@@ -162,14 +148,6 @@ def run_many_to_memory(
         for q, _ in started:
             q.stop()
     return [spark.table(qname) for _, qname in started]
-
-
-def stream_tumble_10min(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """queries() entry: the batch tumble_10min semantics executed by the
-    streaming engine end-to-end (complete mode). Hash-matches the same
-    DuckDB oracle as the batch version — streaming == batch == SQL.
-    """
-    return run_to_memory(tumble_counts(stream_events(spark, sf_dir)), "complete")
 
 
 # ------------------------------------------------ custom stateful operator
@@ -239,12 +217,6 @@ def first_seen_per_user(stream: DataFrame) -> DataFrame:
     )
 
 
-def stream_first_seen_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """queries() entry: stateful first-seen dedup executed end-to-end by
-    the micro-batch engine (append mode)."""
-    return run_to_memory(first_seen_per_user(stream_events(spark, sf_dir)), "append")
-
-
 # ------------------------------------------------------ streaming dedup
 
 
@@ -259,14 +231,6 @@ def dedup_keys(stream: DataFrame, *cols: str) -> DataFrame:
     horizon); the catalog uses the unbounded form because the oracle
     compares against a full-history DISTINCT."""
     return stream.select(*cols).dropDuplicates(list(cols))
-
-
-def stream_dedup_user_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """queries() entry: distinct (user_id, event_type) pairs computed
-    by the streaming engine (append mode)."""
-    return run_to_memory(
-        dedup_keys(stream_events(spark, sf_dir), "user_id", "event_type"), "append"
-    )
 
 
 # ------------------------------------------- stream-stream interval join
@@ -326,17 +290,6 @@ def interval_join(
     )
 
 
-def stream_interval_join_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """queries() entry: the attribution join executed end-to-end by the
-    micro-batch engine (append mode — the only mode stream-stream
-    inner joins support). On bounded input nothing is late, so the
-    result equals the batch/SQL interval join exactly."""
-    return run_to_memory(
-        interval_join(stream_events(spark, sf_dir), stream_events(spark, sf_dir)),
-        "append",
-    )
-
-
 # --------------------------------------- running per-key aggregates
 
 _RUNNING_OUT = (
@@ -347,8 +300,7 @@ _RUNNING_OUT = (
 
 def _running_frame(pdf, n0: int, micro0: int):
     """Cumulative (count, sum, avg) over one key's micro-batch slice,
-    sorted by (ts, event_id), continuing from carried state. Shared by
-    both stateful-API implementations so their semantics cannot drift.
+    sorted by (ts, event_id), continuing from carried state.
 
     The sum accumulates in EXACT integer micro-units (value rounded to
     6 decimals — the engine-wide decimal(38,6) exact-sum convention,
@@ -392,9 +344,9 @@ def running_user_stats(stream: DataFrame) -> DataFrame:
     each event is emitted enriched with its key's life-to-date
     statistics, which carry across micro-batches in keyed state.
 
-    Implemented with ``applyInPandasWithState`` (the stateful API that
-    runs everywhere); `running_user_stats_tws` is the same operator on
-    the newer ``transformWithStateInPandas`` API.
+    Implemented with ``applyInPandasWithState``, the stateful API that
+    needs no extra Python packages (``transformWithStateInPandas``
+    needs ``google.protobuf`` for its state server).
 
     Determinism contract: rows are sorted by (ts, event_id) inside
     each (batch, key) group, so with batches arriving in event-time
@@ -436,57 +388,6 @@ def running_user_stats(stream: DataFrame) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-def running_user_stats_tws(stream: DataFrame) -> DataFrame:
-    """`running_user_stats` on ``transformWithStateInPandas`` — the
-    Spark 4 arbitrary-stateful API (typed state variables, timers,
-    TTL) that supersedes applyInPandasWithState. The cumulative logic
-    is the SAME `_running_frame`, with the carried pair in a
-    ValueState.
-
-    The API's state server speaks protobuf between the JVM and the
-    Python worker, so it needs the ``google.protobuf`` wheel —
-    absent in this container (no installs), hence the tests
-    importorskip it; on a standard cluster image it runs as-is."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("agg", "n bigint, micro bigint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n0, micro0 = self._state.get() if self._state.exists() else (0, 0)
-            for pdf in rows:
-                if len(pdf) == 0:
-                    continue
-                out, n0, micro0 = _running_frame(pdf, n0, micro0)
-                yield out
-            self._state.update((n0, micro0))
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream.select("user_id", "event_id", "ts", F.col("value").cast("double"))
-        .filter(F.col("ts").isNotNull())
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            RunningStats(),
-            outputStructType=_RUNNING_OUT,
-            outputMode="append",
-            timeMode="none",
-        )
-    )
-
-
-def stream_running_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entry point: the running-stats operator executed end-to-end by
-    the micro-batch engine (append mode)."""
-    return run_to_memory(running_user_stats(stream_events(spark, sf_dir)), "append")
 
 
 def _probe_stream(
@@ -774,46 +675,6 @@ def ingest_hamming_index_stream(
         lambda batch: append_to_hamming_index(
             batch, base_name, reingest=True
         ),
-        query_name,
-    )
-
-
-def ingest_minhash_index_stream(
-    stream_docs: DataFrame,
-    text_col: str,
-    id_col: str,
-    base_name: str,
-    query_name: str,
-):
-    """The document-corpus sibling: every micro-batch of crawled
-    documents is shingled under the index's PINNED banding and
-    absorbed (`append_to_minhash_index`, reingest mode). Same marker +
-    reingest idempotence contract as `ingest_hamming_index_stream`."""
-    from ..operators.dedup import append_to_minhash_index
-
-    return _ingest_stream(
-        stream_docs,
-        base_name,
-        lambda batch: append_to_minhash_index(
-            batch, text_col, id_col, base_name, reingest=True
-        ),
-        query_name,
-    )
-
-
-def ingest_ann_index_stream(
-    stream_vecs: DataFrame, base_name: str, query_name: str
-):
-    """The vector sibling: micro-batches of fresh embeddings encoded
-    under the index's pinned model and absorbed
-    (`append_to_ann_index`, reingest mode). Same marker + reingest
-    idempotence contract as `ingest_hamming_index_stream`."""
-    from ..operators.similarity import append_to_ann_index
-
-    return _ingest_stream(
-        stream_vecs,
-        base_name,
-        lambda batch: append_to_ann_index(batch, base_name, reingest=True),
         query_name,
     )
 

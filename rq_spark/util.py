@@ -49,9 +49,9 @@ def checkpoint_adaptive(df: DataFrame, eager: bool = True) -> DataFrame:
     executor loss does not fail the job — else executor-local
     checkpoint, the right call in local mode where driver and
     "executor" share one process and the reliable variant would only
-    add a disk round-trip. Same contract as the operators' loop
-    checkpoints (`connected_components`, `pagerank_fixed`,
-    `absorb_edges`); query-layer truncations route through here so the
+    add a disk round-trip. The operators' loop checkpoints
+    (`connected_components`, `pagerank_fixed`, `absorb_edges`) and the
+    query layer's lineage truncations all call this, so the
     local-mode-only durability assumption lives in ONE place.
 
     Spark deletes reliable checkpoint files only when

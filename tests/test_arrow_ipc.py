@@ -92,4 +92,5 @@ def test_deterministic_bytes_regardless_of_row_order(spark):
         "payload"
     ]
     assert bytes(a) == bytes(b)
-    assert arrow_ipc.schema_of_shard(bytes(a)).names[0] == "doc_id"
+    schema = pa.ipc.open_file(pa.BufferReader(bytes(a))).schema
+    assert schema.names[0] == "doc_id"

@@ -2,19 +2,29 @@
 
 from __future__ import annotations
 
+from rq_spark.operators import dedup as D
 from rq_spark.queries import dedup as DQ
 from rq_spark.queries.helpers import table
 
 SF = "/root/testdata/sf0.01"  # documents table is small; planted dups live here
+JACCARD_T = 0.5  # the catalog's dedup_text threshold
 
 
 def _pairs(df):
     return {(r.a_id, r.b_id) for r in df.select("a_id", "b_id").collect()}
 
 
+def _ngram_pairs(spark):
+    return D.ngram_jaccard_pairs(
+        table(spark, SF, "documents"), "text", "doc_id", threshold=JACCARD_T
+    )
+
+
 def test_minhash_lsh_equals_exact_jaccard(spark):
-    exact = _pairs(DQ.dedup_ngram_jaccard(spark, SF))
-    lsh = _pairs(DQ.dedup_minhash_lsh(spark, SF))
+    exact = _pairs(_ngram_pairs(spark))
+    lsh = _pairs(D.minhash_dedup_pairs(
+        table(spark, SF, "documents"), "text", "doc_id", threshold=JACCARD_T
+    ))
     assert len(exact) > 0, "test corpus should contain planted near-dups"
     # 32 bands x 4 rows → P(miss) ≈ 5e-8 per true pair; exact-verify
     # removes false positives, so the sets must be identical here.
@@ -24,7 +34,7 @@ def test_minhash_lsh_equals_exact_jaccard(spark):
 def test_simhash_finds_most_planted_dups(spark):
     from rq_spark.operators.dedup import simhash_near_pairs
 
-    exact = _pairs(DQ.dedup_ngram_jaccard(spark, SF))
+    exact = _pairs(_ngram_pairs(spark))
     sim = simhash_near_pairs(
         table(spark, SF, "documents"), "text", "doc_id", max_hamming=3
     ).collect()
@@ -46,13 +56,15 @@ def test_simhash_assertion_query_flags_true(spark):
 
 def test_exact_dedup_partitions_corpus(spark):
     total = table(spark, SF, "documents").count()
-    groups = DQ.dedup_exact(spark, SF).collect()
+    groups = D.exact_dedup_groups(
+        table(spark, SF, "documents"), "text", "doc_id"
+    ).collect()
     assert sum(r.n_dups for r in groups) == total
     assert all(r.n_dups >= 1 for r in groups)
 
 
 def test_jaccard_values_bounded(spark):
-    rows = DQ.dedup_ngram_jaccard(spark, SF).collect()
+    rows = _ngram_pairs(spark).collect()
     assert all(0.5 <= r.jaccard <= 1.0 for r in rows)
 
 

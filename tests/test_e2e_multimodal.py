@@ -1,5 +1,5 @@
 """End-to-end multimodal crawl pipeline: a WARC of image responses →
-records → EXIF scrub signal → real pixel decode → features → resize →
+records → real pixel decode → features → resize →
 WebDataset image shards, composed entirely from the repo's operators —
 the image-side counterpart of tests/test_html_text.py's text chain."""
 
@@ -25,8 +25,9 @@ def test_end_to_end_image_crawl(spark, tmp_path):
 
     from rq_spark.operators import multimodal as M
 
-    # a crawl with two JPEGs (one geotagged — the PII signal), one PNG,
-    # and an HTML page the image pipeline must pass over
+    # a crawl with two JPEGs (one carrying a geotagged EXIF APP1 segment
+    # the pixel decoder must skip), one PNG, and an HTML page the image
+    # pipeline must pass over
     j_plain = jpeg.encode(_smooth(24, 32, 0), quality=92)
     j_gps = exif.insert_app1(
         jpeg.encode(_smooth(24, 32, 3), quality=92),
@@ -50,15 +51,8 @@ def test_end_to_end_image_crawl(spark, tmp_path):
     )
     assert images.count() == 3
 
-    # EXIF pass: exactly the geotagged JPEG flags for PII scrubbing
-    tagged = exif.extract_exif(images, "payload")
-    gps_rows = tagged.filter(F.col("exif_has_gps")).collect()
-    assert len(gps_rows) == 1
-    assert gps_rows[0].target_uri == "http://img.example/b.jpg"
-    assert abs(gps_rows[0].exif_gps_lat - 48.8584) < 1e-4
-
     # real pixel decode for dims, then content features and resize
-    decoded = M.decode_image(tagged.drop("exif_gps_lat", "exif_gps_lon"))
+    decoded = M.decode_image(images)
     dims = {r.target_uri: (r.width, r.height) for r in decoded.collect()}
     assert dims["http://img.example/a.jpg"] == (32, 24)
     assert dims["http://img.example/c.png"] == (16, 16)

@@ -1,6 +1,6 @@
 """EXIF APP1 parser (operators/exif.py) — fixture round-trips, byte
-orders, GPS sign handling, malformed-block rejection, coexistence with
-the JPEG pixel codec, and the Spark extract_exif operator."""
+orders, GPS sign handling, malformed-block rejection, and coexistence
+with the JPEG pixel codec."""
 
 from __future__ import annotations
 
@@ -96,19 +96,3 @@ def test_exif_app1_does_not_disturb_pixel_decode_or_sniffs():
     assert np.array_equal(jpeg.decode(tagged), jpeg.decode(plain))
     assert _jpeg_dims(tagged) == (8, 8, 1)
     assert not jpeg.is_progressive(tagged)
-
-
-def test_extract_exif_operator(spark):
-    j1 = _jpeg_with(dict(orientation=5, iso=400, gps=(10.5, -20.25)))
-    j2 = jpeg.encode(np.full((8, 8), 77, np.uint8))  # no EXIF
-    df = spark.createDataFrame(
-        [(1, bytearray(j1)), (2, bytearray(j2)), (3, bytearray(b"txt"))],
-        "id long, payload binary",
-    )
-    rows = {r.id: r for r in exif.extract_exif(df).collect()}
-    assert rows[1].exif_orientation == 5
-    assert rows[1].exif_iso == 400
-    assert rows[1].exif_has_gps is True
-    assert abs(rows[1].exif_gps_lon - -20.25) < 1e-7
-    assert rows[2].exif_orientation is None and rows[2].exif_has_gps is None
-    assert rows[3].exif_orientation is None

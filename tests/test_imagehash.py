@@ -1,11 +1,12 @@
 """Perceptual image hashing: cross-format identity, lossy robustness,
-distinctness, and the banded near-pair pipeline."""
+distinctness, and the banding radius guard of the near-pair join."""
 
 from __future__ import annotations
 
 import numpy as np
 
 from rq_spark.operators import bmp, gif, imagehash, jpeg, png, tiff
+from rq_spark.operators.multimodal import decode_pixels
 
 
 def smooth_field(h: int, w: int, phase: float = 0.0) -> np.ndarray:
@@ -24,7 +25,7 @@ def test_dhash_identical_across_lossless_formats():
     ]
     hashes = set()
     for b in encodings:
-        pix = imagehash.decode_pixels(b)
+        pix = decode_pixels(b)
         assert pix is not None
         hashes.add(imagehash.dhash64(pix))
     assert len(hashes) == 1  # same picture, any lossless container
@@ -33,7 +34,7 @@ def test_dhash_identical_across_lossless_formats():
 def test_dhash_robust_to_jpeg_and_distinct_across_images():
     arr = smooth_field(48, 64)
     base = imagehash.dhash64(arr)
-    jp = imagehash.decode_pixels(jpeg.encode(arr[:, :, None], quality=95))
+    jp = decode_pixels(jpeg.encode(arr[:, :, None], quality=95))
     d_jpeg = bin((imagehash.dhash64(jp) ^ base) & ((1 << 64) - 1)).count("1")
     assert d_jpeg <= 4, f"JPEG q95 moved the hash by {d_jpeg} bits"
 
@@ -48,32 +49,6 @@ def test_dhash_robust_to_jpeg_and_distinct_across_images():
     assert d_scale <= 6, f"2x upscale moved the hash by {d_scale} bits"
 
 
-def test_image_near_pairs_finds_cross_format_dups(spark):
-    arr = smooth_field(40, 56)
-    other = smooth_field(40, 56, phase=2.1)
-    rows = [
-        (1, bytearray(png.encode(arr[:, :, None]))),
-        (2, bytearray(bmp.encode(arr))),               # same image
-        (3, bytearray(jpeg.encode(arr[:, :, None], quality=95))),  # lossy same
-        (4, bytearray(png.encode(other[:, :, None]))),  # different image
-        (5, bytearray(b"not an image at all, just text bytes")),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    pairs = {
-        (r["a_id"], r["b_id"])
-        for r in imagehash.image_near_pairs(df, max_hamming=6).collect()
-    }
-    assert pairs == {(1, 2), (1, 3), (2, 3)}
-
-    # signatures: NULL for the text payload, equal for 1 and 2
-    sigs = {
-        r["doc_id"]: r["dhash"]
-        for r in imagehash.image_dhash(df).collect()
-    }
-    assert sigs[5] is None
-    assert sigs[1] == sigs[2]
-
-
 def test_band_radius_guarantee_enforced(spark):
     import pytest
 
@@ -84,16 +59,3 @@ def test_band_radius_guarantee_enforced(spark):
         hamming_near_pairs(df, max_hamming=5, bands=4)
     with pytest.raises(ValueError, match="divide"):
         hamming_near_pairs(df, max_hamming=3, bands=5)
-
-
-def test_ahash_agrees_on_lossless_and_separates_images():
-    arr = smooth_field(48, 64)
-    a = imagehash.ahash64(arr)
-    # lossless re-encode -> identical pixels -> identical aHash
-    pix = imagehash.decode_pixels(bmp.encode(arr))
-    assert imagehash.ahash64(pix) == a
-    other = smooth_field(48, 64, phase=2.1)
-    d = bin((imagehash.ahash64(other) ^ a) & ((1 << 64) - 1)).count("1")
-    assert d > 8
-    # signed-int64 domain like dhash (Spark LongType compatible)
-    assert -(1 << 63) <= a < (1 << 63)

@@ -353,56 +353,6 @@ def test_takedown_across_multiple_index_families(spark, monkeypatch):
             spark.sql(f"DROP TABLE IF EXISTS t_lcm_ann_{t}")
 
 
-def test_compact_takedown_journal(spark, monkeypatch):
-    """Journal maintenance: closed intents are dropped, PENDING ones
-    kept verbatim (crash recovery unaffected); a crash between the
-    compaction's two renames leaves the journal under the backup name
-    only — loud, never a silently emptied WAL — and the next run
-    recovers it."""
-    lbase = "t_lcj_lbl"
-    t = f"{lbase}_tdlog"
-    try:
-        ids1 = spark.createDataFrame([(1,), (2,)], "node long")
-        ids2 = spark.createDataFrame([(3,)], "node long")
-        L._journal_begin(spark, lbase, "td_done", ids1)
-        L._journal_done(spark, lbase, "td_done")
-        L._journal_begin(spark, lbase, "td_open", ids2)
-        assert L.pending_takedowns(spark, lbase) == ["td_open"]
-
-        L.compact_takedown_journal(spark, lbase)
-        assert L.pending_takedowns(spark, lbase) == ["td_open"]
-        rows = spark.table(t).collect()
-        assert {r.td_id for r in rows} == {"td_open"}  # closed intent gone
-
-        # crash between the renames: journal under the backup name
-        # only; pending reads fail LOUD; the next compaction recovers
-        import pytest
-
-        renames = {"n": 0}
-        real_sql = spark.sql
-
-        def dying_sql(q, *a, **kw):
-            if q.startswith("ALTER TABLE") and "RENAME TO" in q:
-                renames["n"] += 1
-                if renames["n"] == 2:
-                    raise RuntimeError("injected crash mid-compaction")
-            return real_sql(q, *a, **kw)
-
-        monkeypatch.setattr(spark, "sql", dying_sql)
-        with pytest.raises(RuntimeError, match="injected crash"):
-            L.compact_takedown_journal(spark, lbase)
-        monkeypatch.setattr(spark, "sql", real_sql)
-        assert not spark.catalog.tableExists(t)
-        assert spark.catalog.tableExists(f"{t}__precompact")
-
-        L.compact_takedown_journal(spark, lbase)  # recovers, completes
-        assert L.pending_takedowns(spark, lbase) == ["td_open"]
-        assert not spark.catalog.tableExists(f"{t}__precompact")
-    finally:
-        for suf in ("", "__precompact", "__compacting"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}{suf}")
-
-
 def test_composed_lifecycle_model_fuzz(spark):
     """Model-based fuzzer over the COMPOSED durable state (r14): a
     random sequence of {fresh ingest, re-crawl (takedown + re-ingest),

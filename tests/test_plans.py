@@ -126,9 +126,12 @@ def test_ann_broadcasts_queries_not_corpus(spark, sf_dir):
 
 
 def test_minhash_has_no_nested_loop_and_partial_agg(spark, sf_dir):
-    from rq_spark.queries import dedup
+    from rq_spark.operators.dedup import minhash_dedup_pairs
+    from rq_spark.queries.helpers import table
 
-    df = dedup.dedup_minhash_lsh(spark, sf_dir)
+    df = minhash_dedup_pairs(
+        table(spark, sf_dir, "documents"), "text", "doc_id", threshold=0.5
+    )
     plan = _physical_plan(df)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
@@ -262,8 +265,9 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
         thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
-            j = bucketing.cojoin(spark, "bktest.orders_b", "bktest.lineitem_b",
-                                 "o_orderkey")
+            j = spark.table("bktest.orders_b").join(
+                spark.table("bktest.lineitem_b"), "o_orderkey"
+            )
             assert j.count() > 0
             plan = _physical_plan(j)
             assert "SortMergeJoin" in plan
@@ -394,19 +398,6 @@ def test_curation_single_shared_tokenization(spark, sf_dir):
 
     df = text.corpus_curation(spark, sf_dir)
     assert _uncached_scans(df._jdf.queryExecution().executedPlan()) == 0
-
-
-def test_semdedup_cells_dedup_in_arrow_batches(spark, sf_dir):
-    """SemDeDup's quadratic work is confined to cells: the plan is one
-    FlatMapGroupsInPandas keyed on the cell assignment — the shuffle
-    key is the cell id, and nothing joins corpus-to-corpus."""
-    from rq_spark.operators.similarity import semdedup
-    from rq_spark.queries.dedup import _token_hash_corpus
-
-    out = semdedup(_token_hash_corpus(spark, sf_dir), 0.9, n_cells=4, iters=1)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan
-    assert "Join" not in plan  # no pairwise corpus join anywhere
 
 
 def test_bm25_probe_broadcasts_into_corpus(spark, sf_dir):

@@ -242,76 +242,6 @@ def test_ivfpq_recall_and_exact_rerank(spark):
         assert abs(r.cos_sim - want) < 1e-9
 
 
-def test_semdedup_matches_local_reference(spark):
-    """SemDeDup pinned against an independent local numpy
-    implementation on the organic 3-gram corpus (same centroids, same
-    keep rule), plus structural invariants."""
-    import numpy as np
-
-    from rq_spark.operators.similarity import (
-        ivf_assign_udf,
-        ivf_centroids,
-        semdedup,
-    )
-    from rq_spark.queries.dedup import _token_hash_corpus
-
-    corpus = _token_hash_corpus(spark, SF)
-    t = 0.9
-    got = {
-        r["vec_id"]: (r["cell"], r["keep"], r["group_rep"])
-        for r in semdedup(corpus, t, n_cells=4, iters=2).collect()
-    }
-
-    # ---- independent reference: same published algorithm, local numpy
-    cents = ivf_centroids(corpus, 4, 2)  # shared: the distributed Lloyd
-    cn = cents / np.linalg.norm(cents, axis=1, keepdims=True)
-    rows = corpus.collect()
-    ids = np.array([r["vec_id"] for r in rows])
-    m = np.stack([np.array(r["embedding"], dtype=np.float64) for r in rows])
-    mn = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-30)
-    cells = np.argmax(mn @ cn.T, axis=1)
-
-    want = {}
-    for c in sorted(set(cells)):
-        sel = np.nonzero(cells == c)[0]
-        sel = sel[np.argsort(ids[sel])]
-        sub, sid = mn[sel], ids[sel]
-        sims = sub @ sub.T
-        # naive transitive closure (quadratic — deliberately not the
-        # engine's union-find)
-        n = len(sel)
-        comp = np.arange(n)
-        changed = True
-        while changed:
-            changed = False
-            for i in range(n):
-                for j in range(n):
-                    if i != j and (sims[i, j] >= t or sims[j, i] >= t):
-                        lo = min(comp[i], comp[j])
-                        if comp[i] != lo or comp[j] != lo:
-                            comp[i] = comp[j] = lo
-                            changed = True
-        csim = sub @ cn[c]
-        for g in set(comp):
-            members = [i for i in range(n) if comp[i] == g]
-            best = min(members, key=lambda i: (csim[i], sid[i]))
-            for i in members:
-                want[int(sid[i])] = (int(c), i == best, int(sid[best]))
-
-    assert got == want
-
-    # structural invariants: one keeper per group; every dropped row
-    # has an in-cell neighbor over threshold; some dedup happened on
-    # this corpus (it contains organic near-dups)
-    reps = {}
-    for vid, (cell, keep, rep) in got.items():
-        reps.setdefault(rep, []).append((vid, keep))
-    for rep, members in reps.items():
-        assert sum(1 for _, k in members if k) == 1
-        assert any(vid == rep and k for vid, k in members)
-    assert any(not keep for _, keep, _rep in got.values())
-
-
 def test_ivfpq_join_matches_collected_path_and_is_collect_free(spark):
     """r8 (r7 verdict task #4): the join-based ADC variant — LUTs as a
     joined column — returns the SAME top-k as the driver-collected

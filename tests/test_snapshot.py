@@ -65,37 +65,3 @@ def test_snapshot_diff_plan_has_no_join(spark):
     # not the SortAggregate (+ full map-side sort) a string MAX forces
     assert "HashAggregate" in plan
     assert "SortAggregate" not in plan
-
-
-def test_apply_diff_round_trip(spark):
-    """Closure: old + diff + changed/added rows reconstructs the new
-    snapshot exactly, and the old side never shuffles (broadcast
-    anti-join)."""
-    from rq_spark.operators.snapshot import apply_diff
-
-    old = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c"), (4, "d")], ["k", "t"]
-    )
-    new = spark.createDataFrame(
-        [(2, "b"), (3, "c2"), (4, "d"), (5, "e")], ["k", "t"]
-    )
-    diff = snapshot_diff(_fp(old), _fp(new), "k", "fp")
-    changes = new.join(
-        diff.filter(F.col("status").isin("added", "changed")).select(
-            F.col("key").alias("k")
-        ),
-        "k",
-        "left_semi",
-    )
-    rebuilt = apply_diff(old, changes, diff, "k")
-    assert sorted((r.k, r.t) for r in rebuilt.collect()) == sorted(
-        (r.k, r.t) for r in new.collect()
-    )
-    plan = (
-        rebuilt._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-        .split("== Initial Plan ==")[0]
-    )
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    assert "SortMergeJoin" not in plan

@@ -17,26 +17,12 @@ def _rowset(df):
 
 
 def test_stream_tumble_equals_batch(spark, sf_dir):
-    streamed = streaming.stream_tumble_10min(spark, sf_dir)
+    streamed = streaming.run_to_memory(
+        streaming.tumble_counts(streaming.stream_events(spark, sf_dir)),
+        "complete",
+    )
     batch = batch_events.tumble_10min(spark, sf_dir)
     assert _rowset(streamed) == _rowset(batch)
-
-
-def test_stream_sessions_are_finalized_batch_sessions(spark, sf_dir):
-    """Append mode emits only watermark-finalized sessions — every one
-    must exist identically in the batch result (late tail withheld)."""
-    streamed = streaming.run_to_memory(
-        streaming.session_counts(streaming.stream_events(spark, sf_dir)),
-        mode="append",
-    )
-    got = _rowset(streamed.select("user_id", "session_start", "n_events"))
-    want = _rowset(
-        batch_events.session_window_30min(spark, sf_dir).select(
-            "user_id", "session_start", "n_events"
-        )
-    )
-    assert got <= want
-    assert len(got) > 0
 
 
 def test_stateful_counter_converges_to_batch_counts(spark, sf_dir):
@@ -82,7 +68,13 @@ def test_stream_interval_join_equals_batch(spark, sf_dir):
 
     got = {
         (r.user_id, r.a_event_id, r.b_event_id)
-        for r in streaming.stream_interval_join_view_purchase(spark, sf_dir).collect()
+        for r in streaming.run_to_memory(
+            streaming.interval_join(
+                streaming.stream_events(spark, sf_dir),
+                streaming.stream_events(spark, sf_dir),
+            ),
+            "append",
+        ).collect()
     }
     e = table(spark, sf_dir, "events")
     a = e.filter(F.col("event_type") == "view").select(
@@ -212,7 +204,10 @@ def _batch_running_truth(spark, sf_dir):
 def test_running_user_stats_equals_batch_window(spark, sf_dir):
     """Per-event running aggregates (applyInPandasWithState) must
     equal the batch cumulative window frame exactly."""
-    streamed = streaming.stream_running_user_stats(spark, sf_dir)
+    streamed = streaming.run_to_memory(
+        streaming.running_user_stats(streaming.stream_events(spark, sf_dir)),
+        "append",
+    )
     from pyspark.sql import functions as F
 
     got = _rowset(streamed.select("user_id", "event_id", "run_n", "run_sum"))
@@ -265,23 +260,6 @@ def test_running_user_stats_state_carries_across_batches(spark, sf_dir, tmp_path
     got = _rowset(streamed.select("user_id", "event_id", "run_n", "run_sum"))
     want = _rowset(_batch_running_truth(spark, sf_dir))
     assert got == want
-
-
-def test_running_user_stats_tws_requires_protobuf(spark, sf_dir):
-    """The transformWithStateInPandas twin shares _running_frame, so
-    its per-batch math is covered by the tests above; the API itself
-    needs the google.protobuf wheel (state-server protocol). Run it
-    end-to-end where the wheel exists; elsewhere assert the plan still
-    BUILDS (analysis succeeds) and skip execution."""
-    import pytest
-
-    sdf = streaming.running_user_stats_tws(streaming.stream_events(spark, sf_dir))
-    assert set(sdf.schema.fieldNames()) == {
-        "user_id", "event_id", "ts", "run_n", "run_sum", "run_avg",
-    }
-    pytest.importorskip("google.protobuf")
-    streamed = streaming.run_to_memory(sdf, "append")
-    assert streamed.count() == table(spark, sf_dir, "events").count()
 
 
 def test_enrich_segment_counts_equals_batch_join(spark, sf_dir):

@@ -379,44 +379,6 @@ def test_dsir_weight_matches_python_fold(spark, sf_dir):
             assert med(ws) < 1.0, lang
 
 
-def test_nfc_normalize_matches_duckdb_utf8proc(spark):
-    """Spark-side NFC (CPython unicodedata) vs DuckDB nfc_normalize
-    (utf8proc): two independent Unicode implementations must agree on
-    combining marks, Hangul jamo composition, already-composed text,
-    and non-composable compatibility characters."""
-    import duckdb
-
-    from rq_spark.operators.text import nfc_normalize
-
-    fixtures = [
-        "cafe\u0301",            # e + combining acute -> \u00e9
-        "caf\u00e9",             # already precomposed
-        "\u1100\u1161\u11a8",  # Hangul jamo -> \uac01
-        "a\u0301\u0302",        # stacked combining marks
-        "\ufb01les",             # fi ligature: NFC keeps it (NFKC-only compat)
-        "x\u212bY",              # angstrom sign -> canonical \u00c5
-        "plain ascii stays",
-        "mixed cafe\u0301 \u1100\u1161 end",
-        "A\u030a",               # A + combining ring -> \u00c5
-    ]
-    df = spark.createDataFrame([(i, s) for i, s in enumerate(fixtures)], "i long, s string")
-    got = {
-        r["i"]: r["n"]
-        for r in df.select("i", nfc_normalize(F.col("s")).alias("n")).collect()
-    }
-    con = duckdb.connect()
-    for i, s in enumerate(fixtures):
-        want = con.execute("SELECT nfc_normalize(?)", [s]).fetchone()[0]
-        assert got[i] == want, (i, s.encode("unicode_escape"))
-    # and the operator actually CHANGED the decomposed forms
-    assert got[0] == "caf\u00e9" and got[0] != fixtures[0]
-    assert got[2] == "\uac01" and got[2] != fixtures[2]
-    assert got[8] == "\u00c5" and got[8] != fixtures[8]
-    # NULL passes through
-    dfn = spark.createDataFrame([(1, None)], "i long, s string")
-    assert dfn.select(nfc_normalize(F.col("s")).alias("n")).collect()[0]["n"] is None
-
-
 def test_budget_mixture_rejects_degenerate_groups(spark):
     """ADVICE r7: NULL group keys and NULL/zero size totals must raise
     a descriptive ValueError instead of ZeroDivisionError/TypeError —
