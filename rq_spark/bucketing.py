@@ -16,6 +16,8 @@ all (stdin pipes, rq.rs:157-159), so this is extension-layer only.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -726,6 +728,116 @@ def finish_index_rewrite(
         spark.sql(f"DROP TABLE IF EXISTS {t + _BAK}")
 
 
+# --------------------------------------------------------------------------
+# one staged rewrite and one staged append for every persisted family
+#
+# A family (the MinHash, Hamming and IVFPQ indexes, the cluster labels,
+# the edge ledger) is declared once as the (suffix, bucket key, purge
+# id) triples of its bucketed tables — the list `compact_index_tables`
+# takes — plus its one-row ``{base}_meta`` and any plain side tables.
+# Its `write_*`/`append_*` functions only build rows; these two own the
+# crash-safe protocol.
+# --------------------------------------------------------------------------
+
+TableSpec = tuple[str, str | list[str], str | list[str]]
+
+
+def staged_rewrite(
+    spark: SparkSession,
+    base_name: str,
+    tables: list[TableSpec],
+    rows: list[DataFrame],
+    meta: Callable[[int], DataFrame],
+    buckets: int,
+    side: dict[str, DataFrame] | None = None,
+) -> None:
+    """Replace a family's whole table set, crash-safe — the one
+    implementation of the staging section above. Resolves the serving
+    pointer, `begin_index_rewrite` recovers a died swap and bumps the
+    generation (every standing tombstone is stamped below the new rows,
+    so it stays inert against them until the swap drops it). Every
+    table is then written under a ``__rewrite`` temp name: ``rows[i]``
+    bucketed on ``tables[i]``'s key with ``gen`` stamped as its last
+    column, then the plain ``side`` tables, then ``meta(gen)``.
+    `finish_index_rewrite` checks the writer nonce and swaps the set in
+    with meta listed first (renamed aside first, renamed in last), so a
+    crash at any point leaves the old set intact, tombstones included,
+    or a loud TABLE_OR_VIEW_NOT_FOUND, never a silent old/new mix.
+    `verify_still_serving` last catches a blue/green flip that raced
+    the rewrite."""
+    orig_name = base_name
+    base_name = resolve_index_base(spark, base_name)
+    side = side or {}
+    names = [
+        f"{base_name}_{s}" for s in ["meta", *(t[0] for t in tables), *side]
+    ]
+    g, nonce = begin_index_rewrite(spark, base_name, names)
+    gen = F.lit(g).cast("long")
+    for (suffix, key, _), df in zip(tables, rows, strict=True):
+        write_bucketed(
+            df.withColumn("gen", gen), f"{base_name}_{suffix}{_RW}", key,
+            buckets=buckets,
+        )
+    for suffix, df in [*side.items(), ("meta", meta(g))]:
+        df.write.mode("overwrite").format("parquet").saveAsTable(
+            f"{base_name}_{suffix}{_RW}"
+        )
+    finish_index_rewrite(spark, base_name, names, g, nonce)
+    verify_still_serving(spark, orig_name, base_name)
+
+
+def staged_append(
+    spark: SparkSession,
+    base_name: str,
+    tables: list[TableSpec],
+    rows: Callable[[str], list[DataFrame]],
+    reingest: tuple[DataFrame, str] | None = None,
+) -> None:
+    """Append a batch to a family's bucketed tables. Resolves the
+    serving pointer and requires ``{base}_meta`` before anything is
+    read or written, then calls ``rows(base)`` — the family reads its
+    pinned parameters and runs its guards there, before the generation
+    moves — and `bump_gen`s. Each ``rows(base)[i]`` is stamped with
+    ``gen`` as its last column and appended into ``tables[i]`` under the
+    table's own bucket count (`table_buckets`, never an argument), so
+    the bucket layout survives. Cost ∝ batch: nothing standing is read.
+
+    ``reingest=(batch, id_col)`` is the upsert path: after the rows
+    land, the batch's ids are tombstoned at ``gen - 1``, killing every
+    older row of those ids and none of this append. Tombstoning first
+    would open a crash window where the ids are dead with nothing
+    written (a silent delete); this order can at worst leave visible
+    duplicates, repaired by retrying. The writer-nonce check
+    (`verify_sole_writer`) and the serving re-check
+    (`verify_still_serving`) run last, while the batch is still known
+    and re-runnable."""
+    orig_name = base_name
+    base_name = resolve_index_base(spark, base_name)
+    if not spark.catalog.tableExists(f"{base_name}_meta"):
+        raise IllegalStateError(
+            f"{base_name} has no meta table in this session's catalog — "
+            "run the family's full write first; refusing to append into "
+            "a table set nothing serves."
+        )
+    batch = rows(base_name)
+    g, nonce = bump_gen(spark, base_name)
+    gen = F.lit(g).cast("long")
+    for (suffix, key, _), df in zip(tables, batch, strict=True):
+        t = f"{base_name}_{suffix}"
+        write_bucketed(
+            df.withColumn("gen", gen), t, key,
+            buckets=table_buckets(spark, t), mode="append",
+        )
+    if reingest is not None:
+        src, id_col = reingest
+        add_tombstones(
+            spark, base_name, src.select(id_col).distinct(), id_col,
+            at_gen=g - 1,
+        )
+    verify_sole_writer(spark, base_name, g, nonce)
+    verify_still_serving(spark, orig_name, base_name)
+
+
 def _dead_row_cond(rows: DataFrame, id_col: str) -> Column:
     return (rows[id_col] == F.col("_tomb_id")) & (
         F.col("_tomb_gen") >= rows["gen"]
@@ -861,14 +973,14 @@ def filter_tombstoned(
 def compact_index_tables(
     spark: SparkSession,
     base_name: str,
-    tables: list[tuple[str, str | list[str], str | list[str]]],
+    tables: list[TableSpec],
 ) -> None:
     """Shared body of the family-level ``compact_*_index`` wrappers
     (r12 review: three copies of the tombstone-lookup + purge + clear
-    boilerplate had started to drift-risk). ``tables`` lists
-    (suffix, bucket_key, id_col) per data table; the standing
-    tombstones (if any) are purged from each during its zero-shuffle
-    compaction rewrite, then cleared once."""
+    boilerplate had started to drift-risk). ``tables`` is the family's
+    declaration, (suffix, bucket_key, id_col) per data table; the
+    standing tombstones (if any) are purged from each during its
+    zero-shuffle compaction rewrite, then cleared once."""
     tomb = (
         spark.table(f"{base_name}_tombstones")
         if spark.catalog.tableExists(f"{base_name}_tombstones")

@@ -480,6 +480,21 @@ def incremental_minhash_pairs(
     )
 
 
+# Each persisted family's bucketed tables, declared once as the
+# (suffix, bucket key, purge id) triples its write, append and compact
+# all take (`bucketing.staged_rewrite`, `staged_append`,
+# `compact_index_tables`); the reasons for each key sit in the
+# family's write docstring.
+MINHASH_TABLES = [
+    ("bands", ["band", "bhash"], "corpus_id"),
+    ("shingles", "doc", "doc"),
+]
+HAMMING_TABLES = [("hbands", ["band", "bval"], "doc")]
+LABELS_TABLES = [("labels", "node", "node")]
+# an edge dies when EITHER endpoint is tombstoned
+LEDGER_TABLES = [("edges", "a_id", ["a_id", "b_id"])]
+
+
 def write_minhash_index(
     corpus: DataFrame,
     text_col: str,
@@ -511,54 +526,30 @@ def write_minhash_index(
       from the caller), so batch and index banding cannot drift apart
       — band hashes are only comparable under identical banding.
 
-    Crash-safe staging (r13, ADVICE r12): rows are stamped at a BUMPED
-    generation (standing tombstones — all stamped below it — are inert
-    against them), every table is computed under a ``__rewrite`` temp
-    name, and `bucketing.finish_index_rewrite` swaps the set in
-    meta-first/meta-last so a crash at ANY point leaves either the old
-    index fully intact (tombstones included) or a loud
-    TABLE_OR_VIEW_NOT_FOUND — never a silent mix. See
-    `bucketing.add_tombstones` for the deletion / reingest
-    lifecycle."""
-    from ..bucketing import (
-        begin_index_rewrite,
-        finish_index_rewrite,
-        resolve_index_base,
-        verify_still_serving,
-        write_bucketed,
-    )
+    The write is staged crash-safe through `bucketing.staged_rewrite`
+    (a crash leaves the old index intact, tombstones included, or fails
+    loudly — never a silent mix). See `bucketing.add_tombstones` for
+    the deletion / reingest lifecycle."""
+    from ..bucketing import staged_rewrite
 
     spark = corpus.sparkSession
-    orig_name = base_name
-    base_name = resolve_index_base(spark, base_name)
-    tables = [f"{base_name}_meta", f"{base_name}_bands", f"{base_name}_shingles"]
-    g, nonce = begin_index_rewrite(spark, base_name, tables)
     sets = shingle_sets(_spread(corpus), text_col, id_col, n=shingle_n).filter(
         F.size("sh_arr") > 0
     )
     sets = _persist_tracked(sets, scope="minhash_index_write")
-    geng = F.lit(g).cast("long")
     bands_df = band_table(
         minhash_signatures(sets, num_hashes=num_hashes),
         bands,
         num_hashes // bands,
-    ).select(F.col("doc").alias("corpus_id"), "band", "bhash", geng.alias("gen"))
-    write_bucketed(
-        bands_df, f"{base_name}_bands__rewrite", ["band", "bhash"],
-        buckets=buckets,
+    ).select(F.col("doc").alias("corpus_id"), "band", "bhash")
+    staged_rewrite(
+        spark, base_name, MINHASH_TABLES, [bands_df, sets],
+        lambda g: spark.createDataFrame(
+            [(num_hashes, bands, shingle_n)],
+            "num_hashes int, bands int, shingle_n int",
+        ),
+        buckets,
     )
-    write_bucketed(
-        sets.withColumn("gen", geng), f"{base_name}_shingles__rewrite", "doc",
-        buckets=buckets,
-    )
-    spark.createDataFrame(
-        [(num_hashes, bands, shingle_n)],
-        "num_hashes int, bands int, shingle_n int",
-    ).write.mode("overwrite").format("parquet").saveAsTable(
-        f"{base_name}_meta__rewrite"
-    )
-    finish_index_rewrite(spark, base_name, tables, g, nonce)
-    verify_still_serving(spark, orig_name, base_name)
     _release_caches("minhash_index_write")
 
 
@@ -580,7 +571,7 @@ def append_to_minhash_index(
     batch can never be banded differently from the standing rows —
     and appended into the bucketed ``{base}_bands`` /
     ``{base}_shingles`` tables preserving their bucket layout
-    (`bucketing.write_bucketed(mode="append")`; the bucket count is
+    (`bucketing.staged_append`; the bucket count is
     read from the table's own catalog metadata). MinHash permutations
     are deterministic functions of num_hashes, so the appended rows
     are byte-identical to what a full rewrite over corpus ∪ batch
@@ -595,10 +586,10 @@ def append_to_minhash_index(
     or rewritten. Plain append is INSERT: re-appending an
     already-indexed doc_id duplicates its rows. ``reingest=True``
     (r12, r11 verdict task #2) is the UPSERT path for re-crawled
-    documents: the batch ids are tombstoned first (covering every row
-    written so far), then the batch is appended one generation later —
-    probes immediately see only the new signatures, and the dead rows
-    are physically purged at the next `compact_minhash_index`.
+    documents: the batch is appended, then its ids are tombstoned one
+    generation below it (`bucketing.staged_append`) — probes
+    immediately see only the new signatures, and the dead rows are
+    physically purged at the next `compact_minhash_index`.
     Deletions without replacement go through
     `bucketing.add_tombstones` directly — and a reingest batch must be
     fully indexable: a re-crawled doc whose new text yields ZERO
@@ -608,79 +599,46 @@ def append_to_minhash_index(
     such docs via `add_tombstones` if that is the intent). After many
     appends, restore the one-file-per-bucket sort guarantee with
     `compact_minhash_index` (rows moved, never re-shingled)."""
-    from ..bucketing import (
-        add_tombstones,
-        bump_gen,
-        resolve_index_base,
-        table_buckets,
-        verify_sole_writer,
-        verify_still_serving,
-        write_bucketed,
-    )
+    from ..bucketing import staged_append
 
     spark = batch.sparkSession
-    orig_name = base_name
-    base_name = resolve_index_base(spark, base_name)
-    meta = spark.table(f"{base_name}_meta").collect()[0]
-    sets = shingle_sets(
-        _spread(batch), text_col, id_col, n=meta.shingle_n
-    ).filter(F.size("sh_arr") > 0)
-    sets = _persist_tracked(sets, scope="minhash_index_append")
-    if reingest:
-        # intake guard BEFORE any write (cost ∝ batch, bounded probe):
-        # every batch id must have produced shingle rows, or the
-        # tombstone below would silently delete it with no replacement
-        unusable = (
-            batch.select(F.col(id_col).alias("doc"))
-            .distinct()
-            .join(sets.select("doc"), "doc", "left_anti")
-            .take(4)
-        )
-        if unusable:
-            _release_caches("minhash_index_append")
-            raise ValueError(
-                "reingest batch contains docs whose text yields no "
-                f"shingles (e.g. {[r.doc for r in unusable]}): refusing a "
-                "silent delete — pre-filter them, or delete explicitly "
-                "via bucketing.add_tombstones"
+
+    def rows(base_name):
+        meta = spark.table(f"{base_name}_meta").collect()[0]
+        sets = shingle_sets(
+            _spread(batch), text_col, id_col, n=meta.shingle_n
+        ).filter(F.size("sh_arr") > 0)
+        sets = _persist_tracked(sets, scope="minhash_index_append")
+        if reingest:
+            # intake guard BEFORE any write (cost ∝ batch, bounded
+            # probe): every batch id must have produced shingle rows,
+            # or the reingest tombstone would silently delete it with
+            # no replacement
+            unusable = (
+                batch.select(F.col(id_col).alias("doc"))
+                .distinct()
+                .join(sets.select("doc"), "doc", "left_anti")
+                .take(4)
             )
-    g, nonce = bump_gen(spark, base_name)
-    gen = F.lit(g).cast("long")
-    bands_df = band_table(
-        minhash_signatures(sets, num_hashes=meta.num_hashes),
-        meta.bands,
-        meta.num_hashes // meta.bands,
-    ).select(F.col("doc").alias("corpus_id"), "band", "bhash", gen.alias("gen"))
-    write_bucketed(
-        bands_df,
-        f"{base_name}_bands",
-        ["band", "bhash"],
-        buckets=table_buckets(spark, f"{base_name}_bands"),
-        mode="append",
+            if unusable:
+                _release_caches("minhash_index_append")
+                raise ValueError(
+                    "reingest batch contains docs whose text yields no "
+                    f"shingles (e.g. {[r.doc for r in unusable]}): refusing "
+                    "a silent delete — pre-filter them, or delete "
+                    "explicitly via bucketing.add_tombstones"
+                )
+        bands_df = band_table(
+            minhash_signatures(sets, num_hashes=meta.num_hashes),
+            meta.bands,
+            meta.num_hashes // meta.bands,
+        ).select(F.col("doc").alias("corpus_id"), "band", "bhash")
+        return [bands_df, sets]
+
+    staged_append(
+        spark, base_name, MINHASH_TABLES, rows,
+        reingest=(batch, id_col) if reingest else None,
     )
-    write_bucketed(
-        sets.withColumn("gen", gen),
-        f"{base_name}_shingles",
-        "doc",
-        buckets=table_buckets(spark, f"{base_name}_shingles"),
-        mode="append",
-    )
-    if reingest:
-        # tombstone AFTER the new rows land, stamped one generation
-        # below them (kills every older row, keeps this append): a
-        # crash before this line leaves visible duplicates — the
-        # documented plain-INSERT state, repaired by retrying — where
-        # tombstone-first left the ids silently DELETED (r12 review)
-        add_tombstones(
-            spark, base_name, batch.select(id_col).distinct(), id_col,
-            at_gen=g - 1,
-        )
-    # single-writer contract check LAST (r13): a rival writer's bump
-    # during this append is detected while the batch is still known —
-    # and a blue/green flip that raced the append is detected the same
-    # way (the writes landed on the retired base)
-    verify_sole_writer(spark, base_name, g, nonce)
-    verify_still_serving(spark, orig_name, base_name)
     _release_caches("minhash_index_append")
 
 
@@ -762,9 +720,7 @@ def compact_minhash_index(spark, base_name: str) -> None:
     from ..bucketing import compact_index_tables, resolve_index_base
 
     compact_index_tables(
-        spark,
-        resolve_index_base(spark, base_name),
-        [("bands", ["band", "bhash"], "corpus_id"), ("shingles", "doc", "doc")],
+        spark, resolve_index_base(spark, base_name), MINHASH_TABLES
     )
 
 
@@ -1414,37 +1370,17 @@ def write_hamming_index(
       band values are only comparable under identical banding.
 
     Rows carry a generation stamp; the write is staged crash-safe
-    under ``__rewrite`` temp names and swapped in meta-first/meta-last
-    (r13, ADVICE r12 — see `write_minhash_index`): a crash leaves the
-    old index intact (tombstones included) or fails loudly, never a
-    silent mix. See `bucketing.add_tombstones` (r12)."""
-    from ..bucketing import (
-        begin_index_rewrite,
-        finish_index_rewrite,
-        resolve_index_base,
-        verify_still_serving,
-        write_bucketed,
-    )
+    through `bucketing.staged_rewrite`. See `bucketing.add_tombstones`
+    (r12)."""
+    from ..bucketing import staged_rewrite
 
     _check_hamming_params(0, bands)
     spark = sig.sparkSession
-    orig_name = base_name
-    base_name = resolve_index_base(spark, base_name)
-    tables = [f"{base_name}_meta", f"{base_name}_hbands"]
-    g, nonce = begin_index_rewrite(spark, base_name, tables)
-    write_bucketed(
-        _banded_sig(sig, bands).withColumn("gen", F.lit(g).cast("long")),
-        f"{base_name}_hbands__rewrite",
-        ["band", "bval"],
-        buckets=buckets,
+    staged_rewrite(
+        spark, base_name, HAMMING_TABLES, [_banded_sig(sig, bands)],
+        lambda g: spark.createDataFrame([(bands,)], "bands int"),
+        buckets,
     )
-    spark.createDataFrame(
-        [(bands,)], "bands int"
-    ).write.mode("overwrite").format("parquet").saveAsTable(
-        f"{base_name}_meta__rewrite"
-    )
-    finish_index_rewrite(spark, base_name, tables, g, nonce)
-    verify_still_serving(spark, orig_name, base_name)
 
 
 def append_to_hamming_index(
@@ -1464,45 +1400,25 @@ def append_to_hamming_index(
     batch raises before anything is written (its banded rows could
     never match a probe: the tombstone would be a silent delete,
     ADVICE r12)."""
-    from ..bucketing import (
-        add_tombstones,
-        bump_gen,
-        resolve_index_base,
-        table_buckets,
-        verify_sole_writer,
-        verify_still_serving,
-        write_bucketed,
-    )
+    from ..bucketing import staged_append
 
     spark = batch_sig.sparkSession
-    orig_name = base_name
-    base_name = resolve_index_base(spark, base_name)
-    meta = spark.table(f"{base_name}_meta").collect()[0]
-    if reingest and batch_sig.filter(F.col("sig").isNull()).take(1):
-        raise ValueError(
-            "reingest batch contains NULL signatures (their banded rows "
-            "can never match a probe): refusing a silent delete — "
-            "pre-filter them, or delete explicitly via "
-            "bucketing.add_tombstones"
-        )
-    g, nonce = bump_gen(spark, base_name)
-    write_bucketed(
-        _banded_sig(batch_sig, meta.bands).withColumn(
-            "gen", F.lit(g).cast("long")
-        ),
-        f"{base_name}_hbands",
-        ["band", "bval"],
-        buckets=table_buckets(spark, f"{base_name}_hbands"),
-        mode="append",
+
+    def rows(base_name):
+        meta = spark.table(f"{base_name}_meta").collect()[0]
+        if reingest and batch_sig.filter(F.col("sig").isNull()).take(1):
+            raise ValueError(
+                "reingest batch contains NULL signatures (their banded "
+                "rows can never match a probe): refusing a silent delete "
+                "— pre-filter them, or delete explicitly via "
+                "bucketing.add_tombstones"
+            )
+        return [_banded_sig(batch_sig, meta.bands)]
+
+    staged_append(
+        spark, base_name, HAMMING_TABLES, rows,
+        reingest=(batch_sig, "doc") if reingest else None,
     )
-    if reingest:
-        # append-then-tombstone at g-1: see append_to_minhash_index
-        add_tombstones(
-            spark, base_name, batch_sig.select("doc").distinct(), "doc",
-            at_gen=g - 1,
-        )
-    verify_sole_writer(spark, base_name, g, nonce)
-    verify_still_serving(spark, orig_name, base_name)
 
 
 def hamming_near_pairs_from_index(
@@ -1606,9 +1522,7 @@ def compact_hamming_index(spark, base_name: str) -> None:
     from ..bucketing import compact_index_tables, resolve_index_base
 
     compact_index_tables(
-        spark,
-        resolve_index_base(spark, base_name),
-        [("hbands", ["band", "bval"], "doc")],
+        spark, resolve_index_base(spark, base_name), HAMMING_TABLES
     )
 
 
@@ -2204,11 +2118,9 @@ def write_labels(
     recompute. Labels are tiny next to the corpus (two ints per
     document), so the daily refresh is an honest FULL rewrite of
     yesterday's output through the SAME crash-safe staging as the
-    index families (`bucketing.begin/finish_index_rewrite`: temp
-    names, meta-first/meta-last swap, loud mid-swap, roll-back
-    recovery, writer nonce) — and the same blue/green serving
-    pointers resolve here too, so a labels table can rotate without
-    downtime.
+    index families (`bucketing.staged_rewrite`) — and the same
+    blue/green serving pointers resolve here too, so a labels table
+    can rotate without downtime.
 
     Writes ``{base}_labels`` bucketed on ``node`` (downstream joins on
     node — e.g. the final rewrite inside `absorb_edges` — meet the
@@ -2221,34 +2133,14 @@ def write_labels(
     (`evict_nodes`) and write the result back — or, since r14, both
     arrows run ∝-touched via `append_labels`/`evict_labels` with this
     full rewrite demoted to periodic compaction (`compact_labels`)."""
-    from ..bucketing import (
-        begin_index_rewrite,
-        finish_index_rewrite,
-        resolve_index_base,
-        verify_still_serving,
-        write_bucketed,
-    )
+    from ..bucketing import staged_rewrite
 
     spark = labels.sparkSession
-    orig_name = base_name
-    base_name = resolve_index_base(spark, base_name)
-    tables = [f"{base_name}_meta", f"{base_name}_labels"]
-    g, nonce = begin_index_rewrite(spark, base_name, tables)
-    write_bucketed(
-        labels.select("node", "rep").withColumn(
-            "gen", F.lit(g).cast("long")
-        ),
-        f"{base_name}_labels__rewrite",
-        "node",
-        buckets=buckets,
+    staged_rewrite(
+        spark, base_name, LABELS_TABLES, [labels.select("node", "rep")],
+        lambda g: spark.createDataFrame([(g,)], "written_gen long"),
+        buckets,
     )
-    spark.createDataFrame(
-        [(g,)], "written_gen long"
-    ).write.mode("overwrite").format("parquet").saveAsTable(
-        f"{base_name}_meta__rewrite"
-    )
-    finish_index_rewrite(spark, base_name, tables, g, nonce)
-    verify_still_serving(spark, orig_name, base_name)
 
 
 def read_labels(spark, base_name: str) -> DataFrame:
@@ -2322,54 +2214,34 @@ def append_labels(delta: DataFrame, base_name: str) -> None:
     caller error (absorb/evict deltas are one-row-per-node by
     construction) — within one append the gen tie would make
     latest-wins nondeterministic, so it raises."""
-    from ..bucketing import (
-        bump_gen,
-        resolve_index_base,
-        table_buckets,
-        verify_sole_writer,
-        verify_still_serving,
-        write_bucketed,
-    )
+    from ..bucketing import staged_append
 
     spark = delta.sparkSession
-    orig_name = base_name
-    base_name = resolve_index_base(spark, base_name)
-    if not spark.catalog.tableExists(f"{base_name}_meta"):
-        raise IllegalStateError(
-            f"{base_name} has no meta table in this session's catalog — "
-            "write the standing labels first (write_labels); refusing to "
-            "append a delta nothing serves."
-        )
-    if "gen" not in spark.table(f"{base_name}_labels").columns:
-        raise IllegalStateError(
-            f"{base_name}_labels predates gen-stamped labels (pre-r14 "
-            "layout): run one full write_labels rewrite first, then "
-            "deltas can overlay it."
-        )
-    # pin the delta BEFORE touching the table: its plan almost always
-    # reads the standing labels (absorb/evict deltas do), and it is
-    # read twice below (dup guard + write) — one delta-sized
-    # materialization instead of two corpus-side scans, and no
-    # read-while-appending on {base}_labels
-    delta = _checkpoint_adaptive(delta.select("node", "rep"))
-    dup = delta.groupBy("node").count().filter(F.col("count") > 1).take(1)
-    if dup:
-        raise IllegalStateError(
-            f"label delta carries node {dup[0]['node']} more than once — "
-            "same-gen rows would make the latest-wins read "
-            "nondeterministic; absorb/evict deltas are one-row-per-node, "
-            "pre-aggregate a hand-built delta."
-        )
-    g, nonce = bump_gen(spark, base_name)
-    write_bucketed(
-        delta.withColumn("gen", F.lit(g).cast("long")),
-        f"{base_name}_labels",
-        "node",
-        buckets=table_buckets(spark, f"{base_name}_labels"),
-        mode="append",
-    )
-    verify_sole_writer(spark, base_name, g, nonce)
-    verify_still_serving(spark, orig_name, base_name)
+
+    def rows(base_name):
+        if "gen" not in spark.table(f"{base_name}_labels").columns:
+            raise IllegalStateError(
+                f"{base_name}_labels predates gen-stamped labels (pre-r14 "
+                "layout): run one full write_labels rewrite first, then "
+                "deltas can overlay it."
+            )
+        # pin the delta BEFORE touching the table: its plan almost
+        # always reads the standing labels (absorb/evict deltas do), and
+        # it is read twice below (dup guard + write) — one delta-sized
+        # materialization instead of two corpus-side scans, and no
+        # read-while-appending on {base}_labels
+        pinned = _checkpoint_adaptive(delta.select("node", "rep"))
+        dup = pinned.groupBy("node").count().filter(F.col("count") > 1).take(1)
+        if dup:
+            raise IllegalStateError(
+                f"label delta carries node {dup[0]['node']} more than once "
+                "— same-gen rows would make the latest-wins read "
+                "nondeterministic; absorb/evict deltas are one-row-per-node, "
+                "pre-aggregate a hand-built delta."
+            )
+        return [pinned]
+
+    staged_append(spark, base_name, LABELS_TABLES, rows)
 
 
 def evict_labels(
@@ -2487,38 +2359,16 @@ def write_edge_ledger(
     rebuild). ``edges`` must carry ``a_id``/``b_id`` columns; rows are
     stamped at the write generation and written through the same
     crash-safe staging as the index families and the labels
-    (`bucketing.begin/finish_index_rewrite`: temp names,
-    meta-first/meta-last swap, loud mid-swap, rollback recovery,
-    writer nonce) — and the blue/green serving pointers resolve here
-    too."""
-    from ..bucketing import (
-        begin_index_rewrite,
-        finish_index_rewrite,
-        resolve_index_base,
-        verify_still_serving,
-        write_bucketed,
-    )
+    (`bucketing.staged_rewrite`) — and the blue/green serving pointers
+    resolve here too."""
+    from ..bucketing import staged_rewrite
 
     spark = edges.sparkSession
-    orig_name = base_name
-    base_name = resolve_index_base(spark, base_name)
-    tables = [f"{base_name}_meta", f"{base_name}_edges"]
-    g, nonce = begin_index_rewrite(spark, base_name, tables)
-    write_bucketed(
-        edges.select(
-            "a_id", "b_id", F.lit(g).cast("long").alias("gen")
-        ),
-        f"{base_name}_edges__rewrite",
-        "a_id",
-        buckets=buckets,
+    staged_rewrite(
+        spark, base_name, LEDGER_TABLES, [edges.select("a_id", "b_id")],
+        lambda g: spark.createDataFrame([(g,)], "written_gen long"),
+        buckets,
     )
-    spark.createDataFrame(
-        [(g,)], "written_gen long"
-    ).write.mode("overwrite").format("parquet").saveAsTable(
-        f"{base_name}_meta__rewrite"
-    )
-    finish_index_rewrite(spark, base_name, tables, g, nonce)
-    verify_still_serving(spark, orig_name, base_name)
 
 
 def append_edge_ledger(new_edges: DataFrame, base_name: str) -> None:
@@ -2528,38 +2378,12 @@ def append_edge_ledger(new_edges: DataFrame, base_name: str) -> None:
     tests/test_index_append.py's discipline). Same single-writer nonce
     check and serving-pointer re-verification as the index
     appenders."""
-    from ..bucketing import (
-        bump_gen,
-        resolve_index_base,
-        table_buckets,
-        verify_sole_writer,
-        verify_still_serving,
-        write_bucketed,
-    )
+    from ..bucketing import staged_append
 
-    spark = new_edges.sparkSession
-    orig_name = base_name
-    base_name = resolve_index_base(spark, base_name)
-    if not spark.catalog.tableExists(f"{base_name}_meta"):
-        from ..errors import IllegalStateError
-
-        raise IllegalStateError(
-            f"{base_name} has no meta table — write_edge_ledger first "
-            "(an append into a nonexistent ledger would create an "
-            "unstamped, recovery-less table set)."
-        )
-    g, nonce = bump_gen(spark, base_name)
-    write_bucketed(
-        new_edges.select(
-            "a_id", "b_id", F.lit(g).cast("long").alias("gen")
-        ),
-        f"{base_name}_edges",
-        "a_id",
-        buckets=table_buckets(spark, f"{base_name}_edges"),
-        mode="append",
+    staged_append(
+        new_edges.sparkSession, base_name, LEDGER_TABLES,
+        lambda _base: [new_edges.select("a_id", "b_id")],
     )
-    verify_sole_writer(spark, base_name, g, nonce)
-    verify_still_serving(spark, orig_name, base_name)
 
 
 def read_edge_ledger(spark, base_name: str) -> DataFrame:
@@ -2604,9 +2428,8 @@ def compact_edge_ledger(spark, base_name: str) -> None:
     the index families, then the tombstones are cleared."""
     from ..bucketing import compact_index_tables, resolve_index_base
 
-    base_name = resolve_index_base(spark, base_name)
     compact_index_tables(
-        spark, base_name, [("edges", "a_id", ["a_id", "b_id"])]
+        spark, resolve_index_base(spark, base_name), LEDGER_TABLES
     )
 
 

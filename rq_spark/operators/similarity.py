@@ -1355,6 +1355,15 @@ def ivfpq_topk_join(
     return _topk_per_query(scored, k)
 
 
+# the IVFPQ index's bucketed tables as (suffix, bucket key, purge id)
+# — see `operators/dedup.py`'s family declarations; the trained model
+# rides in the plain ``centroids``/``codebooks`` side tables
+ANN_TABLES = [
+    ("codes", "cell", "neighbor_id"),
+    ("vectors", "neighbor_id", "neighbor_id"),
+]
+
+
 def write_ann_index(
     corpus: DataFrame,
     base_name: str,
@@ -1403,18 +1412,10 @@ def write_ann_index(
     yardstick `append_to_ann_index`'s parity test is pinned against).
 
     Rows carry a generation stamp; the write is staged crash-safe
-    under ``__rewrite`` temp names and swapped in meta-first/meta-last
-    (r13, ADVICE r12 — see `operators/dedup.py:write_minhash_index`):
-    a crash leaves the old index — data, MODEL tables, tombstones —
-    intact, or fails loudly; probes can never mix new codes with old
-    codebooks."""
-    from ..bucketing import (
-        begin_index_rewrite,
-        finish_index_rewrite,
-        resolve_index_base,
-        verify_still_serving,
-        write_bucketed,
-    )
+    through `bucketing.staged_rewrite`: a crash leaves the old index —
+    data, MODEL tables, tombstones — intact, or fails loudly; probes
+    can never mix new codes with old codebooks."""
+    from ..bucketing import staged_rewrite
 
     if pretrained is not None:
         cents, cb = pretrained
@@ -1428,60 +1429,53 @@ def write_ann_index(
             id_col=id_col, vec_col=vec_col,
         )
     spark = corpus.sparkSession
-    orig_name = base_name
-    base_name = resolve_index_base(spark, base_name)
-    tables = [
-        f"{base_name}_meta",
-        f"{base_name}_codes",
-        f"{base_name}_vectors",
-        f"{base_name}_centroids",
-        f"{base_name}_codebooks",
-    ]
-    g, nonce = begin_index_rewrite(spark, base_name, tables)
-    v = corpus.filter(_nonzero_vec(vec_col))
-    geng = F.lit(g).cast("long")
-    coded = v.select(
-        F.col(id_col).alias("neighbor_id"),
-        ivf_assign_udf(cents)(F.col(vec_col)).alias("cell"),
-        pq_encode_udf(cb)(F.col(vec_col)).alias("codes"),
-        geng.alias("gen"),
+    mm, trained_codes, dsub = cb.shape
+    staged_rewrite(
+        spark, base_name, ANN_TABLES,
+        _ann_rows(corpus, cents, cb, id_col, vec_col),
+        lambda g: spark.createDataFrame(
+            [(len(cents), mm, trained_codes, mm * dsub, dsub)],
+            "n_centroids int, m int, n_codes int, dim int, dsub int",
+        ),
+        buckets,
+        side={
+            "centroids": spark.createDataFrame(
+                [
+                    (int(i), [float(x) for x in row])
+                    for i, row in enumerate(cents)
+                ],
+                "cell int, centroid array<double>",
+            ),
+            "codebooks": spark.createDataFrame(
+                [
+                    (int(sub), int(code), [float(x) for x in cb[sub, code]])
+                    for sub in range(mm)
+                    for code in range(trained_codes)
+                ],
+                "sub int, code int, centroid array<double>",
+            ),
+        },
     )
-    write_bucketed(coded, f"{base_name}_codes__rewrite", "cell", buckets=buckets)
-    write_bucketed(
+
+
+def _ann_rows(
+    vecs: DataFrame, cents: np.ndarray, cb: np.ndarray, id_col: str, vec_col: str
+) -> list[DataFrame]:
+    """The rows of `ANN_TABLES` for ``vecs`` under a trained model:
+    (neighbor_id, cell, codes) and (neighbor_id, c_vec), zero-norm and
+    NULL-element vectors dropped — shared by the full write and the
+    append, so appended rows equal a rewrite's."""
+    v = vecs.filter(_nonzero_vec(vec_col))
+    return [
         v.select(
             F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            geng.alias("gen"),
+            ivf_assign_udf(cents)(F.col(vec_col)).alias("cell"),
+            pq_encode_udf(cb)(F.col(vec_col)).alias("codes"),
         ),
-        f"{base_name}_vectors__rewrite",
-        "neighbor_id",
-        buckets=buckets,
-    )
-    spark.createDataFrame(
-        [(int(i), [float(x) for x in row]) for i, row in enumerate(cents)],
-        "cell int, centroid array<double>",
-    ).write.mode("overwrite").format("parquet").saveAsTable(
-        f"{base_name}_centroids__rewrite"
-    )
-    mm, trained_codes, dsub = cb.shape
-    spark.createDataFrame(
-        [
-            (int(sub), int(code), [float(x) for x in cb[sub, code]])
-            for sub in range(mm)
-            for code in range(trained_codes)
-        ],
-        "sub int, code int, centroid array<double>",
-    ).write.mode("overwrite").format("parquet").saveAsTable(
-        f"{base_name}_codebooks__rewrite"
-    )
-    spark.createDataFrame(
-        [(len(cents), mm, trained_codes, mm * dsub, dsub)],
-        "n_centroids int, m int, n_codes int, dim int, dsub int",
-    ).write.mode("overwrite").format("parquet").saveAsTable(
-        f"{base_name}_meta__rewrite"
-    )
-    finish_index_rewrite(spark, base_name, tables, g, nonce)
-    verify_still_serving(spark, orig_name, base_name)
+        v.select(
+            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+        ),
+    ]
 
 
 def append_to_ann_index(
@@ -1515,9 +1509,10 @@ def append_to_ann_index(
     two bucketed writes. Plain append is INSERT: re-appending an
     indexed vec_id duplicates its codes/vector rows. ``reingest=True``
     (r12, r11 verdict task #2) is the upsert path for re-embedded
-    documents: the batch ids are tombstoned first, the batch appended
-    one generation later — probes immediately see only the new
-    vectors, the dead rows are purged at the next `compact_ann_index`.
+    documents: the batch is appended, then its ids are tombstoned one
+    generation below it (`bucketing.staged_append`) — probes
+    immediately see only the new vectors, the dead rows are purged at
+    the next `compact_ann_index`.
     Deletions without replacement go through
     `bucketing.add_tombstones`. Model-drift policy is the caller's: a
     shifted embedding distribution under the pinned model degrades
@@ -1528,65 +1523,29 @@ def append_to_ann_index(
     zero-norm / NULL-element embedding raises BEFORE anything is
     written (ADVICE r12: the intake filter would drop its rows while
     the tombstone killed the standing ones — a silent delete)."""
-    from ..bucketing import (
-        add_tombstones,
-        bump_gen,
-        resolve_index_base,
-        table_buckets,
-        verify_sole_writer,
-        verify_still_serving,
-        write_bucketed,
-    )
+    from ..bucketing import staged_append
 
     spark = batch.sparkSession
-    orig_name = base_name
-    base_name = resolve_index_base(spark, base_name)
-    _meta, cents, cb = _read_ann_model(spark, base_name)
-    if reingest:
-        unusable = batch.filter(~_nonzero_vec(vec_col)).select(id_col).take(4)
-        if unusable:
-            raise ValueError(
-                "reingest batch contains zero-norm/NULL embeddings (e.g. "
-                f"{[r[0] for r in unusable]}): refusing a silent delete — "
-                "pre-filter them, or delete explicitly via "
-                "bucketing.add_tombstones"
+
+    def rows(base_name):
+        _meta, cents, cb = _read_ann_model(spark, base_name)
+        if reingest:
+            unusable = (
+                batch.filter(~_nonzero_vec(vec_col)).select(id_col).take(4)
             )
-    g, nonce = bump_gen(spark, base_name)
-    gen = F.lit(g).cast("long")
-    v = batch.filter(_nonzero_vec(vec_col))
-    coded = v.select(
-        F.col(id_col).alias("neighbor_id"),
-        ivf_assign_udf(cents)(F.col(vec_col)).alias("cell"),
-        pq_encode_udf(cb)(F.col(vec_col)).alias("codes"),
-        gen.alias("gen"),
+            if unusable:
+                raise ValueError(
+                    "reingest batch contains zero-norm/NULL embeddings (e.g. "
+                    f"{[r[0] for r in unusable]}): refusing a silent delete — "
+                    "pre-filter them, or delete explicitly via "
+                    "bucketing.add_tombstones"
+                )
+        return _ann_rows(batch, cents, cb, id_col, vec_col)
+
+    staged_append(
+        spark, base_name, ANN_TABLES, rows,
+        reingest=(batch, id_col) if reingest else None,
     )
-    write_bucketed(
-        coded,
-        f"{base_name}_codes",
-        "cell",
-        buckets=table_buckets(spark, f"{base_name}_codes"),
-        mode="append",
-    )
-    write_bucketed(
-        v.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("c_vec"),
-            gen.alias("gen"),
-        ),
-        f"{base_name}_vectors",
-        "neighbor_id",
-        buckets=table_buckets(spark, f"{base_name}_vectors"),
-        mode="append",
-    )
-    if reingest:
-        # append-then-tombstone at g-1: see
-        # operators/dedup.py:append_to_minhash_index (r12 review)
-        add_tombstones(
-            spark, base_name, batch.select(id_col).distinct(), id_col,
-            at_gen=g - 1,
-        )
-    verify_sole_writer(spark, base_name, g, nonce)
-    verify_still_serving(spark, orig_name, base_name)
 
 
 def compact_ann_index(spark, base_name: str) -> None:
@@ -1597,9 +1556,7 @@ def compact_ann_index(spark, base_name: str) -> None:
     from ..bucketing import compact_index_tables, resolve_index_base
 
     compact_index_tables(
-        spark,
-        resolve_index_base(spark, base_name),
-        [("codes", "cell", "neighbor_id"), ("vectors", "neighbor_id", "neighbor_id")],
+        spark, resolve_index_base(spark, base_name), ANN_TABLES
     )
 
 

@@ -53,9 +53,9 @@ def get_spark(app_name: str = "rq_spark", cpus: int | None = None) -> SparkSessi
     """Build the engine's own session (tests, bench, CLI).
 
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default: all).
-    Shuffle partitions ~ cores: at 100 TB this knob is replaced by AQE
-    target sizes; locally 200 default partitions just add scheduling
-    overhead.
+    Shuffle partitions come from RUNTIME_CONFS (32, whatever the core
+    count): at 100 TB this knob is replaced by AQE target sizes; locally
+    200 default partitions just add scheduling overhead.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -63,17 +63,12 @@ def get_spark(app_name: str = "rq_spark", cpus: int | None = None) -> SparkSessi
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     builder = (
-        builder.config("spark.sql.shuffle.partitions", str(max(cpus, 4)))
         # local-harness split sizing: test-scale tables are single
         # ~50 MB parquet files, which the 128 MB default scans as 2-3
         # partitions — starving a 32-core box at the SCAN stage
         # (measured 15-25% on scan-bound keys). At cluster scale the
-        # default is right (files are many and large); override via
-        # SPARK_GRAFT_MAX_PARTITION_BYTES.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"),
-        )
+        # default is right (files are many and large).
+        builder.config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

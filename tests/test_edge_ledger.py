@@ -31,6 +31,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rq_spark.operators import dedup as D
+from rq_spark.operators import similarity as S
 
 _LEDGER_TABLES = ("edges", "meta", "state", "tombstones")
 
@@ -155,17 +156,27 @@ def test_restart_shaped_takedown_from_persisted_state(spark):
 def test_edge_ledger_append_cost_is_batch_proportional():
     """Source-level (the test_index_append.py discipline): the
     appender never reads the standing edges — no `spark.table` call at
-    all (bucket count comes from catalog metadata via table_buckets),
-    no collect, exactly one append-mode write."""
+    all, in it or in the shared `bucketing.staged_append` it writes
+    through (bucket count comes from catalog metadata via
+    table_buckets), no collect, and exactly one append-mode write: the
+    shared appender's one per declared table, and the ledger declares
+    one."""
+    from rq_spark import bucketing as B
+
     src = inspect.getsource(D.append_edge_ledger)
-    assert "spark.table(" not in src
-    assert re.findall(r'mode="append"', src) == ['mode="append"']
-    calls = [
-        n.func.attr
-        for n in ast.walk(ast.parse(src))
-        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
-    ]
-    assert "collect" not in calls
+    src_shared = inspect.getsource(B.staged_append)
+    for code in (src, src_shared):
+        assert "spark.table(" not in code
+        calls = [
+            n.func.attr
+            for n in ast.walk(ast.parse(code))
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+        ]
+        assert "collect" not in calls
+    assert "mode=" not in src and "write_bucketed" not in src
+    assert re.findall(r'mode="append"', src_shared) == ['mode="append"']
+    assert "staged_append(" in src and "LEDGER_TABLES" in src
+    assert [t[0] for t in D.LEDGER_TABLES] == ["edges"]
 
 
 def test_edge_ledger_write_crash_safety(spark, monkeypatch):
@@ -220,12 +231,44 @@ def test_edge_ledger_write_crash_safety(spark, monkeypatch):
         _drop(spark, base)
 
 
-def test_edge_ledger_append_requires_existing_ledger(spark):
-    """Same fail-loud discipline as add_tombstones (ADVICE r13): an
-    append into a never-written ledger raises instead of creating an
-    unstamped table set."""
+_APPENDERS = {
+    "minhash": lambda spark, base: D.append_to_minhash_index(
+        spark.createDataFrame(
+            [(1, "one two three four")], "id long, text string"
+        ),
+        "text", "id", base,
+    ),
+    "hamming": lambda spark, base: D.append_to_hamming_index(
+        spark.createDataFrame([(1, 7)], "doc long, sig long"), base
+    ),
+    "ann": lambda spark, base: S.append_to_ann_index(
+        spark.createDataFrame(
+            [(1, [1.0, 2.0])], "vec_id long, embedding array<double>"
+        ),
+        base,
+    ),
+    "labels": lambda spark, base: D.append_labels(
+        spark.createDataFrame([(1, 1)], "node long, rep long"), base
+    ),
+    "ledger": lambda spark, base: D.append_edge_ledger(
+        _edf(spark, [(1, 2)]), base
+    ),
+}
+
+
+@pytest.mark.parametrize("family", list(_APPENDERS))
+def test_edge_ledger_append_requires_existing_ledger(spark, family):
+    """Same fail-loud discipline as add_tombstones (ADVICE r13), for
+    every persisted family's appender: an append into a never-written
+    base raises the named error before anything is read or written,
+    instead of creating an unstamped table set."""
     from rq_spark.errors import IllegalStateError
 
+    base = f"t_nowhere_{family}"
     with pytest.raises(IllegalStateError, match="no meta table"):
-        D.append_edge_ledger(_edf(spark, [(1, 2)]), "t_ledger_nowhere")
-    assert not spark.catalog.tableExists("t_ledger_nowhere_edges")
+        _APPENDERS[family](spark, base)
+    assert not [
+        t.name
+        for t in spark.catalog.listTables()
+        if t.name.startswith(f"{base}_")
+    ]

@@ -439,29 +439,62 @@ def test_index_degenerate_inputs(spark):
         _drop(spark, base, ann_tables)
 
 
+def _attr_calls(src: str) -> list[str]:
+    return [
+        n.func.attr
+        for n in ast.walk(ast.parse(src))
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+    ]
+
+
 def test_append_cost_is_batch_proportional_by_construction():
     """The appenders must never touch a corpus-sized relation: no
     trainer calls, no corpus-table reads. Pinned at the source level
-    (the same discipline as the r10 probe-source assertions)."""
+    (the same discipline as the r10 probe-source assertions), over the
+    shared `bucketing.staged_append` every appender writes through plus
+    each family's own function."""
+    from rq_spark import bucketing as B
+
+    # the shared appender reads no table and collects nothing; it
+    # writes once per declared table, in append mode
+    src_shared = inspect.getsource(B.staged_append)
+    assert "spark.table(" not in src_shared
+    assert "collect" not in _attr_calls(src_shared)
+    assert src_shared.count('mode="append"') == 1
+    assert "for (suffix, key, _), df in zip(tables, batch" in src_shared
+
     src_mh = inspect.getsource(D.append_to_minhash_index)
     # the ONLY spark.table read is the one-row meta
     reads = re.findall(r"spark\.table\(f?\"([^\"]+)\"\)", src_mh)
     assert reads == ['{base_name}_meta'], reads
-    # bands/shingles appear only as write targets (append mode)
-    assert src_mh.count('mode="append",') == 2
+    # bands/shingles appear only as append targets, through the
+    # declaration: the family itself writes nothing
+    assert "staged_append(" in src_mh and "MINHASH_TABLES" in src_mh
+    assert [t[0] for t in D.MINHASH_TABLES] == ["bands", "shingles"]
+    assert "write_bucketed" not in src_mh and "mode=" not in src_mh
+
+    src_hm = inspect.getsource(D.append_to_hamming_index)
+    reads = re.findall(r"spark\.table\(f?\"([^\"]+)\"\)", src_hm)
+    assert reads == ['{base_name}_meta'], reads
+    assert src_hm.count(".collect()") == 1
+    assert "staged_append(" in src_hm and "HAMMING_TABLES" in src_hm
+    assert [t[0] for t in D.HAMMING_TABLES] == ["hbands"]
+    assert "write_bucketed" not in src_hm and "mode=" not in src_hm
 
     src_ann = inspect.getsource(S.append_to_ann_index)
     assert "ivf_centroids" not in src_ann and "pq_codebooks" not in src_ann
     # model load lives in _read_ann_model (model-sized collects only);
     # the appender itself reads no table and collects nothing
     assert "spark.table(" not in src_ann
-    calls = [
-        n.func.attr
-        for n in ast.walk(ast.parse(src_ann))
-        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
-    ]
-    assert "collect" not in calls
+    assert "collect" not in _attr_calls(src_ann)
     # the minhash appender's one collect is the one-row meta read
     # asserted above — nothing else
     assert src_mh.count(".collect()") == 1
-    assert src_ann.count('mode="append",') == 2
+    assert "staged_append(" in src_ann and "ANN_TABLES" in src_ann
+    # its rows come from the encoder the full write shares, which reads
+    # no table and never trains
+    src_rows = inspect.getsource(S._ann_rows)
+    assert "spark.table(" not in src_rows
+    assert "ivf_centroids" not in src_rows and "pq_codebooks" not in src_rows
+    assert [t[0] for t in S.ANN_TABLES] == ["codes", "vectors"]
+    assert "write_bucketed" not in src_ann and "mode=" not in src_ann

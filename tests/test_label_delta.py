@@ -393,16 +393,26 @@ def test_append_labels_cost_is_delta_proportional_by_construction():
     """`append_labels` must never scan a corpus-sized relation: its
     only standing-table touch is the schema-only column check (no
     rows move), the delta is pinned once (localCheckpoint), and the
-    single table write is an append — the same source-level discipline
-    as the index appenders."""
+    single table write is an append — made by the shared
+    `bucketing.staged_append`, which reads no table, collects nothing
+    and writes once per declared table (labels declares one). The
+    same source-level discipline as the index appenders."""
+    from rq_spark import bucketing as B
+
     src = inspect.getsource(D.append_labels)
     reads = re.findall(r"spark\.table\(f?\"([^\"]+)\"\)", src)
     # one spark.table call, immediately .columns (metadata only)
     assert reads == ["{base_name}_labels"], reads
     assert 'spark.table(f"{base_name}_labels").columns' in src
     assert ".collect()" not in src
-    assert src.count('mode="append",') == 1
+    assert "mode=" not in src and "write_bucketed" not in src
+    assert "staged_append(" in src and "LABELS_TABLES" in src
+    assert [t[0] for t in D.LABELS_TABLES] == ["labels"]
     assert "read_labels(" not in src  # never rebuilds the full view
+    src_shared = inspect.getsource(B.staged_append)
+    assert "spark.table(" not in src_shared
+    assert ".collect()" not in src_shared
+    assert src_shared.count('mode="append"') == 1
 
 
 def test_append_labels_through_serving_alias(spark):

@@ -42,11 +42,7 @@ def main() -> None:
         .appName("profile_stages")
         .config("spark.ui.enabled", "true")
         .config("spark.ui.port", "4049")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 4)))
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"),
-        )
+        .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.driver.memory", "8g")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
