@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .errors import IllegalStateError
+from .util import local_frame
 
 
 def write_bucketed(
@@ -259,6 +260,22 @@ def _require_no_orphan_location(spark: SparkSession, table_name: str) -> None:
         )
 
 
+def _require_meta(spark: SparkSession, base_name: str, action: str) -> None:
+    """Fail loudly unless ``base_name`` (already alias-resolved) exists
+    as an index, i.e. has its ``{base}_meta`` table. Without the check
+    a typo'd name, an alias whose ptr table vanished mid-flip (which
+    resolves to the alias itself), or a restarted metastore-less
+    session would let ``action`` create or drop state on tables
+    nothing serves while the real index keeps serving."""
+    if not spark.catalog.tableExists(f"{base_name}_meta"):
+        raise IllegalStateError(
+            f"{base_name} has no meta table in this session's catalog — "
+            f"refusing {action} (typo'd name, an alias whose ptr table "
+            "vanished mid-flip, or a restarted metastore-less session: "
+            "re-check the name or re-register the index's tables first)."
+        )
+
+
 def _read_one_row_table(spark: SparkSession, table_name: str):
     """Read a drop-then-create one-row table FRESH: these tables (gen
     state, applied-epoch markers) are overwritten by whole-table
@@ -338,7 +355,7 @@ def bump_gen(spark: SparkSession, base_name: str) -> tuple[int, int]:
     g = g0 + 1
     nonce = secrets.randbits(62)
     _require_no_orphan_location(spark, f"{base_name}_state")
-    spark.createDataFrame([(g, nonce)], "gen long, nonce long").write.mode(
+    local_frame(spark, [(g, nonce)], "gen long, nonce long").write.mode(
         "overwrite"
     ).format("parquet").saveAsTable(f"{base_name}_state")
     return g, nonce
@@ -395,14 +412,7 @@ def add_tombstones(
     `set_index_pointer`. `retire_index` carries the same guard."""
     orig_name = base_name
     base_name = resolve_index_base(spark, base_name)
-    if not spark.catalog.tableExists(f"{base_name}_meta"):
-        raise IllegalStateError(
-            f"{base_name} has no meta table in this session's catalog — "
-            "refusing to create deletion state for an index nothing "
-            "serves (typo'd base name, an alias whose ptr table vanished "
-            "mid-flip, or a restarted metastore-less session: re-check "
-            "the name or re-register the index's tables first)."
-        )
+    _require_meta(spark, base_name, "to create deletion state for it")
     if at_gen is None:
         g, nonce = bump_gen(spark, base_name)
     else:
@@ -529,11 +539,7 @@ def set_index_pointer(spark: SparkSession, alias: str, base_name: str) -> None:
             f"{base_name} is itself a serving alias — alias chains are "
             "not supported (point at the physical base instead)"
         )
-    if not spark.catalog.tableExists(f"{base_name}_meta"):
-        raise IllegalStateError(
-            f"serving-pointer target {base_name} has no meta table — "
-            "refusing to flip serving to a nonexistent/incomplete index"
-        )
+    _require_meta(spark, base_name, "to flip serving to it")
     for suffix in ("meta", "state"):
         if spark.catalog.tableExists(f"{alias}_{suffix}"):
             raise IllegalStateError(
@@ -543,7 +549,7 @@ def set_index_pointer(spark: SparkSession, alias: str, base_name: str) -> None:
                 "physical tables. Pick a fresh alias name."
             )
     _remove_orphan_location(spark, f"{alias}_ptr")
-    spark.createDataFrame([(base_name,)], "base string").write.mode(
+    local_frame(spark, [(base_name,)], "base string").write.mode(
         "overwrite"
     ).format("parquet").saveAsTable(f"{alias}_ptr")
 
@@ -813,12 +819,7 @@ def staged_append(
     and re-runnable."""
     orig_name = base_name
     base_name = resolve_index_base(spark, base_name)
-    if not spark.catalog.tableExists(f"{base_name}_meta"):
-        raise IllegalStateError(
-            f"{base_name} has no meta table in this session's catalog — "
-            "run the family's full write first; refusing to append into "
-            "a table set nothing serves."
-        )
+    _require_meta(spark, base_name, "to append into it before a full write")
     batch = rows(base_name)
     g, nonce = bump_gen(spark, base_name)
     gen = F.lit(g).cast("long")
@@ -1040,13 +1041,7 @@ def retire_index(
             f"{base_name} is a serving alias — retire the PHYSICAL base "
             "it points at (and drop the ptr table) instead"
         )
-    if not spark.catalog.tableExists(f"{base_name}_meta"):
-        raise IllegalStateError(
-            f"{base_name} has no meta table in this session's catalog — "
-            "refusing a silent no-op retire (typo'd name, or a restarted "
-            "metastore-less session: re-register or clean the warehouse "
-            "directories explicitly)"
-        )
+    _require_meta(spark, base_name, "a silent no-op retire")
     for t in spark.catalog.listTables():
         if not t.name.endswith("_ptr"):
             continue

@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .errors import IllegalStateError
+from .util import local_frame
 
 _TDLOG = "_tdlog"
 
@@ -184,8 +185,8 @@ def _journal_begin(
 
 
 def _journal_done(spark: SparkSession, journal_base: str, td_id: str) -> None:
-    spark.createDataFrame(
-        [(td_id, None, "done")], "td_id string, node long, phase string"
+    local_frame(
+        spark, [(td_id, None, "done")], "td_id string, node long, phase string"
     ).write.mode("append").format("parquet").saveAsTable(
         _journal_table(journal_base)
     )

@@ -90,6 +90,7 @@ def exact_dedup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 from ..errors import IllegalStateError
 from ..util import checkpoint_adaptive as _checkpoint_adaptive
+from ..util import local_frame
 from ..util import persist_tracked as _persist_tracked
 from ..util import release_caches as _release_caches
 from ..util import spread as _spread
@@ -544,8 +545,8 @@ def write_minhash_index(
     ).select(F.col("doc").alias("corpus_id"), "band", "bhash")
     staged_rewrite(
         spark, base_name, MINHASH_TABLES, [bands_df, sets],
-        lambda g: spark.createDataFrame(
-            [(num_hashes, bands, shingle_n)],
+        lambda g: local_frame(
+            spark, [(num_hashes, bands, shingle_n)],
             "num_hashes int, bands int, shingle_n int",
         ),
         buckets,
@@ -1378,7 +1379,7 @@ def write_hamming_index(
     spark = sig.sparkSession
     staged_rewrite(
         spark, base_name, HAMMING_TABLES, [_banded_sig(sig, bands)],
-        lambda g: spark.createDataFrame([(bands,)], "bands int"),
+        lambda g: local_frame(spark, [(bands,)], "bands int"),
         buckets,
     )
 
@@ -1662,13 +1663,17 @@ def _absorb_small_batch(
 ) -> DataFrame:
     """absorb_edges' FULL-driver tier (r12): the batch's edges and
     no-edge nodes fit on the driver (gated by ``small_batch_max`` —
-    the daily-ingest case), so the whole absorb needs ONE bounded
-    distributed job — look up the standing reps of the batch's
-    endpoints (labels scanned map-side against the broadcast
-    endpoint set, output ≤ |endpoints| rows) — plus the final lazy
-    label rewrite. Everything in between (fresh-node discovery, the
-    rep-space contraction, min-label union-find) is driver arithmetic
-    over batch-sized lists. vs the distributed shape this removes the
+    the daily-ingest case), so the absorb's distributed work is ONE
+    bounded lookup — the standing reps of the batch's endpoints
+    (labels scanned map-side against the broadcast endpoint set,
+    output ≤ |endpoints| rows), which Spark runs as TWO jobs: the
+    broadcast build of the endpoint relation, then the scan — plus
+    the final lazy label rewrite, whose broadcast remap costs one
+    more job when the caller acts. Every driver-built relation here
+    is a `local_frame`, so none of these jobs starts a Python worker.
+    Everything in between (fresh-node discovery, the rep-space
+    contraction, min-label union-find) is driver arithmetic over
+    batch-sized lists. vs the distributed shape this removes the
     merged-label persist and four broadcast builds per absorb. The
     standing labels are still read TWICE — once by the endpoint-lookup
     collect here, once by the returned plan (ADVICE r12: an earlier
@@ -1685,13 +1690,15 @@ def _absorb_small_batch(
     ends.update(r.node for r in node_rows)
     if not ends:
         if return_delta:
-            return sess.createDataFrame([], schema)
+            return local_frame(sess, [], schema)
         return labels.select("node", "rep")
     ends = sorted(ends, key=lambda x: (x is None, x))
-    ends_df = sess.createDataFrame(
-        [(x,) for x in ends], T.StructType([T.StructField("node", node_type)])
+    ends_df = local_frame(
+        sess, [(x,) for x in ends],
+        T.StructType([T.StructField("node", node_type)]),
     )
-    # the ONE distributed job: standing (node, rep) for batch endpoints
+    # the one distributed lookup (broadcast build + scan): standing
+    # (node, rep) for batch endpoints
     found = labels.join(F.broadcast(ends_df), "node", "left_semi").collect()
     rep = {r.node: r.rep for r in found}
     fresh = [x for x in ends if x not in rep]
@@ -1708,40 +1715,31 @@ def _absorb_small_batch(
     strict_schema = T.StructType(
         [T.StructField("rep", node_type), T.StructField("_srep", node_type)]
     )
+    fresh_rows = [(x, remap.get(rep[x], rep[x])) for x in fresh]
     if return_delta:
         # delta = standing nodes whose rep moved (labels scanned
         # map-side against the broadcast strict remap) ∪ every fresh
         # node with its final rep — fresh nodes are absent from the
         # standing labels, so the join can never produce them
-        out = sess.createDataFrame([], schema)
+        out = local_frame(sess, [], schema)
         if strict:
             out = labels.join(
-                F.broadcast(sess.createDataFrame(
-                    sorted(strict.items()), strict_schema
+                F.broadcast(local_frame(
+                    sess, sorted(strict.items()), strict_schema
                 )),
                 "rep",
             ).select("node", F.col("_srep").alias("rep"))
         if fresh:
-            out = out.unionAll(
-                sess.createDataFrame(
-                    [(x, remap.get(rep[x], rep[x])) for x in fresh], schema
-                )
-            )
+            out = out.unionAll(local_frame(sess, fresh_rows, schema))
         return out
     out = labels.select("node", "rep")
     if remap:
-        remap_df = sess.createDataFrame(
-            sorted(remap.items()), strict_schema
-        )
+        remap_df = local_frame(sess, sorted(remap.items()), strict_schema)
         out = labels.join(F.broadcast(remap_df), "rep", "left").select(
             "node", F.coalesce("_srep", "rep").alias("rep")
         )
     if fresh:
-        out = out.unionAll(
-            sess.createDataFrame(
-                [(x, remap.get(rep[x], rep[x])) for x in fresh], schema
-            )
-        )
+        out = out.unionAll(local_frame(sess, fresh_rows, schema))
     return out
 
 
@@ -1825,12 +1823,13 @@ def absorb_edges(
     in tests/test_graph.py), outermost first:
 
     * ``small_batch_max``: if the batch's edges AND no-edge nodes fit
-      on the driver (take-probed, bounded), the WHOLE absorb is one
-      bounded endpoint-lookup job + driver union-find + one lazy label
-      rewrite — no persist, no broadcast chain; the standing labels
-      are read TWICE (endpoint lookup + the returned plan), so chained
-      daily callers should materialize yesterday's output first — see
-      `_absorb_small_batch` (r13, ADVICE r12). The daily-ingest case.
+      on the driver (take-probed, bounded), the WHOLE absorb is the
+      probes, one bounded endpoint lookup (two jobs: its broadcast
+      build and the labels scan) + driver union-find + one lazy label
+      rewrite — no persist, no broadcast chain, no Python worker; the
+      standing labels are read TWICE (endpoint lookup + the returned
+      plan), so chained daily callers should materialize yesterday's
+      output first — see `_absorb_small_batch` (r13, ADVICE r12). The daily-ingest case.
       Set 0 to disable.
     * ``small_graph_max``: bigger batches whose CONTRACTED graph
       (≤ one edge per distinct-rep batch pair) is still driver-small
@@ -1900,17 +1899,19 @@ def absorb_edges(
     # the ANN sub-10k auto-dispatch), the remap is the identical
     # min-reachable-rep relation (integer union-find is exact and
     # deterministic), and the absorb's distributed work drops to ONE
-    # job (the probe) plus the final lazy rewrite — no checkpoint, no
-    # count, no per-round loop jobs. Parity between the two paths is
-    # pinned in tests/test_graph.py. Above the threshold the probe's
+    # action (the probe: its broadcast builds and take's scale-up
+    # passes are jobs of their own) plus the final lazy rewrite, whose
+    # driver-built remap is a `local_frame` — no checkpoint, no count,
+    # no per-round loop jobs, no Python worker. Parity between the two
+    # paths is pinned in tests/test_graph.py. Above the threshold the probe's
     # one extra batch-sized evaluation is noise next to the CC loop
     # it precedes.
     probe = redges.take(small_graph_max + 1) if small_graph_max > 0 else []
     if small_graph_max > 0 and len(probe) <= small_graph_max:
         remap_map = _minlabel_union_find((r.a_id, r.b_id) for r in probe)
         rep_type = redges.schema["a_id"].dataType
-        remap = new_edges.sparkSession.createDataFrame(
-            sorted(remap_map.items()),
+        remap = local_frame(
+            new_edges.sparkSession, sorted(remap_map.items()),
             T.StructType(
                 [
                     T.StructField("rep", rep_type),
@@ -2070,8 +2071,10 @@ def evict_nodes(
                     T.StructField("rep", node_type),
                 ]
             )
-            fresh = sess.createDataFrame(
-                [(r.node, remap.get(r.node, r.node)) for r in nprobe], schema
+            fresh = local_frame(
+                sess,
+                [(r.node, remap.get(r.node, r.node)) for r in nprobe],
+                schema,
             )
             return _evict_result(
                 kept, fresh, labels, return_delta, broadcast_deletions
@@ -2138,7 +2141,7 @@ def write_labels(
     spark = labels.sparkSession
     staged_rewrite(
         spark, base_name, LABELS_TABLES, [labels.select("node", "rep")],
-        lambda g: spark.createDataFrame([(g,)], "written_gen long"),
+        lambda g: local_frame(spark, [(g,)], "written_gen long"),
         buckets,
     )
 
@@ -2366,7 +2369,7 @@ def write_edge_ledger(
     spark = edges.sparkSession
     staged_rewrite(
         spark, base_name, LEDGER_TABLES, [edges.select("a_id", "b_id")],
-        lambda g: spark.createDataFrame([(g,)], "written_gen long"),
+        lambda g: local_frame(spark, [(g,)], "written_gen long"),
         buckets,
     )
 

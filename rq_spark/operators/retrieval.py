@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..util import local_frame
 from .dedup import NORM_SQL, tokenized
 
 BM25_K1 = 1.2
@@ -147,7 +148,8 @@ def bm25_topk_from_words(
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("dfreq"))
 
-    qterms = spark.createDataFrame(
+    qterms = local_frame(
+        spark,
         [(qi, t) for qi, q in enumerate(queries) for t in tokenize_query(q)],
         "query_id long, term string",
     )

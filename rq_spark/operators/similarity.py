@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..util import local_frame
+
 _LOG = logging.getLogger(__name__)
 
 _DOUBLE_ARR = "array<double>"
@@ -637,7 +639,8 @@ def embedding_near_pairs(
     there the bit-agreement probability 1-θ/π is far from ½ and banding
     drives per-pair miss below 1e-8."""
     spark = corpus.sparkSession
-    cells = spark.createDataFrame(
+    cells = local_frame(
+        spark,
         [
             (i * n_blocks + j, i, j)
             for i in range(n_blocks)
@@ -1076,7 +1079,8 @@ def pq_topk(
         .select("query_id", "neighbor_id")
     )
     c_vec = corpus.filter(_nonzero_vec(vec_col)).select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-    q_vec = corpus.sparkSession.createDataFrame(
+    q_vec = local_frame(
+        corpus.sparkSession,
         [(int(q), [float(x) for x in v]) for q, v in zip(qids, qv)],
         "query_id long, q_vec array<double>",
     )
@@ -1207,7 +1211,8 @@ def ivfpq_topk(
     c_vec = corpus.filter(_nonzero_vec(vec_col)).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
     )
-    q_vec = corpus.sparkSession.createDataFrame(
+    q_vec = local_frame(
+        corpus.sparkSession,
         [(q, [float(x) for x in v]) for q, v in zip(qids, qv)],
         "query_id long, q_vec array<double>",
     )
@@ -1433,20 +1438,22 @@ def write_ann_index(
     staged_rewrite(
         spark, base_name, ANN_TABLES,
         _ann_rows(corpus, cents, cb, id_col, vec_col),
-        lambda g: spark.createDataFrame(
-            [(len(cents), mm, trained_codes, mm * dsub, dsub)],
+        lambda g: local_frame(
+            spark, [(len(cents), mm, trained_codes, mm * dsub, dsub)],
             "n_centroids int, m int, n_codes int, dim int, dsub int",
         ),
         buckets,
         side={
-            "centroids": spark.createDataFrame(
+            "centroids": local_frame(
+                spark,
                 [
                     (int(i), [float(x) for x in row])
                     for i, row in enumerate(cents)
                 ],
                 "cell int, centroid array<double>",
             ),
-            "codebooks": spark.createDataFrame(
+            "codebooks": local_frame(
+                spark,
                 [
                     (int(sub), int(code), [float(x) for x in cb[sub, code]])
                     for sub in range(mm)

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..queries.helpers import DEC, normalize_event_time
 from ..session import apply_runtime_confs
+from ..util import local_frame
 
 _sink_counter = itertools.count()
 
@@ -607,8 +608,8 @@ def _read_applied_epoch(spark, base_name: str, query_name: str) -> int:
 def _write_applied_epoch(
     spark, base_name: str, query_name: str, epoch_id: int
 ) -> None:
-    spark.createDataFrame(
-        [(query_name, int(epoch_id))], "query string, epoch long"
+    local_frame(
+        spark, [(query_name, int(epoch_id))], "query string, epoch long"
     ).write.mode("overwrite").format("parquet").saveAsTable(
         f"{base_name}_applied"
     )

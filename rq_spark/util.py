@@ -2,7 +2,36 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
+
+
+def local_frame(
+    spark: SparkSession, rows: list, schema: str | StructType
+) -> DataFrame:
+    """A DataFrame over driver-built ``rows`` (tuples in ``schema``
+    field order; ``schema`` a DDL string or a StructType) — the ONE
+    way the engine turns Python rows into a relation.
+
+    ``spark.createDataFrame(<list>, ddl)`` goes through ``parallelize``
+    plus an identity ``map`` in PySpark 4.1, so every one-row marker,
+    meta row or driver remap became a Python-worker job (one PythonRDD
+    stage, one task per core). Handing Spark a ``pyarrow.Table``
+    instead makes the JVM decode the batch on the driver into a
+    ``LocalRelation``: no Python worker, and the planner sees the
+    relation's exact size."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    struct = schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
+    table = pa.table(
+        [
+            pa.array([r[i] for r in rows], type=to_arrow_type(f.dataType))
+            for i, f in enumerate(struct.fields)
+        ],
+        names=struct.names,
+    )
+    return spark.createDataFrame(table, schema=struct)
 
 
 # Persisted-DataFrame registry, SCOPED per pipeline. Pipelines that
