@@ -3,8 +3,8 @@ ledger, and the persisted cluster labels (r14, r13 verdict task #2).
 
 A complete takedown of a document set touches up to THREE kinds of
 durable state — every index family serving the docs (tombstones), the
-edge ledger (prune), and the standing cluster labels (evict + rewrite)
-— and before this module it was 4-5 manual calls in a pinned order
+edge ledger (prune), and the standing cluster labels (evict) — and
+before this module it was 4-5 manual calls in a pinned order
 (tests/test_e2e_ingest_loop.py did the ordering by hand). Each
 family's own crash windows are failure-injected, but a crash BETWEEN
 families left a cross-family inconsistency (index says deleted, labels
@@ -23,11 +23,15 @@ window DETECTABLE and the whole composition idempotently RE-RUNNABLE:
        pinned per family by the lifecycle fuzzer).
     3. ledger prune: `operators.dedup.prune_edge_ledger` — same
        tombstone idempotence, applied to both endpoints at read.
-    4. labels: evict over the (now pruned) ledger read and rewrite —
-       `evict_nodes` ignores ids already absent from the labels, and
-       `write_labels` is a full crash-safe staged rewrite whose own
-       mid-swap crash `read_labels` recovers, so a re-run after ANY
-       crash inside this step converges to the same final labels.
+    4. labels: `operators.dedup.evict_labels` over the (now pruned)
+       ledger read — it appends the relabeled survivors gen-stamped,
+       then tombstones the deleted ids, so the step costs ∝ touched
+       components, never a corpus-sized rewrite (`compact_labels`
+       folds the deltas on schedule). A re-run after ANY crash inside
+       this step converges to the same final labels: the delta append
+       and the tombstone are each replay-idempotent under
+       `read_labels`' latest-wins view (every seam is failure-injected
+       in tests/test_lifecycle.py).
        Running the evict over the PRUNED ledger is exact: the touched
        components are found through the LABELS (where the deleted ids
        still stand until this step), and the pruned rows are exactly
@@ -72,8 +76,6 @@ def takedown(
     journal_base: str | None = None,
     td_id: str | None = None,
     node_col: str = "node",
-    evict_kwargs: dict | None = None,
-    incremental_labels: bool = True,
 ) -> str:
     """Run one composed takedown in the pinned order (module
     docstring). ``deleted``: a one-column DataFrame of doc ids (column
@@ -88,13 +90,11 @@ def takedown(
     (pass to `resume_takedowns` diagnostics); ``td_id`` lets a resume
     replay under the original id.
 
-    ``incremental_labels`` (r14, default): the labels step runs
-    ∝-touched end-to-end — `operators.dedup.evict_labels` appends the
-    relabeled survivors gen-stamped and tombstones the deleted ids —
-    instead of `evict_nodes` + a corpus-sized `write_labels` rewrite
-    per takedown. Both modes are replay-idempotent and converge to the
-    same `read_labels` view (a resume may even switch modes); False
-    keeps the full-rewrite shape, which doubles as compaction."""
+    The labels step runs ∝-touched end-to-end (r14):
+    `operators.dedup.evict_labels` appends the relabeled survivors
+    gen-stamped and tombstones the deleted ids, so a takedown never
+    pays a corpus-sized `write_labels` rewrite; `compact_labels` is
+    the scheduled full rewrite."""
     if (labels_base is None) != (ledger_base is None):
         raise IllegalStateError(
             "takedown needs labels_base and ledger_base together: the "
@@ -116,10 +116,7 @@ def takedown(
     if td_id is None:
         td_id = uuid.uuid4().hex
         _journal_begin(spark, journal_base, td_id, ids)
-    _apply_takedown(
-        spark, ids, index_bases, labels_base, ledger_base,
-        evict_kwargs=evict_kwargs, incremental_labels=incremental_labels,
-    )
+    _apply_takedown(spark, ids, index_bases, labels_base, ledger_base)
     _journal_done(spark, journal_base, td_id)
     return td_id
 
@@ -130,19 +127,14 @@ def _apply_takedown(
     index_bases: dict[str, str],
     labels_base: str | None,
     ledger_base: str | None,
-    evict_kwargs: dict | None = None,
-    incremental_labels: bool = True,
 ) -> None:
     """Steps 2-4 — every one idempotent, so a resume replays all of
     them unconditionally instead of guessing where the crash was."""
     from .bucketing import add_tombstones
     from .operators.dedup import (
         evict_labels,
-        evict_nodes,
         prune_edge_ledger,
         read_edge_ledger,
-        read_labels,
-        write_labels,
     )
 
     for base, id_col in index_bases.items():
@@ -152,22 +144,9 @@ def _apply_takedown(
     if ledger_base is not None:
         prune_edge_ledger(spark, ledger_base, ids, "node")
     if labels_base is not None:
-        if incremental_labels:
-            evict_labels(
-                spark,
-                labels_base,
-                read_edge_ledger(spark, ledger_base),
-                ids,
-                **(evict_kwargs or {}),
-            )
-        else:
-            survived = evict_nodes(
-                read_labels(spark, labels_base),
-                read_edge_ledger(spark, ledger_base),
-                ids,
-                **(evict_kwargs or {}),
-            )
-            write_labels(survived, labels_base)
+        evict_labels(
+            spark, labels_base, read_edge_ledger(spark, ledger_base), ids
+        )
 
 
 def _journal_begin(
@@ -231,16 +210,12 @@ def resume_takedowns(
     labels_base: str | None = None,
     ledger_base: str | None = None,
     journal_base: str | None = None,
-    evict_kwargs: dict | None = None,
-    incremental_labels: bool = True,
 ) -> list[str]:
     """Replay every pending takedown (crash recovery, run at loop
     start): each journaled-but-unfinished id set is re-applied through
     the same pinned order — every step is idempotent, so re-running
     steps that DID complete before the crash changes nothing — and
-    closed with its DONE marker. Returns the replayed ids. The label
-    mode need not match the crashed run's (both converge to the same
-    `read_labels` view; see `takedown`)."""
+    closed with its DONE marker. Returns the replayed ids."""
     if journal_base is None:
         journal_base = labels_base or next(iter(index_bases), None)
     if journal_base is None:
@@ -248,11 +223,7 @@ def resume_takedowns(
     replayed = []
     for td_id in pending_takedowns(spark, journal_base):
         ids = takedown_ids(spark, journal_base, td_id).localCheckpoint()
-        _apply_takedown(
-            spark, ids, index_bases, labels_base, ledger_base,
-            evict_kwargs=evict_kwargs,
-            incremental_labels=incremental_labels,
-        )
+        _apply_takedown(spark, ids, index_bases, labels_base, ledger_base)
         _journal_done(spark, journal_base, td_id)
         replayed.append(td_id)
     return replayed

@@ -1655,6 +1655,67 @@ def _minlabel_union_find(edge_pairs) -> dict:
     return {x: find(x) for x in touched}
 
 
+#: driver-tier bounds of label maintenance (r12): a relation whose
+#: take-probe finds at most this many rows is collected and resolved on
+#: the driver. `_DRIVER_BATCH_ROWS` bounds `absorb_edges`' full-driver
+#: tier (the batch's edges, then its no-edge nodes); `_DRIVER_GRAPH_ROWS`
+#: bounds `_relabel`'s driver branch (absorb's contracted graph, evict's
+#: touched survivors). Past a bound the distributed path runs.
+_DRIVER_BATCH_ROWS = 10_000
+_DRIVER_GRAPH_ROWS = 10_000
+
+
+def _relabel(
+    edges: DataFrame, nodes: DataFrame | None, max_iter: int, scope: str
+) -> DataFrame:
+    """Min-label CC, as (node, rep), over a touched-sized graph: the
+    re-clustering step of `absorb_edges` (its contracted graph;
+    ``nodes`` None means the edges' endpoints) and of `evict_nodes`
+    (the touched components' survivors).
+
+    Take-probed within `_DRIVER_GRAPH_ROWS` rows (edges, then nodes),
+    it runs min-label union-find on the DRIVER — exact and
+    deterministic, so the same relation — and returns a `local_frame`:
+    the probes are its only jobs (r12 profiling: distributed CC paid
+    3-4 s of per-round driver fixed cost on a ~75-edge contracted
+    graph at sf0.1). Past the bound, `connected_components` runs.
+    Endpoint-derived nodes read the edges twice, so the edges are
+    checkpointed first: their plan would otherwise embed absorb's
+    standing-labels chain and batch-projection joins, which every CC
+    round re-plans and re-walks (22 s -> 1.1 s on a 72-edge contracted
+    graph at sf0.1, r11). Path parity is pinned in
+    tests/test_graph.py."""
+    bound = _DRIVER_GRAPH_ROWS
+    eprobe = edges.take(bound + 1)
+    if len(eprobe) <= bound:
+        nprobe = None if nodes is None else nodes.take(bound + 1)
+        if nprobe is None or len(nprobe) <= bound:
+            remap = _minlabel_union_find((r.a_id, r.b_id) for r in eprobe)
+            if nprobe is None:
+                keys, node_type = sorted(remap), edges.schema["a_id"].dataType
+            else:
+                keys = [r.node for r in nprobe]
+                node_type = nodes.schema["node"].dataType
+            return local_frame(
+                edges.sparkSession,
+                [(x, remap.get(x, x)) for x in keys],
+                T.StructType(
+                    [
+                        T.StructField("node", node_type),
+                        T.StructField("rep", node_type),
+                    ]
+                ),
+            )
+    if nodes is None:
+        edges = _checkpoint_adaptive(edges)
+        nodes = edges.select(F.col("a_id").alias("node")).unionAll(
+            edges.select(F.col("b_id").alias("node"))
+        ).distinct()
+    return connected_components(
+        edges, nodes, max_iter=max_iter, scope=f"{scope}_cc"
+    )
+
+
 def _absorb_small_batch(
     labels: DataFrame,
     edge_rows: list,
@@ -1662,7 +1723,7 @@ def _absorb_small_batch(
     return_delta: bool = False,
 ) -> DataFrame:
     """absorb_edges' FULL-driver tier (r12): the batch's edges and
-    no-edge nodes fit on the driver (gated by ``small_batch_max`` —
+    no-edge nodes fit on the driver (gated by `_DRIVER_BATCH_ROWS` —
     the daily-ingest case), so the absorb's distributed work is ONE
     bounded lookup — the standing reps of the batch's endpoints
     (labels scanned map-side against the broadcast endpoint set,
@@ -1750,8 +1811,6 @@ def absorb_edges(
     max_iter: int = 20,
     broadcast_batch: bool = True,
     scope: str = "absorb_edges",
-    small_graph_max: int = 10_000,
-    small_batch_max: int = 10_000,
     return_delta: bool = False,
 ) -> DataFrame:
     """Incremental connected components (r11): merge a batch's NEW
@@ -1822,37 +1881,33 @@ def absorb_edges(
     Three execution tiers (r12), identical output (path parity pinned
     in tests/test_graph.py), outermost first:
 
-    * ``small_batch_max``: if the batch's edges AND no-edge nodes fit
-      on the driver (take-probed, bounded), the WHOLE absorb is the
-      probes, one bounded endpoint lookup (two jobs: its broadcast
-      build and the labels scan) + driver union-find + one lazy label
-      rewrite — no persist, no broadcast chain, no Python worker; the
-      standing labels are read TWICE (endpoint lookup + the returned
-      plan), so chained daily callers should materialize yesterday's
-      output first — see `_absorb_small_batch` (r13, ADVICE r12). The daily-ingest case.
-      Set 0 to disable.
-    * ``small_graph_max``: bigger batches whose CONTRACTED graph
-      (≤ one edge per distinct-rep batch pair) is still driver-small
-      — e.g. a backfill with heavy internal duplication — resolve the
-      contracted min-label remap with driver union-find instead of
-      paying 3-4 distributed CC rounds of per-job fixed cost
-      (profiled at 3-4 s per absorb over a ~75-edge contracted graph
-      at sf0.1). Set 0 to force the loop.
+    * Full driver: if the batch's edges AND no-edge nodes fit on the
+      driver (take-probed within `_DRIVER_BATCH_ROWS`), the WHOLE
+      absorb is the probes, one bounded endpoint lookup (two jobs: its
+      broadcast build and the labels scan) + driver union-find + one
+      lazy label rewrite — no persist, no broadcast chain, no Python
+      worker; the standing labels are read TWICE (endpoint lookup +
+      the returned plan), so chained daily callers should materialize
+      yesterday's output first — see `_absorb_small_batch` (r13,
+      ADVICE r12). The daily-ingest case.
+    * Contracted driver: bigger batches whose CONTRACTED graph (≤ one
+      edge per distinct-rep batch pair) is still driver-small — e.g. a
+      backfill with heavy internal duplication — resolve the
+      contracted min-label remap with driver union-find
+      (`_relabel` within `_DRIVER_GRAPH_ROWS`) instead of paying 3-4
+      distributed CC rounds of per-job fixed cost.
     * Otherwise: the distributed CC loop over the checkpointed
-      contracted edges — work ∝ touched components, never corpus."""
+      contracted edges (`_relabel`'s fallback) — work ∝ touched
+      components, never corpus."""
     _release_caches(scope)
-    if small_batch_max > 0:
-        eprobe = new_edges.take(small_batch_max + 1)
-        if len(eprobe) <= small_batch_max:
-            nprobe = (
-                new_nodes.take(small_batch_max + 1)
-                if new_nodes is not None
-                else []
+    bound = _DRIVER_BATCH_ROWS
+    eprobe = new_edges.take(bound + 1)
+    if len(eprobe) <= bound:
+        nprobe = new_nodes.take(bound + 1) if new_nodes is not None else []
+        if len(nprobe) <= bound:
+            return _absorb_small_batch(
+                labels, eprobe, nprobe, return_delta=return_delta
             )
-            if len(nprobe) <= small_batch_max:
-                return _absorb_small_batch(
-                    labels, eprobe, nprobe, return_delta=return_delta
-                )
     ends = new_edges.select(F.col("a_id").alias("node")).unionAll(
         new_edges.select(F.col("b_id").alias("node"))
     )
@@ -1888,51 +1943,12 @@ def absorb_edges(
         .select(F.col("_ra").alias("a_id"), F.col("_rb").alias("b_id"))
         .distinct()
     )
-    # r12 (r11 verdict task #5, absorb cost attribution): the
-    # contracted graph is BATCH-BOUNDED by construction (≤ one edge
-    # per distinct batch pair), and profiling showed each absorb
-    # paying 3-4 s of per-round driver fixed cost to run distributed
-    # CC over ~75 edges. Probe it with take(threshold + 1) BEFORE
-    # checkpointing: at or below the threshold, run min-label
-    # union-find on the DRIVER instead — the collect is bounded by
-    # `small_graph_max` rows (the same bounded-collect discipline as
-    # the ANN sub-10k auto-dispatch), the remap is the identical
-    # min-reachable-rep relation (integer union-find is exact and
-    # deterministic), and the absorb's distributed work drops to ONE
-    # action (the probe: its broadcast builds and take's scale-up
-    # passes are jobs of their own) plus the final lazy rewrite, whose
-    # driver-built remap is a `local_frame` — no checkpoint, no count,
-    # no per-round loop jobs, no Python worker. Parity between the two
-    # paths is pinned in tests/test_graph.py. Above the threshold the probe's
-    # one extra batch-sized evaluation is noise next to the CC loop
-    # it precedes.
-    probe = redges.take(small_graph_max + 1) if small_graph_max > 0 else []
-    if small_graph_max > 0 and len(probe) <= small_graph_max:
-        remap_map = _minlabel_union_find((r.a_id, r.b_id) for r in probe)
-        rep_type = redges.schema["a_id"].dataType
-        remap = local_frame(
-            new_edges.sparkSession, sorted(remap_map.items()),
-            T.StructType(
-                [
-                    T.StructField("rep", rep_type),
-                    T.StructField("_srep", rep_type),
-                ]
-            ),
-        )
-    else:
-        # checkpoint the contracted edges BEFORE the loop: their plan
-        # otherwise embeds the standing-labels checkpoint chain and
-        # the batch-projection joins, which every CC round's job
-        # re-plans and re-walks — measured 22 s -> 1.1 s on a 72-edge
-        # contracted graph at sf0.1 (r11). Fast-path probes skip this
-        # entirely (the relation is read exactly once).
-        redges = _checkpoint_adaptive(redges)
-        rnodes = redges.select(F.col("a_id").alias("node")).unionAll(
-            redges.select(F.col("b_id").alias("node"))
-        ).distinct()
-        remap = connected_components(
-            redges, rnodes, max_iter=max_iter, scope=f"{scope}_cc"
-        ).select(F.col("node").alias("rep"), F.col("rep").alias("_srep"))
+    # the contracted graph is BATCH-BOUNDED by construction (≤ one
+    # edge per distinct batch pair): re-cluster it on the driver when
+    # it fits, else in the distributed loop (r12)
+    remap = _relabel(redges, None, max_iter, scope).select(
+        F.col("node").alias("rep"), F.col("rep").alias("_srep")
+    )
     if return_delta:
         # strict remap = representatives that actually move (both
         # remap sources include identity rows for each merged
@@ -1964,7 +1980,6 @@ def evict_nodes(
     max_iter: int = 20,
     broadcast_deletions: bool = True,
     scope: str = "evict_nodes",
-    small_max: int = 10_000,
     return_delta: bool = False,
 ) -> DataFrame:
     """Takedown closure at the CLUSTER-LABEL layer (r13, r12 verdict
@@ -2019,15 +2034,13 @@ def evict_nodes(
     relation is scanned map-side (three semi/anti passes, zero
     Exchange — plan-asserted) and the edges relation once. The
     re-clustering itself runs on the touched components' surviving
-    subgraph only: driver union-find when it fits (``small_max``,
-    take-probed — the same bounded-collect tiering as `absorb_edges`),
-    else the checkpointed distributed CC loop. Pass
+    subgraph only, through `_relabel` — absorb's re-clustering step:
+    driver union-find when it fits (take-probed within
+    `_DRIVER_GRAPH_ROWS`), else the distributed CC loop. Pass
     ``broadcast_deletions=False`` when a mass takedown outgrows the
     broadcast budget; the joins degrade to shuffles ∝ labels/edges,
     still touched-component-bounded on the small side."""
     _release_caches(scope)
-    sess = labels.sparkSession
-    node_type = labels.schema["node"].dataType
     del_ids = deleted.select("node").distinct()
     if broadcast_deletions:
         del_ids = F.broadcast(del_ids)
@@ -2058,49 +2071,12 @@ def evict_nodes(
     kept = labels.join(btouched, "rep", "left_anti").select("node", "rep")
     # re-cluster the touched survivors: driver union-find when bounded
     # (the takedown-sized case), else the distributed CC loop
-    eprobe = surv_edges.take(small_max + 1) if small_max > 0 else None
-    if eprobe is not None and len(eprobe) <= small_max:
-        nprobe = surv_nodes.take(small_max + 1)
-        if len(nprobe) <= small_max:
-            remap = _minlabel_union_find(
-                (r.a_id, r.b_id) for r in eprobe
-            )
-            schema = T.StructType(
-                [
-                    T.StructField("node", node_type),
-                    T.StructField("rep", node_type),
-                ]
-            )
-            fresh = local_frame(
-                sess,
-                [(r.node, remap.get(r.node, r.node)) for r in nprobe],
-                schema,
-            )
-            return _evict_result(
-                kept, fresh, labels, return_delta, broadcast_deletions
-            )
-    fresh = connected_components(
-        surv_edges, surv_nodes, max_iter=max_iter, scope=f"{scope}_cc"
-    )
-    return _evict_result(
-        kept, fresh, labels, return_delta, broadcast_deletions
-    )
-
-
-def _evict_result(
-    kept: DataFrame,
-    fresh: DataFrame,
-    labels: DataFrame,
-    return_delta: bool,
-    broadcast_deletions: bool,
-) -> DataFrame:
-    """`evict_nodes`' two return shapes: the full surviving relation
-    (untouched rows verbatim ∪ re-clustered touched survivors), or the
-    delta — touched survivors whose rep MOVED, found by one map-side
-    old-rep lookup of the standing labels against the broadcast
-    re-clustered rows (touched-component-sized)."""
+    fresh = _relabel(surv_edges, surv_nodes, max_iter, scope)
     if not return_delta:
         return kept.unionAll(fresh)
+    # the delta: touched survivors whose rep MOVED, found by one
+    # map-side old-rep lookup of the standing labels against the
+    # broadcast re-clustered rows (touched-component-sized)
     bfresh = F.broadcast(fresh) if broadcast_deletions else fresh
     return (
         labels.select("node", F.col("rep").alias("_old"))
@@ -2252,7 +2228,6 @@ def evict_labels(
     base_name: str,
     edges: DataFrame,
     deleted: DataFrame,
-    **evict_kwargs,
 ) -> None:
     """Takedown against the PERSISTED labels, ∝ touched (r14): the
     composition `evict_nodes(read_labels(...), edges, deleted)` +
@@ -2279,8 +2254,8 @@ def evict_labels(
         read_labels(spark, base_name),
         edges,
         deleted,
+        scope=f"evict_labels_{base_name}",
         return_delta=True,
-        **evict_kwargs,
     )
     append_labels(delta, base_name)
     add_tombstones(spark, base_name, deleted.select("node"), "node")

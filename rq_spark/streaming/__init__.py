@@ -753,8 +753,10 @@ def _loop_batch_fn(
 ):
     """`continuous_dedup_loop_stream`'s per-micro-batch handler, split
     out so the redelivery tests can deliver the exact same
-    (batch, epoch) twice the way an engine retry would."""
-    from ..bucketing import refresh_base_tables, resolve_index_base
+    (batch, epoch) twice the way an engine retry would: the shared
+    applied-epoch protocol of `_ingest_batch_fn` (marker on the INDEX
+    base), applying the loop's four arrows."""
+    from ..bucketing import refresh_base_tables
     from ..operators.dedup import (
         absorb_edges,
         append_edge_ledger,
@@ -765,7 +767,7 @@ def _loop_batch_fn(
         read_labels,
     )
 
-    def _one_batch(batch_df: DataFrame, epoch_id: int) -> None:
+    def apply(batch_df: DataFrame) -> None:
         # the index append below runs through the BATCH's cloned
         # session (the appender writes via batch.sparkSession), so
         # this handler session's cached listing of the index tables
@@ -773,14 +775,11 @@ def _loop_batch_fn(
         # N's probe would read the index as of day 0 and miss every
         # earlier batch's appended rows (the labels/ledger arrows
         # read and write through THIS session, self-coherent, but one
-        # refresh covers a foreign takedown job touching them too)
+        # refresh covers a foreign takedown job touching them too).
+        # The control tables the protocol reads first (pointer,
+        # marker) are read fresh, so the refresh only has to precede
+        # the first data-table read.
         refresh_base_tables(spark, index_base, labels_base, ledger_base)
-        resolved = resolve_index_base(spark, index_base)
-        if _read_applied_epoch(spark, resolved, query_name) >= epoch_id:
-            return
-        if batch_df.isEmpty():
-            _write_applied_epoch(spark, resolved, query_name, epoch_id)
-            return
         batch = batch_df.localCheckpoint()  # pin ONE batch for all four
         # arrows (the probe runs pre-append; a lazy plan re-read after
         # the index append would see the batch in the corpus)
@@ -807,6 +806,5 @@ def _loop_batch_fn(
             labels_base,
         )
         append_to_hamming_index(batch, index_base, reingest=True)
-        _write_applied_epoch(spark, resolved, query_name, epoch_id)
 
-    return _one_batch
+    return _ingest_batch_fn(spark, index_base, apply, query_name)

@@ -34,3 +34,60 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMALL
+
+
+@pytest.fixture
+def label_tier(monkeypatch):
+    """Force one execution tier of label maintenance and prove it ran.
+
+    ``with label_tier(name): ...`` pins `operators.dedup`'s driver
+    bounds for the block, then asserts which tier the block ran:
+
+    * ``"batch"``: the defaults — `absorb_edges`' full-driver tier
+      (`_absorb_small_batch`);
+    * ``"graph"``: no batch fits the full-driver tier, so the
+      re-clustering runs `_relabel`'s driver union-find (absorb's
+      contracted graph, `evict_nodes`' only driver tier);
+    * ``"loop"``: nothing fits a driver tier (a bound of -1 rejects
+      even an empty relation), so `connected_components` runs.
+
+    The tier is read from call-counting spies on `_absorb_small_batch`,
+    `_minlabel_union_find` and `connected_components`."""
+    from collections import Counter
+    from contextlib import contextmanager
+
+    from rq_spark.operators import dedup as D
+
+    calls = Counter()
+    for name in (
+        "_absorb_small_batch", "_minlabel_union_find", "connected_components"
+    ):
+        def spy(*a, _real=getattr(D, name), _name=name, **kw):
+            calls[_name] += 1
+            return _real(*a, **kw)
+
+        monkeypatch.setattr(D, name, spy)
+    graph_rows = D._DRIVER_GRAPH_ROWS
+    bounds = {
+        "batch": (D._DRIVER_BATCH_ROWS, graph_rows),
+        "graph": (-1, graph_rows),
+        "loop": (-1, -1),
+    }
+
+    @contextmanager
+    def tier(name):
+        batch_rows, graph_rows = bounds[name]
+        with monkeypatch.context() as m:
+            m.setattr(D, "_DRIVER_BATCH_ROWS", batch_rows)
+            m.setattr(D, "_DRIVER_GRAPH_ROWS", graph_rows)
+            calls.clear()
+            yield
+        if calls["_absorb_small_batch"]:
+            ran = "batch"
+        elif calls["connected_components"]:
+            ran = "loop"
+        else:
+            ran = "graph" if calls["_minlabel_union_find"] else None
+        assert ran == name, dict(calls)
+
+    return tier

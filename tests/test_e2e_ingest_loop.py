@@ -668,7 +668,6 @@ def test_full_loop_restart_gate(spark, tmp_path):
             {ibase: "doc"},
             labels_base=lbase,
             ledger_base=ebase,
-            evict_kwargs={"scope": f"rg_ev_{ibase}"},
         )
         ingest_day(sess, sess.createDataFrame(b2_rows, "doc long, sig long"), "d2")
 

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rq_spark.operators.graph import pagerank_fixed
+from rq_spark.util import local_frame
 
 EDGES = [(1, 2), (1, 3), (1, 4), (2, 3), (5, 6)]
 NODES = list(range(1, 10))  # 7, 8, 9 are isolated sinks; 1 is a hub
@@ -39,8 +40,8 @@ def _float_pagerank(edges, nodes, iters=5, damping=0.85):
 
 @pytest.fixture(scope="module")
 def ranked(spark):
-    edges = spark.createDataFrame(EDGES, ["a_id", "b_id"])
-    nodes = spark.createDataFrame([(v,) for v in NODES], ["node"])
+    edges = local_frame(spark, EDGES, "a_id long, b_id long")
+    nodes = local_frame(spark, [(v,) for v in NODES], "node long")
     return {r["node"]: r["pr"] for r in pagerank_fixed(edges, nodes).collect()}
 
 
@@ -63,15 +64,15 @@ def test_mass_conserved_and_ordering(ranked):
 def test_directed_mode(spark):
     """undirected=False must NOT symmetrize: 1→2 gives 2 rank but 1
     none back (1 becomes a non-sink source, 2 a sink)."""
-    edges = spark.createDataFrame([(1, 2)], ["a_id", "b_id"])
-    nodes = spark.createDataFrame([(1,), (2,)], ["node"])
+    edges = local_frame(spark, [(1, 2)], "a_id long, b_id long")
+    nodes = local_frame(spark, [(1,), (2,)], "node long")
     r = {x["node"]: x["pr"] for x in pagerank_fixed(edges, nodes, undirected=False).collect()}
     assert r[2] > r[1]
 
 
 def test_validation(spark):
-    edges = spark.createDataFrame([(1, 2)], ["a_id", "b_id"])
-    nodes = spark.createDataFrame([(1,), (2,)], ["node"])
+    edges = local_frame(spark, [(1, 2)], "a_id long, b_id long")
+    nodes = local_frame(spark, [(1,), (2,)], "node long")
     with pytest.raises(ValueError):
         pagerank_fixed(edges, nodes, iters=0)
     with pytest.raises(ValueError):
@@ -86,8 +87,8 @@ def test_triangle_counts(spark):
     from rq_spark.operators.graph import triangle_counts
 
     k4 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
-    edges = spark.createDataFrame(k4 + [(4, 5)], ["a_id", "b_id"])
-    nodes = spark.createDataFrame([(v,) for v in range(1, 7)], ["node"])
+    edges = local_frame(spark, k4 + [(4, 5)], "a_id long, b_id long")
+    nodes = local_frame(spark, [(v,) for v in range(1, 7)], "node long")
     got = {r["node"]: r["tri"] for r in triangle_counts(edges, nodes).collect()}
     assert got == {1: 3, 2: 3, 3: 3, 4: 3, 5: 0, 6: 0}
 
@@ -99,8 +100,8 @@ def test_pagerank_plan_depth_is_bounded_by_checkpoint(spark):
     plan depth is O(1) in iters, not O(iters)."""
     from rq_spark.operators.graph import pagerank_fixed
 
-    edges = spark.createDataFrame(EDGES, ["a_id", "b_id"])
-    nodes = spark.createDataFrame([(v,) for v in NODES], ["node"])
+    edges = local_frame(spark, EDGES, "a_id long, b_id long")
+    nodes = local_frame(spark, [(v,) for v in NODES], "node long")
     def ops(iters):
         p = (
             pagerank_fixed(edges, nodes, iters=iters)
@@ -133,6 +134,9 @@ def test_pagerank_hub_skew_flagged_and_salted_ranks_identical(spark):
     # non-hub structure
     spokes = [(i, 0) for i in range(1, 401)]
     chain = [(i, i + 1) for i in range(401, 410)]
+    # createDataFrame on purpose: over a local relation the optimizer
+    # folds the salt projection into the scan, and the plan assertion
+    # below reads it from the aggregate
     edges = spark.createDataFrame(spokes + chain, ["a_id", "b_id"])
     nodes = spark.createDataFrame(
         [(i,) for i in range(0, 411)], ["node"]
@@ -186,16 +190,20 @@ def test_pagerank_hub_skew_flagged_and_salted_ranks_identical(spark):
 # ------------------------- incremental connected components (r11)
 
 
+def _edges(spark, edges):
+    return local_frame(spark, edges, "a_id long, b_id long")
+
+
+def _nodes(spark, nodes):
+    return local_frame(spark, [(v,) for v in nodes], "node long")
+
+
 def _cc(spark, edges, nodes, **kw):
     from rq_spark.operators.dedup import connected_components
 
-    e = spark.createDataFrame(
-        edges or [(None, None)], "a_id long, b_id long"
+    return connected_components(
+        _edges(spark, edges), _nodes(spark, nodes), **kw
     )
-    if not edges:
-        e = e.filter("a_id IS NOT NULL")
-    n = spark.createDataFrame([(v,) for v in nodes], "node long")
-    return connected_components(e, n, **kw)
 
 
 def _labels(df):
@@ -220,8 +228,8 @@ def _labels(df):
          [(i, i + 1) for i in range(2, 12, 2)], []),
     ],
 )
-def test_absorb_edges_equals_full_recompute(spark, old_edges, new_edges,
-                                            new_nodes):
+def test_absorb_edges_equals_full_recompute(spark, label_tier, old_edges,
+                                            new_edges, new_nodes):
     """absorb_edges(CC(old), new) must equal CC(old ∪ new) EXACTLY —
     the daily-ingest absorb step may never drift from the full
     recompute it replaces."""
@@ -231,28 +239,17 @@ def test_absorb_edges_equals_full_recompute(spark, old_edges, new_edges,
     all_nodes = sorted(set(old_nodes) | set(new_nodes)
                        | {v for e in new_edges for v in e})
     standing = _cc(spark, old_edges, old_nodes, scope="inc_test_old")
-    nn = spark.createDataFrame([(v,) for v in new_nodes] or [(None,)],
-                               "node long")
-    if not new_nodes:
-        nn = nn.filter("node IS NOT NULL")
-    ne = spark.createDataFrame(new_edges or [(None, None)],
-                               "a_id long, b_id long")
-    if not new_edges:
-        ne = ne.filter("a_id IS NOT NULL")
+    nn = _nodes(spark, new_nodes)
+    ne = _edges(spark, new_edges)
     want = _labels(_cc(spark, old_edges + new_edges, all_nodes,
                        scope="inc_test_full"))
     # all THREE execution tiers must agree with the full recompute:
     # the full-driver small-batch tier (default here), the contracted
-    # driver union-find tier (small_batch_max=0), and the distributed
-    # CC loop (both thresholds 0)
-    assert _labels(absorb_edges(standing, ne, nn)) == want
-    assert _labels(
-        absorb_edges(standing, ne, nn, small_batch_max=0)
-    ) == want
-    assert _labels(
-        absorb_edges(standing, ne, nn, small_graph_max=0,
-                     small_batch_max=0)
-    ) == want
+    # driver union-find tier, and the distributed CC loop
+    for tier in ("batch", "graph", "loop"):
+        with label_tier(tier):
+            got = absorb_edges(standing, ne, nn)
+        assert _labels(got) == want, tier
 
 
 @pytest.mark.parametrize(
@@ -273,8 +270,8 @@ def test_absorb_edges_equals_full_recompute(spark, old_edges, new_edges,
          [(i, i + 1) for i in range(3, 12, 3)], []),
     ],
 )
-def test_repeated_absorb_equals_full_recompute(spark, old_edges, day1,
-                                               day2, extra_nodes):
+def test_repeated_absorb_equals_full_recompute(spark, label_tier, old_edges,
+                                               day1, day2, extra_nodes):
     """r12 (r11 verdict): REPEATED absorption — day 2 absorbing into
     day 1's OUTPUT, the production daily-loop shape — must equal the
     full recompute over every edge ever seen. Before this test the
@@ -284,17 +281,12 @@ def test_repeated_absorb_equals_full_recompute(spark, old_edges, day1,
     from rq_spark.operators.dedup import absorb_edges
 
     def edf(edges):
-        e = spark.createDataFrame(edges or [(None, None)],
-                                  "a_id long, b_id long")
-        return e if edges else e.filter("a_id IS NOT NULL")
+        return _edges(spark, edges)
 
     old_nodes = sorted({v for e in old_edges for v in e})
     all_nodes = sorted(set(old_nodes) | set(extra_nodes)
                        | {v for e in day1 + day2 for v in e})
-    nn = spark.createDataFrame([(v,) for v in extra_nodes] or [(None,)],
-                               "node long")
-    if not extra_nodes:
-        nn = nn.filter("node IS NOT NULL")
+    nn = _nodes(spark, extra_nodes)
     standing = _cc(spark, old_edges, old_nodes, scope="inc_test_old")
     d1 = absorb_edges(standing, edf(day1), nn, scope="inc_test_d1")
     d2 = absorb_edges(d1, edf(day2), scope="inc_test_d2")
@@ -304,13 +296,14 @@ def test_repeated_absorb_equals_full_recompute(spark, old_edges, day1,
     # CROSS-TIER chaining: day 1 through the contracted distributed-ish
     # tier, day 2 through the full-driver tier — a tier must accept
     # the other tier's output as valid standing labels
-    d1b = absorb_edges(standing, edf(day1), nn, scope="inc_test_d1b",
-                       small_batch_max=0)
-    d2b = absorb_edges(d1b, edf(day2), scope="inc_test_d2b")
+    with label_tier("graph"):
+        d1b = absorb_edges(standing, edf(day1), nn, scope="inc_test_d1b")
+    with label_tier("batch"):
+        d2b = absorb_edges(d1b, edf(day2), scope="inc_test_d2b")
     assert _labels(d2b) == want
 
 
-def test_absorb_edges_is_contracted_not_corpus_sized(spark):
+def test_absorb_edges_is_contracted_not_corpus_sized(spark, label_tier):
     """The inner CC must run on the CONTRACTED graph: representatives,
     not corpus nodes. With 2 standing components of 50 nodes each and
     ONE bridging batch edge, the contracted graph has exactly 2 nodes
@@ -325,12 +318,13 @@ def test_absorb_edges_is_contracted_not_corpus_sized(spark):
     old = chain_a + chain_b
     nodes = sorted({v for e in old for v in e})
     standing = _cc(spark, old, nodes, scope="inc_test_old")
-    ne = spark.createDataFrame([(50, 101)], "a_id long, b_id long")
-    # both thresholds 0 force the DISTRIBUTED remap path — this test
-    # pins that ITS graph is the contracted one, which the r12 driver
-    # tiers would bypass entirely
-    got = _labels(absorb_edges(standing, ne, max_iter=2, small_graph_max=0,
-                               small_batch_max=0))
+    ne = _edges(spark, [(50, 101)])
+    # force the DISTRIBUTED remap path — this test pins that ITS graph
+    # is the contracted one, which the r12 driver tiers would bypass
+    # entirely
+    with label_tier("loop"):
+        got = absorb_edges(standing, ne, max_iter=2)
+    got = _labels(got)
     assert got == {(v, 1) for v in nodes}
     # and the full recompute at the same budget really can't converge
     from rq_spark.errors import IllegalStateError
@@ -364,8 +358,8 @@ def test_absorb_edges_is_contracted_not_corpus_sized(spark):
         ([(1, 2), (2, 3), (3, 4), (10, 11), (11, 12)], [], [2, 11]),
     ],
 )
-def test_evict_nodes_equals_full_recompute(spark, edges, extra_nodes,
-                                           deleted):
+def test_evict_nodes_equals_full_recompute(spark, label_tier, edges,
+                                           extra_nodes, deleted):
     """evict_nodes(labels, edges, deleted) must equal
     connected_components over (edges minus any edge touching a deleted
     node, nodes minus deleted) EXACTLY — the takedown closure at the
@@ -375,21 +369,20 @@ def test_evict_nodes_equals_full_recompute(spark, edges, extra_nodes,
 
     all_nodes = sorted({v for e in edges for v in e} | set(extra_nodes))
     labels = _cc(spark, edges, all_nodes, scope="evict_test_old")
-    ddf = spark.createDataFrame([(v,) for v in deleted] or [(None,)],
-                                "node long")
-    if not deleted:
-        ddf = ddf.filter("node IS NOT NULL")
-    edf = spark.createDataFrame(edges, "a_id long, b_id long")
+    ddf = _nodes(spark, deleted)
+    edf = _edges(spark, edges)
     surv_e = [e for e in edges
               if e[0] not in deleted and e[1] not in deleted]
     surv_n = [v for v in all_nodes if v not in deleted]
     want = _labels(_cc(spark, surv_e, surv_n, scope="evict_test_full"))
     # both tiers: driver union-find (default) and the distributed CC
-    # loop (small_max=0), plus the non-broadcast degradation path
-    assert _labels(evict_nodes(labels, edf, ddf)) == want
-    assert _labels(
-        evict_nodes(labels, edf, ddf, small_max=0, scope="evict_t2")
-    ) == want
+    # loop, plus the non-broadcast degradation path
+    with label_tier("graph"):
+        got = evict_nodes(labels, edf, ddf)
+    assert _labels(got) == want
+    with label_tier("loop"):
+        got = evict_nodes(labels, edf, ddf, scope="evict_t2")
+    assert _labels(got) == want
     assert _labels(
         evict_nodes(labels, edf, ddf, broadcast_deletions=False,
                     scope="evict_t3")
@@ -413,8 +406,8 @@ def test_evict_nodes_work_is_touched_component_bounded(spark):
     edges = chain_a + chain_b
     nodes = sorted({v for e in edges for v in e})
     labels = _cc(spark, edges, nodes, scope="evict_scope_old")
-    edf = spark.createDataFrame(edges, "a_id long, b_id long")
-    ddf = spark.createDataFrame([(25,)], "node long")
+    edf = _edges(spark, edges)
+    ddf = _nodes(spark, [25])
     got = _labels(evict_nodes(labels, edf, ddf, scope="evict_scope"))
     # the split: 1..24 keep rep 1, 26..50 now rep 26; chain_b verbatim
     want = (
@@ -437,8 +430,8 @@ def test_evict_nodes_labels_never_shuffle(spark):
     edges = [(i, i + 1) for i in range(1, 40)]
     nodes = sorted({v for e in edges for v in e})
     labels = _cc(spark, edges, nodes, scope="evict_plan_old").localCheckpoint()
-    edf = spark.createDataFrame(edges, "a_id long, b_id long")
-    ddf = spark.createDataFrame([(20,)], "node long")
+    edf = _edges(spark, edges)
+    ddf = _nodes(spark, [20])
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.debug.maxToStringFields", "1000")
@@ -456,7 +449,7 @@ def test_evict_nodes_labels_never_shuffle(spark):
         spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
 
 
-def test_evict_nodes_random_graphs_parity(spark):
+def test_evict_nodes_random_graphs_parity(spark, label_tier):
     """Random-graph sweep for the takedown closure: 10 seeded graphs
     (random edges, random deletion sets up to half the nodes), each
     checked against an INDEPENDENT BFS connected-components reference
@@ -510,21 +503,11 @@ def test_evict_nodes_random_graphs_parity(spark):
         surv_n = [v for v in nodes if v not in dset]
         want = bfs_cc(surv_e, surv_n)
 
-        ldf = spark.createDataFrame(labels, "node long, rep long")
-        edf = spark.createDataFrame(
-            edges or [(None, None)], "a_id long, b_id long"
-        )
-        if not edges:
-            edf = edf.filter("a_id IS NOT NULL")
-        ddf = spark.createDataFrame(
-            [(v,) for v in deleted] or [(None,)], "node long"
-        )
-        if not deleted:
-            ddf = ddf.filter("node IS NOT NULL")
-        small_max = 0 if seed % 3 == 2 else 10_000
-        got = evict_nodes(
-            ldf, edf, ddf, small_max=small_max, scope=f"evict_prop_{seed}"
-        )
+        ldf = local_frame(spark, labels, "node long, rep long")
+        edf = _edges(spark, edges)
+        ddf = _nodes(spark, deleted)
+        with label_tier("loop" if seed % 3 == 2 else "graph"):
+            got = evict_nodes(ldf, edf, ddf, scope=f"evict_prop_{seed}")
         assert {(r.node, r.rep) for r in got.collect()} == want, (
             seed, edges, deleted,
         )
@@ -556,7 +539,7 @@ def test_persisted_labels_daily_loop(spark, monkeypatch):
     nodes0 = sorted({v for e in old_edges for v in e})
 
     def edf(edges):
-        return spark.createDataFrame(edges, "a_id long, b_id long")
+        return _edges(spark, edges)
 
     try:
         labels0 = _cc(spark, old_edges, nodes0, scope="lbl_cc0")
@@ -566,7 +549,7 @@ def test_persisted_labels_daily_loop(spark, monkeypatch):
         # day 1 (through the ALIAS): read → absorb → write back
         d1 = absorb_edges(
             read_labels(spark, alias), edf(day1),
-            new_nodes=spark.createDataFrame([(10,), (11,)], "node long"),
+            new_nodes=_nodes(spark, [10, 11]),
             scope="lbl_d1",
         )
         write_labels(d1, alias)
@@ -596,7 +579,7 @@ def test_persisted_labels_daily_loop(spark, monkeypatch):
         survived = evict_nodes(
             read_labels(spark, alias),
             edf(old_edges + day1 + day2),
-            spark.createDataFrame([(4,)], "node long"),
+            _nodes(spark, [4]),
             scope="lbl_evict",
         )
         write_labels(survived, alias)

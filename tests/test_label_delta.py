@@ -33,14 +33,19 @@ import pytest
 from pyspark.sql import functions as F
 
 from rq_spark.operators import dedup as D
+from rq_spark.util import local_frame
 
 
 def _mk_edges(spark, es):
-    return spark.createDataFrame(es, "a_id long, b_id long")
+    return local_frame(spark, es, "a_id long, b_id long")
 
 
 def _mk_nodes(spark, ns):
-    return spark.createDataFrame([(n,) for n in ns], "node long")
+    return local_frame(spark, [(n,) for n in ns], "node long")
+
+
+def _mk_labels(spark, rows):
+    return local_frame(spark, rows, "node long, rep long")
 
 
 def _as_map(df):
@@ -70,15 +75,15 @@ def _drop_labels(spark, base):
 
 
 @pytest.mark.parametrize(
-    "tier_kwargs",
+    "tier",
     [
-        {},  # small-batch driver tier
-        {"small_batch_max": 0},  # contracted-graph union-find tier
-        {"small_batch_max": 0, "small_graph_max": 0},  # distributed CC loop
+        "batch",  # small-batch driver tier
+        "graph",  # contracted-graph union-find tier
+        "loop",  # distributed CC loop
     ],
     ids=["small_batch", "small_graph", "cc_loop"],
 )
-def test_absorb_delta_parity_all_tiers(spark, tier_kwargs):
+def test_absorb_delta_parity_all_tiers(spark, label_tier, tier):
     """standing ⊕ delta (delta wins per node) == the full absorb
     return, in every execution tier."""
     nodes, edges = _graph(3)
@@ -86,26 +91,22 @@ def test_absorb_delta_parity_all_tiers(spark, tier_kwargs):
     labels = D.connected_components(
         _mk_edges(spark, edges), _mk_nodes(spark, nodes), scope="ld_cc_a"
     ).localCheckpoint()
-    tag = "_".join(map(str, tier_kwargs.values())) or "d"
-    full = _as_map(
-        D.absorb_edges(
+    with label_tier(tier):
+        full = D.absorb_edges(
             labels,
             _mk_edges(spark, b_edges),
             new_nodes=_mk_nodes(spark, b_nodes),
-            scope=f"ld_af_{tag}",
-            **tier_kwargs,
+            scope=f"ld_af_{tier}",
         )
-    )
-    delta = _as_map(
-        D.absorb_edges(
+    with label_tier(tier):
+        delta = D.absorb_edges(
             labels,
             _mk_edges(spark, b_edges),
             new_nodes=_mk_nodes(spark, b_nodes),
-            scope=f"ld_ad_{tag}",
+            scope=f"ld_ad_{tier}",
             return_delta=True,
-            **tier_kwargs,
         )
-    )
+    full, delta = _as_map(full), _as_map(delta)
     applied = dict(_as_map(labels))
     applied.update(delta)
     assert applied == full
@@ -116,10 +117,8 @@ def test_absorb_delta_parity_all_tiers(spark, tier_kwargs):
     assert set(b_nodes) <= set(delta)
 
 
-@pytest.mark.parametrize(
-    "tier_kwargs", [{}, {"small_max": 0}], ids=["small", "cc_loop"]
-)
-def test_evict_delta_parity_both_tiers(spark, tier_kwargs):
+@pytest.mark.parametrize("tier", ["graph", "loop"], ids=["small", "cc_loop"])
+def test_evict_delta_parity_both_tiers(spark, label_tier, tier):
     """(standing minus deleted) ⊕ delta == the full evict return —
     the delta holds exactly the relabeled survivors."""
     nodes, edges = _graph(4, n=300, m=130)
@@ -127,26 +126,22 @@ def test_evict_delta_parity_both_tiers(spark, tier_kwargs):
         _mk_edges(spark, edges), _mk_nodes(spark, nodes), scope="ld_cc_e"
     ).localCheckpoint()
     dels = [1, 7, 40]
-    tag = "_".join(map(str, tier_kwargs.values())) or "d"
-    full = _as_map(
-        D.evict_nodes(
+    with label_tier(tier):
+        full = D.evict_nodes(
             labels,
             _mk_edges(spark, edges),
             _mk_nodes(spark, dels),
-            scope=f"ld_ef_{tag}",
-            **tier_kwargs,
+            scope=f"ld_ef_{tier}",
         )
-    )
-    delta = _as_map(
-        D.evict_nodes(
+    with label_tier(tier):
+        delta = D.evict_nodes(
             labels,
             _mk_edges(spark, edges),
             _mk_nodes(spark, dels),
-            scope=f"ld_ed_{tag}",
+            scope=f"ld_ed_{tier}",
             return_delta=True,
-            **tier_kwargs,
         )
-    )
+    full, delta = _as_map(full), _as_map(delta)
     applied = {n: r for n, r in _as_map(labels).items() if n not in set(dels)}
     applied.update(delta)
     assert applied == full
@@ -182,9 +177,7 @@ def test_delta_random_sweep_vs_full_recompute(spark):
         all_nodes = nodes + b_nodes
         all_edges = edges + b_edges
         dels = rnd.sample(all_nodes, 6)
-        merged_df = spark.createDataFrame(
-            sorted(merged.items()), "node long, rep long"
-        ).localCheckpoint()
+        merged_df = _mk_labels(spark, sorted(merged.items()))
         edelta = _as_map(
             D.evict_nodes(
                 merged_df,
@@ -269,8 +262,7 @@ def test_persisted_delta_lifecycle(spark):
             if a not in set(dels) and b not in set(dels)
         ]
         D.evict_labels(
-            spark, base, _mk_edges(spark, surv), _mk_nodes(spark, dels),
-            scope="ldl_e1",
+            spark, base, _mk_edges(spark, surv), _mk_nodes(spark, dels)
         )
         want = _as_map(
             D.connected_components(
@@ -286,8 +278,7 @@ def test_persisted_delta_lifecycle(spark):
 
         # evict replay is idempotent (ids already tombstone-hidden)
         D.evict_labels(
-            spark, base, _mk_edges(spark, surv), _mk_nodes(spark, dels),
-            scope="ldl_e2",
+            spark, base, _mk_edges(spark, surv), _mk_nodes(spark, dels)
         )
         assert _as_map(D.read_labels(spark, base)) == want
 
@@ -322,7 +313,7 @@ def test_read_labels_latest_wins_is_exchange_free(spark):
         ).localCheckpoint()
         D.write_labels(L0, base)
         D.append_labels(
-            spark.createDataFrame([(0, 0)], "node long, rep long"), base
+            _mk_labels(spark, [(0, 0)]), base
         )
         from rq_spark.bucketing import add_tombstones
 
@@ -349,7 +340,7 @@ def test_append_labels_guards(spark):
     from rq_spark.bucketing import write_bucketed
     from rq_spark.errors import IllegalStateError
 
-    delta = spark.createDataFrame([(1, 1)], "node long, rep long")
+    delta = _mk_labels(spark, [(1, 1)])
     with pytest.raises(IllegalStateError, match="no meta table"):
         D.append_labels(delta, "t_ld_absent")
 
@@ -358,12 +349,12 @@ def test_append_labels_guards(spark):
     try:
         # a pre-r14 layout: labels without the gen column
         write_bucketed(
-            spark.createDataFrame([(1, 1)], "node long, rep long"),
+            _mk_labels(spark, [(1, 1)]),
             f"{base}_labels",
             "node",
             buckets=4,
         )
-        spark.createDataFrame([(1,)], "written_gen long").write.mode(
+        local_frame(spark, [(1,)], "written_gen long").write.mode(
             "overwrite"
         ).format("parquet").saveAsTable(f"{base}_meta")
         with pytest.raises(IllegalStateError, match="pre-r14"):
@@ -375,12 +366,10 @@ def test_append_labels_guards(spark):
     _drop_labels(spark, base)
     try:
         D.write_labels(
-            spark.createDataFrame([(1, 1), (2, 1)], "node long, rep long"),
+            _mk_labels(spark, [(1, 1), (2, 1)]),
             base,
         )
-        bad = spark.createDataFrame(
-            [(3, 1), (3, 2)], "node long, rep long"
-        )
+        bad = _mk_labels(spark, [(3, 1), (3, 2)])
         with pytest.raises(IllegalStateError, match="more than once"):
             D.append_labels(bad, base)
         # and nothing landed: the guard runs before the write
@@ -424,7 +413,7 @@ def test_append_labels_through_serving_alias(spark):
     from rq_spark.bucketing import ConcurrentWriterError, set_index_pointer
 
     b1, b2, alias = "t_lda_b1", "t_lda_b2", "t_lda_serve"
-    mk = lambda rows: spark.createDataFrame(rows, "node long, rep long")  # noqa: E731
+    mk = lambda rows: _mk_labels(spark, rows)  # noqa: E731
     try:
         for b in (b1, b2):
             _drop_labels(spark, b)

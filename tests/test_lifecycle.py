@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from rq_spark import lifecycle as L
 from rq_spark.operators import dedup as D
+from rq_spark.util import local_frame
 
 JOURNAL = None  # journal_base defaults to labels_base
 
@@ -73,7 +74,7 @@ def _eset(df):
 def _stand_up(spark, ibase, lbase, ebase, tag):
     """Day 0 of the loop: index + pair ledger + labels, all persisted."""
     rows = _corpus()
-    sig = spark.createDataFrame(rows, "doc long, sig long")
+    sig = local_frame(spark, rows, "doc long, sig long")
     D.write_hamming_index(sig, ibase, bands=4)
     pairs = D.hamming_near_pairs_from_index(spark, ibase).select(
         "a_id", "b_id"
@@ -93,10 +94,8 @@ def _expected_after(spark, rows, pairs, victims, tag):
     surv_nodes = [(d,) for d, _ in rows if d not in victims]
     want = _labels(
         D.connected_components(
-            spark.createDataFrame(surv_edges or [(None, None)], "a_id long, b_id long").filter(
-                F.col("a_id").isNotNull()
-            ),
-            spark.createDataFrame(surv_nodes, "node long"),
+            local_frame(spark, surv_edges, "a_id long, b_id long"),
+            local_frame(spark, surv_nodes, "node long"),
             scope=f"lc_ccf_{tag}",
         )
     )
@@ -118,10 +117,9 @@ def test_takedown_composes_and_journal_closes(spark):
     victims = [2, 1003]  # a corpus doc and a near-dup twin
     try:
         rows, pairs = _stand_up(spark, ibase, lbase, ebase, "c1")
-        ids = spark.createDataFrame([(v,) for v in victims], "node long")
+        ids = local_frame(spark, [(v,) for v in victims], "node long")
         td = L.takedown(
-            spark, ids, {ibase: "doc"}, labels_base=lbase, ledger_base=ebase,
-            evict_kwargs={"scope": "lc_ev_c1"},
+            spark, ids, {ibase: "doc"}, labels_base=lbase, ledger_base=ebase
         )
         assert L.pending_takedowns(spark, lbase) == []
         want_labels, want_edges = _expected_after(
@@ -138,8 +136,7 @@ def test_takedown_composes_and_journal_closes(spark):
 
         # replaying the SAME completed takedown is a no-op
         L.resume_takedowns(
-            spark, {ibase: "doc"}, labels_base=lbase, ledger_base=ebase,
-            evict_kwargs={"scope": "lc_ev_c1r"},
+            spark, {ibase: "doc"}, labels_base=lbase, ledger_base=ebase
         )
         assert _final_state(spark, ibase, lbase, ebase) == (
             scan, got_labels, got_edges,
@@ -157,7 +154,6 @@ def test_takedown_composes_and_journal_closes(spark):
         "labels_evict",
         "labels_append",
         "labels_tombstone",
-        "labels_write_full",
         "done_marker",
     ],
 )
@@ -165,23 +161,20 @@ def test_takedown_crash_windows_detect_and_resume(spark, monkeypatch, crash_step
     """Every seam of the composition dies once; each crash leaves a
     PENDING journal intent (detectable), `assert_taken_down` exposes
     the stale families, and one `resume_takedowns` converges to the
-    exact clean-run end state. The label seams cover BOTH modes:
-    the default ∝-touched path (`labels_append` = crash between the
-    delta compute and its append; `labels_tombstone` = the
+    exact clean-run end state. The label seams: `labels_evict` = crash
+    in the delta compute, `labels_append` = crash between the delta
+    compute and its append, `labels_tombstone` = the
     append-then-tombstone window, survivors already relabeled while
     the victims still stand — the detectable direction the order is
-    chosen for) and the full-rewrite path (`labels_write_full`, run
-    with ``incremental_labels=False``; its resume deliberately runs
-    the DEFAULT mode, pinning that a replay may switch modes)."""
+    chosen for."""
     from rq_spark import bucketing as B
 
     ibase, lbase, ebase = "t_lcc_idx", "t_lcc_lbl", "t_lcc_led"
     victims = [2, 1003]
     tag = f"x_{crash_step}"
-    incremental = crash_step != "labels_write_full"
     try:
         rows, pairs = _stand_up(spark, ibase, lbase, ebase, tag)
-        ids = spark.createDataFrame([(v,) for v in victims], "node long")
+        ids = local_frame(spark, [(v,) for v in victims], "node long")
 
         originals = {
             "index_tombstone": (B, "add_tombstones"),
@@ -189,7 +182,6 @@ def test_takedown_crash_windows_detect_and_resume(spark, monkeypatch, crash_step
             "labels_evict": (D, "evict_nodes"),
             "labels_append": (D, "append_labels"),
             "labels_tombstone": (B, "add_tombstones"),
-            "labels_write_full": (D, "write_labels"),
             "done_marker": (L, "_journal_done"),
         }
         mod, name = originals[crash_step]
@@ -214,8 +206,6 @@ def test_takedown_crash_windows_detect_and_resume(spark, monkeypatch, crash_step
             L.takedown(
                 spark, ids, {ibase: "doc"},
                 labels_base=lbase, ledger_base=ebase,
-                evict_kwargs={"scope": f"lc_ev_{tag}"},
-                incremental_labels=incremental,
             )
         monkeypatch.setattr(mod, name, real)
 
@@ -240,8 +230,7 @@ def test_takedown_crash_windows_detect_and_resume(spark, monkeypatch, crash_step
 
         # RESUME converges to the clean-run end state
         replayed = L.resume_takedowns(
-            spark, {ibase: "doc"}, labels_base=lbase, ledger_base=ebase,
-            evict_kwargs={"scope": f"lc_evr_{tag}"},
+            spark, {ibase: "doc"}, labels_base=lbase, ledger_base=ebase
         )
         assert replayed == pend
         assert L.pending_takedowns(spark, lbase) == []
@@ -263,7 +252,7 @@ def test_takedown_crash_windows_detect_and_resume(spark, monkeypatch, crash_step
 def test_takedown_requires_paired_labels_and_ledger(spark):
     from rq_spark.errors import IllegalStateError
 
-    ids = spark.createDataFrame([(1,)], "node long")
+    ids = local_frame(spark, [(1,)], "node long")
     with pytest.raises(IllegalStateError, match="labels_base and ledger_base"):
         L.takedown(spark, ids, {}, labels_base="t_lc_only_lbl")
     with pytest.raises(IllegalStateError, match="nothing to act on"):
@@ -294,7 +283,7 @@ def test_takedown_across_multiple_index_families(spark, monkeypatch):
             F2.col("vec_id") < 100
         )
         S.write_ann_index(vecs, abase, n_centroids=4, m=4, n_codes=8, iters=1)
-        ids = spark.createDataFrame([(v,) for v in victims], "node long")
+        ids = local_frame(spark, [(v,) for v in victims], "node long")
         fams = {ibase: "doc", abase: "neighbor_id"}  # the ANN
         # tables store the id as neighbor_id — the same column the
         # family probes filter_tombstoned on
@@ -313,8 +302,7 @@ def test_takedown_across_multiple_index_families(spark, monkeypatch):
         monkeypatch.setattr(B, "add_tombstones", dying)
         with pytest.raises(RuntimeError, match="between families"):
             L.takedown(
-                spark, ids, fams, labels_base=lbase, ledger_base=ebase,
-                evict_kwargs={"scope": "lc_ev_mf"},
+                spark, ids, fams, labels_base=lbase, ledger_base=ebase
             )
         monkeypatch.setattr(B, "add_tombstones", real)
 
@@ -325,8 +313,7 @@ def test_takedown_across_multiple_index_families(spark, monkeypatch):
         assert len(L.pending_takedowns(spark, lbase)) == 1
 
         L.resume_takedowns(
-            spark, fams, labels_base=lbase, ledger_base=ebase,
-            evict_kwargs={"scope": "lc_evr_mf"},
+            spark, fams, labels_base=lbase, ledger_base=ebase
         )
         status = L.assert_taken_down(
             spark, ids, fams, labels_base=lbase, ledger_base=ebase
@@ -356,8 +343,8 @@ def test_takedown_across_multiple_index_families(spark, monkeypatch):
 def test_composed_lifecycle_model_fuzz(spark):
     """Model-based fuzzer over the COMPOSED durable state (r14): a
     random sequence of {fresh ingest, re-crawl (takedown + re-ingest),
-    composed takedown in either label mode, crash-prefix takedown +
-    resume, triple compaction, replayed streaming epoch} runs against
+    composed takedown, crash-prefix takedown + resume, triple
+    compaction, replayed streaming epoch} runs against
     one index + labels + ledger triple, and after EVERY step all three
     families must equal ground truth derived from a plain Python
     model (doc → live signature):
@@ -374,8 +361,8 @@ def test_composed_lifecycle_model_fuzz(spark):
     documented multi-session contract — so the r14 coherence layer is
     fuzzed along with the lifecycle. The r13 single-index fuzzer pins
     per-family transitions; this pins the cross-family compositions
-    (recrawl-after-takedown, crash-between-families + resume in a
-    DIFFERENT label mode, compaction mid-history)."""
+    (recrawl-after-takedown, crash-between-families + resume,
+    compaction mid-history)."""
     import uuid
 
     from rq_spark.bucketing import add_tombstones, refresh_base_tables
@@ -422,10 +409,10 @@ def test_composed_lifecycle_model_fuzz(spark):
     qn = "t_cfz_q"
 
     def mkdf(sess, d: dict):
-        return sess.createDataFrame(sorted(d.items()), "doc long, sig long")
+        return local_frame(sess, sorted(d.items()), "doc long, sig long")
 
     def ids_df(sess, ids):
-        return sess.createDataFrame([(i,) for i in ids], "node long")
+        return local_frame(sess, [(i,) for i in ids], "node long")
 
     def ingest(sess, batch: dict, epoch=None):
         """The composed daily-ingest arrows; via the streaming handler
@@ -459,12 +446,10 @@ def test_composed_lifecycle_model_fuzz(spark):
         )
         D.append_to_hamming_index(b, ib, reingest=True)
 
-    def do_takedown(sess, ids, mode):
+    def do_takedown(sess, ids):
         L.takedown(
             sess, ids_df(sess, ids), {ib: "doc"},
             labels_base=lb, ledger_base=eb,
-            evict_kwargs={"scope": "cfz_ev"},
-            incremental_labels=mode,
         )
 
     def drop_all():
@@ -530,7 +515,7 @@ def test_composed_lifecycle_model_fuzz(spark):
                 log.append(f"replay_epoch({epoch - 1})")
             elif op == "recrawl" and len(model) > 3:
                 ids = rnd.sample(sorted(model), rnd.randint(1, 2))
-                do_takedown(sess, ids, rnd.choice([True, False]))
+                do_takedown(sess, ids)
                 batch = {i: new_sig() for i in ids}
                 ingest(sess, batch)
                 model.update(batch)
@@ -538,11 +523,10 @@ def test_composed_lifecycle_model_fuzz(spark):
             elif op == "takedown" and len(model) > 3:
                 ids = rnd.sample(sorted(model), rnd.randint(1, 2))
                 ids.append(888_888)  # unknown id rides along, harmless
-                mode = rnd.choice([True, False])
-                do_takedown(sess, ids, mode)
+                do_takedown(sess, ids)
                 for i in ids:
                     model.pop(i, None)
-                log.append(f"takedown{sorted(ids)} inc={mode}")
+                log.append(f"takedown{sorted(ids)}")
             elif op == "crash_takedown" and len(model) > 3:
                 ids = rnd.sample(sorted(model), rnd.randint(1, 2))
                 td = uuid.uuid4().hex
@@ -572,9 +556,7 @@ def test_composed_lifecycle_model_fuzz(spark):
                     f()
                 assert L.pending_takedowns(sess, lb) == [td]
                 L.resume_takedowns(
-                    sess, {ib: "doc"}, labels_base=lb, ledger_base=eb,
-                    evict_kwargs={"scope": "cfz_rs"},
-                    incremental_labels=rnd.choice([True, False]),
+                    sess, {ib: "doc"}, labels_base=lb, ledger_base=eb
                 )
                 for i in ids:
                     model.pop(i, None)

@@ -8,10 +8,10 @@ from __future__ import annotations
 
 import math
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from rq_spark.operators.cdc import chunk_boundaries
+from rq_spark.operators.cdc import CDC_AVG, CDC_MIN, chunk_boundaries, gear_table
 from rq_spark.operators.retrieval import tokenize_query
 
 
@@ -33,20 +33,76 @@ def test_cdc_spans_partition_any_input(data, pw):
         assert spans[-1][1] <= avg * 4
 
 
+_GEAR = gear_table()
+#: a mask test reads the last `_TAPS` bytes, so a hit at data position
+#: >= _TAPS - 1 does not depend on what precedes the data
+_TAPS = (CDC_AVG - 1).bit_length()
+
+
+def _mask_hits(data: bytes) -> set[int]:
+    """Positions after which the Gear hash hits the cut mask (the
+    content-defined cut candidates), by a plain per-byte rolling hash."""
+    h, out = 0, set()
+    for i, x in enumerate(data):
+        h = ((h << 1) + _GEAR[x]) & ((1 << 64) - 1)
+        if h & (CDC_AVG - 1) == 0:
+            out.add(i)
+    return out
+
+
+@example(  # runs of zeros: the chunkings never meet before the end
+    data=bytes(8) + b"\x01\x01\x13\xca?" + bytes(12) + b"T\xef\x12\xe9"
+    + bytes(11) + b"\x17\x00k" + bytes(113) + b"?\\e\x01\x00",
+    prefix=bytes(3),
+)
 @settings(max_examples=60, deadline=None)
 @given(st.binary(min_size=64, max_size=2048), st.binary(min_size=1, max_size=16))
 def test_cdc_suffix_chunks_stable_under_prefix_edit(data, prefix):
-    """Content-defined contract, property form: the LAST chunk's
-    bytes-from-the-right decomposition eventually re-synchronizes —
-    the final cut of `prefix+data` and of `data` fall at the same
-    distance from the end OR the whole input fits in few chunks."""
-    a = chunk_boundaries(data)
-    b = chunk_boundaries(prefix + data)
-    if len(a) >= 4 and len(b) >= 4:
-        ends_a = {len(data) - (o + n) for o, n in a}
-        ends_b = {len(prefix + data) - (o + n) for o, n in b}
-        # at least the final boundary (distance 0) plus one more shared
-        assert len(ends_a & ends_b) >= 2
+    """Content-defined contract under a prefix edit, in `data`'s
+    coordinates. For every input: the mask hits whose window lies in
+    `data` are the same with and without the prefix, and from the first
+    cut the two chunkings share, every later cut is shared.
+
+    Meeting at all needs a precondition, because the min/max rules cut
+    by position: in a run of identical bytes the hash is constant, so
+    the run holds no hit (forced cuts every CDC_MAX bytes) or only hits
+    (cuts every CDC_MIN bytes), counted from where each chunking
+    entered it — the pinned example stays out of phase to its end.
+    Precondition: a hit `meet` with no other hit in the CDC_MIN - 1
+    positions before it, and no forced cut before `meet` in either
+    chunking. Then each chunking's chunk holding `meet` starts at least
+    CDC_MIN - 1 bytes before it and has no earlier hit to cut at, so
+    both cut at `meet`."""
+    p = len(prefix)
+    cuts_a = [o + n - 1 for o, n in chunk_boundaries(data)[:-1]]
+    cuts_b = [o + n - 1 - p for o, n in chunk_boundaries(prefix + data)[:-1]]
+    hits_a = _mask_hits(data)
+    hits_b = {i - p for i in _mask_hits(prefix + data)}
+    aligned = _TAPS - 1
+    assert {i for i in hits_a if i >= aligned} == {
+        i for i in hits_b if i >= aligned
+    }
+    shared = sorted(set(cuts_a) & set(cuts_b))
+    if shared:
+        assert [c for c in cuts_a if c >= shared[0]] == [
+            c for c in cuts_b if c >= shared[0]
+        ]
+    meet = next(
+        (
+            c
+            for c in sorted(hits_a)
+            if aligned + CDC_MIN - 1 <= c < len(data) - 1
+            and not hits_a.intersection(range(c - CDC_MIN + 1, c))
+        ),
+        None,
+    )
+    if meet is None:
+        return
+    forced = any(c not in hits_a for c in cuts_a if c < meet) or any(
+        c not in hits_b for c in cuts_b if c < meet
+    )
+    if not forced:
+        assert meet in cuts_a and meet in cuts_b
 
 
 @settings(max_examples=100, deadline=None)
