@@ -298,6 +298,22 @@ def current_gen(spark: SparkSession, base_name: str) -> int:
     return _read_one_row_table(spark, f"{base_name}_state")[0].gen
 
 
+def _tables_like(spark: SparkSession, pattern: str) -> list[str]:
+    """Names of the current database's tables and temporary views that
+    match ``pattern``, read with ``SHOW TABLES LIKE`` — a catalog
+    command that launches no Spark job, where
+    ``spark.catalog.listTables()`` launches three per call. The pattern
+    is Spark's: ``*`` matches any run of characters, ``|`` separates
+    alternatives, and matching is case-insensitive over the whole name;
+    every other character is read as a regular expression. The bases
+    callers pass in a pattern are ``[a-z0-9_]`` identifiers, which
+    match themselves literally."""
+    return [
+        r.tableName
+        for r in spark.sql(f"SHOW TABLES LIKE '{pattern}'").collect()
+    ]
+
+
 def _max_standing_gen(spark: SparkSession, base_name: str) -> int:
     """Highest generation stamped on ANY standing row of the index —
     tombstones AND data rows, found by a catalog prefix scan over the
@@ -309,13 +325,9 @@ def _max_standing_gen(spark: SparkSession, base_name: str) -> int:
     path. A sibling index sharing the name prefix can only raise the
     floor, which is harmless: duplicate/ skipped gen values are fine,
     regression below a standing row or tombstone is not."""
-    prefix = base_name.lower() + "_"
     g = 0
-    for t in spark.catalog.listTables():
-        name = t.name
-        if not name.startswith(prefix) or name.endswith(
-            (_RW, _BAK, "__precompact", "__compacting")
-        ):
+    for name in _tables_like(spark, f"{base_name}_*"):
+        if name.endswith((_RW, _BAK, "__precompact", "__compacting")):
             continue
         tbl = spark.table(name)
         if "gen" not in tbl.columns:
@@ -889,10 +901,8 @@ def index_health(
         out["gen"] = current_gen(spark, resolved)
     if spark.catalog.tableExists(f"{resolved}_tombstones"):
         out["tombstones"] = spark.table(f"{resolved}_tombstones").count()
-    for t in sorted(n.name for n in spark.catalog.listTables()):
-        if not t.startswith(f"{resolved}_") or t.endswith(control):
-            continue
-        if t.endswith(("__rewrite", "__prewrite")):
+    for t in sorted(_tables_like(spark, f"{resolved}_*")):
+        if t.endswith(control + ("__rewrite", "__prewrite")):
             continue
         tbl = spark.table(t)
         n_files = len(tbl.inputFiles())
@@ -934,24 +944,28 @@ def refresh_base_tables(spark: SparkSession, *base_names: str) -> None:
     finishes (or per batch — the streaming scaffolds do), or before
     reading an index another job appends to.
 
-    Cost: driver-side metadata invalidation only — the re-LISTING is
-    lazy, paid by the next query over each table. Each base name is
+    Cost: no Spark job for physical base names (pinned in
+    tests/test_tombstones.py); a serving alias adds the one-row read of
+    its pointer (`resolve_index_base`). The bases' tables are found
+    with one ``SHOW TABLES LIKE`` catalog command (`_tables_like`, so
+    base names are ``[a-z0-9_]`` identifiers) and each table's cached
+    file listing is dropped; the re-LISTING is lazy, paid by the next
+    query over each table. Each base name is
     refreshed under BOTH its given spelling and its resolved physical
     base, so aliases keep working across flips."""
     from pyspark.errors import AnalysisException
 
-    names = {t.name for t in spark.catalog.listTables()}
-    prefixes = set()
-    for base in base_names:
-        prefixes.add(base)
-        prefixes.add(resolve_index_base(spark, base))
-    for t in sorted(names):
-        if any(t == p or t.startswith(f"{p}_") for p in prefixes):
-            try:
-                spark.catalog.refreshTable(t)
-            except AnalysisException:
-                pass  # dropped by a concurrent rewrite between the
-                # list and the refresh: its cache entry died with it
+    prefixes = set(base_names)
+    prefixes.update(resolve_index_base(spark, b) for b in base_names)
+    if not prefixes:
+        return
+    pattern = "|".join(f"{p}|{p}_*" for p in sorted(prefixes))
+    for t in sorted(_tables_like(spark, pattern)):
+        try:
+            spark.catalog.refreshTable(t)
+        except AnalysisException:
+            pass  # dropped by a concurrent rewrite between the list
+            # and the refresh: its cache entry died with it
 
 
 def filter_tombstoned(
@@ -1042,20 +1056,18 @@ def retire_index(
             "it points at (and drop the ptr table) instead"
         )
     _require_meta(spark, base_name, "a silent no-op retire")
-    for t in spark.catalog.listTables():
-        if not t.name.endswith("_ptr"):
-            continue
+    for ptr in _tables_like(spark, "*_ptr"):
         try:
-            rows = spark.table(t.name).limit(1).collect()
+            rows = spark.table(ptr).limit(1).collect()
         except Exception as e:  # noqa: BLE001 — fail CLOSED, never skip
             raise IllegalStateError(
-                f"cannot read serving pointer {t.name} while retiring "
+                f"cannot read serving pointer {ptr} while retiring "
                 f"{base_name} ({type(e).__name__}) — refusing to drop a "
                 "base that may still be served"
             ) from e
         if not rows:
             raise IllegalStateError(
-                f"serving pointer {t.name} is empty (a flip may be "
+                f"serving pointer {ptr} is empty (a flip may be "
                 f"mid-flight) — refusing to retire {base_name} until it "
                 "resolves"
             )
@@ -1064,7 +1076,7 @@ def retire_index(
             continue  # a *_ptr table without a base column is not ours
         if str(target).casefold() == base_name.casefold():
             raise IllegalStateError(
-                f"serving pointer {t.name} still targets {base_name} — "
+                f"serving pointer {ptr} still targets {base_name} — "
                 "flip it to the new base before retiring this one"
             )
     for s in list(suffixes) + ["state", "tombstones"]:

@@ -242,7 +242,7 @@ def assert_taken_down(
     takedown is complete everywhere; a nonzero family after a crash is
     exactly the inconsistency `resume_takedowns` repairs. Diagnostic
     tier — a catalog prefix scan per family, not a hot path."""
-    from .bucketing import filter_tombstoned, resolve_index_base
+    from .bucketing import _tables_like, filter_tombstoned, resolve_index_base
     from .operators.dedup import read_edge_ledger, read_labels
 
     idset = ids.select(F.col(ids.columns[0]).alias("_chk_id")).distinct()
@@ -250,12 +250,10 @@ def assert_taken_down(
     for base, id_col in index_bases.items():
         resolved = resolve_index_base(spark, base)
         n = 0
-        for t in spark.catalog.listTables():
-            if not t.name.startswith(resolved.lower() + "_"):
+        for t in _tables_like(spark, f"{resolved}_*"):
+            if t.endswith(("_state", "_tombstones", "_meta", "_ptr")):
                 continue
-            if t.name.endswith(("_state", "_tombstones", "_meta", "_ptr")):
-                continue
-            tbl = spark.table(t.name)
+            tbl = spark.table(t)
             if id_col not in tbl.columns:
                 continue
             live = filter_tombstoned(spark, resolved, tbl, id_col)

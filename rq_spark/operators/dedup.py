@@ -434,13 +434,14 @@ def incremental_minhash_pairs(
 
     Candidates are verified with exact Jaccard, so output pairs equal
     the exact cross-side pair set w.h.p. (the `minhash_dedup_pairs`
-    banding argument: P(miss) ≈ 3e-6 per true pair at j=0.8).
+    banding argument: P(miss) ≈ 3e-6 per true pair at j=0.8). The
+    candidate join and verify are `_minhash_probe`, shared with
+    `incremental_minhash_pairs_from_index`.
 
     ``corpus_toks``/``batch_toks``: optional pre-tokenized (doc,
     words) relations (see `tokenized`) so a caller-owned persisted
     tokenization replaces the per-side normalize regex."""
     _release_caches("incremental")
-    rows = num_hashes // bands
     c_base = (
         shingle_sets_from_words(corpus_toks, n=shingle_n)
         if corpus_toks is not None
@@ -457,15 +458,43 @@ def incremental_minhash_pairs(
     b_sets = _persist_tracked(
         b_base.filter(F.size("sh_arr") > 0), scope="incremental"
     )
-    c_bands = band_table(
-        minhash_signatures(c_sets, num_hashes=num_hashes), bands, rows
-    ).select(F.col("doc").alias("corpus_id"), "band", "bhash")
-    b_bands = band_table(
-        minhash_signatures(b_sets, num_hashes=num_hashes), bands, rows
-    ).select(F.col("doc").alias("new_id"), "band", "bhash")
+    return _minhash_probe(
+        F.broadcast(_band_rows(b_sets, num_hashes, bands, "new_id")),
+        _band_rows(c_sets, num_hashes, bands, "corpus_id"),
+        b_sets,
+        c_sets,
+        threshold,
+    )
+
+
+def _band_rows(
+    sets: DataFrame, num_hashes: int, bands: int, id_name: str
+) -> DataFrame:
+    """(``id_name``, band, bhash): the LSH band table of (doc, sh_arr)
+    shingle sets — the one banding the in-query probe, the index
+    writer, the appender and the saved-index probe all apply."""
+    return band_table(
+        minhash_signatures(sets, num_hashes=num_hashes),
+        bands,
+        num_hashes // bands,
+    ).select(F.col("doc").alias(id_name), "band", "bhash")
+
+
+def _minhash_probe(
+    b_bands: DataFrame,
+    c_bands: DataFrame,
+    b_sets: DataFrame,
+    c_sets: DataFrame,
+    threshold: float,
+) -> DataFrame:
+    """The batch-vs-corpus MinHash probe, written once for
+    `incremental_minhash_pairs` and `incremental_minhash_pairs_from_index`:
+    candidate pairs are the distinct (new_id, corpus_id) sharing a
+    (band, bhash) row of ``b_bands``/``c_bands`` (`_band_rows`; the
+    caller hints the batch side), verified by exact Jaccard of their
+    (doc, sh_arr) shingle sets ``b_sets``/``c_sets``."""
     cand = (
-        F.broadcast(b_bands)
-        .join(c_bands, ["band", "bhash"])
+        b_bands.join(c_bands, ["band", "bhash"])
         .select("new_id", "corpus_id")
         .distinct()
     )
@@ -538,13 +567,9 @@ def write_minhash_index(
         F.size("sh_arr") > 0
     )
     sets = _persist_tracked(sets, scope="minhash_index_write")
-    bands_df = band_table(
-        minhash_signatures(sets, num_hashes=num_hashes),
-        bands,
-        num_hashes // bands,
-    ).select(F.col("doc").alias("corpus_id"), "band", "bhash")
     staged_rewrite(
-        spark, base_name, MINHASH_TABLES, [bands_df, sets],
+        spark, base_name, MINHASH_TABLES,
+        [_band_rows(sets, num_hashes, bands, "corpus_id"), sets],
         lambda g: local_frame(
             spark, [(num_hashes, bands, shingle_n)],
             "num_hashes int, bands int, shingle_n int",
@@ -629,12 +654,10 @@ def append_to_minhash_index(
                     "a silent delete — pre-filter them, or delete "
                     "explicitly via bucketing.add_tombstones"
                 )
-        bands_df = band_table(
-            minhash_signatures(sets, num_hashes=meta.num_hashes),
-            meta.bands,
-            meta.num_hashes // meta.bands,
-        ).select(F.col("doc").alias("corpus_id"), "band", "bhash")
-        return [bands_df, sets]
+        return [
+            _band_rows(sets, meta.num_hashes, meta.bands, "corpus_id"),
+            sets,
+        ]
 
     staged_append(
         spark, base_name, MINHASH_TABLES, rows,
@@ -664,50 +687,33 @@ def incremental_minhash_pairs_from_index(
     leaves its scan. When the batch outgrows the broadcast budget,
     pass False: the batch shuffles INTO the table's (band, bhash)
     bucketing while the corpus side still reads zero-Exchange — the
-    layout the index was written for."""
-    from ..bucketing import resolve_index_base
+    layout the index was written for. The probe itself is
+    `_minhash_probe`, the in-query operator's body."""
+    from ..bucketing import filter_tombstoned, resolve_index_base
 
     base_name = resolve_index_base(spark, base_name)
     meta = spark.table(f"{base_name}_meta").collect()[0]
-    num_hashes, bands, shingle_n = meta.num_hashes, meta.bands, meta.shingle_n
     _release_caches("incremental_idx")
     b_sets = _persist_tracked(
-        shingle_sets(_spread(batch), text_col, id_col, n=shingle_n).filter(
-            F.size("sh_arr") > 0
-        ),
+        shingle_sets(_spread(batch), text_col, id_col, n=meta.shingle_n)
+        .filter(F.size("sh_arr") > 0),
         scope="incremental_idx",
     )
-    b_bands = band_table(
-        minhash_signatures(b_sets, num_hashes=num_hashes),
-        bands,
-        num_hashes // bands,
-    ).select(F.col("doc").alias("new_id"), "band", "bhash")
-    if broadcast_batch:
-        b_bands = F.broadcast(b_bands)
-    from ..bucketing import filter_tombstoned
-
+    b_bands = _band_rows(b_sets, meta.num_hashes, meta.bands, "new_id")
     # deleted/reingested ids drop out map-side (broadcast anti-join on
     # the deletion-sized tombstone table — the corpus never shuffles)
     c_bands = filter_tombstoned(
         spark, base_name, spark.table(f"{base_name}_bands"), "corpus_id"
     )
-    cand = (
-        b_bands.join(c_bands, ["band", "bhash"])
-        .select("new_id", "corpus_id")
-        .distinct()
-    )
     c_sets = filter_tombstoned(
         spark, base_name, spark.table(f"{base_name}_shingles"), "doc"
     )
-    ca = c_sets.select(F.col("doc").alias("corpus_id"), F.col("sh_arr").alias("_cc"))
-    ba = b_sets.select(F.col("doc").alias("new_id"), F.col("sh_arr").alias("_bb"))
-    c = F.size(F.array_intersect("_bb", "_cc")).cast("double")
-    j = c / (F.size("_bb") + F.size("_cc") - c)
-    return (
-        cand.join(ba, "new_id")
-        .join(ca, "corpus_id")
-        .select("new_id", "corpus_id", j.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+    return _minhash_probe(
+        F.broadcast(b_bands) if broadcast_batch else b_bands,
+        c_bands,
+        b_sets,
+        c_sets,
+        threshold,
     )
 
 
@@ -1308,9 +1314,17 @@ def hamming_near_pairs(
     (SimHash, or the perceptual `imagehash.dhash64`). Candidate work ∝
     band collisions, never n² — narrower bands widen the guaranteed
     radius but collide more (2^-width random-pair rate per band), the
-    standard multi-index-hashing tradeoff."""
+    standard multi-index-hashing tradeoff. The scan is
+    `_hamming_self_pairs`, shared with `hamming_near_pairs_from_index`."""
     _check_hamming_params(max_hamming, bands)
-    banded = _banded_sig(sig, bands)
+    return _hamming_self_pairs(_banded_sig(sig, bands), max_hamming)
+
+
+def _hamming_self_pairs(banded: DataFrame, max_hamming: int) -> DataFrame:
+    """The corpus-vs-self Hamming pair scan over (doc, sig, band, bval)
+    rows (`_banded_sig`'s shape), written once for `hamming_near_pairs`
+    and `hamming_near_pairs_from_index`: a (band, bval) self-join, each
+    pair once (a_id < b_id), popcount-verified, then distinct."""
     a = banded.select(
         F.col("doc").alias("a_id"), F.col("sig").alias("a_sig"), "band", "bval"
     )
@@ -1432,34 +1446,20 @@ def hamming_near_pairs_from_index(
     SortMergeJoin — the only shuffle left in the whole pair scan is
     the final pair-level distinct, which is ∝ QUALIFYING pairs (the
     popcount verify runs map-side before it, r11 verdict), never
-    ∝ corpus. Exact pair parity with the in-query operator over the
-    same signatures is pinned in tests/test_index_append.py."""
+    ∝ corpus. Both faces run `_hamming_self_pairs`, this one on the
+    tombstone-filtered table; exact pair parity with the in-query
+    operator over the same signatures is pinned in
+    tests/test_index_append.py."""
     from ..bucketing import filter_tombstoned, resolve_index_base
 
     base_name = resolve_index_base(spark, base_name)
     meta = spark.table(f"{base_name}_meta").collect()[0]
     _check_hamming_params(max_hamming, meta.bands)
-    t = filter_tombstoned(
-        spark, base_name, spark.table(f"{base_name}_hbands"), "doc"
-    )
-    a = t.select(
-        F.col("doc").alias("a_id"), F.col("sig").alias("a_sig"), "band", "bval"
-    )
-    b = t.select(
-        F.col("doc").alias("b_id"), F.col("sig").alias("b_sig"), "band", "bval"
-    )
-    # verify-then-distinct (r11 verdict): halves the candidate
-    # shuffle's width (no 64-bit sigs ride the distinct) and drops
-    # non-qualifying band collisions map-side — see hamming_near_pairs
-    return (
-        a.join(b, ["band", "bval"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .withColumn(
-            "hamming", F.bit_count(F.col("a_sig").bitwiseXOR(F.col("b_sig")))
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("a_id", "b_id", "hamming")
-        .distinct()
+    return _hamming_self_pairs(
+        filter_tombstoned(
+            spark, base_name, spark.table(f"{base_name}_hbands"), "doc"
+        ),
+        max_hamming,
     )
 
 
@@ -1809,7 +1809,6 @@ def absorb_edges(
     new_edges: DataFrame,
     new_nodes: DataFrame | None = None,
     max_iter: int = 20,
-    broadcast_batch: bool = True,
     scope: str = "absorb_edges",
     return_delta: bool = False,
 ) -> DataFrame:
@@ -1859,15 +1858,12 @@ def absorb_edges(
     graph (nodes = touched representatives — for a daily batch, a
     vanishing fraction of the corpus); the final label rewrite is one
     left join against the standing labels whose right side is the
-    (touched-comp-sized) remap. With ``broadcast_batch`` (the
-    daily-ingest default) those three batch-sized sides carry
+    (touched-comp-sized) remap. Those three batch-sized sides carry
     explicit broadcast hints, so the corpus-sized labels relation is
     scanned map-side and never shuffled on a corpus-sized key —
     pinned, not left to the planner's statistics (r11 self-review:
     the sibling index probes hint theirs, and a misestimate here
-    would sort-merge-shuffle the standing labels three times). Pass
-    False when a backfill batch outgrows the broadcast budget; the
-    joins degrade to shuffles ∝ labels, still candidate-bounded.
+    would sort-merge-shuffle the standing labels three times).
 
     ``scope`` names the persist-registry scope (r12): CHAINED absorbs
     — day 2 absorbing into day 1's output, the production daily loop —
@@ -1914,31 +1910,24 @@ def absorb_edges(
     if new_nodes is not None:
         ends = ends.unionAll(new_nodes.select("node"))
     ends = ends.distinct()
-    if broadcast_batch:
-        # ADVICE r11: `ends ANTI-JOIN labels` broadcasts only BuildRight
-        # for equi LeftAnti, so the corpus-sized labels on the right
-        # would sort-merge-shuffle on node. Flip it: scan labels
-        # map-side against the broadcast batch endpoints (left_semi,
-        # batch-sized output), then anti-join the endpoints against
-        # THAT — both joins broadcast the batch-sized side, the
-        # standing labels never shuffle.
-        existing = labels.select("node").join(
-            F.broadcast(ends), "node", "left_semi"
-        )
-        fresh = ends.join(F.broadcast(existing), "node", "left_anti")
-    else:
-        # backfill-sized batch: one shuffle ∝ labels is the honest cost
-        fresh = ends.join(labels.select("node"), "node", "left_anti")
-    fresh = fresh.select("node", F.col("node").alias("rep"))
+    # ADVICE r11: `ends ANTI-JOIN labels` broadcasts only BuildRight
+    # for equi LeftAnti, so the corpus-sized labels on the right would
+    # sort-merge-shuffle on node. Flip it: scan labels map-side against
+    # the broadcast batch endpoints (left_semi, batch-sized output),
+    # then anti-join the endpoints against THAT — both joins broadcast
+    # the batch-sized side, the standing labels never shuffle.
+    existing = labels.select("node").join(
+        F.broadcast(ends), "node", "left_semi"
+    )
+    fresh = ends.join(F.broadcast(existing), "node", "left_anti").select(
+        "node", F.col("node").alias("rep")
+    )
     all_labels = _persist_tracked(labels.unionAll(fresh), scope=scope)
     la = all_labels.select(F.col("node").alias("a_id"), F.col("rep").alias("_ra"))
     lb = all_labels.select(F.col("node").alias("b_id"), F.col("rep").alias("_rb"))
-    e1 = F.broadcast(new_edges) if broadcast_batch else new_edges
-    e2 = e1.join(la, "a_id")
-    if broadcast_batch:
-        e2 = F.broadcast(e2)
     redges = (
-        e2.join(lb, "b_id")
+        F.broadcast(F.broadcast(new_edges).join(la, "a_id"))
+        .join(lb, "b_id")
         .filter(F.col("_ra") != F.col("_rb"))
         .select(F.col("_ra").alias("a_id"), F.col("_rb").alias("b_id"))
         .distinct()
@@ -1956,9 +1945,8 @@ def absorb_edges(
         # moved rep (all_labels ⊇ fresh, so remapped batch nodes come
         # out of this join too) ∪ fresh singletons whose rep stands
         strict = remap.where(F.col("_srep") != F.col("rep"))
-        moved = strict.select("rep")
-        if broadcast_batch:
-            strict, moved = F.broadcast(strict), F.broadcast(moved)
+        moved = F.broadcast(strict.select("rep"))
+        strict = F.broadcast(strict)
         changed = all_labels.join(strict, "rep").select(
             "node", F.col("_srep").alias("rep")
         )
@@ -1966,9 +1954,7 @@ def absorb_edges(
             "node", "rep"
         )
         return changed.unionAll(kept_fresh)
-    if broadcast_batch:
-        remap = F.broadcast(remap)
-    return all_labels.join(remap, "rep", "left").select(
+    return all_labels.join(F.broadcast(remap), "rep", "left").select(
         "node", F.coalesce("_srep", "rep").alias("rep")
     )
 

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from rq_spark.operators import dedup as D
 from rq_spark.operators import similarity as S
 from rq_spark.queries.helpers import table
+from rq_spark.util import local_frame
 
 SF = "/root/testdata/sf0.01"
 
@@ -196,7 +197,7 @@ def _sig_splits():
 
 def test_hamming_ingest_loop_two_days(spark):
     corpus_rows, b1_rows, b2_rows = _sig_splits()
-    mk = lambda rows: spark.createDataFrame(rows, "doc long, sig long")  # noqa: E731
+    mk = lambda rows: local_frame(spark, rows, "doc long, sig long")  # noqa: E731
     corpus, batch1, batch2 = mk(corpus_rows), mk(b1_rows), mk(b2_rows)
     b_live, b_ref = "t_loop_ham", "t_loop_ham_ref"
     try:
@@ -279,7 +280,7 @@ def test_hamming_ingest_loop_two_days(spark):
         # tombstone riding on a twice-appended twice-compacted layout)
         re_id, new_sig = b1_rows[0][0], _s64(corpus_rows[70][1] ^ (1 << 2))
         D.append_to_hamming_index(
-            spark.createDataFrame([(re_id, new_sig)], "doc long, sig long"),
+            local_frame(spark, [(re_id, new_sig)], "doc long, sig long"),
             b_live,
             reingest=True,
         )
@@ -288,8 +289,8 @@ def test_hamming_ingest_loop_two_days(spark):
             corpus.unionByName(batch1).unionByName(batch2)
             .filter(F.col("doc") != re_id)
             .unionByName(
-                spark.createDataFrame(
-                    [(re_id, new_sig)], "doc long, sig long"
+                local_frame(
+                    spark, [(re_id, new_sig)], "doc long, sig long"
                 )
             )
         )
@@ -402,7 +403,7 @@ def test_hamming_loop_midloop_takedown_and_reingest(spark):
     re-crawled doc's NEW signature), and the final labels equal a full
     CC recompute over exactly the surviving edge ledger."""
     corpus_rows, b1_rows, b2_rows = _sig_splits()
-    mk = lambda rows: spark.createDataFrame(rows, "doc long, sig long")  # noqa: E731
+    mk = lambda rows: local_frame(spark, rows, "doc long, sig long")  # noqa: E731
     corpus, batch1, batch2 = mk(corpus_rows), mk(b1_rows), mk(b2_rows)
     b_live, b_ref = "t_loop_takedown", "t_loop_takedown_ref"
     victim, re_id = 2000, 2001  # day-1 docs with cross-day edges
@@ -449,25 +450,25 @@ def test_hamming_loop_midloop_takedown_and_reingest(spark):
         # day 2: TAKEDOWN of `victim` + REINGEST of `re_id`
         add_tombstones(
             spark, b_live,
-            spark.createDataFrame([(victim,)], "doc long"), "doc",
+            local_frame(spark, [(victim,)], "doc long"), "doc",
         )
         labels_ev = D.evict_nodes(
             labels1, ledger,
-            spark.createDataFrame([(victim,)], "node long"),
+            local_frame(spark, [(victim,)], "node long"),
             scope="e2e_tev1",
         ).localCheckpoint()
         surv1 = ledger.filter(
             (F.col("a_id") != victim) & (F.col("b_id") != victim)
         ).localCheckpoint()
         D.append_to_hamming_index(
-            spark.createDataFrame([(re_id, new_sig)], "doc long, sig long"),
+            local_frame(spark, [(re_id, new_sig)], "doc long, sig long"),
             b_live, reingest=True,
         )
         # the re-crawled doc re-enters day 3 as a fresh node: evict its
         # OLD identity from the labels (its old edges are stale)
         labels_ev2 = D.evict_nodes(
             labels_ev, surv1,
-            spark.createDataFrame([(re_id,)], "node long"),
+            local_frame(spark, [(re_id,)], "node long"),
             scope="e2e_tev2",
         ).localCheckpoint()
         surv2 = surv1.filter(
@@ -477,7 +478,7 @@ def test_hamming_loop_midloop_takedown_and_reingest(spark):
 
         # day 3: normal loop over batch2 ∪ the re-crawled doc
         batch3 = batch2.unionByName(
-            spark.createDataFrame([(re_id, new_sig)], "doc long, sig long")
+            local_frame(spark, [(re_id, new_sig)], "doc long, sig long")
         )
         probe3 = D.hamming_probe_from_index(
             spark, batch3, b_live, max_hamming=3
@@ -508,8 +509,8 @@ def test_hamming_loop_midloop_takedown_and_reingest(spark):
             corpus.unionByName(batch1).unionByName(batch2)
             .filter(~F.col("doc").isin(victim, re_id))
             .unionByName(
-                spark.createDataFrame(
-                    [(re_id, new_sig)], "doc long, sig long"
+                local_frame(
+                    spark, [(re_id, new_sig)], "doc long, sig long"
                 )
             )
         )
@@ -602,7 +603,7 @@ def test_full_loop_restart_gate(spark, tmp_path):
     victim = 2000  # a day-1 doc wired into cross-day components
 
     def run_loop(sess, ibase, lbase, ebase, restart, tmp):
-        mk = lambda rows: sess.createDataFrame(rows, "doc long, sig long")  # noqa: E731
+        mk = lambda rows: local_frame(sess, rows, "doc long, sig long")  # noqa: E731
         corpus, batch1, batch2 = mk(corpus_rows), mk(b1_rows), mk(b2_rows)
 
         # day 0: all three durable pieces
@@ -664,12 +665,12 @@ def test_full_loop_restart_gate(spark, tmp_path):
         # a normal ingest of batch2
         L.takedown(
             sess,
-            sess.createDataFrame([(victim,)], "node long"),
+            local_frame(sess, [(victim,)], "node long"),
             {ibase: "doc"},
             labels_base=lbase,
             ledger_base=ebase,
         )
-        ingest_day(sess, sess.createDataFrame(b2_rows, "doc long, sig long"), "d2")
+        ingest_day(sess, local_frame(sess, b2_rows, "doc long, sig long"), "d2")
 
         scan = {
             (r.a_id, r.b_id, r.hamming)
@@ -701,12 +702,12 @@ def test_full_loop_restart_gate(spark, tmp_path):
         scan, labels, ledger = got_r
         assert all(victim not in (a, b) for a, b, _h in scan)
         # independent oracle: labels == CC over the surviving ledger
-        surv = spark.createDataFrame(
-            sorted(ledger), "a_id long, b_id long"
+        surv = local_frame(
+            spark, sorted(ledger), "a_id long, b_id long"
         )
         nodes = (
-            spark.createDataFrame(
-                [(d,) for d, _s in corpus_rows + b1_rows + b2_rows],
+            local_frame(
+                spark, [(d,) for d, _s in corpus_rows + b1_rows + b2_rows],
                 "node long",
             ).filter(F.col("node") != victim)
         )

@@ -264,7 +264,14 @@ def test_ivfpq_join_matches_collected_path_and_is_collect_free(spark):
 
     import ast
 
-    tree = ast.parse(inspect.getsource(S.ivfpq_topk_join))
+    # the operator and the search body it shares with the saved-index
+    # probe (`_ivfpq_search`, ending in the `_adc_rerank` tail)
+    tree = ast.parse(
+        "\n".join(
+            inspect.getsource(f)
+            for f in (S.ivfpq_topk_join, S._ivfpq_search, S._adc_rerank)
+        )
+    )
     calls = [
         n.func.attr
         for n in ast.walk(tree)
@@ -412,12 +419,13 @@ def test_semantic_decontaminate_pairs_and_broadcast_plan(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_adc_auto_dispatch_routes_large_query_sets(spark):
+def test_adc_auto_dispatch_routes_large_query_sets(spark, monkeypatch):
     """r9 (r8 verdict task #2): pq_topk / ivfpq_topk with a query set
-    over max_collect_queries auto-route to the collect-free LUT-column
+    over COLLECT_DISPATCH_MAX auto-route to the collect-free LUT-column
     join path — same top-k as calling ivfpq_topk_join directly, and the
     dispatched plan carries NO MapInPandas (the collected-closure ADC
-    marker); the collected path does."""
+    marker); the collected path does. The bound is read at call time,
+    so the test moves it."""
     from pyspark.sql import functions as F
 
     from rq_spark.operators import similarity as S
@@ -434,22 +442,24 @@ def test_adc_auto_dispatch_routes_large_query_sets(spark):
             corpus, queries, broadcast_queries=False, **kw
         ).collect()
     }
-    # 5 queries > max_collect_queries=3 -> dispatched
-    routed_df = S.ivfpq_topk(corpus, queries, max_collect_queries=3, **kw)
+    # 5 queries > COLLECT_DISPATCH_MAX=3 -> dispatched
+    monkeypatch.setattr(S, "COLLECT_DISPATCH_MAX", 3)
+    routed_df = S.ivfpq_topk(corpus, queries, **kw)
     plan = routed_df._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" not in plan, "dispatch failed: collected ADC ran"
     assert {(r.query_id, r.neighbor_id) for r in routed_df.collect()} == direct
 
-    # under the threshold (or with None): the collected path runs
-    kept_df = S.ivfpq_topk(corpus, queries, max_collect_queries=None, **kw)
+    # under the threshold: the collected path runs
+    monkeypatch.setattr(S, "COLLECT_DISPATCH_MAX", 10**9)
+    kept_df = S.ivfpq_topk(corpus, queries, **kw)
     plan = kept_df._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
 
     # pq_topk's large-query route goes to the same join path (IVF
     # pruning added — the production composition), also MapInPandas-free
+    monkeypatch.setattr(S, "COLLECT_DISPATCH_MAX", 3)
     routed_pq = S.pq_topk(
         corpus, queries, k=10, m=8, n_codes=32, iters=2, rerank=150,
-        max_collect_queries=3,
     )
     plan = routed_pq._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" not in plan
@@ -603,7 +613,14 @@ def test_ann_index_probe_matches_inline_and_reads_bucketed(spark):
 
         # the probe itself never trains or collects anything
         # corpus-sized: no Lloyd calls, no collect of a corpus relation
-        src = inspect.getsource(S.ivfpq_topk_join_from_index)
+        # ... nor does the search body it shares with the in-query
+        # operator
+        src = "\n".join(
+            inspect.getsource(f)
+            for f in (
+                S.ivfpq_topk_join_from_index, S._ivfpq_search, S._adc_rerank
+            )
+        )
         assert "ivf_centroids" not in src and "pq_codebooks" not in src
         tree = ast.parse(src)
         calls = [

@@ -34,6 +34,7 @@ from rq_spark.bucketing import (
     refresh_base_tables,
 )
 from rq_spark.queries.helpers import table
+from rq_spark.util import local_frame
 
 SF = "/root/testdata/sf0.01"
 
@@ -66,7 +67,7 @@ def _pairs(df):
 
 def test_hamming_delete_reingest_and_purge(spark):
     rows, base = _sig_corpus()
-    sig = spark.createDataFrame(rows, "doc long, sig long")
+    sig = local_frame(spark, rows, "doc long, sig long")
     b_live, b_ref = "t_tomb_ham", "t_tomb_ham_ref"
     try:
         D.write_hamming_index(sig, b_live, bands=4)
@@ -78,7 +79,7 @@ def test_hamming_delete_reingest_and_purge(spark):
         # from probes in BOTH roles (corpus side here, both sides of
         # the self-join)
         add_tombstones(
-            spark, b_live, spark.createDataFrame([(1000,)], "doc long"), "doc"
+            spark, b_live, local_frame(spark, [(1000,)], "doc long"), "doc"
         )
         D.write_hamming_index(
             sig.filter(F.col("doc") != 1000), b_ref, bands=4
@@ -88,7 +89,7 @@ def test_hamming_delete_reingest_and_purge(spark):
         assert got == want and not any(1000 in (a, b) for a, b, _h in got)
         probe = D.hamming_probe_from_index(
             spark,
-            spark.createDataFrame([(9000, rows[100][1])], "doc long, sig long"),
+            local_frame(spark, [(9000, rows[100][1])], "doc long, sig long"),
             b_live,
             max_hamming=3,
         ).collect()
@@ -103,12 +104,12 @@ def test_hamming_delete_reingest_and_purge(spark):
         # doc 0 carries the new value)
         new0 = _s64(base[50] ^ (1 << 5))  # now a near-dup of doc 50
         D.append_to_hamming_index(
-            spark.createDataFrame([(0, new0)], "doc long, sig long"),
+            local_frame(spark, [(0, new0)], "doc long, sig long"),
             b_live,
             reingest=True,
         )
         rebuilt = sig.filter(~F.col("doc").isin(0, 1000)).unionByName(
-            spark.createDataFrame([(0, new0)], "doc long, sig long")
+            local_frame(spark, [(0, new0)], "doc long, sig long")
         )
         D.write_hamming_index(rebuilt, b_ref, bands=4)
         want2 = _pairs(D.hamming_near_pairs_from_index(spark, b_ref))
@@ -156,7 +157,7 @@ def test_minhash_delete_reingest_and_purge(spark):
         add_tombstones(
             spark,
             b_live,
-            spark.createDataFrame([(victim,)], "doc_id long"),
+            local_frame(spark, [(victim,)], "doc_id long"),
             "doc_id",
         )
         D.write_minhash_index(
@@ -175,8 +176,8 @@ def test_minhash_delete_reingest_and_purge(spark):
             .collect()[0]
             .text
         )
-        changed = spark.createDataFrame(
-            [(victim, donor_text)], "doc_id long, text string"
+        changed = local_frame(
+            spark, [(victim, donor_text)], "doc_id long, text string"
         )
         D.append_to_minhash_index(changed, "text", "doc_id", b_live, reingest=True)
         D.write_minhash_index(
@@ -238,7 +239,7 @@ def test_ann_delete_reingest_and_purge(spark):
         add_tombstones(
             spark,
             b_live,
-            spark.createDataFrame([(victim,)], "vec_id long"),
+            local_frame(spark, [(victim,)], "vec_id long"),
             "vec_id",
         )
         S.write_ann_index(
@@ -255,8 +256,8 @@ def test_ann_delete_reingest_and_purge(spark):
         donor = vecs.filter(F.col("vec_id") == 1).select("embedding").collect()[
             0
         ].embedding
-        changed = spark.createDataFrame(
-            [(victim, list(donor))], "vec_id long, embedding array<double>"
+        changed = local_frame(
+            spark, [(victim, list(donor))], "vec_id long, embedding array<double>"
         )
         S.append_to_ann_index(changed, b_live, reingest=True)
         S.write_ann_index(
@@ -296,9 +297,9 @@ def test_tombstone_degenerate_inputs(spark):
     one, and purging with zero live tombstones leaves the table
     byte-identical in content."""
     rows, _ = _sig_corpus()
-    sig = spark.createDataFrame(rows[:30], "doc long, sig long")
-    empty_ids = spark.createDataFrame([], "doc long")
-    empty_sig = spark.createDataFrame([], "doc long, sig long")
+    sig = local_frame(spark, rows[:30], "doc long, sig long")
+    empty_ids = local_frame(spark, [], "doc long")
+    empty_sig = local_frame(spark, [], "doc long, sig long")
     base = "t_tomb_degen"
     try:
         D.write_hamming_index(sig, base, bands=4)
@@ -314,9 +315,9 @@ def test_tombstone_degenerate_inputs(spark):
 
         # real delete, then: broadcast and non-broadcast probes agree
         add_tombstones(
-            spark, base, spark.createDataFrame([(0,)], "doc long"), "doc"
+            spark, base, local_frame(spark, [(0,)], "doc long"), "doc"
         )
-        probe = spark.createDataFrame([(9000, rows[0][1])], "doc long, sig long")
+        probe = local_frame(spark, [(9000, rows[0][1])], "doc long, sig long")
         bc = {
             (r.new_id, r.corpus_id, r.hamming)
             for r in D.hamming_probe_from_index(spark, probe, base).collect()
@@ -349,12 +350,12 @@ def test_tombstone_anti_join_is_broadcast_and_keeps_bucketed_scan(spark):
     import re
 
     rows, _ = _sig_corpus()
-    sig = spark.createDataFrame(rows, "doc long, sig long")
+    sig = local_frame(spark, rows, "doc long, sig long")
     base = "t_tomb_plan"
     try:
         D.write_hamming_index(sig, base, bands=4)
         add_tombstones(
-            spark, base, spark.createDataFrame([(5,)], "doc long"), "doc"
+            spark, base, local_frame(spark, [(5,)], "doc long"), "doc"
         )
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
@@ -386,12 +387,12 @@ def test_reingest_crash_leaves_duplicates_never_deletes(spark, monkeypatch):
     import rq_spark.bucketing as B
 
     rows, base_sigs = _sig_corpus()
-    sig = spark.createDataFrame(rows, "doc long, sig long")
+    sig = local_frame(spark, rows, "doc long, sig long")
     base = "t_tomb_crash"
     try:
         D.write_hamming_index(sig, base, bands=4)
         new0 = _s64(base_sigs[20] ^ (1 << 7))  # near-dup of doc 20 now
-        changed = spark.createDataFrame([(0, new0)], "doc long, sig long")
+        changed = local_frame(spark, [(0, new0)], "doc long, sig long")
 
         real_add = B.add_tombstones
 
@@ -437,12 +438,12 @@ def test_full_write_crash_keeps_old_index_and_tombstones(spark, monkeypatch):
     from rq_spark import bucketing as B
 
     rows, _ = _sig_corpus()
-    sig = spark.createDataFrame(rows, "doc long, sig long")
+    sig = local_frame(spark, rows, "doc long, sig long")
     base = "t_tomb_worder"
     try:
         D.write_hamming_index(sig, base, bands=4)
         add_tombstones(
-            spark, base, spark.createDataFrame([(3,)], "doc long"), "doc"
+            spark, base, local_frame(spark, [(3,)], "doc long"), "doc"
         )
         want = _pairs(D.hamming_near_pairs_from_index(spark, base))
         assert want and all(3 not in (a, b) for a, b, _h in want)
@@ -488,16 +489,16 @@ def test_full_write_swap_crash_is_loud_then_rolls_back(spark, monkeypatch):
     from rq_spark import bucketing as B
 
     rows, _ = _sig_corpus()
-    sig = spark.createDataFrame(rows, "doc long, sig long")
-    sig2 = spark.createDataFrame(
-        [(d + 5000, s) for d, s in rows], "doc long, sig long"
+    sig = local_frame(spark, rows, "doc long, sig long")
+    sig2 = local_frame(
+        spark, [(d + 5000, s) for d, s in rows], "doc long, sig long"
     )
     base = "t_tomb_swapcrash"
     tables = [f"{base}_meta", f"{base}_hbands"]
     try:
         D.write_hamming_index(sig, base, bands=4)
         add_tombstones(
-            spark, base, spark.createDataFrame([(3,)], "doc long"), "doc"
+            spark, base, local_frame(spark, [(3,)], "doc long"), "doc"
         )
         want = _pairs(D.hamming_near_pairs_from_index(spark, base))
         assert want and all(3 not in (a, b) for a, b, _h in want)
@@ -548,7 +549,7 @@ def test_tombstone_generation_semantics(spark):
     resurrected rows, deleting an unknown id is harmless, and
     filter_tombstoned without a tombstone table is the identity."""
     rows, _ = _sig_corpus()
-    sig = spark.createDataFrame(rows[:10], "doc long, sig long")
+    sig = local_frame(spark, rows[:10], "doc long, sig long")
     base = "t_tomb_gen"
     try:
         D.write_hamming_index(sig, base, bands=4)
@@ -560,7 +561,7 @@ def test_tombstone_generation_semantics(spark):
         # no tombstone table yet: identity, same plan object semantics
         assert filter_tombstoned(spark, base, t, "doc").count() == t.count()
 
-        ids = lambda v: spark.createDataFrame([(v,)], "doc long")  # noqa: E731
+        ids = lambda v: local_frame(spark, [(v,)], "doc long")  # noqa: E731
         add_tombstones(spark, base, ids(3), "doc")  # gen g0 + 1
         assert current_gen(spark, base) == g0 + 1
         live = filter_tombstoned(spark, base, spark.table(f"{base}_hbands"), "doc")
@@ -568,7 +569,7 @@ def test_tombstone_generation_semantics(spark):
 
         # re-append id 3 (gen 2 > tombstone gen 1): resurrected
         D.append_to_hamming_index(
-            spark.createDataFrame([(3, rows[3][1])], "doc long, sig long"), base
+            local_frame(spark, [(3, rows[3][1])], "doc long, sig long"), base
         )
         live = filter_tombstoned(spark, base, spark.table(f"{base}_hbands"), "doc")
         assert live.filter("doc = 3").count() == 4  # the NEW rows only
@@ -601,7 +602,7 @@ def test_concurrent_writer_detection(spark, monkeypatch):
     )
 
     rows, _ = _sig_corpus()
-    sig = spark.createDataFrame(rows[:20], "doc long, sig long")
+    sig = local_frame(spark, rows[:20], "doc long, sig long")
     base = "t_tomb_writers"
     try:
         D.write_hamming_index(sig, base, bands=4)
@@ -627,11 +628,11 @@ def test_concurrent_writer_detection(spark, monkeypatch):
         monkeypatch.setattr(B, "write_bucketed", rival_wb)
         with pytest.raises(ConcurrentWriterError):
             D.append_to_hamming_index(
-                spark.createDataFrame([(999, 7)], "doc long, sig long"), base
+                local_frame(spark, [(999, 7)], "doc long, sig long"), base
             )
         # the single-writer path is unchanged: a clean retry succeeds
         D.append_to_hamming_index(
-            spark.createDataFrame([(999, 7)], "doc long, sig long"), base
+            local_frame(spark, [(999, 7)], "doc long, sig long"), base
         )
     finally:
         _drop(spark, base, ("hbands", "meta"))
@@ -652,12 +653,12 @@ def test_restart_orphan_dirs_fail_loudly_on_mutation(spark):
     from rq_spark.errors import IllegalStateError
 
     rows, _ = _sig_corpus()
-    sig = spark.createDataFrame(rows[:20], "doc long, sig long")
+    sig = local_frame(spark, rows[:20], "doc long, sig long")
     base = "t_tomb_orphan"
     try:
         D.write_hamming_index(sig, base, bands=4)
         add_tombstones(
-            spark, base, spark.createDataFrame([(3,)], "doc long"), "doc"
+            spark, base, local_frame(spark, [(3,)], "doc long"), "doc"
         )
         # simulate the restart: catalog forgets the table, dir survives
         loc = _managed_location(spark, f"{base}_tombstones")
@@ -667,7 +668,7 @@ def test_restart_orphan_dirs_fail_loudly_on_mutation(spark):
 
         with pytest.raises(IllegalStateError, match="refusing to overwrite"):
             add_tombstones(
-                spark, base, spark.createDataFrame([(4,)], "doc long"), "doc"
+                spark, base, local_frame(spark, [(4,)], "doc long"), "doc"
             )
 
         # the full rewrite path resets deletion state by declared intent
@@ -719,8 +720,8 @@ def test_reingest_unusable_docs_raise_before_any_write(spark):
         D.write_minhash_index(corpus, "text", "doc_id", base)
         victim = corpus.select("doc_id").limit(1).collect()[0].doc_id
         before = spark.table(f"{base}_shingles").count()
-        bad = spark.createDataFrame(
-            [(victim, "too short")], "doc_id long, text string"
+        bad = local_frame(
+            spark, [(victim, "too short")], "doc_id long, text string"
         )
         with pytest.raises(ValueError, match="refusing a silent delete"):
             D.append_to_minhash_index(bad, "text", "doc_id", base, reingest=True)
@@ -731,12 +732,12 @@ def test_reingest_unusable_docs_raise_before_any_write(spark):
 
     # hamming: a NULL signature
     rows, _ = _sig_corpus()
-    sig = spark.createDataFrame(rows[:20], "doc long, sig long")
+    sig = local_frame(spark, rows[:20], "doc long, sig long")
     hbase = "t_tomb_unusable_h"
     try:
         D.write_hamming_index(sig, hbase, bands=4)
-        nullsig = spark.createDataFrame(
-            [(3, None)], "doc long, sig long"
+        nullsig = local_frame(
+            spark, [(3, None)], "doc long, sig long"
         )
         with pytest.raises(ValueError, match="refusing a silent delete"):
             D.append_to_hamming_index(nullsig, hbase, reingest=True)
@@ -752,8 +753,8 @@ def test_reingest_unusable_docs_raise_before_any_write(spark):
         S.write_ann_index(corpus_v, abase, n_centroids=4, m=4, n_codes=8, iters=1)
         vid = corpus_v.select("vec_id").limit(1).collect()[0].vec_id
         dim = len(corpus_v.select("embedding").limit(1).collect()[0].embedding)
-        zero = spark.createDataFrame(
-            [(vid, [0.0] * dim)], "vec_id long, embedding array<double>"
+        zero = local_frame(
+            spark, [(vid, [0.0] * dim)], "vec_id long, embedding array<double>"
         )
         with pytest.raises(ValueError, match="refusing a silent delete"):
             S.append_to_ann_index(zero, abase, reingest=True)
@@ -773,11 +774,11 @@ def test_state_loss_never_regresses_gen_below_tombstones(spark):
     loss. Duplicate gen values across appends are harmless; regression
     below a tombstone is not."""
     rows, _ = _sig_corpus()
-    sig = spark.createDataFrame(rows[:10], "doc long, sig long")
+    sig = local_frame(spark, rows[:10], "doc long, sig long")
     base = "t_tomb_stateloss"
     try:
         D.write_hamming_index(sig, base, bands=4)
-        ids = lambda v: spark.createDataFrame([(v,)], "doc long")  # noqa: E731
+        ids = lambda v: local_frame(spark, [(v,)], "doc long")  # noqa: E731
         add_tombstones(spark, base, ids(3), "doc")
         add_tombstones(spark, base, ids(4), "doc")
         g_before = current_gen(spark, base)
@@ -789,7 +790,7 @@ def test_state_loss_never_regresses_gen_below_tombstones(spark):
 
         # re-append doc 3: its rows must OUTLIVE the standing tombstone
         D.append_to_hamming_index(
-            spark.createDataFrame([(3, rows[3][1])], "doc long, sig long"),
+            local_frame(spark, [(3, rows[3][1])], "doc long, sig long"),
             base,
         )
         assert current_gen(spark, base) == g_before + 1
@@ -815,12 +816,12 @@ def test_state_loss_never_regresses_gen_below_data_rows(spark):
     base = "t_tomb_stateloss_rows"
     try:
         D.write_hamming_index(
-            spark.createDataFrame(rows[:8], "doc long, sig long"), base, bands=4
+            local_frame(spark, rows[:8], "doc long, sig long"), base, bands=4
         )
         # two appends push data-row gens to 2 and 3; zero tombstones stand
         for doc, i in ((200, 20), (201, 21)):
             D.append_to_hamming_index(
-                spark.createDataFrame([(doc, rows[i][1])], "doc long, sig long"),
+                local_frame(spark, [(doc, rows[i][1])], "doc long, sig long"),
                 base,
             )
         g_before = current_gen(spark, base)
@@ -832,7 +833,7 @@ def test_state_loss_never_regresses_gen_below_data_rows(spark):
 
         # a takedown AFTER state loss must still kill the gen-2 rows
         add_tombstones(
-            spark, base, spark.createDataFrame([(200,)], "doc long"), "doc"
+            spark, base, local_frame(spark, [(200,)], "doc long"), "doc"
         )
         assert current_gen(spark, base) == g_before + 1
         live = filter_tombstoned(
@@ -859,7 +860,7 @@ def test_add_tombstones_refuses_unknown_index(spark):
     from rq_spark.errors import IllegalStateError
 
     base = "t_tomb_typo_nowhere"
-    ids = spark.createDataFrame([(1,)], "doc long")
+    ids = local_frame(spark, [(1,)], "doc long")
     with pytest.raises(IllegalStateError, match="no meta table"):
         add_tombstones(spark, base, ids, "doc")
     # nothing was created: the name stays clean for set_index_pointer
@@ -874,7 +875,7 @@ def test_add_tombstones_refuses_unknown_index(spark):
         from rq_spark.bucketing import set_index_pointer
 
         D.write_hamming_index(
-            spark.createDataFrame(rows[:8], "doc long, sig long"), real, bands=4
+            local_frame(spark, rows[:8], "doc long, sig long"), real, bands=4
         )
         set_index_pointer(spark, alias, real)
         spark.sql(f"DROP TABLE {alias}_ptr")  # the mid-flip window
@@ -903,9 +904,9 @@ def test_blue_green_serving_pointer(spark):
     from rq_spark.errors import IllegalStateError
 
     rows, base_sigs = _sig_corpus()
-    sig1 = spark.createDataFrame(rows, "doc long, sig long")
-    sig2 = spark.createDataFrame(
-        [(d + 5000, s) for d, s in rows], "doc long, sig long"
+    sig1 = local_frame(spark, rows, "doc long, sig long")
+    sig2 = local_frame(
+        spark, [(d + 5000, s) for d, s in rows], "doc long, sig long"
     )
     b1, b2, alias = "t_bg_blue", "t_bg_green", "t_bg_serve"
     try:
@@ -928,7 +929,7 @@ def test_blue_green_serving_pointer(spark):
 
         # mutations through the alias land on the SERVING base
         add_tombstones(
-            spark, alias, spark.createDataFrame([(5003,)], "doc long"), "doc"
+            spark, alias, local_frame(spark, [(5003,)], "doc long"), "doc"
         )
         got = _pairs(D.hamming_near_pairs_from_index(spark, alias))
         assert all(5003 not in (a, b) for a, b, _h in got)
@@ -936,11 +937,11 @@ def test_blue_green_serving_pointer(spark):
         assert not spark.catalog.tableExists(f"{b1}_tombstones")
         new0 = _s64(base_sigs[60] ^ (1 << 9))
         D.append_to_hamming_index(
-            spark.createDataFrame([(9991, new0)], "doc long, sig long"), alias
+            local_frame(spark, [(9991, new0)], "doc long, sig long"), alias
         )
         probe = D.hamming_probe_from_index(
             spark,
-            spark.createDataFrame([(9992, new0)], "doc long, sig long"),
+            local_frame(spark, [(9992, new0)], "doc long, sig long"),
             alias,
         ).collect()
         assert any(r.corpus_id == 9991 for r in probe)
@@ -975,7 +976,7 @@ def test_stream_probe_against_standing_index(spark, tmp_path):
     from rq_spark.streaming import probe_index_stream
 
     rows, base_sigs = _sig_corpus()
-    sig = spark.createDataFrame(rows, "doc long, sig long")
+    sig = local_frame(spark, rows, "doc long, sig long")
     base = "t_tomb_stream"
     src = str(tmp_path / "sigstream")
     try:
@@ -985,8 +986,8 @@ def test_stream_probe_against_standing_index(spark, tmp_path):
         # 1000 signature = doc 0's near-dup); batch 2: the same probe
         # AFTER doc 0 is taken down
         probe_sig = rows[100][1]
-        spark.createDataFrame(
-            [(7001, probe_sig)], "doc long, sig long"
+        local_frame(
+            spark, [(7001, probe_sig)], "doc long, sig long"
         ).coalesce(1).write.mode("overwrite").parquet(f"{src}/f1")
         stream = (
             spark.readStream.schema("doc long, sig long")
@@ -1008,8 +1009,8 @@ def test_stream_probe_against_standing_index(spark, tmp_path):
                 (r.new_id, r.corpus_id, r.hamming)
                 for r in D.hamming_probe_from_index(
                     spark,
-                    spark.createDataFrame(
-                        [(7001, probe_sig)], "doc long, sig long"
+                    local_frame(
+                        spark, [(7001, probe_sig)], "doc long, sig long"
                     ),
                     base,
                     max_hamming=3,
@@ -1020,11 +1021,11 @@ def test_stream_probe_against_standing_index(spark, tmp_path):
             # takedown BETWEEN micro-batches: doc 0 deleted, then the
             # same signature arrives again as doc 7002
             add_tombstones(
-                spark, base, spark.createDataFrame([(0,)], "doc long"), "doc"
+                spark, base, local_frame(spark, [(0,)], "doc long"), "doc"
             )
             got.clear()
-            spark.createDataFrame(
-                [(7002, probe_sig)], "doc long, sig long"
+            local_frame(
+                spark, [(7002, probe_sig)], "doc long, sig long"
             ).coalesce(1).write.mode("overwrite").parquet(f"{src}/f2")
             q.processAllAvailable()
             batch2 = set().union(*got.values()) if got else set()
@@ -1048,12 +1049,12 @@ def test_stream_probe_empty_batches(spark, tmp_path):
     from rq_spark.streaming import probe_index_stream
 
     rows, _ = _sig_corpus()
-    sig = spark.createDataFrame(rows, "doc long, sig long")
+    sig = local_frame(spark, rows, "doc long, sig long")
     base = "t_tomb_stream_empty"
     src = str(tmp_path / "emptystream")
     try:
         D.write_hamming_index(sig, base, bands=4)
-        empty = spark.createDataFrame([], "doc long, sig long")
+        empty = local_frame(spark, [], "doc long, sig long")
         empty.coalesce(1).write.mode("overwrite").parquet(f"{src}/f1")
         stream = (
             spark.readStream.schema("doc long, sig long")
@@ -1075,8 +1076,8 @@ def test_stream_probe_empty_batches(spark, tmp_path):
 
             # the query survived: the next (real) batch still probes
             got.clear()
-            spark.createDataFrame(
-                [(7001, rows[100][1])], "doc long, sig long"
+            local_frame(
+                spark, [(7001, rows[100][1])], "doc long, sig long"
             ).coalesce(1).write.mode("overwrite").parquet(f"{src}/f2")
             q.processAllAvailable()
             assert any(v for v in got.values())
@@ -1162,7 +1163,7 @@ def test_serving_pointer_guards(spark, monkeypatch):
     from rq_spark.errors import IllegalStateError
 
     rows, _ = _sig_corpus()
-    sig = spark.createDataFrame(rows[:30], "doc long, sig long")
+    sig = local_frame(spark, rows[:30], "doc long, sig long")
     b1, b2, alias = "t_ptr_b1", "t_ptr_b2", "t_ptr_serve"
     try:
         D.write_hamming_index(sig, b1, bands=4)
@@ -1189,12 +1190,12 @@ def test_serving_pointer_guards(spark, monkeypatch):
         monkeypatch.setattr(B, "bump_gen", flip_bump)
         with pytest.raises(ConcurrentWriterError, match="flipped"):
             add_tombstones(
-                spark, alias, spark.createDataFrame([(1,)], "doc long"), "doc"
+                spark, alias, local_frame(spark, [(1,)], "doc long"), "doc"
             )
         # the stranded tombstone sits on b1 (retired); the error told
         # the caller to re-run — doing so lands on the serving base
         add_tombstones(
-            spark, alias, spark.createDataFrame([(1,)], "doc long"), "doc"
+            spark, alias, local_frame(spark, [(1,)], "doc long"), "doc"
         )
         assert spark.catalog.tableExists(f"{b2}_tombstones")
 
@@ -1311,8 +1312,8 @@ def test_lifecycle_model_fuzz(spark):
         return out
 
     def mkdf(d: dict):
-        return spark.createDataFrame(
-            sorted(d.items()), "doc long, sig long"
+        return local_frame(
+            spark, sorted(d.items()), "doc long, sig long"
         )
 
     serve = "t_tomb_fuzz_serve"
@@ -1349,7 +1350,7 @@ def test_lifecycle_model_fuzz(spark):
                 ids.append(999_999)  # an unknown id is harmless
                 add_tombstones(
                     spark, serve,
-                    spark.createDataFrame([(i,) for i in ids], "doc long"),
+                    local_frame(spark, [(i,) for i in ids], "doc long"),
                     "doc",
                 )
                 for i in ids:
@@ -1391,7 +1392,7 @@ def test_retire_index_guarded_by_serving_pointers(spark):
     from rq_spark.errors import IllegalStateError
 
     rows, _ = _sig_corpus()
-    sig = spark.createDataFrame(rows[:20], "doc long, sig long")
+    sig = local_frame(spark, rows[:20], "doc long, sig long")
     b1, b2, alias = "t_ret_b1", "t_ret_b2", "t_ret_serve"
     try:
         D.write_hamming_index(sig, b1, bands=4)
@@ -1441,7 +1442,7 @@ def test_stream_ingest_appends_and_survives_redelivery(spark, tmp_path):
 
     rows, _ = _sig_corpus()
     corpus, b1, b2, b3 = rows[:60], rows[60:80], rows[80:100], rows[100:110]
-    mk = lambda rs: spark.createDataFrame(rs, "doc long, sig long")  # noqa: E731
+    mk = lambda rs: local_frame(spark, rs, "doc long, sig long")  # noqa: E731
     base, ref = "t_ing_live", "t_ing_ref"
     qname = "t_ing_q"
     src = str(tmp_path / "ingstream")
@@ -1542,9 +1543,9 @@ def test_preflip_reader_window_and_retire(spark):
     from rq_spark.bucketing import retire_index, set_index_pointer
 
     rows, _ = _sig_corpus()
-    sig1 = spark.createDataFrame(rows, "doc long, sig long")
-    sig2 = spark.createDataFrame(
-        [(d + 5000, s) for d, s in rows], "doc long, sig long"
+    sig1 = local_frame(spark, rows, "doc long, sig long")
+    sig2 = local_frame(
+        spark, [(d + 5000, s) for d, s in rows], "doc long, sig long"
     )
     b1, b2, alias = "t_drain_blue", "t_drain_green", "t_drain_serve"
     try:
@@ -1714,7 +1715,7 @@ def test_continuous_dedup_loop_stream_parity(spark, tmp_path):
     corpus = rows[:60]
     b1 = rows[100:110] + rows[60:65]  # 10 planted twins + 5 randoms
     b2 = rows[110:120] + rows[65:70]
-    mk = lambda rs: spark.createDataFrame(rs, "doc long, sig long")  # noqa: E731
+    mk = lambda rs: local_frame(spark, rs, "doc long, sig long")  # noqa: E731
 
     def day0(ibase, lbase, ebase):
         D.write_hamming_index(mk(corpus), ibase, bands=4)
@@ -1847,7 +1848,7 @@ def test_refresh_after_foreign_session_mutation(spark):
 
     rows, _ = _sig_corpus()
     corpus, b1 = rows[:40], rows[40:50]
-    mk = lambda s, rs: s.createDataFrame(rs, "doc long, sig long")  # noqa: E731
+    mk = lambda s, rs: local_frame(s, rs, "doc long, sig long")  # noqa: E731
     base, base2, alias = "t_fs_b1", "t_fs_b2", "t_fs_serve"
     s2 = spark.newSession()
     try:
@@ -1880,6 +1881,56 @@ def test_refresh_after_foreign_session_mutation(spark):
         spark.sql(f"DROP TABLE IF EXISTS {alias}_ptr")
 
 
+def test_refresh_base_tables_launches_no_job(spark):
+    """`refresh_base_tables` runs once per applied micro-batch of the
+    continuous loop, so it must cost no Spark job: it finds the bases'
+    tables with a ``SHOW TABLES LIKE`` catalog command
+    (`bucketing._tables_like`), where ``spark.catalog.listTables()``
+    launches three jobs per call. The pattern selects what a name
+    filter over the full listing does: each base's own ``{base}_*``
+    tables, not those of a sibling that only shares the prefix."""
+    import time
+
+    from rq_spark.bucketing import _tables_like
+
+    rows, _ = _sig_corpus()
+    mk = lambda rs: local_frame(spark, rs, "doc long, sig long")  # noqa: E731
+    base, sibling = "t_rnj", "t_rnjx"
+    sc = spark.sparkContext
+    group, control = "refresh-no-job", "refresh-no-job-control"
+    try:
+        D.write_hamming_index(mk(rows[:40]), base, bands=4)
+        D.write_hamming_index(mk(rows[40:60]), sibling, bands=4)
+        n0 = spark.table(f"{base}_hbands").count()  # prime the listing
+        names = {t.name for t in spark.catalog.listTables()}
+        want = {t for t in names if t == base or t.startswith(f"{base}_")}
+        assert f"{base}_hbands" in want and f"{sibling}_hbands" in names
+        assert set(_tables_like(spark, f"{base}|{base}_*")) == want
+
+        sc.setJobGroup(group, "refresh_base_tables")
+        try:
+            refresh_base_tables(spark, base, sibling)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the status store is fed asynchronously but in event order:
+        # once a later job is visible, every earlier one is too
+        sc.setJobGroup(control, "control job")
+        try:
+            assert spark.table(f"{base}_hbands").count() == n0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        deadline = time.monotonic() + 30
+        while not sc.statusTracker().getJobIdsForGroup(control):
+            assert time.monotonic() < deadline, "control job never listed"
+            time.sleep(0.1)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        _drop(spark, base, ("hbands", "meta"))
+        _drop(spark, sibling, ("hbands", "meta"))
+
+
 def test_index_health_reports_compaction_signal(spark):
     """`bucketing.index_health` (r14): the metadata-only maintenance
     snapshot — files-per-bucket (the compaction-due signal: one file
@@ -1889,7 +1940,7 @@ def test_index_health_reports_compaction_signal(spark):
     from rq_spark.bucketing import index_health, set_index_pointer
 
     rows, _ = _sig_corpus()
-    mk = lambda rs: spark.createDataFrame(rs, "doc long, sig long")  # noqa: E731
+    mk = lambda rs: local_frame(spark, rs, "doc long, sig long")  # noqa: E731
     base, alias = "t_hlth", "t_hlth_serve"
     try:
         D.write_hamming_index(mk(rows[:40]), base, bands=4)
@@ -1904,7 +1955,7 @@ def test_index_health_reports_compaction_signal(spark):
         D.append_to_hamming_index(mk(rows[50:60]), alias)
         add_tombstones(
             spark, alias,
-            spark.createDataFrame([(1,), (2,)], "doc long"), "doc",
+            local_frame(spark, [(1,), (2,)], "doc long"), "doc",
         )
         h1 = index_health(spark, alias, count_rows=True)
         assert h1["tables"][f"{base}_hbands"]["files_per_bucket"] > fpb0
