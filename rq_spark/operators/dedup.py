@@ -1532,40 +1532,46 @@ def compact_hamming_index(spark, base_name: str) -> None:
 # --------------------------------------------------------------------------
 
 
+#: driver-tier bounds (r12): a relation whose take-probe finds at most
+#: this many rows is resolved on the driver, past it the distributed
+#: path runs. `_DRIVER_BATCH_ROWS` bounds `absorb_edges`' full-driver
+#: tier (the batch's edges, then its no-edge nodes);
+#: `_DRIVER_GRAPH_ROWS` bounds `connected_components`' driver tier.
+_DRIVER_BATCH_ROWS = 10_000
+_DRIVER_GRAPH_ROWS = 10_000
+
+
 def connected_components(
     edges: DataFrame,
-    nodes: DataFrame,
+    nodes: DataFrame | None,
     max_iter: int = 20,
     scope: str = "components",
 ) -> DataFrame:
-    """Connected components by min-label propagation with pointer
-    jumping: every node starts labeled with itself; each round every
-    node takes the minimum of (its label, its neighbors' labels, its
-    LABEL'S label), until fixpoint. The third term is the path-doubling
-    shortcut — the distance a label travels roughly doubles per round,
-    so convergence needs O(log d) rounds for component diameter d
-    (same regime as the alternating large-star/small-star algorithm)
-    instead of the d rounds plain neighbor propagation needs. Near-dup
-    clusters are small quasi-cliques (2-3 rounds); the default
-    max_iter = 20 therefore covers diameters up to ~2^19, and a
-    pathological chain that still fails raises instead of returning
-    split clusters.
+    """Min-label connected components. edges: (a_id, b_id) undirected
+    pairs; nodes: (node), or None for the edges' endpoints. Returns
+    (node, rep) with rep = smallest node id in the component. Every
+    non-NULL endpoint gets a label (a self-loop's too, and the
+    non-NULL end of a NULL edge's), every other non-NULL node is its
+    own singleton, and NULL is never a node.
 
-    Each round is two shuffle joins + one min-agg, and the data never
-    leaves the cluster — the driver only reads the single convergence
-    counter. Each round's labels are checkpointed through
-    `util.checkpoint_adaptive` (reliable when the application has set a
-    checkpoint dir — the fault-tolerant choice on a real cluster — else
-    executor-local), so
-    the query plan stays O(1) deep across rounds instead of nesting
-    one join tree per iteration.
+    Two tiers, identical rows (parity pinned against a plain-Python
+    reference in tests/test_dedup.py):
 
-    edges: (a_id, b_id) undirected pairs; nodes: (node). Returns
-    (node, rep) with rep = smallest node id in the component.
+    * Driver: edges take-probed within `_DRIVER_GRAPH_ROWS` are
+      labelled by `_minlabel_union_find` and returned as a
+      `local_frame` — the probe is the only job (the loop pays 3-4 s
+      of per-round fixed cost on a 75-edge graph at sf0.1, r12).
+    * Loop: past the bound, `_min_label_loop`, one checkpoint job per
+      round. ``max_iter`` bounds this tier only: IllegalStateError if
+      it does not converge — unconverged labels would silently split
+      one true cluster into several. With ``nodes`` None the edges
+      are checkpointed first: their plan would otherwise embed
+      absorb's standing-labels chain and batch-projection joins, which
+      every round re-plans (22 s -> 1.1 s on a 72-edge contracted
+      graph at sf0.1, r11).
 
-    Raises IllegalStateError if max_iter rounds do not converge —
-    returning unconverged labels would silently split one true
-    cluster into several.
+    Singletons skip both tiers: ``nodes`` left-anti the labelled
+    endpoints.
 
     ``scope`` names the persist-registry scope (r11): concurrent CC
     invocations (e.g. the inc_components branch running its old-graph
@@ -1574,15 +1580,60 @@ def connected_components(
     entry-release would unpersist the first's live loop relations.
     """
     _release_caches(scope)
+    bound = _DRIVER_GRAPH_ROWS
+    probe = edges.take(bound + 1)
+    if len(probe) <= bound:
+        ends = {x for r in probe for x in (r.a_id, r.b_id) if x is not None}
+        remap = _minlabel_union_find((r.a_id, r.b_id) for r in probe)
+        t = edges.schema["a_id"].dataType.simpleString()
+        # one partition, like the loop's coalesced output: a bucketed
+        # write of the result (write_labels) makes a file per input
+        # partition per bucket, and every later labels scan opens them
+        labels = local_frame(
+            edges.sparkSession,
+            [(x, remap.get(x, x)) for x in sorted(ends)],
+            f"node {t}, rep {t}",
+        ).coalesce(1)
+        labelled = F.broadcast(labels.select("node"))  # driver-sized
+    else:
+        if nodes is None:
+            edges = _checkpoint_adaptive(edges)
+        labels, labelled = _min_label_loop(edges, max_iter, scope)
+    if nodes is None:
+        return labels
+    singles = nodes.dropna(subset="node").join(labelled, "node", "left_anti")
+    return labels.unionAll(singles.select("node", F.col("node").alias("rep")))
+
+
+def _min_label_loop(edges: DataFrame, max_iter: int, scope: str):
+    """`connected_components`' loop tier: (node, rep) labels of the
+    non-NULL endpoints, and their persisted (node) relation. Min-label
+    propagation with pointer jumping: every node starts labeled with
+    itself; each round every node takes the minimum of (its label, its
+    neighbors' labels, its LABEL'S label), until fixpoint. The third
+    term is the path-doubling shortcut — the distance a label travels
+    roughly doubles per round, so convergence needs O(log d) rounds for
+    component diameter d (same regime as the alternating
+    large-star/small-star algorithm) instead of the d rounds plain
+    neighbor propagation needs. Near-dup clusters are small
+    quasi-cliques (2-3 rounds); the default max_iter = 20 therefore
+    covers diameters up to ~2^19, and a pathological chain that still
+    fails raises instead of returning split clusters.
+
+    Each round is two shuffle joins + one min-agg, and the data never
+    leaves the cluster — the driver only reads the single convergence
+    counter. Each round's labels are checkpointed through
+    `util.checkpoint_adaptive` (reliable when the application has set a
+    checkpoint dir — the fault-tolerant choice on a real cluster — else
+    executor-local), so the query plan stays O(1) deep across rounds
+    instead of nesting one join tree per iteration."""
     sym = _persist_tracked(
         edges.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
         .unionAll(edges.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst"))),
         scope=scope,
     )
-    # only nodes that appear in an edge can change labels — singletons
-    # (the vast majority of a dedup corpus) skip the loop entirely
     edge_nodes = _persist_tracked(
-        sym.select(F.col("src").alias("node")).distinct(), scope=scope
+        sym.select(F.col("src").alias("node")).dropna().distinct(), scope=scope
     )
     labels = edge_nodes.select("node", F.col("node").alias("rep"))
     converged = False
@@ -1622,18 +1673,16 @@ def connected_components(
             f"connected_components did not converge in {max_iter} rounds "
             "(component diameter exceeds max_iter — raise it)"
         )
-    singles = nodes.join(edge_nodes, "node", "left_anti").select(
-        "node", F.col("node").alias("rep")
-    )
-    return labels.unionAll(singles)
+    return labels, edge_nodes
 
 
 def _minlabel_union_find(edge_pairs) -> dict:
     """Driver-side min-label union-find over (a, b) pairs: returns a
-    map from every touched node to the MINIMUM node reachable from it
-    — exactly the min-label CC fixed point over those edges. Union by
-    value keeps the root the minimum, so find() IS the label. NULL
-    endpoints are skipped (the distributed equi-joins drop them too)."""
+    map from every node of a non-self-loop, non-NULL edge to the
+    MINIMUM node reachable from it — exactly the min-label CC fixed
+    point over those edges. Union by value keeps the root the minimum,
+    so find() IS the label. NULL endpoints are skipped (the distributed
+    equi-joins drop them too)."""
     parent: dict = {}
 
     def find(x):
@@ -1653,67 +1702,6 @@ def _minlabel_union_find(edge_pairs) -> dict:
     touched = set(parent)
     touched.update(find(x) for x in list(parent))
     return {x: find(x) for x in touched}
-
-
-#: driver-tier bounds of label maintenance (r12): a relation whose
-#: take-probe finds at most this many rows is collected and resolved on
-#: the driver. `_DRIVER_BATCH_ROWS` bounds `absorb_edges`' full-driver
-#: tier (the batch's edges, then its no-edge nodes); `_DRIVER_GRAPH_ROWS`
-#: bounds `_relabel`'s driver branch (absorb's contracted graph, evict's
-#: touched survivors). Past a bound the distributed path runs.
-_DRIVER_BATCH_ROWS = 10_000
-_DRIVER_GRAPH_ROWS = 10_000
-
-
-def _relabel(
-    edges: DataFrame, nodes: DataFrame | None, max_iter: int, scope: str
-) -> DataFrame:
-    """Min-label CC, as (node, rep), over a touched-sized graph: the
-    re-clustering step of `absorb_edges` (its contracted graph;
-    ``nodes`` None means the edges' endpoints) and of `evict_nodes`
-    (the touched components' survivors).
-
-    Take-probed within `_DRIVER_GRAPH_ROWS` rows (edges, then nodes),
-    it runs min-label union-find on the DRIVER — exact and
-    deterministic, so the same relation — and returns a `local_frame`:
-    the probes are its only jobs (r12 profiling: distributed CC paid
-    3-4 s of per-round driver fixed cost on a ~75-edge contracted
-    graph at sf0.1). Past the bound, `connected_components` runs.
-    Endpoint-derived nodes read the edges twice, so the edges are
-    checkpointed first: their plan would otherwise embed absorb's
-    standing-labels chain and batch-projection joins, which every CC
-    round re-plans and re-walks (22 s -> 1.1 s on a 72-edge contracted
-    graph at sf0.1, r11). Path parity is pinned in
-    tests/test_graph.py."""
-    bound = _DRIVER_GRAPH_ROWS
-    eprobe = edges.take(bound + 1)
-    if len(eprobe) <= bound:
-        nprobe = None if nodes is None else nodes.take(bound + 1)
-        if nprobe is None or len(nprobe) <= bound:
-            remap = _minlabel_union_find((r.a_id, r.b_id) for r in eprobe)
-            if nprobe is None:
-                keys, node_type = sorted(remap), edges.schema["a_id"].dataType
-            else:
-                keys = [r.node for r in nprobe]
-                node_type = nodes.schema["node"].dataType
-            return local_frame(
-                edges.sparkSession,
-                [(x, remap.get(x, x)) for x in keys],
-                T.StructType(
-                    [
-                        T.StructField("node", node_type),
-                        T.StructField("rep", node_type),
-                    ]
-                ),
-            )
-    if nodes is None:
-        edges = _checkpoint_adaptive(edges)
-        nodes = edges.select(F.col("a_id").alias("node")).unionAll(
-            edges.select(F.col("b_id").alias("node"))
-        ).distinct()
-    return connected_components(
-        edges, nodes, max_iter=max_iter, scope=f"{scope}_cc"
-    )
 
 
 def _absorb_small_batch(
@@ -1889,12 +1877,12 @@ def absorb_edges(
     * Contracted driver: bigger batches whose CONTRACTED graph (≤ one
       edge per distinct-rep batch pair) is still driver-small — e.g. a
       backfill with heavy internal duplication — resolve the
-      contracted min-label remap with driver union-find
-      (`_relabel` within `_DRIVER_GRAPH_ROWS`) instead of paying 3-4
+      contracted min-label remap in `connected_components`' driver
+      tier (within `_DRIVER_GRAPH_ROWS`) instead of paying 3-4
       distributed CC rounds of per-job fixed cost.
-    * Otherwise: the distributed CC loop over the checkpointed
-      contracted edges (`_relabel`'s fallback) — work ∝ touched
-      components, never corpus."""
+    * Otherwise: `connected_components`' loop tier over the
+      checkpointed contracted edges — work ∝ touched components, never
+      corpus."""
     _release_caches(scope)
     bound = _DRIVER_BATCH_ROWS
     eprobe = new_edges.take(bound + 1)
@@ -1935,7 +1923,9 @@ def absorb_edges(
     # the contracted graph is BATCH-BOUNDED by construction (≤ one
     # edge per distinct batch pair): re-cluster it on the driver when
     # it fits, else in the distributed loop (r12)
-    remap = _relabel(redges, None, max_iter, scope).select(
+    remap = connected_components(
+        redges, None, max_iter, scope=f"{scope}_cc"
+    ).select(
         F.col("node").alias("rep"), F.col("rep").alias("_srep")
     )
     if return_delta:
@@ -2020,9 +2010,9 @@ def evict_nodes(
     relation is scanned map-side (three semi/anti passes, zero
     Exchange — plan-asserted) and the edges relation once. The
     re-clustering itself runs on the touched components' surviving
-    subgraph only, through `_relabel` — absorb's re-clustering step:
-    driver union-find when it fits (take-probed within
-    `_DRIVER_GRAPH_ROWS`), else the distributed CC loop. Pass
+    subgraph only, through `connected_components`: driver union-find
+    when the surviving edges fit (within `_DRIVER_GRAPH_ROWS`), else
+    the distributed CC loop. Pass
     ``broadcast_deletions=False`` when a mass takedown outgrows the
     broadcast budget; the joins degrade to shuffles ∝ labels/edges,
     still touched-component-bounded on the small side."""
@@ -2057,7 +2047,9 @@ def evict_nodes(
     kept = labels.join(btouched, "rep", "left_anti").select("node", "rep")
     # re-cluster the touched survivors: driver union-find when bounded
     # (the takedown-sized case), else the distributed CC loop
-    fresh = _relabel(surv_edges, surv_nodes, max_iter, scope)
+    fresh = connected_components(
+        surv_edges, surv_nodes, max_iter, scope=f"{scope}_cc"
+    )
     if not return_delta:
         return kept.unionAll(fresh)
     # the delta: touched survivors whose rep MOVED, found by one

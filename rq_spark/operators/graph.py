@@ -1,8 +1,8 @@
 """Iterative graph analytics: PageRank in exact fixed-point arithmetic.
 
 PageRank (Brin & Page 1998) is THE canonical iterative bulk-synchronous
-graph job — same execution shape as label propagation
-(operators/dedup.py:connected_components): per round one shuffle join
+graph job — same execution shape as connected components' loop tier
+(operators/dedup.py:_min_label_loop): per round one shuffle join
 (ranks × edges) + one aggregate, state checkpointed so the plan stays
 O(1) deep. On a corpus engine it ranks nodes of any derived relation:
 the near-dup pair graph (duplication centrality — which documents sit
@@ -33,8 +33,8 @@ persisted once, reused every round. Each round shuffles O(edges) once
 for the contribution sum; the dangling mass is a 1-row aggregate
 cross-joined back (broadcast), never a driver collect. The only driver
 action per call is one node count (metadata-scale) plus the per-round
-checkpoint materialization job, identical to connected_components'
-convergence counter.
+checkpoint materialization job, identical to the connected-components
+loop's convergence counter.
 """
 
 from __future__ import annotations

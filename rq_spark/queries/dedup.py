@@ -227,9 +227,10 @@ def _labels(df: DataFrame) -> DataFrame:
 
 # Graph analytics over the near-dup pair graph, tagged branches:
 #
-# 'components' — near-dup PAIRS → duplicate CLUSTERS: connected
-# components by iterative min-label propagation
-# (operators/dedup.py:connected_components). One row per document,
+# 'components' — near-dup PAIRS → duplicate CLUSTERS: min-label
+# connected components (operators/dedup.py:connected_components —
+# driver union-find while the pair graph fits, else the distributed
+# propagation loop). One row per document,
 # rep_id = smallest doc_id in its duplicate group (itself for
 # singletons) — the canonical 'pick one representative per cluster'
 # step of a dedup pipeline.

@@ -79,7 +79,7 @@ def checkpoint_adaptive(df: DataFrame, eager: bool = True) -> DataFrame:
     checkpoint, the right call in local mode where driver and
     "executor" share one process and the reliable variant would only
     add a disk round-trip. The operators' loop checkpoints
-    (`connected_components`, `pagerank_fixed`, `absorb_edges`) and the
+    (`connected_components`' loop tier, `pagerank_fixed`) and the
     query layer's lineage truncations all call this, so the
     local-mode-only durability assumption lives in ONE place.
 

@@ -46,13 +46,16 @@ def label_tier(monkeypatch):
     * ``"batch"``: the defaults — `absorb_edges`' full-driver tier
       (`_absorb_small_batch`);
     * ``"graph"``: no batch fits the full-driver tier, so the
-      re-clustering runs `_relabel`'s driver union-find (absorb's
-      contracted graph, `evict_nodes`' only driver tier);
+      re-clustering runs `connected_components`' driver tier (absorb's
+      contracted graph, `evict_nodes`' only driver tier) — and so does
+      any direct `connected_components` call under the default bound;
     * ``"loop"``: nothing fits a driver tier (a bound of -1 rejects
-      even an empty relation), so `connected_components` runs.
+      even an empty relation), so `connected_components`' loop tier
+      (`_min_label_loop`) runs.
 
     The tier is read from call-counting spies on `_absorb_small_batch`,
-    `_minlabel_union_find` and `connected_components`."""
+    `_minlabel_union_find` and `_min_label_loop` — the loop body, not
+    the public entry every tier now goes through."""
     from collections import Counter
     from contextlib import contextmanager
 
@@ -60,7 +63,7 @@ def label_tier(monkeypatch):
 
     calls = Counter()
     for name in (
-        "_absorb_small_batch", "_minlabel_union_find", "connected_components"
+        "_absorb_small_batch", "_minlabel_union_find", "_min_label_loop"
     ):
         def spy(*a, _real=getattr(D, name), _name=name, **kw):
             calls[_name] += 1
@@ -84,7 +87,7 @@ def label_tier(monkeypatch):
             yield
         if calls["_absorb_small_batch"]:
             ran = "batch"
-        elif calls["connected_components"]:
+        elif calls["_min_label_loop"]:
             ran = "loop"
         else:
             ran = "graph" if calls["_minlabel_union_find"] else None

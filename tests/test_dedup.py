@@ -231,7 +231,9 @@ def test_decontaminate_hand_built_overlap(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_connected_components_chain_and_nonconvergence(spark):
+def test_connected_components_chain_and_nonconvergence(spark, label_tier):
+    """The loop tier (forced): a path converges to its minimum, and
+    max_iter rounds short of the diameter raise."""
     import pytest
 
     from rq_spark.errors import IllegalStateError
@@ -242,22 +244,106 @@ def test_connected_components_chain_and_nonconvergence(spark):
         [(i, i + 1) for i in range(5)], "a_id long, b_id long"
     )
     nodes = spark.createDataFrame([(i,) for i in range(7)], "node long")
-    got = {
-        (r.node, r.rep) for r in connected_components(edges, nodes).collect()
-    }
+    with label_tier("loop"):
+        got = {
+            (r.node, r.rep)
+            for r in connected_components(edges, nodes).collect()
+        }
     assert got == {(i, 0) for i in range(6)} | {(6, 6)}
 
     # unconverged labels must raise, never be returned silently
-    with pytest.raises(IllegalStateError, match="converge"):
-        connected_components(edges, nodes, max_iter=2).collect()
+    with label_tier("loop"):
+        with pytest.raises(IllegalStateError, match="converge"):
+            connected_components(edges, nodes, max_iter=2).collect()
 
 
-def test_connected_components_long_path_diameter_30(spark):
+def _cc_reference(edges, nodes):
+    """Plain-Python min-label components by BFS: every non-NULL
+    endpoint and every non-NULL node, each labelled with the smallest
+    id it reaches."""
+    adj: dict = {}
+    for a, b in edges:
+        for x, y in ((a, b), (b, a)):
+            if x is not None:
+                adj.setdefault(x, set())
+                if y is not None:
+                    adj[x].add(y)
+    todo = set(adj) | {v for v in nodes or () if v is not None}
+    out = []
+    while todo:
+        comp, stack = set(), [min(todo)]
+        while stack:
+            x = stack.pop()
+            if x not in comp:
+                comp.add(x)
+                stack.extend(adj.get(x, ()))
+        out += [(x, min(comp)) for x in comp]
+        todo -= comp
+    return sorted(out)
+
+
+def _random_graph(seed):
+    """Disconnected clusters over ids 0..39 plus duplicate edges,
+    self-loops, NULL endpoints, endpoints missing from the node set
+    and edgeless nodes (a NULL node on even seeds)."""
+    import random
+
+    rng = random.Random(seed)
+    ids = rng.sample(range(40), 24)
+    edges = []
+    for lo in range(0, 24, 6):  # four candidate clusters of six ids
+        grp = ids[lo:lo + 6]
+        edges += [tuple(rng.sample(grp, 2)) for _ in range(rng.randint(0, 5))]
+    edges += rng.sample(edges, min(3, len(edges)))  # duplicates
+    edges += [(x, x) for x in rng.sample(ids, 2)]  # self-loops
+    edges += [(rng.choice(ids), None), (None, rng.choice(ids)), (None, None)]
+    rng.shuffle(edges)
+    nodes = rng.sample(ids, 16) + rng.sample(range(40, 50), 3)
+    if seed % 2 == 0:
+        nodes.append(None)
+    return edges, nodes
+
+
+def test_connected_components_tiers_match_reference(spark, label_tier):
+    """Both tiers of connected_components return exactly the rows of a
+    plain-Python BFS on degenerate and random graphs: self-loop-only
+    endpoints and the non-NULL end of a NULL edge are labelled, NULL
+    is never a node, nodes missing from the edges come back as
+    singletons, endpoints missing from ``nodes`` still get labels, and
+    ``nodes`` None means the endpoints. The loop tier is checked here
+    against an independent answer, not against the driver tier."""
+    from rq_spark.operators.dedup import connected_components
+    from rq_spark.util import local_frame
+
+    cases = [
+        ([(1, 2), (3, None), (5, 5)], [1, 2, 4]),
+        ([], [3, 1, None]),
+        ([], None),
+        ([(7, 7), (None, 8)], None),
+        *(_random_graph(seed) for seed in range(4)),
+        (_random_graph(4)[0], None),
+    ]
+    for edges, nodes in cases:
+        want = _cc_reference(edges, nodes)
+        e = local_frame(spark, edges, "a_id long, b_id long")
+        n = None if nodes is None else local_frame(
+            spark, [(v,) for v in nodes], "node long"
+        )
+        for tier in ("graph", "loop"):
+            with label_tier(tier):
+                got = sorted(
+                    (r.node, r.rep)
+                    for r in connected_components(e, n, scope="cc_ref").collect()
+                )
+            assert got == want, (tier, edges, nodes)
+
+
+def test_connected_components_long_path_diameter_30(spark, label_tier):
     """Worst-case geometry for min-label propagation: a 31-node path
     (diameter 30) with shuffled ids, so labels must travel the full
     chain and the minimum sits at an arbitrary position. Converges
     within max_iter = diameter + margin and labels every node with the
-    component minimum."""
+    component minimum (the loop tier, forced)."""
     import random
 
     from rq_spark.operators.dedup import connected_components
@@ -269,10 +355,11 @@ def test_connected_components_long_path_diameter_30(spark):
         [(ids[i], ids[i + 1]) for i in range(30)], "a_id long, b_id long"
     )
     nodes = spark.createDataFrame([(i,) for i in ids], "node long")
-    got = {
-        (r.node, r.rep)
-        for r in connected_components(edges, nodes, max_iter=35).collect()
-    }
+    with label_tier("loop"):
+        got = {
+            (r.node, r.rep)
+            for r in connected_components(edges, nodes, max_iter=35).collect()
+        }
     assert got == {(i, min(ids)) for i in ids}
 
 
@@ -456,9 +543,12 @@ def test_bloom_misaligned_width_raises(spark):
         bloom_decontaminate(df, df, "text", "doc_id", m_bits=100)
 
 
-def test_connected_components_reliable_checkpoint_branch(spark, tmp_path):
+def test_connected_components_reliable_checkpoint_branch(
+    spark, tmp_path, label_tier
+):
     """r8 (r7 verdict task #8): with a checkpoint dir set, the
-    RELIABLE-checkpoint branch of connected_components runs (the
+    RELIABLE-checkpoint branch of connected_components' loop tier
+    (forced) runs (the
     fault-tolerant choice on a real cluster), produces identical
     components, and each round's plan is lineage-truncated (the
     per-round relation scans the checkpoint, not a per-iteration
@@ -474,11 +564,15 @@ def test_connected_components_reliable_checkpoint_branch(spark, tmp_path):
     nodes = spark.createDataFrame(
         [(n,) for n in (1, 2, 3, 10, 11, 20, 21, 22, 23, 99)], "node long"
     )
-    want = {(r.node, r.rep) for r in connected_components(edges, nodes).collect()}
+    with label_tier("loop"):
+        want = {
+            (r.node, r.rep) for r in connected_components(edges, nodes).collect()
+        }
     sc.setCheckpointDir(str(tmp_path / "ckpt"))
     try:
-        got_df = connected_components(edges, nodes)
-        got = {(r.node, r.rep) for r in got_df.collect()}
+        with label_tier("loop"):
+            got_df = connected_components(edges, nodes)
+            got = {(r.node, r.rep) for r in got_df.collect()}
         assert got == want
         assert {r for r in got if r[0] in (20, 21, 22, 23)} == {
             (20, 20), (21, 20), (22, 20), (23, 20)

@@ -329,7 +329,7 @@ def test_absorb_edges_is_contracted_not_corpus_sized(spark, label_tier):
     # and the full recompute at the same budget really can't converge
     from rq_spark.errors import IllegalStateError
 
-    with pytest.raises(IllegalStateError):
+    with label_tier("loop"), pytest.raises(IllegalStateError):
         _cc(spark, old + [(50, 101)], nodes, max_iter=2,
             scope="inc_test_budget").collect()
 
